@@ -7,7 +7,9 @@ package graft
  */
 object GraftConf {
 
-  /** Always required for driver testdata + oracle parity. */
+  /** The confs every engine session sets at build time: driver
+    * testdata + oracle parity, and a codegen cache sized to the
+    * engine's working set (see `graft.sources.Tables.requiredConfs`). */
   def required: Map[String, String] = graft.sources.Tables.requiredConfs
 
   /** Cluster deployment (the 100 TB posture). */

@@ -388,10 +388,13 @@ object Similarity {
       // dmin/dmax guard the fixed-dimension invariant the per-dim sum
       // rewrite assumes (ADVICE r20): a shorter vector would silently
       // skew the mean (sum skips its missing dims, the count doesn't)
-      // and a dim null across a cluster would NPE below — fail loudly
-      // instead. Two extra agg columns on a k-row collect: free.
+      // — fail loudly instead. A null embedding counts as size -1
+      // (size(null) is null under ANSI, which min/max would skip), so it
+      // reaches the same require. Two extra agg columns on a k-row
+      // collect: free.
+      val dimOf = coalesce(size(col("emb")), lit(-1))
       val sumCols = count(lit(1)).as("cnt") +:
-        min(size(col("emb"))).as("dmin") +: max(size(col("emb"))).as("dmax") +:
+        min(dimOf).as("dmin") +: max(dimOf).as("dmax") +:
         (0 until dim).map(p => sum(col("emb").getItem(p)).as(s"s$p"))
       val meaned = argmaxAssign(vecs, centDf, "vid", "emb", barrier = false)
         .groupBy(col("cid"))
@@ -405,7 +408,7 @@ object Similarity {
             s"kmeansCentroids: corpus embeddings must all have the seed " +
               s"dimension $dim (cluster $cid saw sizes " +
               s"${row.getInt(row.fieldIndex("dmin"))}.." +
-              s"${row.getInt(row.fieldIndex("dmax"))})")
+              s"${row.getInt(row.fieldIndex("dmax"))}; -1 = null embedding)")
           (cid, (0 until dim).map(p =>
             row.getDouble(row.fieldIndex(s"s$p")) / cnt): Seq[Double])
         }

@@ -46,8 +46,27 @@ object Tables {
     }
   }
 
-  /** SparkSession.builder config required to read the driver testdata. */
+  /** The confs every engine session sets on its `SparkSession.builder`
+    * (`graft.Bench`, `graft.Verify`, the dev mains, the test suite and
+    * the perfbench harness all apply this one map). The first two read
+    * the driver testdata with oracle parity (see above).
+    *
+    * `spark.sql.codegen.cache.maxEntries` sizes Spark's generated-class
+    * cache to the engine's working set. At Spark's default of 100, one
+    * pass of the seven detectors makes 112 cache entries (81 distinct
+    * class bodies) and one pass of x2 + kc1 + s3 makes 166 (112 bodies):
+    * the key includes the class loader, so a body compiled on the driver
+    * and again under the executor's loader is cached twice. The cache
+    * then evicts what the next call needs, so every repeated call
+    * recompiles its classes with Janino and the JIT never settles. 1000
+    * holds several such sets; with it the perfbench passes after set-up
+    * compile 0 classes, against ~70 (detectors) and ~160 (x2 + kc1 + s3)
+    * per pass at 100.
+    * It is a static SQL conf: `CodeGenerator` reads it once per JVM when
+    * the cache is first used, so only the session builder can set it,
+    * not an extension or a runtime `spark.conf.set`. */
   val requiredConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
 }

@@ -462,6 +462,16 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(recall > 0.3, s"trained-IVF recall too low: $recall")
   }
 
+  test("kmeans centroids: a null embedding fails the dimension check by name") {
+    val corpus = vecs.union(Seq((5L, null: Array[Float])).toDF("vec_id", "embedding"))
+    val seeds = vecs.where(col("vec_id").isin(0L, 2L))
+    val err = intercept[IllegalArgumentException] {
+      Similarity.kmeansCentroids(corpus, seeds, iters = 1)
+    }
+    assert(err.getMessage.contains("must all have the seed dimension 3"), err.getMessage)
+    assert(err.getMessage.contains("-1 = null embedding"), err.getMessage)
+  }
+
   test("IVF with all points as centroids reproduces brute force") {
     val bf = Similarity.bruteForceTopK(vecs.where(col("vec_id") === 0), vecs, k = 2)
       .select("neighbor_id", "rank").as[(Long, Long)].collect().toSet
@@ -540,7 +550,8 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
     val e = Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
     val seeds = e.where(col("vec_id") % 25 === 0)
     val q = e.where(col("vec_id") < 20)
-    def rs(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSet
+    // sorted sequences, not sets: a duplicated or dropped row must fail
+    def rs(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
 
     val vn = Similarity.normalizedCorpus(e)
     // s3 composition: train + search

@@ -6,14 +6,14 @@ import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // the engine's session confs, as Bench, Verify and perfbench apply them
+    graft.sources.Tables.requiredConfs.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
