@@ -39,11 +39,6 @@ object Materialize {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private val warnedPersistPin = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** THE size-gate rule, shared by [[barrierAbove]] and
-    * [[graft.operators.RangeRank]] (one definition — the gates must
-    * not drift): true when `sizeOf`'s ESTIMATED size (plan
-    * statistics — no job) is under the per-operator conf key's
-    * threshold, i.e. the cheap small-scale plan should be kept. */
   /** Every gate conf key ever consulted in this JVM — the registry
     * the AuditProbe sweep reads so it can force EVERY gate open
     * without a hand-maintained list (review finding: a parallel list
@@ -51,48 +46,38 @@ object Materialize {
   val registeredGateKeys: java.util.Set[String] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  def underGate(
-      sizeOf: DataFrame, confKey: String,
-      defaultMinBytes: Long = 32L * 1024 * 1024): Boolean = {
+  /** Threshold of every size gate when its conf key is unset. */
+  val DefaultMinBytes: Long = 32L * 1024 * 1024
+
+  /** The one gate of every [[barrierAbove]] call site. */
+  val BarrierMinBytesKey = "spark.graft.barrier.minBytes"
+
+  /** The gate of [[persistPartitionedAbove]] — a different trade-off
+    * (an up-front shuffle+sort against per-round exchange elision). */
+  val PinMinBytesKey = "spark.graft.pin.minBytes"
+
+  /** THE size-gate rule (one definition — the gates must not drift):
+    * true when `sizeOf`'s ESTIMATED size (plan statistics — no job)
+    * is under `confKey`'s threshold ([[DefaultMinBytes]] when unset),
+    * i.e. the cheap small-scale plan should be kept. */
+  def underGate(sizeOf: DataFrame, confKey: String): Boolean = {
     registeredGateKeys.add(confKey)
     val minBytes = BigInt(scala.util.Try(
-      sizeOf.sparkSession.conf.get(confKey).toLong).getOrElse(defaultMinBytes))
+      sizeOf.sparkSession.conf.get(confKey).toLong).getOrElse(DefaultMinBytes))
     sizeOf.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes
   }
 
-  /** Size-gated [[barrier]] (the ft1/au1 precedent): skip the
-    * checkpoint when [[underGate]] holds, because below the threshold
-    * the consumers' recomputes are cheaper than the fixed checkpoint
-    * write; above it the barrier's dedup wins. */
-  def barrierAbove(
-      df: DataFrame, sizeOf: DataFrame, confKey: String,
-      defaultMinBytes: Long = 32L * 1024 * 1024): DataFrame =
-    if (underGate(sizeOf, confKey, defaultMinBytes)) df else barrier(df)
+  /** Size-gated [[barrier]] (the ft1/au1 precedent), gated on
+    * [[BarrierMinBytesKey]]: skip the checkpoint when [[underGate]]
+    * holds, because below the threshold the consumers' recomputes are
+    * cheaper than the fixed checkpoint write; above it the barrier's
+    * dedup wins. */
+  def barrierAbove(df: DataFrame, sizeOf: DataFrame): DataFrame =
+    if (underGate(sizeOf, BarrierMinBytesKey)) df else barrier(df)
 
-  /** Partition-pinning barrier for frames an ITERATIVE operator joins
-    * on the same key every round (guide §2.4 — the in-memory analogue
-    * of a bucketed table): repartition by `key` into exactly
-    * `spark.sql.shuffle.partitions` partitions, sort within
-    * partitions on the key, persist, and materialize eagerly. The
-    * cached plan's hash partitioning AND intra-partition order
-    * survive into every consumer — `InMemoryTableScan` advertises
-    * them as long as
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
-    * stays at its default false — so each round's sort-merge join on
-    * `key` skips this side's Exchange and Sort entirely: the frame
-    * (at scale, the EDGE LIST — the biggest table in the job) is
-    * shuffled+sorted once instead of once per round. The explicit
-    * partition count keeps AQE from coalescing the pin (a
-    * REPARTITION_BY_NUM exchange is never coalesced) and matches the
-    * count EnsureRequirements gives the other join side.
-    *
-    * Fault tolerance: persist(MEMORY_AND_DISK) KEEPS lineage — an
-    * evicted/lost block recomputes from source, strictly more
-    * recoverable than the localCheckpoint barrier. The eager count
-    * avoids the multi-branch lazy-population race documented at
-    * [[graft.dedup.Dedup.materialize]]. */
-  /** Size-gated [[persistPartitioned]]: below the gate the fixed
-    * `shuffle.partitions`-way pin COSTS more than it saves (every
+  /** Size-gated [[persistPartitioned]], gated on [[PinMinBytesKey]]:
+    * below the gate the fixed `shuffle.partitions`-way pin COSTS more
+    * than it saves (every
     * loop round then runs `shuffle.partitions` tasks per stage where
     * AQE would coalesce a tiny exchange to 1-4 — measured at sf0.1:
     * cc1 1.78→3.96 s with the pin unconditional), so small inputs
@@ -104,11 +89,8 @@ object Materialize {
     * pinned frame itself usually sits on checkpointed LogicalRDD
     * leaves whose join-multiplied estimates are garbage-huge
     * (measured 1.2e15 "bytes" for a 26-pair frame). */
-  def persistPartitionedAbove(
-      df: DataFrame, key: String, sizeOf: DataFrame,
-      confKey: String = "spark.graft.pin.minBytes",
-      defaultMinBytes: Long = 32L * 1024 * 1024): DataFrame =
-    if (underGate(sizeOf, confKey, defaultMinBytes)) barrier(df)
+  def persistPartitionedAbove(df: DataFrame, key: String, sizeOf: DataFrame): DataFrame =
+    if (underGate(sizeOf, PinMinBytesKey)) barrier(df)
     else persistPartitioned(df, key)
 
   /** Every frame [[persistPartitioned]] has pinned in this JVM.
@@ -132,6 +114,28 @@ object Materialize {
     pinned.clear()
   }
 
+  /** Partition-pinning barrier for frames an ITERATIVE operator joins
+    * on the same key every round (guide §2.4 — the in-memory analogue
+    * of a bucketed table): repartition by `key` into exactly
+    * `spark.sql.shuffle.partitions` partitions, sort within
+    * partitions on the key, persist, and materialize eagerly. The
+    * cached plan's hash partitioning AND intra-partition order
+    * survive into every consumer — `InMemoryTableScan` advertises
+    * them as long as
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
+    * stays at its default false — so each round's sort-merge join on
+    * `key` skips this side's Exchange and Sort entirely: the frame
+    * (at scale, the EDGE LIST — the biggest table in the job) is
+    * shuffled+sorted once instead of once per round. The explicit
+    * partition count keeps AQE from coalescing the pin (a
+    * REPARTITION_BY_NUM exchange is never coalesced) and matches the
+    * count EnsureRequirements gives the other join side.
+    *
+    * Fault tolerance: persist(MEMORY_AND_DISK) KEEPS lineage — an
+    * evicted/lost block recomputes from source, strictly more
+    * recoverable than the localCheckpoint barrier. The eager count
+    * avoids the multi-branch lazy-population race documented at
+    * [[graft.dedup.Dedup.materialize]]. */
   def persistPartitioned(df: DataFrame, key: String): DataFrame = {
     val spark = df.sparkSession
     val n = scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
@@ -161,16 +165,17 @@ object Materialize {
   /** A barrier that GUARANTEES lineage truncation — required when the
     * barrier's job is to pin a NONDETERMINISTIC assignment (sampled
     * `repartitionByRange` boundaries + `monotonically_increasing_id`
-    * in [[graft.operators.RangeRank]]) that several consumers must
-    * see identically. [[barrier]]'s `persist` mode keeps lineage: a
-    * double executor loss RECOMPUTES the input, and a recompute
-    * re-samples boundaries and re-assigns ids — the consumers then
-    * silently disagree (driver-collected offsets vs executor rows).
+    * in [[graft.operators.RangeRank.withGroupedRunningSum]]) that
+    * several consumers must see identically. [[barrier]]'s `persist`
+    * mode keeps lineage: a double executor loss RECOMPUTES the input,
+    * and a recompute re-samples boundaries and re-assigns ids — the
+    * consumers then silently disagree (driver-collected offsets vs
+    * executor rows).
     * So here `persist` is overridden to a truncating form:
     * `checkpoint` when a checkpoint dir is configured (keeps the
     * any-loss fault tolerance persist users want), else
     * `localCheckpoint` (correct pin; an executor loss now FAILS the
-    * job loudly instead of silently mis-ranking — the documented
+    * job loudly instead of silently mis-summing — the documented
     * trade). `local` / `checkpoint` modes already truncate. */
   def pinBarrier(df: DataFrame): DataFrame = {
     val mode = scala.util.Try(df.sparkSession.conf.get(ModeKey)).getOrElse("local")

@@ -5,7 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -1045,25 +1048,9 @@ object QualityScoreKernel {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.LevenshteinLengthBound)
-    ext.injectOptimizerRule(_ => graft.plans.JaroWinklerLengthBound)
-    // the automatic distributed-ranking promotion (GlobalRank.scala):
-    // preCBO = AFTER the operator-optimization fixed point, so column
-    // pruning / filter pushdown have settled around the Window before
-    // it is swapped for the opaque GlobalRankPlan
-    ext.injectPreCBORule(_ => graft.plans.RangeRankRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
-    // duplicate-aggregate REPAIR — Spark-level default OFF; the
-    // shipped GraftConf.cluster profile opts IN (ADVICE r16: know
-    // which posture you deployed). Must run
-    // BEFORE the observer so a repaired plan no longer warns; its
-    // RepairProject output survives the later RewriteSubquery batch
-    // by not being a Project (see PlanAuditRepair's scaladoc)
-    ext.injectPreCBORule(_ => graft.plans.PlanAuditRepair)
-    ext.injectPlannerStrategy(_ => graft.plans.RepairProjectStrategy)
-    // opt-in continuous duplicate-work detector (off by default; the
-    // cluster conf turns it on) — observes, never transforms
-    ext.injectPreCBORule(_ => graft.plans.PlanAuditLog)
+    GraftFunctions.operatorRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftFunctions.preCboRules.foreach(r => ext.injectPreCBORule(_ => r))
+    GraftFunctions.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
   }
 }
 
@@ -1434,50 +1421,55 @@ object GraftFunctions {
     }
   }
 
+  /** The engine's optimizer rules and planner strategies — the ONE
+    * list both install paths ([[GraftExtensions]] and [[register]])
+    * read, in install order.
+    *
+    * Operator-batch rules: the levenshtein / jaro-winkler length-bound
+    * prefilters. */
+  val operatorRules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.plans.LevenshteinLengthBound,
+    graft.plans.JaroWinklerLengthBound)
+
+  /** preCBO rules = AFTER the operator-optimization fixed point, so
+    * column pruning / filter pushdown have settled before they run:
+    *  - the automatic distributed-window promotion (GlobalRank.scala),
+    *    before the opaque GlobalRankPlan replaces the Window;
+    *  - duplicate-aggregate REPAIR — Spark-level default OFF; the
+    *    shipped GraftConf.cluster profile opts IN (ADVICE r16: know
+    *    which posture you deployed). Must run BEFORE the observer so
+    *    a repaired plan no longer warns; its RepairProject output
+    *    survives the later RewriteSubquery batch by not being a
+    *    Project (see PlanAuditRepair's scaladoc);
+    *  - the opt-in continuous duplicate-work detector (off by default;
+    *    the cluster conf turns it on) — observes, never transforms. */
+  val preCboRules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.plans.RangeRankRewrite,
+    graft.plans.PlanAuditRepair,
+    graft.plans.PlanAuditLog)
+
+  /** Planner strategies for the nodes the preCBO rules emit. */
+  val strategies: Seq[SparkStrategy] = Seq(
+    graft.plans.GlobalRankStrategy,
+    graft.plans.RepairProjectStrategy)
+
   /** Idempotent registration into a live session (for sessions built
-    * without the extensions config): the graft_* functions plus the
-    * [[graft.plans.LevenshteinLengthBound]] optimizer rewrite. */
+    * without the extensions config): the graft_* functions plus every
+    * rule and strategy above. A live session has one slot for extra
+    * rules, "User Provided Optimizers", which also runs after the
+    * operator batch, matching the extensions path's preCBO placement. */
   def register(spark: SparkSession): Unit = {
     descriptors.foreach { d =>
       spark.sessionState.functionRegistry.registerFunction(d._1, d._2, d._3)
     }
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.LevenshteinLengthBound)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LevenshteinLengthBound
+    val exp = spark.experimental
+    (operatorRules ++ preCboRules).foreach { r =>
+      if (!exp.extraOptimizations.contains(r))
+        exp.extraOptimizations = exp.extraOptimizations :+ r
     }
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.JaroWinklerLengthBound)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.JaroWinklerLengthBound
-    }
-    // live-session slot for the ranking promotion: "User Provided
-    // Optimizers" also runs after the operator batch, matching the
-    // extensions path's preCBO placement
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.RangeRankRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RangeRankRewrite
-    }
-    if (!spark.experimental.extraStrategies
-        .contains(graft.plans.GlobalRankStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.GlobalRankStrategy
-    }
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.PlanAuditRepair)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PlanAuditRepair
-    }
-    if (!spark.experimental.extraStrategies
-        .contains(graft.plans.RepairProjectStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.RepairProjectStrategy
-    }
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.PlanAuditLog)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PlanAuditLog
+    strategies.foreach { st =>
+      if (!exp.extraStrategies.contains(st))
+        exp.extraStrategies = exp.extraStrategies :+ st
     }
   }
 }

@@ -5,136 +5,20 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
- * Distributed exact ranking — `row_number` / `ntile` over a TOTAL
- * order without a single-partition window.
+ * [[withGroupedRunningSum]]: a low-cardinality `PARTITION BY` running
+ * sum without one task per group (wm1's scale path).
  *
- * `Window.orderBy(...)` with no partition key collapses the frame to
- * ONE task: correct, and fine when the frame is bounded (a vocabulary,
- * a day grain, a top-k), but a scale ceiling when the key is unbounded
- * (customers, documents). This helper is the 100-TB shape for that
- * case (the w5/rfm1/gn1 customer-grain quantile windows):
+ * Unpartitioned global windows (`row_number`/`ntile`/running
+ * aggregates `OVER (ORDER BY ...)`) need no helper: write the plain
+ * `Window.orderBy(...)` and [[graft.plans.RangeRankRewrite]] promotes
+ * it to [[graft.plans.GlobalRankExec]] above the gate. That rule does
+ * not take a `PARTITION BY` window; this helper covers wm1's.
  *
- *  1. `repartitionByRange(order)` — ONE exchange; the sampled range
- *     boundaries put every row of partition i before every row of
- *     partition i+1 under the given order.
- *  2. `sortWithinPartitions(order)` + `monotonically_increasing_id()`
- *     — a per-partition sort (no exchange) and a codegen'd id whose
- *     UPPER bits are the partition index and LOWER 33 bits the
- *     record's position in that sorted partition. This is Spark's own
- *     `RDD.zipWithIndex` trick kept inside the DataFrame API.
- *  3. A lineage barrier ([[graft.Materialize]]): the sampled
- *     boundaries and the id assignment are per-execution; the barrier
- *     pins ONE assignment for both consumers below.
- *  4. Per-partition counts — a partial-combined aggregate whose world
- *     is ≤ numParts rows — are collected and prefix-summed on the
- *     driver (bounded by construction: numParts is caller-controlled,
- *     exactly `RDD.zipWithIndex`'s design), then broadcast-joined
- *     back: global rank = partition offset + local position + 1.
- *
- * Net plan: one range exchange + one local sort + one tiny aggregate +
- * one broadcast join. NO single-partition stage anywhere — asserted by
- * RangeRankSpec and the 10M-row ScaleSmoke addendum.
- *
- * Both entry points are SIZE-GATED (the ft1/au1 precedent, conf
- * `spark.graft.rangerank.minBytes`): below the threshold the plain
- * single-partition window is cheaper than the barrier + extra jobs,
- * and bit-identical — the gate-SF oracle hashes hold on either path.
- *
- * Requirement: `order` must be a TOTAL order (append a unique
- * tiebreak column). Ties straddling a sampled boundary would
- * otherwise make the rank boundary-dependent; with a total order the
- * global rank is independent of where the sampler cuts.
+ * Size-gated on [[MinBytesKey]], the same key the planner rule reads.
  */
 object RangeRank {
 
   val MinBytesKey = "spark.graft.rangerank.minBytes"
-
-  // the gate itself is graft.Materialize.underGate — ONE definition
-  // shared with the barrier gates (review finding: a local copy of
-  // the rule would drift)
-  private def smallEnough(df: DataFrame): Boolean =
-    graft.Materialize.underGate(df, MinBytesKey)
-
-  /** df + `out` = global 1-based row number (long) under `order`.
-    *
-    * Laziness contract: below the size gate this is a plain lazy
-    * window; ABOVE it, construction runs two eager jobs (the pin
-    * barrier and the per-partition counts collect) — see
-    * [[withGlobalRank]]. Callers that need strict laziness must stay
-    * under the gate or defer the call. */
-  def withRowNumber(df: DataFrame, out: String, order: Seq[Column]): DataFrame =
-    if (smallEnough(df))
-      df.withColumn(out,
-        row_number().over(Window.orderBy(order: _*)).cast("long"))
-    else
-      withGlobalRank(df, out, order).drop(NCol)
-
-  /** df + `out` = ntile(k) (long) under `order` — SQL-standard tiling
-    * (first n%k buckets get one extra row), identical to
-    * `functions.ntile` / DuckDB on a total order.
-    *
-    * Same laziness contract as [[withRowNumber]]: above the size gate
-    * construction runs two eager jobs. */
-  def withNtile(df: DataFrame, out: String, k: Int, order: Seq[Column]): DataFrame = {
-    require(k >= 1, s"withNtile: k must be >= 1: $k")
-    if (smallEnough(df))
-      df.withColumn(out, ntile(k).over(Window.orderBy(order: _*)).cast("long"))
-    else {
-      val rn = s"__rr_rn_$out"
-      withGlobalRank(df, rn, order)
-        .withColumn(out, ntileFromRank(col(rn), col(NCol), k))
-        .drop(rn, NCol)
-    }
-  }
-
-  /** Total-count companion column name attached by [[withGlobalRank]]. */
-  private val NCol = "__rr_n"
-  private val IdxMask = (1L << 33) - 1
-
-  /** The ungated distributed path: df + `rnOut` (global row number,
-    * long) + `__rr_n` (total row count, long). Runs two jobs eagerly
-    * (the barrier and the counts collect). */
-  def withGlobalRank(df: DataFrame, rnOut: String, order: Seq[Column]): DataFrame = {
-    val spark = df.sparkSession
-    // some managed platforms return non-numeric values (e.g. "auto")
-    // from conf.get even though OSS Spark rejects setting them; the
-    // plan's own partition count is the honest fallback
-    val numParts = scala.util.Try(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(df.rdd.getNumPartitions).max(1)
-    val ordered = df
-      .repartitionByRange(numParts, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__rr_mid", monotonically_increasing_id())
-    // pin one boundary sample + id assignment for both consumers.
-    // MUST truncate lineage (pinBarrier, not barrier): under kept
-    // lineage a recompute re-samples the range boundaries and
-    // re-assigns the nondeterministic ids, so the driver-collected
-    // offsets below could describe a DIFFERENT assignment than the
-    // rows the join sees — silently wrong ranks (ADVICE r13, medium)
-    val pinned = graft.Materialize.pinBarrier(ordered)
-    val withPid = pinned
-      .withColumn("__rr_pid", shiftright(col("__rr_mid"), 33))
-      .withColumn("__rr_idx", col("__rr_mid").bitwiseAND(lit(IdxMask)))
-    // ≤ numParts rows: the bounded-by-construction driver step
-    // (RDD.zipWithIndex's own design) — keeps SinglePartition out of
-    // the returned plan entirely
-    val counts = withPid.groupBy(col("__rr_pid"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1)
-    val total = counts.map(_._2).sum
-    val offsets = counts.scanLeft(0L)(_ + _._2)
-    val offsetRows = counts.zip(offsets).map { case ((pid, _), off) => (pid, off) }
-    import spark.implicits._
-    val offs = offsetRows.toSeq.toDF("__rr_pid", "__rr_off")
-    withPid
-      .join(broadcast(offs), Seq("__rr_pid"))
-      .withColumn(rnOut, col("__rr_idx") + col("__rr_off") + lit(1L))
-      .withColumn(NCol, lit(total))
-      .drop("__rr_mid", "__rr_pid", "__rr_idx", "__rr_off")
-  }
 
   /** df + `out` (running sum of `w` within `group` ordered by `order`)
     * + `totOut` (the group's total) — the cumulative-weight window
@@ -144,8 +28,7 @@ object RangeRank {
     *
     * Below the size gate (`sizeOf` under [[MinBytesKey]]) this is the
     * plain two-window form — bit-identical to the historical wm1 plan,
-    * so gate-SF oracle hashes hold. Above it, the [[withGlobalRank]]
-    * mechanics are reused for a distributed prefix sum:
+    * so gate-SF oracle hashes hold. Above it, a distributed prefix sum:
     * `repartitionByRange(group, order)` + local sort + partition ids
     * from `monotonically_increasing_id`, a driver prefix-sum of the
     * ≤ numParts·|groups| per-(partition, group) subtotals, and a
@@ -188,9 +71,11 @@ object RangeRank {
         .repartitionByRange(numParts, col(group) +: order: _*)
         .sortWithinPartitions(col(group) +: order: _*)
         .withColumn("__rr_mid", monotonically_increasing_id())
-      // pin ONE boundary sample + id assignment (same reasoning as
-      // withGlobalRank: the subtotals collect and the row join must
-      // see the identical assignment)
+      // pin ONE boundary sample + id assignment. MUST truncate lineage
+      // (pinBarrier, not barrier): a recompute re-samples the range
+      // boundaries and re-assigns the nondeterministic ids, so the
+      // driver-collected subtotals could describe a DIFFERENT
+      // assignment than the rows the join sees — silently wrong sums
       val pinned = graft.Materialize.pinBarrier(ordered)
       val withPid = pinned
         .withColumn("__rr_pid", shiftright(col("__rr_mid"), 33))
@@ -227,19 +112,5 @@ object RangeRank {
         .withColumn(totOut, col("__rr_tot"))
         .drop("__rr_pid", "__rr_opid", "__rr_g", "__rr_off", "__rr_tot")
     }
-  }
-
-  /** SQL-standard NTILE from a global 1-based rank `rn` and total `n`:
-    * q = n/k, r = n%k; the first r buckets hold q+1 rows, the rest q.
-    * All-positive integer arithmetic, so floor == truncation and both
-    * engines agree exactly. The q=0 (n<k) edge stays in the `when`
-    * branch (thr = n covers every row), so the otherwise-branch's /q
-    * never evaluates. */
-  def ntileFromRank(rn: Column, n: Column, k: Int): Column = {
-    val q = floor(n / lit(k)).cast("long")
-    val r = (n % lit(k)).cast("long")
-    val thr = r * (q + lit(1L))
-    when(rn <= thr, floor((rn - lit(1L)) / (q + lit(1L))).cast("long") + lit(1L))
-      .otherwise(r + floor((rn - thr - lit(1L)) / q).cast("long") + lit(1L))
   }
 }

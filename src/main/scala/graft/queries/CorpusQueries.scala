@@ -340,7 +340,7 @@ object CorpusQueries {
     // output, gated on the (already materialized) input
     val hist2 = graft.Materialize.barrierAbove(
       dd.groupBy(col("n_tok"), col("sb")).agg(count(lit(1)).as("cnt")),
-      sizeOf = d, confKey = "spark.graft.pk2.barrierMinBytes")
+      sizeOf = d)
     // per-length shard prefix: windows over ≤ idShards rows each
     val base2 = hist2.withColumn("before2",
       coalesce(sum(col("cnt")).over(

@@ -113,7 +113,7 @@ object PipelineQueries {
       normed.groupBy(col("label"), col("dim"))
         .agg(sum(col("qu")).as("s"), sum(col("qu") * col("qu")).as("q2"),
           count(lit(1)).as("nd")),
-      sizeOf = e, confKey = "spark.graft.lb1.barrierMinBytes")
+      sizeOf = e)
     val a = sums.select(col("label").as("label_a"), col("dim"),
       col("s").as("s_a"), col("q2").as("q2_a"), col("nd").as("n_a"))
     val b = sums.select(col("label").as("label_b"), col("dim"),

@@ -460,19 +460,21 @@ object Relational {
     * engines agree exactly; totals round to 4dp BEFORE ranking so the
     * order itself cannot ride on summation ulps. The window runs
     * over the per-customer aggregate (one row per customer), not raw
-    * orders — and because the customer key is UNBOUNDED, the tiling
-    * is size-gated ([[graft.operators.RangeRank]]): the plain window
-    * at gate scale, the range-partitioned rank (no single-partition
-    * stage) above the threshold. Both paths emit identical deciles
-    * on this total order. */
+    * orders — and because the customer key is UNBOUNDED, the plain
+    * window is promoted by [[graft.plans.RangeRankRewrite]] above the
+    * `spark.graft.rangerank.minBytes` gate: the single-partition
+    * window at gate scale, [[graft.plans.GlobalRankExec]] (no
+    * single-partition stage) above it. Both plans emit identical
+    * deciles on this total order. */
   def w5SpendDeciles(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
     val totals = t(spark, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(round(sum(col("o_totalprice")), 4).as("total_spend"))
     // long decile: Spark ntile is int32, DuckDB's is BIGINT — the
     // dtype-strict gate compares exactly (SURVEY §8 discipline)
-    graft.operators.RangeRank.withNtile(totals, "decile", 10,
-        Seq(col("total_spend").desc, col("o_custkey")))
+    totals.withColumn("decile", ntile(10).over(
+        Window.orderBy(col("total_spend").desc, col("o_custkey"))).cast("long"))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_customers"),
         round(sum(col("total_spend")), 4).as("decile_spend"),
@@ -1949,7 +1951,7 @@ object Relational {
     // scalar AND the top-k — reuse-defeated without it
     val counts = graft.Materialize.barrierAbove(
       keys.groupBy(col("key")).agg(count(lit(1)).as("cnt")),
-      sizeOf = keys, confKey = "spark.graft.keyskew.barrierMinBytes")
+      sizeOf = keys)
     val stats = counts.agg(
       count(lit(1)).as("n_keys"), sum(col("cnt")).as("n_rows"))
     val top = counts.crossJoin(broadcast(stats))
@@ -1969,17 +1971,18 @@ object Relational {
     * quantile bucketing / monotone binning): per bin its row count,
     * raw min/max bounds, and the exact integer-cent sum. The tiling
     * runs over ROW grain (every lineitem row), the exact case
-    * [[graft.operators.RangeRank]] exists for — single-partition
-    * window below the stats gate, range-partitioned rank above, both
-    * bit-identical on the (price, orderkey, linenumber) total order.
-    * Sums quantize to cents BEFORE aggregation (gn1 discipline) so
-    * bin sums are order-free exact integers. */
+    * [[graft.plans.RangeRankRewrite]] exists for — single-partition
+    * window below the stats gate, [[graft.plans.GlobalRankExec]]
+    * above, both bit-identical on the (price, orderkey, linenumber)
+    * total order. Sums quantize to cents BEFORE aggregation (gn1
+    * discipline) so bin sums are order-free exact integers. */
   def qb1QuantileBins(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
     val rows = t(spark, dir, "lineitem")
       .select(col("l_extendedprice").as("v"),
         col("l_orderkey"), col("l_linenumber"))
-    graft.operators.RangeRank.withNtile(rows, "bin", k,
-        Seq(col("v"), col("l_orderkey"), col("l_linenumber")))
+    rows.withColumn("bin", ntile(k).over(Window.orderBy(
+        col("v"), col("l_orderkey"), col("l_linenumber"))).cast("long"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("v")).as("lo"), max(col("v")).as("hi"),
@@ -2039,27 +2042,35 @@ object Relational {
     * deterministic on both engines. ntile is cast long (the q8/w5
     * dtype discipline).
     *
-    * Scale shape (the w5 precedent): each quintile assignment is
-    * size-gated through [[graft.operators.RangeRank]] — the plain
-    * single-partition window at gate scale, the range-partitioned
-    * rank above the threshold. Three orderings cost three sorts on
-    * either path; neither collapses the frame to one task at scale. */
+    * Scale shape (the w5 precedent): each quintile window is promoted
+    * by [[graft.plans.RangeRankRewrite]] above the size gate — the
+    * plain single-partition window at gate scale,
+    * [[graft.plans.GlobalRankExec]] above it. Three orderings cost
+    * three sorts on either plan; neither collapses the frame to one
+    * task at scale. */
   def rfm1RfmSegments(spark: SparkSession, dir: String): DataFrame = {
-    val per = t(spark, dir, "orders")
+    graft.functions.GraftFunctions.register(spark)
+    val orders = t(spark, dir, "orders")
+    val per = orders
       .groupBy(col("o_custkey"))
       .agg(max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("frequency"),
         round(sum(col("o_totalprice")), 4).as("monetary"))
     val ref = per.agg(max(col("last_order")).as("t_ref"))
-    val scored = per.crossJoin(broadcast(ref))
-      .withColumn("recency_days",
-        datediff(col("t_ref"), col("last_order")).cast("long"))
-    import graft.operators.RangeRank.withNtile
-    val tiled = withNtile(withNtile(withNtile(scored,
-        "__rt", 5, Seq(col("recency_days"), col("o_custkey"))),
-        "f_score", 5, Seq(col("frequency"), col("o_custkey"))),
-        "m_score", 5, Seq(col("monetary"), col("o_custkey")))
-    tiled
+    // size-gated barrier (PlanAudit finding): `per` feeds the t_ref
+    // scalar AND the quintile windows with different prunings, so
+    // ReuseExchange cannot share its aggregate above the gate
+    val scored = graft.Materialize.barrierAbove(
+      per.crossJoin(broadcast(ref))
+        .withColumn("recency_days",
+          datediff(col("t_ref"), col("last_order")).cast("long")),
+      sizeOf = orders)
+    def quintile(order: String) =
+      ntile(5).over(Window.orderBy(col(order), col("o_custkey"))).cast("long")
+    scored
+      .withColumn("__rt", quintile("recency_days"))
+      .withColumn("f_score", quintile("frequency"))
+      .withColumn("m_score", quintile("monetary"))
       .withColumn("r_score", lit(6L) - col("__rt"))
       .select(col("o_custkey"), col("recency_days"), col("frequency"),
         col("monetary"), col("r_score"), col("f_score"), col("m_score"),
@@ -2115,16 +2126,18 @@ object Relational {
     * sequence through r6. Output is ONE row (G, n, total).
     *
     * Scale shape (the w5/rfm1 precedent): the rank over the
-    * per-customer frame is size-gated through
-    * [[graft.operators.RangeRank]] — plain window at gate scale,
-    * range-partitioned rank (no single-partition stage) above. */
+    * per-customer frame is promoted by [[graft.plans.RangeRankRewrite]]
+    * above the size gate — plain window at gate scale,
+    * [[graft.plans.GlobalRankExec]] (no single-partition stage)
+    * above. */
   def gn1GiniSpend(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
     val per = t(spark, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(round(sum(col("o_totalprice")), 4).as("spend"))
       .withColumn("cents", floor(col("spend") * lit(1e4) + lit(0.5)).cast("long"))
-    val ranked = graft.operators.RangeRank.withRowNumber(
-      per, "i", Seq(col("cents"), col("o_custkey")))
+    val ranked = per.withColumn("i",
+      row_number().over(Window.orderBy(col("cents"), col("o_custkey"))).cast("long"))
     ranked.agg(count(lit(1)).as("n"),
         sum(col("cents")).as("sx"),
         // decimal BEFORE the multiply: long i·cents wraps at scale
@@ -2163,7 +2176,7 @@ object Relational {
     // ReuseExchange — without the barrier the distinct runs up to 3x
     val items = graft.Materialize.barrierAbove(
       basket.select(col("okey"), col("part")).distinct(),
-      sizeOf = basket, confKey = "spark.graft.basket.barrierMinBytes")
+      sizeOf = basket)
     val nn = items.agg(countDistinct(col("okey")).as("n_orders"))
     val cnt = items.groupBy(col("part")).agg(count(lit(1)).as("n_one"))
     // per-basket pair expansion instead of the okey self-join: group

@@ -208,14 +208,12 @@ object TemporalQueries {
     * barrier below is what actually dedups the scan, size-gated on
     * the ft1 precedent (skip the checkpoint when three re-scans are
     * cheaper than one write). */
-  val AuBarrierMinBytesKey = "spark.graft.activeUsers.barrierMinBytes"
-
   def activeUsers(events: DataFrame): DataFrame = {
     val ud = graft.Materialize.barrierAbove(
       events.select(col("user_id"),
         floor(unix_timestamp(col("ts")) / lit(86400L)).cast("long").as("d"))
         .distinct(),
-      sizeOf = events, confKey = AuBarrierMinBytesKey)
+      sizeOf = events)
     val dau = ud.groupBy(col("d").as("day_idx")).agg(count(lit(1)).as("dau"))
     def rolling(w: Int, name: String): DataFrame = ud
       .select(col("user_id"),
@@ -449,15 +447,6 @@ object TemporalQueries {
     * per-user aggregate, then all remaining work runs on the
     * (stage-pair)-keyed frame — stage-pair cardinality is the funnel
     * length, so the median windows are the bm1 harmless tail. */
-  /** Below this estimated input size the [[funnelTiming]] barrier is
-    * skipped: the checkpoint write is a fixed ~0.5 s that only pays
-    * for itself once recomputing the staged window chain per
-    * stage-pair branch costs more (measured 5.8× at 10M events; a
-    * wash at gate SF). Estimated from plan statistics — no job runs.
-    * Override via the session conf of the same name. */
-  val FunnelBarrierMinBytesKey = "spark.graft.funnel.barrierMinBytes"
-  private val FunnelBarrierMinBytesDefault = 32L * 1024 * 1024
-
   def funnelTiming(events: DataFrame, stages: Seq[String]): DataFrame = {
     require(stages.length >= 2, s"funnelTiming: need >= 2 stages: $stages")
     // barrier: the stage-pair union below reads this frame once per
@@ -465,11 +454,10 @@ object TemporalQueries {
     // full event log recomputes per branch (measured 2.8× at 10M
     // events on a funnel-shaped mix). Size-gated (the q15/e6
     // precedent): skipped when the estimated input is small enough
-    // that k−1 recomputes are cheaper than the checkpoint write.
+    // that k−1 recomputes are cheaper than the fixed ~0.5 s
+    // checkpoint write (a wash at gate SF).
     val wide = graft.Materialize.barrierAbove(
-      funnelReachWide(events, stages), sizeOf = events,
-      confKey = FunnelBarrierMinBytesKey,
-      defaultMinBytes = FunnelBarrierMinBytesDefault)
+      funnelReachWide(events, stages), sizeOf = events)
     val pairs = stages.sliding(2).zipWithIndex.map { case (Seq(a, b), i) =>
       wide.where(col(s"t_${i + 1}").isNotNull)
         .select(lit(s"$a->$b").as("step"), col("user_id"),

@@ -13,13 +13,6 @@ import graft.sources.Tables
  */
 object TextAnalysis {
 
-  /** Size gate for the vocab-grain count barriers (t8/t10/t11/pmi1
-    * — the PlanAudit reuse-defeated-duplicate findings): below the
-    * threshold the duplicate aggregates are cheaper than the fixed
-    * checkpoint write, above it the barrier halves the corpus
-    * explode+count work. */
-  val VocabBarrierMinBytesKey = "spark.graft.vocab.barrierMinBytes"
-
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.read(spark, dir, "documents")
 
@@ -179,7 +172,7 @@ object TextAnalysis {
     // — without the barrier the corpus explode+count runs twice
     val counts = graft.Materialize.barrierAbove(
       tk.groupBy(col("tok")).agg(count(lit(1)).as("c")),
-      sizeOf = docs(spark, dir), confKey = VocabBarrierMinBytesKey)
+      sizeOf = docs(spark, dir))
     val total = counts.agg(sum(col("c")).as("total"))
     tk.join(counts, Seq("tok"))
       .crossJoin(broadcast(total))
@@ -230,7 +223,7 @@ object TextAnalysis {
     val tk = graft.Materialize.barrierAbove(
       docs(spark, dir)
         .select(col("doc_id"), posexplode(wsTokens(lower(col("text")))).as(Seq("pos", "tok"))),
-      sizeOf = docs(spark, dir), confKey = VocabBarrierMinBytesKey)
+      sizeOf = docs(spark, dir))
     val bg = tk.withColumn("nxt", lead(col("tok"), 1).over(w))
       .where(col("nxt").isNotNull)
     // size-gated barrier (PlanAudit finding): uni has two consumers
@@ -238,7 +231,7 @@ object TextAnalysis {
     // endpoint-count joins) whose pruned outputs defeat ReuseExchange
     val uni = graft.Materialize.barrierAbove(
       tk.groupBy(col("tok")).agg(count(lit(1)).as("cu")),
-      sizeOf = docs(spark, dir), confKey = VocabBarrierMinBytesKey)
+      sizeOf = docs(spark, dir))
     val big = bg.groupBy(col("tok"), col("nxt")).agg(count(lit(1)).as("cb"))
     (tk, bg, uni, big)
   }
@@ -430,7 +423,7 @@ object TextAnalysis {
     // fixed checkpoint write (measured 0.19 → 0.40 s un-gated)
     val tfd = graft.Materialize.barrierAbove(
       tk.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")),
-      sizeOf = docs(spark, dir), confKey = "spark.graft.ov1.barrierMinBytes")
+      sizeOf = docs(spark, dir))
     val counts = tfd.groupBy(col("tok")).agg(sum(col("tf")).as("c"))
     val vocab = counts
       .withColumn("rn", row_number().over(
@@ -588,7 +581,7 @@ object TextAnalysis {
       toks.groupBy(col("tok")).agg(
         sum(when(col("it"), 1L).otherwise(0L)).as("ct"),
         sum(when(col("it"), 0L).otherwise(1L)).as("cr")),
-      sizeOf = docs(spark, dir), confKey = VocabBarrierMinBytesKey)
+      sizeOf = docs(spark, dir))
     val tot = broadcast(c.agg(
       count(lit(1)).as("v"), sum(col("ct")).as("tt"), sum(col("cr")).as("tr")))
     val terms = c.crossJoin(tot).select(col("tok"),
@@ -630,7 +623,7 @@ object TextAnalysis {
     val buckets = graft.Materialize.barrierAbove(
       perDoc.groupBy(col("b")).agg(
         count(lit(1)).as("c"), sum(col("n_toks")).as("t")),
-      sizeOf = docs(spark, dir), confKey = VocabBarrierMinBytesKey)
+      sizeOf = docs(spark, dir))
     val tot = broadcast(buckets.agg(
       sum(col("c")).as("tc"), sum(col("t")).as("tt")))
     val grid = spark.range(0, 10).select(col("id").as("thr10"))

@@ -19,11 +19,6 @@ import graft.operators.Kernels
  */
 object TimeSeriesQueries {
 
-  /** Size gate for the series-stats barriers (nm1/sea1 — PlanAudit
-    * reuse-defeated-duplicate findings): below the threshold the
-    * duplicate per-series aggregate is cheaper than the checkpoint. */
-  val SeriesBarrierMinBytesKey = "spark.graft.series.barrierMinBytes"
-
   /** The repo's portable explicit rounding (STATUS lesson 11):
     * floor(|u|·1e6 + 0.5)/1e6 — the identical IEEE op sequence on
     * both engines at every input, unlike round()'s engine-specific
@@ -432,7 +427,7 @@ object TimeSeriesQueries {
       rows.groupBy(col("series_id"), col("dow")).agg(
           count(lit(1)).as("n"), sum(col("yu")).as("syud"))
         .withColumn("s_u", floor(col("syud").cast("double") / col("n") + lit(0.5))),
-      sizeOf = series, confKey = SeriesBarrierMinBytesKey)
+      sizeOf = series)
     val en = rows
       .join(dowAgg.select(col("series_id"), col("dow"), col("s_u")),
         Seq("series_id", "dow"))
@@ -562,7 +557,7 @@ object TimeSeriesQueries {
           count(lit(1)).as("n"), sum(col("yu")).as("syu"),
           min(col("value")).as("vmin"), max(col("value")).as("vmax"))
         .withColumn("mean_u", floor(col("syu").cast("double") / col("n") + lit(0.5))),
-      sizeOf = series, confKey = SeriesBarrierMinBytesKey)
+      sizeOf = series)
     val ss = rows
       .join(stats.select(col("series_id"), col("mean_u")), Seq("series_id"))
       .withColumn("c", (col("yu").cast("double") - col("mean_u")) / lit(1e6))

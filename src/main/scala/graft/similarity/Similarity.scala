@@ -572,8 +572,7 @@ object Similarity {
     // Size-gated (ft1/au1 precedent): below the threshold the double
     // scan is cheaper than the checkpoint write
     val corp = graft.Materialize.barrierAbove(
-      v.where(!isEval(col("vid"))), sizeOf = vecs,
-      confKey = "spark.graft.dc4.barrierMinBytes")
+      v.where(!isEval(col("vid"))), sizeOf = vecs)
     val scored = corp.crossJoin(broadcast(eval))
       .withColumn("cos", fastDot(col("emb"), col("e_emb")))
       .groupBy(col("vid")).agg(max(col("cos")).as("mc"))
@@ -608,8 +607,7 @@ object Similarity {
     ensureRegistered(vecs)
     val v = normalized(vecs, "vid", "emb")
     val corp = graft.Materialize.barrierAbove(
-      v.where(!isEval(col("vid"))), sizeOf = vecs,
-      confKey = "spark.graft.dc4.barrierMinBytes")
+      v.where(!isEval(col("vid"))), sizeOf = vecs)
     val eval = v.where(isEval(col("vid")))
     def banded(df: DataFrame, id: String, emb: String) = df.select(
       col("vid").as(id), col("emb").as(emb),

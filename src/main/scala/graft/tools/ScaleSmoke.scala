@@ -1113,77 +1113,6 @@ object ScaleSmoke {
         s"bench grams=$nBenchGrams, bitset=${bitsetBytes / 1024} KiB vs " +
         s"exact-set ${nBenchGrams * 8 / 1024} KiB + join-relation overhead")
     }
-    // --- round-13: range-partitioned exact ranking (w5/rfm1/gn1's
-    // scale path) at 10M customers — the engine's last unbounded-key
-    // single-partition step removed. Claims measured: (a) the gated
-    // production helpers pick the range path on a 10M frame with NO
-    // SinglePartition stage in the executed plan; (b) the result is
-    // row-identical to the plain-window twin (exact integer-cent
-    // aggregates per decile + the gn1 rank-weighted sum). ------------
-    if (want("rank")) {
-      ensureCust10m()
-      val per = spark.read.parquet(s"$outDir/cust10m.parquet")
-        .withColumn("cents", floor(col("spend") * lit(100) + lit(0.5)).cast("long"))
-      val ord = Seq(col("spend").desc, col("k"))
-      def decileAgg(df: DataFrame): Array[(Long, Long, Long)] =
-        df.groupBy(col("decile"))
-          .agg(count(lit(1)).as("n"), sum(col("cents")).as("c"))
-          .orderBy(col("decile"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      var ranged: Array[(Long, Long, Long)] = null
-      var plain: Array[(Long, Long, Long)] = null
-      // kept from the last timed run for the plan print below —
-      // re-building the gated frame re-runs its eager range jobs
-      var shape: DataFrame = null
-      timed("rank_ntile_range_10m") {
-        // the PRODUCTION gated helper: 10M-row stats clear the 32MB
-        // threshold, so this runs the range-partitioned path
-        val t = graft.operators.RangeRank.withNtile(per, "decile", 10, ord)
-        val plan = t.queryExecution.executedPlan.toString
-        require(!plan.contains("SinglePartition"),
-          "range path must not contain a SinglePartition stage:\n" + plan.take(3000))
-        shape = t
-        ranged = decileAgg(t)
-        ranged.map(_._2).sum
-      }
-      timed("rank_ntile_plain_10m") {
-        val t = per.withColumn("decile", org.apache.spark.sql.functions
-          .ntile(10).over(org.apache.spark.sql.expressions.Window
-            .orderBy(ord: _*)).cast("long"))
-        plain = decileAgg(t)
-        plain.map(_._2).sum
-      }
-      println(s"SCALE rank: decile agreement range vs plain = " +
-        s"${if (ranged.sameElements(plain)) "IDENTICAL" else "DIVERGED"}")
-      var sixRange = BigDecimal(0)
-      var sixPlain = BigDecimal(0)
-      timed("rank_rownum_range_10m") {
-        val r = graft.operators.RangeRank
-          .withRowNumber(per, "i", Seq(col("cents"), col("k")))
-        require(!r.queryExecution.executedPlan.toString.contains("SinglePartition"))
-        val row = r.agg(sum(col("i").cast("decimal(38,0)")
-          * col("cents").cast("decimal(38,0)")).as("six"), count(lit(1))).head
-        sixRange = row.getDecimal(0)
-        row.getLong(1)
-      }
-      timed("rank_rownum_plain_10m") {
-        val r = per.withColumn("i", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("cents"), col("k"))).cast("long"))
-        val row = r.agg(sum(col("i").cast("decimal(38,0)")
-          * col("cents").cast("decimal(38,0)")).as("six"), count(lit(1))).head
-        sixPlain = row.getDecimal(0)
-        row.getLong(1)
-      }
-      println(s"SCALE rank: gn1 rank-weighted sum range=$sixRange " +
-        s"plain=$sixPlain ${if (sixRange == sixPlain) "IDENTICAL" else "DIVERGED"}")
-      // the captured-plan evidence for PLANS.md
-      println("SCALE rank: range-path executed plan (head):")
-      println(shape.queryExecution.executedPlan.toString.linesIterator
-        .map("SCALE   " + _.take(100)).take(14).mkString("\n"))
-      auditAndPrint("rank_ntile", shape)
-    }
-
     // --- wmedian: wm1's cumulative-weight window at 10M rows --------------
     // (VERDICT r20 task 4) weightedMedian partitions its running-sum
     // window by a 3-value group key — at scale that is 3 straggler
@@ -1234,14 +1163,17 @@ object ScaleSmoke {
     }
 
     // --- rankrule: the AUTOMATIC promotion (RangeRankRewrite) -------------
-    // Same claims as the `rank` section, but through plain user SQL: a
-    // 10M-row `ntile/rank OVER (ORDER BY ...)` with no partition key
-    // must plan as GlobalRankExec (one range exchange, no
-    // SinglePartition window) with values identical to the plain
-    // window — rank/dense_rank exactness proven ON ties (order by
-    // cents only: ~10-row tie runs straddling any boundary sampler).
+    // w5/rfm1/gn1/qb1's scale path at 10M customers, through plain
+    // user SQL: a 10M-row `ntile/rank/row_number OVER (ORDER BY ...)`
+    // with no partition key must plan as GlobalRankExec (one range
+    // exchange, no SinglePartition window) with values identical to
+    // the plain window — exact integer-cent aggregates per decile, the
+    // gn1 rank-weighted sum Σ i·cents of row_number, and rank/
+    // dense_rank exactness proven ON ties (order by cents only:
+    // ~10-row tie runs straddling any boundary sampler).
     if (want("rankrule")) {
       graft.functions.GraftFunctions.register(spark)
+      ensureCust10m()
       val per = spark.read.parquet(s"$outDir/cust10m.parquet")
         .withColumn("cents", floor(col("spend") * lit(100) + lit(0.5)).cast("long"))
       per.createOrReplaceTempView("cust10m")
@@ -1254,10 +1186,16 @@ object ScaleSmoke {
         """SELECT cents, k,
           |  ntile(10)    OVER (ORDER BY spend DESC, k) AS q,
           |  rank()       OVER (ORDER BY cents) AS rk,
-          |  dense_rank() OVER (ORDER BY cents) AS dr
+          |  dense_rank() OVER (ORDER BY cents) AS dr,
+          |  row_number() OVER (ORDER BY cents, k) AS i
           |FROM cust10m""".stripMargin
       var auto: Array[(Int, Long, Long)] = null
       var rkAuto: Array[(Long, Long, Long)] = null
+      var sixAuto = BigDecimal(0)
+      // gn1's rank-weighted sum: decimal BEFORE the multiply
+      def six(df: DataFrame): BigDecimal = BigDecimal(df.agg(sum(
+        col("i").cast("decimal(38,0)") * col("cents").cast("decimal(38,0)")))
+        .head.getDecimal(0))
       def rkAgg(df: DataFrame): Array[(Long, Long, Long)] =
         df.groupBy(col("cents"))
           .agg(min(col("rk")).cast("long").as("r"), max(col("dr")).cast("long").as("d"))
@@ -1274,10 +1212,12 @@ object ScaleSmoke {
         shape = df
         auto = tileAgg(rankSql)
         rkAuto = rkAgg(df)
+        sixAuto = six(df)
         auto.map(_._2).sum
       }
       var plainT: Array[(Int, Long, Long)] = null
       var rkPlain: Array[(Long, Long, Long)] = null
+      var sixPlain = BigDecimal(0)
       timed("rankrule_plainwin_10m") {
         spark.conf.set(graft.operators.RangeRank.MinBytesKey, Long.MaxValue.toString)
         try {
@@ -1285,6 +1225,7 @@ object ScaleSmoke {
           require(!df.queryExecution.executedPlan.toString.contains("GlobalRank"))
           plainT = tileAgg(rankSql)
           rkPlain = rkAgg(df)
+          sixPlain = six(df)
         } finally spark.conf.unset(graft.operators.RangeRank.MinBytesKey)
         plainT.map(_._2).sum
       }
@@ -1292,6 +1233,8 @@ object ScaleSmoke {
         s"${if (auto.sameElements(plainT)) "IDENTICAL" else "DIVERGED"}")
       println(s"SCALE rankrule: rank/dense_rank on ties auto vs plain = " +
         s"${if (rkAuto.sameElements(rkPlain)) "IDENTICAL" else "DIVERGED"}")
+      println(s"SCALE rankrule: gn1 rank-weighted sum auto=$sixAuto " +
+        s"plain=$sixPlain ${if (sixAuto == sixPlain) "IDENTICAL" else "DIVERGED"}")
       println("SCALE rankrule: executed plan (head):")
       println(shape.queryExecution.executedPlan.toString.linesIterator
         .map("SCALE   " + _.take(100)).take(14).mkString("\n"))

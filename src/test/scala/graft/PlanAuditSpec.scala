@@ -21,7 +21,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
 
   test("un-barriered au1 twin is flagged; the barriered shape is silent") {
     assume(haveData)
-    val k = graft.queries.TemporalQueries.AuBarrierMinBytesKey
+    val k = Materialize.BarrierMinBytesKey
     val unb = withConf(k, Long.MaxValue.toString) {
       PlanAudit.audit(graft.queries.TemporalQueries.activeUsers(
         graft.sources.Tables.read(spark, dir, "events")))
@@ -46,7 +46,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // shape was flagged 4x here). The gated barrier stays for the
     // one-pass-over-the-corpus posture at scale; both gate settings
     // must be audit-silent AND row-identical.
-    val k = "spark.graft.basket.barrierMinBytes"
+    val k = Materialize.BarrierMinBytesKey
     def q() = graft.queries.Relational.mb1MarketBasket(spark, dir)
     val unbFindings = withConf(k, Long.MaxValue.toString) { PlanAudit.audit(q()) }
     assert(unbFindings.forall(_.severity != "warn"), unbFindings.toString)
@@ -83,7 +83,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       graft.queries.TemporalQueries.activeUsers(
         graft.sources.Tables.read(spark, dir, "events"))
         .queryExecution.optimizedPlan
-    withConf(graft.queries.TemporalQueries.AuBarrierMinBytesKey,
+    withConf(Materialize.BarrierMinBytesKey,
         Long.MaxValue.toString) {
       val before = L.warnCount.get()
       optimizeBadPlan() // flag off (default): observes nothing
@@ -171,7 +171,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
 
   test("t8's vocab count: un-barriered flagged, gated barrier silent") {
     assume(new java.io.File(s"$dir/documents.parquet").exists())
-    val k = graft.queries.TextAnalysis.VocabBarrierMinBytesKey
+    val k = Materialize.BarrierMinBytesKey
     def q() = graft.queries.TextAnalysis.t8UnigramNll(spark, dir)
     val unb = withConf(k, Long.MaxValue.toString) { PlanAudit.audit(q()) }
     assert(unb.exists(f => f.severity == "warn" && f.n == 2), unb.toString)

@@ -5,24 +5,46 @@ execute each dumped oracle SQL in DuckDB over the same parquet tables
 and compare row count, schema (column names sorted), and cell values.
 
 Usage: python3 tools/check.py [sfDir] [outDir] [--skip-verify] [--only=k1,k2]
+                              [--posture=open]
+
+--posture=open runs Verify with every size gate forced open (all three
+gate confs at 0 bytes), so each gated key's scale plan faces the
+oracle; at the default posture a small SF only reaches the
+small-input plan. The confs are appended to SPARK_GRAFT_EXTRA_CONFS.
 """
 import json, os, subprocess, sys
+
+POSTURES = {
+    "default": {},
+    "open": {"spark.graft.barrier.minBytes": "0",
+             "spark.graft.pin.minBytes": "0",
+             "spark.graft.rangerank.minBytes": "0"},
+}
 
 pos = [a for a in sys.argv[1:] if not a.startswith("--")]
 SF = pos[0] if len(pos) > 0 else "/root/testdata/sf0.01"
 OUT = pos[1] if len(pos) > 1 else "/tmp/verify_out"
 SKIP = "--skip-verify" in sys.argv
 ONLY = None
+POSTURE = "default"
 for a in sys.argv[1:]:
     if a.startswith("--only="):
         ONLY = set(a[len("--only="):].split(","))
+    if a.startswith("--posture="):
+        POSTURE = a[len("--posture="):]
+if POSTURE not in POSTURES:
+    sys.exit(f"--posture must be one of {sorted(POSTURES)}, got: {POSTURE}")
 
 if not SKIP:
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    extra = [c for c in os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "").split(";") if c]
+    extra += [f"{k}={v}" for k, v in POSTURES[POSTURE].items()]
+    env = dict(os.environ, SPARK_GRAFT_CPUS="8",
+               SPARK_GRAFT_EXTRA_CONFS=";".join(extra))
     only_arg = f" {','.join(sorted(ONLY))}" if ONLY else ""
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}{only_arg}'],
-        cwd="/root/repo", env=env, capture_output=True, text=True)
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env, capture_output=True, text=True)
     if r.returncode != 0:
         print(r.stdout[-3000:]); print(r.stderr[-3000:]); sys.exit(1)
     for line in r.stderr.splitlines():
