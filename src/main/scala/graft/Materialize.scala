@@ -102,8 +102,8 @@ object Materialize {
     * session must call [[clearPinned]] (or
     * `spark.catalog.clearCache()`) once the operator's result is
     * materialized, or the edge-list caches accumulate without bound
-    * (ADVICE r20, medium). The bench/profile harnesses already clear
-    * persistent RDDs between keys. */
+    * (ADVICE r20, medium). The dev mains clear them between keys
+    * through `graft.tools.DevSession.clearPersisted`. */
   private val pinned = scala.collection.mutable.Buffer[DataFrame]()
 
   /** Unpersist every frame pinned by [[persistPartitioned]] in this
@@ -147,9 +147,11 @@ object Materialize {
     p
   }
 
+  private def mode(df: DataFrame): String =
+    scala.util.Try(df.sparkSession.conf.get(ModeKey)).getOrElse("local")
+
   def barrier(df: DataFrame): DataFrame = {
-    val mode = scala.util.Try(df.sparkSession.conf.get(ModeKey)).getOrElse("local")
-    mode match {
+    mode(df) match {
       case "local" => df.localCheckpoint(eager = true)
       case "persist" =>
         val p = df.persist(StorageLevel.DISK_ONLY_2)
@@ -161,6 +163,22 @@ object Materialize {
           s"$ModeKey must be local | persist | checkpoint, got: $other")
     }
   }
+
+  /** The barrier of an iterative loop's round, for a caller that runs
+    * ONE action on the result right away (a convergence scalar), so
+    * the barrier and that scalar cost one job per round, not two. In
+    * `local` mode it is a LAZY `localCheckpoint`: the logical plan is
+    * truncated at once (the returned frame wraps a LogicalRDD either
+    * way — a round frame with three consumers otherwise grows its
+    * plan 3^rounds; persist() was tried and measured a >2 GB plan
+    * string by round ~10), and the caller's action materializes the
+    * blocks. The lazy-checkpoint race caveat on
+    * [[graft.dedup.Dedup.materialize]] does not apply, as long as
+    * that action is a single-branch consumer run before any other
+    * consumer plans against the frame. Other modes keep [[barrier]]
+    * (the fault-tolerance knob) and pay the extra action. */
+  def roundBarrier(df: DataFrame): DataFrame =
+    if (mode(df) == "local") df.localCheckpoint(eager = false) else barrier(df)
 
   /** A barrier that GUARANTEES lineage truncation — required when the
     * barrier's job is to pin a NONDETERMINISTIC assignment (sampled
@@ -178,8 +196,7 @@ object Materialize {
     * job loudly instead of silently mis-summing — the documented
     * trade). `local` / `checkpoint` modes already truncate. */
   def pinBarrier(df: DataFrame): DataFrame = {
-    val mode = scala.util.Try(df.sparkSession.conf.get(ModeKey)).getOrElse("local")
-    mode match {
+    mode(df) match {
       case "checkpoint" => df.checkpoint(eager = true)
       case "persist" if df.sparkSession.sparkContext.getCheckpointDir.isDefined =>
         df.checkpoint(eager = true)

@@ -575,6 +575,11 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(col("j"), 6).as("jaccard"))
   }
 
+  /** min-label rounds the `auto` strategy runs before contracting and
+    * switching to stars (default 6: cliques converge in 2-3 and never
+    * switch; path-halving on pathological shapes runs 10-15). */
+  val CcAutoSwitchRoundsKey = "spark.graft.dedup.ccAutoSwitchRounds"
+
   /**
    * Connected-component cluster assignment over near-dup PAIRS — the
    * step that turns pairwise dedup output into per-document cluster
@@ -607,36 +612,19 @@ object Dedup {
    * [[graft.Materialize]]). Convergence is detected by the label SUM,
    * which strictly decreases until fixpoint — one cheap scalar action
    * per round instead of a change-count join.
+   *
+   * Strategy: `auto` ([[clustersAutoWithRounds]]) — the min-label
+   * rounds above, capped, then large-star/small-star on the
+   * label-contracted root graph: identical to pure min-label on
+   * fast-converging dedup cliques, capped round counts on chain-/
+   * random-giant shapes. The pure strategies ([[clustersWithRounds]],
+   * [[clustersViaStarsWithRounds]]) stay as the references it is
+   * property-tested against (CorpusSpec).
    */
-  /** Strategy switch for [[dedupClusters]]'s distributed fixpoint:
-    * `auto` (default) = min-label with a round-cap switch to stars on
-    * the label-contracted root graph ([[clustersAutoWithRounds]]) —
-    * identical to minlabel on fast-converging dedup cliques, capped
-    * round counts on chain-/random-giant shapes; `minlabel` =
-    * min-label propagation with path halving; `stars` = pure
-    * large-star/small-star alternation (Kiveris et al., SoCC'14).
-    * All three converge to the component-minimum labeling — equality
-    * is property-tested (CorpusSpec) and the full oracle gate passes
-    * under each posture. */
-  val CcStrategyKey = "spark.graft.dedup.ccStrategy"
+  def dedupClusters(docs: DataFrame, pairs: DataFrame): DataFrame =
+    clustersAutoWithRounds(docs, pairs)._1
 
-  /** min-label rounds the `auto` strategy runs before contracting and
-    * switching to stars (default 6: cliques converge in 2-3 and never
-    * switch; path-halving on pathological shapes runs 10-15). */
-  val CcAutoSwitchRoundsKey = "spark.graft.dedup.ccAutoSwitchRounds"
-
-  def dedupClusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val strat = docs.sparkSession.conf.get(CcStrategyKey, "auto")
-    strat match {
-      case "auto" => clustersAutoWithRounds(docs, pairs)._1
-      case "stars" => clustersViaStarsWithRounds(docs, pairs)._1
-      case "minlabel" => clustersWithRounds(docs, pairs)._1
-      case other => throw new IllegalArgumentException(
-        s"$CcStrategyKey must be auto|minlabel|stars, got '$other'")
-    }
-  }
-
-  /** [[dedupClusters]] + the number of propagation rounds it took
+  /** Pure min-label propagation + the number of rounds it took
     * (exposed for the convergence tests and scale smokes). */
   private[graft] def clustersWithRounds(docs: DataFrame, pairs: DataFrame): (DataFrame, Int) = {
     // pinned on dst above the gate — the per-round neighbor join's
@@ -666,25 +654,12 @@ object Dedup {
       val r = l.agg(sum(col("cluster_id").cast(DecimalType(38, 0)))).head
       if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
     }
-    // Round barrier + convergence scalar in ONE action: a LAZY
-    // localCheckpoint truncates the logical plan immediately (the
-    // returned frame wraps a LogicalRDD either way — labels has THREE
-    // consumers per round, so an un-truncated plan grows 3^rounds;
-    // persist() was tried and measured a >2 GB plan string by round
-    // ~10) while the label-sum aggregate is the action that
-    // materializes its blocks — the old EAGER checkpoint + separate
-    // sum job paid two actions per round for the same effect (guide
-    // §1.2: per-round fixed work is the multiplier here). The lazy-
-    // checkpoint race caveat on [[materialize]] does not apply: the
-    // sum is a single-branch consumer that fully populates the
-    // blocks before any other consumer plans against them. Non-local
-    // materialize modes keep the mode's barrier (fault-tolerance
-    // deployment knob) and pay the extra per-round action.
+    // round barrier + convergence scalar in ONE action: labels has
+    // THREE consumers per round, and the label sum is the single-
+    // branch action that materializes the barrier's blocks (guide
+    // §1.2: per-round fixed work is the multiplier here)
     def roundBarrier(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val mode = scala.util.Try(
-        df.sparkSession.conf.get(graft.Materialize.ModeKey)).getOrElse("local")
-      val p = if (mode == "local") df.localCheckpoint(eager = false)
-        else graft.Materialize.barrier(df)
+      val p = graft.Materialize.roundBarrier(df)
       (p, labelSum(p))
     }
     var (labels, curSum) = roundBarrier(
@@ -907,9 +882,10 @@ object Dedup {
 
   /**
    * Large-star/small-star alternation (Kiveris et al., "Connected
-   * Components in MapReduce and Beyond", SoCC'14 §3) — the `stars`
-   * strategy of [[dedupClusters]]. One iteration is two phases over
-   * the canonical undirected edge list (a < b, distinct):
+   * Components in MapReduce and Beyond", SoCC'14 §3) — the second
+   * phase of [[dedupClusters]]'s `auto` strategy. One iteration is
+   * two phases over the canonical undirected edge list (a < b,
+   * distinct):
    *
    *  - large-star: every node attaches each LARGER neighbor to the
    *    minimum of its closed neighborhood;
@@ -972,19 +948,11 @@ object Dedup {
         count(lit(1)).as("n")).head
       (if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0), r.getLong(1))
     }
-    // phase barrier + convergence signature in ONE action (the
-    // minLabelLoop roundBarrier pattern): a LAZY localCheckpoint
-    // truncates the plan — each phase's edge frame has two-to-three
-    // consumers, so an un-truncated plan grows geometrically — and
-    // the signature aggregate is the action that materializes its
-    // blocks. The old EAGER checkpoint + separate signature job paid
-    // two actions per phase. Non-local materialize modes keep the
-    // mode's barrier and the extra action (fault-tolerance knob).
+    // phase barrier + convergence signature in ONE action: each
+    // phase's edge frame has two-to-three consumers, and the signature
+    // aggregate is the action that materializes the barrier's blocks
     def phaseBarrier(e: DataFrame): (DataFrame, (java.math.BigDecimal, Long)) = {
-      val mode = scala.util.Try(
-        e.sparkSession.conf.get(graft.Materialize.ModeKey)).getOrElse("local")
-      val p = if (mode == "local") e.localCheckpoint(eager = false)
-        else graft.Materialize.barrier(e)
+      val p = graft.Materialize.roundBarrier(e)
       (p, signature(p))
     }
     def largeStar(e: DataFrame): DataFrame = {

@@ -67,12 +67,7 @@ object AuditProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession.build()
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val s = sweep(spark, dir)
     s.pass1Errors.toSeq.sortBy(_._1).foreach { case (n, e) => println(s"PASS1 $n: ERR $e") }

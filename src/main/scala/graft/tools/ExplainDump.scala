@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev-only: write `explain("formatted")` output for named
@@ -19,25 +18,7 @@ object ExplainDump {
     val suffix = args(2)
     val keys = if (args.length > 3) args.drop(3).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-    graft.sources.Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    // same posture-override contract as graft.Verify/JobProfile — a
-    // plan dump must be capturable under forced gates (r21: the
-    // wm1 gate-open evidence)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
-          case _ => sys.error(s"SPARK_GRAFT_EXTRA_CONFS: bad entry (no '='): $kv")
-        }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession.build()
     Files.createDirectories(Paths.get(outDir))
     keys.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -102,13 +102,7 @@ object HofAudit {
   /** Dev loop: sweep every driver-contract key.
     * Usage: sbt "runMain graft.tools.HofAudit [sfDir]" */
   def main(args: Array[String]): Unit = {
-    val builder = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession.build()
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     var warned = 0
     var errs = 0

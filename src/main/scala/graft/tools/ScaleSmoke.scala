@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only 200× scale smoke for the dedup / corpus / similarity
@@ -57,27 +57,13 @@ object ScaleSmoke {
     def want(s: String): Boolean = sections.isEmpty || sections(s)
     val nDocs = 1000000L
     val nVecs = 200000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    // same posture-override contract as graft.Verify (A/B smokes)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
-          case _ => sys.error(s"SPARK_GRAFT_EXTRA_CONFS: bad entry (no '='): $kv")
-        }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 64 shuffle partitions and Spark's default 128m scan split are
+    // the shapes every 10M section's plan and timing was recorded at
+    val spark = DevSession.build(Map(
+      "spark.sql.shuffle.partitions" -> "64",
+      "spark.sql.files.maxPartitionBytes" -> "128m"))
     val peaks = new PeakListener
     spark.sparkContext.addSparkListener(peaks)
-
-    def clearPersisted(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
 
     // duplicate-subtree audit on the at-scale plan (PlanAudit): a
     // smoke section prints its operator's findings so a regression
@@ -130,7 +116,7 @@ object ScaleSmoke {
         rows = body
         val dt = (System.nanoTime() - t0) / 1e9
         val snap = (peaks.peakMem, peaks.maxTaskMs, peaks.topStages(4))
-        clearPersisted(); System.gc()
+        DevSession.clearPersisted(spark); System.gc()
         (dt, snap)
       }
       val (dt, (peakMem, maxTaskMs, topStages)) = measured.minBy(_._1)
@@ -1814,7 +1800,7 @@ object ScaleSmoke {
               s"pinned=$nPin < plain=$nPlain — pinned side elides its shuffle")
           } finally {
             spark.conf.set("spark.sql.adaptive.enabled", "true")
-            clearPersisted()
+            DevSession.clearPersisted(spark)
           }
         }
         timed("graph10m_bfs1", runs = 1) {

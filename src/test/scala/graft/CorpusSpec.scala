@@ -111,34 +111,13 @@ class CorpusSpec extends AnyFunSuite with SparkTestBase {
       s"stars ($roundsS iterations) did not beat min-label ($roundsM rounds) on a chain")
   }
 
-  test("dedupClusters dispatches on the strategy conf and rejects unknown values (r19)") {
-    val docs = (0L to 3L).toDF("doc_id")
-    val pairs = Seq((0L, 1L), (2L, 3L)).toDF("doc_a", "doc_b")
-    spark.conf.set(Dedup.CcStrategyKey, "stars")
-    try {
-      val got = Dedup.dedupClusters(docs, pairs).orderBy("doc_id")
-        .as[(Long, Long, Long, Boolean)].collect().toSeq
-      assert(got == Seq((0L, 0L, 2L, true), (1L, 0L, 2L, false),
-        (2L, 2L, 2L, true), (3L, 2L, 2L, false)))
-      spark.conf.set(Dedup.CcStrategyKey, "auto")
-      val gotAuto = Dedup.dedupClusters(docs, pairs).orderBy("doc_id")
-        .as[(Long, Long, Long, Boolean)].collect().toSeq
-      assert(gotAuto == got)
-      spark.conf.set(Dedup.CcStrategyKey, "bogus")
-      intercept[IllegalArgumentException](Dedup.dedupClusters(docs, pairs))
-    } finally spark.conf.unset(Dedup.CcStrategyKey)
-  }
-
   test("over-bound incremental delta inherits the auto cap-and-contract (VERDICT r19 task 4)") {
     // A chain-shaped delta larger than the driver-fold bound falls
-    // back to dedupClusters — which dispatches on CcStrategyKey,
-    // default `auto`. Pin all three claims: (1) the default IS auto,
-    // (2) the distributed fallback on a chain-shaped contracted graph
+    // back to dedupClusters — the `auto` strategy. Pin both claims:
+    // (1) the distributed fallback on a chain-shaped contracted graph
     // runs CAPPED corpus rounds + stars on the contraction, never
-    // uncapped min-label, (3) the fallback's assignment equals the
+    // uncapped min-label, (2) the fallback's assignment equals the
     // driver union-find bit for bit.
-    assert(spark.conf.get(Dedup.CcStrategyKey, "auto") == "auto",
-      "the incremental fallback's inherited default must be auto")
     val n = 63L // chain diameter 63 >> the switch cap
     val rootDocs = (0L to n).toDF("doc_id")
     val edgeRoots = (0L until n).map(i => (i, i + 1)).toDF("root_a", "root_b")
