@@ -233,7 +233,7 @@ object PipelineQueries {
       Similarity.ivfCellAssignment(e, e.where(col("vec_id") % 25 === 0))
         .write.mode("overwrite").parquet(s"$out/assign")
     }
-    s.read.parquet(s"$root/assign")
+    Tables.readParquet(s, root, "assign")
   }
 
   /** Shared memoization skeleton for the parquet gate fixtures
@@ -272,8 +272,8 @@ object PipelineQueries {
       edges.where(isNew(col("doc_a")) || isNew(col("doc_b")))
         .write.mode("overwrite").parquet(s"$out/delta_edges")
     }
-    (s.read.parquet(s"$root/prior"), s.read.parquet(s"$root/new_docs"),
-      s.read.parquet(s"$root/delta_edges"))
+    (Tables.readParquet(s, root, "prior"), Tables.readParquet(s, root, "new_docs"),
+      Tables.readParquet(s, root, "delta_edges"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

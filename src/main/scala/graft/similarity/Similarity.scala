@@ -50,19 +50,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
-  private def parallelize(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val n = scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    // Only when under-partitioned (Dedup.parallelize's guard): local
-    // small-file inputs scan as one split and would serialize the
-    // CPU-bound scoring onto one core, while a 100 TB corpus already
-    // arrives as tens of thousands of splits — round-robin shuffling
-    // every embedding through an exchange just to rebalance would
-    // dominate the job (guide §2.4: no accidental repartition).
-    if (df.rdd.getNumPartitions >= n) df else df.repartition(n)
-  }
-
   /** (id, emb) with emb cast to double and scaled to unit norm. The
     * norm is the codegen'd [[fastDot]] written INSIDE the divide lambda:
     * projection collapse re-evaluates it per element, but that is 64
@@ -75,7 +62,7 @@ object Similarity {
   private[graft] def normalized(
       df: DataFrame, idOut: String, embOut: String, spread: Boolean = true): DataFrame = {
     ensureRegistered(df)
-    val base = if (spread) parallelize(df) else df
+    val base = if (spread) graft.dedup.Dedup.parallelize(df) else df
     val emb = col("embedding").cast("array<double>")
     base.select(col("vec_id").as(idOut),
       transform(emb, x => x / sqrt(call_function("graft_dot", emb, emb))).as(embOut))
@@ -107,7 +94,7 @@ object Similarity {
     * miners and [[normalizedLabeledCorpus]]. */
   private def withLabelCols(df: DataFrame, idOut: String, embOut: String,
       labOut: String, spread: Boolean): DataFrame = {
-    val base = if (spread) parallelize(df) else df
+    val base = if (spread) graft.dedup.Dedup.parallelize(df) else df
     val emb = col("embedding").cast("array<double>")
     base.select(col("vec_id").as(idOut),
       transform(emb, x => x / sqrt(fastDot(emb, emb))).as(embOut),

@@ -740,4 +740,32 @@ class CorpusSpec extends AnyFunSuite with SparkTestBase {
       } finally spark.conf.unset(Dedup.HotClusterRowsKey)
     }
   }
+
+  test("withGroupSizes: null keys form one group on both sides of the hot gate") {
+    val rows = Seq((1L, Some(10L)), (2L, Some(10L)), (3L, None), (4L, None),
+      (5L, None), (6L, Some(20L))).toDF("doc_id", "k")
+    def sized(hint: Option[org.apache.spark.sql.DataFrame]) = {
+      val df = Dedup.withGroupSizes(rows, "k", "n", hint)
+      val hotSplit = df.queryExecution.analyzed
+        .exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union])
+      (hotSplit, df.select("doc_id", "k", "n").as[(Long, Option[Long], Long)]
+        .collect().toSeq.sorted)
+    }
+    // the three null-key rows are one group of size 3
+    val expected = Seq((1L, Some(10L), 2L), (2L, Some(10L), 2L), (3L, None, 3L),
+      (4L, None, 3L), (5L, None, 3L), (6L, Some(20L), 1L))
+    // default gate: a frame this small cannot hold a hot key, plain window
+    val (plainSplit, plain) = sized(None)
+    assert(!plainSplit)
+    assert(plain == expected)
+    // threshold 2 with a hint frame far past 16·2 bytes: the probe runs
+    // and finds two hot keys, 10 and null — the inner hot join drops the
+    // null rows and the cold anti-join keeps them
+    spark.conf.set(Dedup.HotClusterRowsKey, "2")
+    try {
+      val (hotSplit, hot) = sized(Some(spark.range(1L << 20).toDF()))
+      assert(hotSplit, "the forced-hot branch did not split hot and cold keys")
+      assert(hot == plain)
+    } finally spark.conf.unset(Dedup.HotClusterRowsKey)
+  }
 }
