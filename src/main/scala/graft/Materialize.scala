@@ -27,6 +27,13 @@ import org.apache.spark.storage.StorageLevel
  *    of executor losses; the right call for long dedup/clustering
  *    jobs at 100 TB. Throws (from Spark) if no checkpoint dir is set.
  *
+ * Every caller pins a DETERMINISTIC frame, so a recompute from kept
+ * lineage returns the same rows and `persist` mode may keep lineage.
+ * A nondeterministic assignment (sampled range boundaries, monotonic
+ * ids) must not be pinned here: the global-window rule keeps its
+ * sampled boundaries inside one ShuffleDependency instead (see
+ * [[graft.plans.GlobalRankExec]]).
+ *
  * Cache population is not column-pruned (the InMemoryRelation stores
  * the full plan output), so the eager `count()` in persist mode
  * materializes every column — unlike a bare count used for timing
@@ -35,9 +42,6 @@ import org.apache.spark.storage.StorageLevel
 object Materialize {
 
   val ModeKey = "spark.graft.materialize.mode"
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private val warnedPersistPin = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Every gate conf key ever consulted in this JVM — the registry
     * the AuditProbe sweep reads so it can force EVERY gate open
@@ -179,41 +183,4 @@ object Materialize {
     * (the fault-tolerance knob) and pay the extra action. */
   def roundBarrier(df: DataFrame): DataFrame =
     if (mode(df) == "local") df.localCheckpoint(eager = false) else barrier(df)
-
-  /** A barrier that GUARANTEES lineage truncation — required when the
-    * barrier's job is to pin a NONDETERMINISTIC assignment (sampled
-    * `repartitionByRange` boundaries + `monotonically_increasing_id`
-    * in [[graft.operators.RangeRank.withGroupedRunningSum]]) that
-    * several consumers must see identically. [[barrier]]'s `persist`
-    * mode keeps lineage: a double executor loss RECOMPUTES the input,
-    * and a recompute re-samples boundaries and re-assigns ids — the
-    * consumers then silently disagree (driver-collected offsets vs
-    * executor rows).
-    * So here `persist` is overridden to a truncating form:
-    * `checkpoint` when a checkpoint dir is configured (keeps the
-    * any-loss fault tolerance persist users want), else
-    * `localCheckpoint` (correct pin; an executor loss now FAILS the
-    * job loudly instead of silently mis-summing — the documented
-    * trade). `local` / `checkpoint` modes already truncate. */
-  def pinBarrier(df: DataFrame): DataFrame = {
-    mode(df) match {
-      case "checkpoint" => df.checkpoint(eager = true)
-      case "persist" if df.sparkSession.sparkContext.getCheckpointDir.isDefined =>
-        df.checkpoint(eager = true)
-      case "persist" =>
-        // the operator loses the fault tolerance the user selected with
-        // persist mode; leave a runtime breadcrumb, not just scaladoc
-        // (ADVICE r14) — once per JVM, not per pinned frame
-        if (warnedPersistPin.compareAndSet(false, true))
-          log.warn(s"$ModeKey=persist with no checkpoint dir: pinning a " +
-            "nondeterministic frame via localCheckpoint (an executor loss " +
-            "FAILS the job instead of recomputing). Call " +
-            "sparkContext.setCheckpointDir to regain fault tolerance here.")
-        df.localCheckpoint(eager = true)
-      case "local" => df.localCheckpoint(eager = true)
-      case other =>
-        throw new IllegalArgumentException(
-          s"$ModeKey must be local | persist | checkpoint, got: $other")
-    }
-  }
 }

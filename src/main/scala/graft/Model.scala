@@ -1,42 +1,5 @@
 package graft
 
-import org.apache.spark.sql.types._
-
-/**
- * Canonical schemas for the engine.
- *
- * The reference operates on a single univariate datetime-indexed series
- * (metevents/events.py:18-22); we generalize to many series in one
- * long-format frame so detection parallelizes across series
- * (SURVEY.md §1.3).
- *
- * TimeSeriesFrame: (series_id STRING, ts TIMESTAMP, value DOUBLE)
- * EventFrame:      (series_id, event_type, start, stop, duration_us,
- *                   n_points, total)
- */
-object Model {
-
-  val SeriesId = "series_id"
-  val Ts = "ts"
-  val Value = "value"
-
-  val timeSeriesSchema: StructType = StructType(Seq(
-    StructField(SeriesId, StringType, nullable = false),
-    StructField(Ts, TimestampType, nullable = false),
-    StructField(Value, DoubleType, nullable = true)
-  ))
-
-  val eventSchema: StructType = StructType(Seq(
-    StructField("series_id", StringType, nullable = false),
-    StructField("event_type", StringType, nullable = false),
-    StructField("start", TimestampType, nullable = false),
-    StructField("stop", TimestampType, nullable = false),
-    StructField("duration_us", LongType, nullable = false),
-    StructField("n_points", LongType, nullable = false),
-    StructField("total", DoubleType, nullable = true)
-  ))
-}
-
 /** One detected event, the Spark analog of the reference's period
   * objects (metevents/periods.py:1-48): start/stop/duration plus the
   * NaN-skipping total of CumulativePeriod. */

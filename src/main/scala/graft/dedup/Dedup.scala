@@ -355,8 +355,6 @@ object Dedup {
       })
   }
 
-  def simhash32(text: Column): Column = simhashFromHashes(tokenHashes(text))
-
   /** Single-chunk banding: `nBands/2` chunks of `64/nBands` bits per
     * 32-bit word, low chunks first. Exact for hamming ≤ nBands − 1. */
   private def simhashNaiveBands(lo: Column, hi: Column, nBands: Int): Column = {

@@ -107,63 +107,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/**
- * 32-bit SimHash over an `array<long>` of per-token 32-bit hashes as a
- * single codegen'd pass: bit b of the result is set iff the majority of
- * tokens have bit b set (Σ ±1 > 0). Replaces a nested interpreted
- * higher-order fold (32 × n_tokens lambda evaluations per row — HOFs
- * don't participate in whole-stage codegen) with 32·n primitive ops.
- * Matches Dedup.simhashFromHashes (the portable HOF reference
- * implementation and the DuckDB oracle twin) exactly for non-negative
- * inputs below 2^32.
- */
-case class SimHash32(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val h = input.asInstanceOf[ArrayData]
-    val n = h.numElements()
-    val counts = new Array[Int](32)
-    var i = 0
-    while (i < n) {
-      val v = h.getLong(i)
-      var b = 0
-      while (b < 32) {
-        if (((v >> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 32) { if (counts(b) > 0) sig |= (1L << b); b += 1 }
-    sig
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, h => {
-      val counts = ctx.freshName("counts")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int[] $counts = new int[32];
-         |for (int i = 0; i < $h.numElements(); i++) {
-         |  long v = $h.getLong(i);
-         |  for (int b = 0; b < 32; b++) {
-         |    if (((v >> b) & 1L) == 1L) { $counts[b]++; } else { $counts[b]--; }
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int b = 0; b < 32; b++) { if ($counts[b] > 0) { $sig |= (1L << b); } }
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash32 =
-    copy(child = newChild)
-}
-
 /** JVM kernels shared by the eval and codegen paths of the text-hash
   * expressions below. Exactly mirrors the composed-Column reference
   * pipeline (TextFunctions.wsTokens → Dedup.wordShingles →
@@ -1310,9 +1253,6 @@ object GraftFunctions {
     (FunctionIdentifier("graft_isect"),
       new ExpressionInfo(classOf[SortedIntersectCount].getName, "graft_isect"),
       (children: Seq[Expression]) => SortedIntersectCount(children.head, children(1))),
-    (FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash32].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimHash32(children.head)),
     (FunctionIdentifier("graft_shingle_hashes"),
       new ExpressionInfo(classOf[WordShingleHashes].getName, "graft_shingle_hashes"),
       (children: Seq[Expression]) => WordShingleHashes(children.head, children(1))),

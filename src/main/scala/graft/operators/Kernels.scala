@@ -105,7 +105,7 @@ object Kernels {
    * the step, else unknown (null).
    *
    * Returns (series_id, step_us nullable long). `step_us` is the raw
-   * unique diff; see [[Steps.resolutionStepUs]] for the `to_offset`
+   * unique diff; see [[Steps.resolutionStepCol]] for the `to_offset`
    * 1-unit quirk used by storms.
    */
   def inferStep(df: DataFrame): DataFrame = {
@@ -158,11 +158,14 @@ object Steps {
     case other => throw new IllegalArgumentException(s"unparseable frequency: $other")
   }
 
-  /** [[resolutionStepUs]] as a native when-chain over a Column
-    * (null in → null out; the explicit isNull head matters — a null
-    * diff would otherwise fall through every modulo test to the
-    * microsecond fallback). Keeps the inferred-frequency path inside
-    * whole-stage codegen; replaces the engine's last UDF. */
+  /** pandas `to_timedelta(to_offset(freq))` where freq is a
+    * `resolution_string`: one unit of the SMALLEST nonzero component of
+    * the diff (so a 2-day spacing still yields a 1-day tstep — quirk
+    * preserved from metevents/events.py:76-77 + utilities.py:14), as a
+    * native when-chain over a Column (null in → null out; the explicit
+    * isNull head matters — a null diff would otherwise fall through
+    * every modulo test to the microsecond fallback). Keeps the
+    * inferred-frequency path inside whole-stage codegen. */
   def resolutionStepCol(diffUs: Column): Column =
     when(diffUs.isNull, lit(null).cast("long"))
       .when(diffUs % Day === 0, Day)
@@ -181,16 +184,4 @@ object Steps {
     else if (stepUs % Second == 0) { val n = stepUs / Second; if (n == 1) "S" else s"${n}S" }
     else if (stepUs % Ms == 0) { val n = stepUs / Ms; if (n == 1) "ms" else s"${n}ms" }
     else s"${stepUs}us"
-
-  /** pandas `to_timedelta(to_offset(freq))` where freq is a
-    * `resolution_string`: one unit of the SMALLEST nonzero component of
-    * the diff (so a 2-day spacing still yields a 1-day tstep — quirk
-    * preserved from metevents/events.py:76-77 + utilities.py:14). */
-  def resolutionStepUs(diffUs: Long): Long =
-    if (diffUs % Day == 0) Day
-    else if (diffUs % Hour == 0) Hour
-    else if (diffUs % Minute == 0) Minute
-    else if (diffUs % Second == 0) Second
-    else if (diffUs % Ms == 0) Ms
-    else Us
 }

@@ -49,9 +49,9 @@ import org.apache.spark.unsafe.types.UTF8String
  * when the dependency materializes and shuffle files are reused, so
  * there is no second execution that could re-sample them, and the
  * reduce-side sort is deterministic under a lost-block recompute.
- * (A DataFrame-level form re-plans per action and would have to pin,
- * as [[graft.operators.RangeRank.withGroupedRunningSum]] does; the
- * physical node owns its RDD, so it need not.)
+ * (A DataFrame-level form re-plans per action and would have to pin
+ * its sampled assignment; the physical node owns its RDD, so it need
+ * not.)
  *
  * Exactness: ranks computed this way are NOT approximations.
  * RangePartitioning maps each key to a partition deterministically,
@@ -95,7 +95,10 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 object RangeRankRewrite extends Rule[LogicalPlan] {
 
-  import graft.operators.RangeRank.MinBytesKey
+  /** The size gate: windows whose child estimates under this many
+    * bytes ([[graft.Materialize.DefaultMinBytes]] when unset) keep the
+    * plain window. */
+  val MinBytesKey = "spark.graft.rangerank.minBytes"
 
   private def aboveGate(child: LogicalPlan): Boolean = {
     val minBytes = BigInt(scala.util.Try(
@@ -516,9 +519,10 @@ object RangeRankRewrite extends Rule[LogicalPlan] {
     // hoisted out of the matchers (ADVICE r16): gate-key registration
     // and the cap-conf parse are side effects — matching stays pure
     // and the conf is read once per rule invocation, not twice per
-    // Lag/Lead encountered
+    // Lag/Lead encountered. Only the size gate registers: the sweep
+    // sets every registered key to 0, and a 0 offset cap would audit
+    // every global lag/lead/bounded frame as the plain window
     graft.Materialize.registeredGateKeys.add(MinBytesKey)
-    graft.Materialize.registeredGateKeys.add(GlobalRankExec.MaxOffsetKey)
     val maxOffset = scala.util.Try(
       conf.getConfString(GlobalRankExec.MaxOffsetKey).toInt).getOrElse(1024)
     plan.transform {
@@ -1107,7 +1111,7 @@ object GlobalRankExec {
 
   /** Degrade detection fires only above this many input rows — below
     * it a handful of tasks is the right plan anyway. */
-  val DegradeMinRowsKey = "spark.graft.globalrank.degradeMinRows"
+  val DegradeMinRows: Long = 1L << 20
 
   /** Largest |lag/lead offset| the rewrite accepts: the exec ships
     * up to this many boundary rows per partition to the driver. */
@@ -1189,7 +1193,7 @@ object GlobalRankExec {
  * partition count. Job 1 knows K exactly when runs are tracked
  * (Σ per-partition runs — equal keys never straddle partitions), and
  * the count of non-empty partitions bounds it otherwise; above
- * `spark.graft.globalrank.degradeMinRows` input rows (default 1M) a
+ * [[GlobalRankExec.DegradeMinRows]] input rows (1M) a
  * degenerate exchange logs a warning naming the composite-key remedy.
  */
 case class GlobalRankExec(
@@ -1645,11 +1649,9 @@ case class GlobalRankExec(
     // range partitioner itself collapses to ≤K partitions when the
     // sampled key has K distinct values, so the degenerate exchange
     // looks "full" by actual partition count
-    val degradeMinRows = scala.util.Try(conf.getConfString(
-      GlobalRankExec.DegradeMinRowsKey).toLong).getOrElse(1L << 20)
     val targetParts = scala.util.Try(
       conf.getConfString("spark.sql.shuffle.partitions").toInt).getOrElse(200)
-    if (total >= degradeMinRows && targetParts > 1) {
+    if (total >= GlobalRankExec.DegradeMinRows && targetParts > 1) {
       val nonEmpty = stats.count(_.rows > 0L)
       val distinct = if (trackRuns) runOffsets.last else -1L
       val degenerate =

@@ -521,7 +521,7 @@ object Relational {
       view: String, sql: String => String, tag: String): DataFrame = {
     val spark = spark0.newSession()
     graft.functions.GraftFunctions.register(spark)
-    spark.conf.set(graft.operators.RangeRank.MinBytesKey, "0")
+    spark.conf.set(graft.plans.RangeRankRewrite.MinBytesKey, "0")
     t(spark, dir, "orders").createOrReplaceTempView(view)
     val df = spark.sql(sql(view))
     val plan = df.queryExecution.executedPlan.toString
@@ -1039,39 +1039,54 @@ object Relational {
     * exact cumulative-weight pick — smallest price whose running
     * weight reaches half the total — not an interpolating quantile.
     * Shape: pre-aggregate to one row per (group, price) so the
-    * cumulative order is unambiguous, one window sort per group, then
-    * an ordinary min-aggregate over the qualifying suffix. The
+    * cumulative order is unambiguous, one running sum over that frame,
+    * then an ordinary min-aggregate over the qualifying suffix. The
     * pre-aggregation is the scale lever: the window runs over
-    * DISTINCT prices per group, not raw lineitems, and the exchange
-    * key (returnflag) carries partial-combined weight sums.
+    * DISTINCT prices per group, not raw lineitems.
     *
     * Float discipline: l_quantity is integer-valued in this data
     * (asserted in the spec), so weight sums are exact in double in
-    * ANY order; the running sum and the `cum >= total/2` comparison
-    * are therefore bit-identical across engines, no rounding needed
-    * before the final display round. `total` is read off as the LAST
-    * running-sum value (max over the partition) rather than a second
-    * unordered sum, so both engines compare against the same double
-    * even if weights were ever fractional. */
+    * ANY order; the running sum, the group total and the
+    * `cum >= total/2` comparison are therefore bit-identical across
+    * engines, no rounding needed before the final display round. */
   def wm1WeightedMedian(spark: SparkSession, dir: String): DataFrame =
     weightedMedian(t(spark, dir, "lineitem"),
       group = "l_returnflag", value = "l_extendedprice", weight = "l_quantity")
 
   /** Generic form of [[wm1WeightedMedian]]: smallest `value` whose
     * cumulative `weight` (ordered by value) reaches half the group
-    * total. */
+    * total.
+    *
+    * The running sum has no PARTITION BY: `g_cum` runs over the whole
+    * pre-aggregated frame in (group, value) order, and a group's own
+    * running weight is `g_cum - off_w`, where `off_w` is the weight of
+    * every group ordered before it (nulls first, as both windows
+    * order). Above the size gate [[graft.plans.RangeRankRewrite]]
+    * plans that window as [[graft.plans.GlobalRankExec]], range-
+    * partitioned on (group, value), so the low-cardinality group key
+    * never sets the task count; below it the plain window runs. The
+    * totals and offsets aggregate the input straight down to one row
+    * per group (partial aggregation ships |groups| rows per task) and
+    * join back broadcast, null-safe on the group key. Taking them from
+    * the pre-aggregated frame instead would give it two consumers
+    * that prune it differently, which defeats exchange reuse.
+    *
+    * Exactness: weights must be non-negative and integer-valued (the
+    * wm1 contract), so every sum is exact in double and `g_cum -
+    * off_w` is the within-group running sum bit for bit. */
   def weightedMedian(
       df: DataFrame, group: String, value: String, weight: String): DataFrame = {
-    // the cumulative window rides RangeRank.withGroupedRunningSum:
-    // below the size gate it IS the historical two-window plan
-    // (partitioned by the low-cardinality group — bit-identical at
-    // bench SF); above it the range-partitioned prefix-sum form keeps
-    // the window off the 3-straggler-task shape (guide §2.5; r20
-    // "Not yet optimized" item)
-    graft.operators.RangeRank.withGroupedRunningSum(
-        df.groupBy(col(group), col(value)).agg(sum(col(weight)).as("w")),
-        "cum_w", "tot_w", group, Seq(col(value)), col("w"), sizeOf = df)
-      .where(col("cum_w") >= col("tot_w") / 2.0)
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    val cum = df.groupBy(col(group), col(value)).agg(sum(col(weight)).as("w"))
+      .withColumn("g_cum", sum(col("w")).over(
+        Window.orderBy(col(group), col(value))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val offs = df.groupBy(col(group).as("__wm_g")).agg(sum(col(weight)).as("tot_w"))
+      .withColumn("off_w", coalesce(sum(col("tot_w")).over(
+        Window.orderBy(col("__wm_g")).rowsBetween(Window.unboundedPreceding, -1)),
+        lit(0.0)))
+    cum.join(broadcast(offs), col(group) <=> col("__wm_g"))
+      .where(col("g_cum") - col("off_w") >= col("tot_w") / 2.0)
       .groupBy(col(group))
       .agg(round(min(col(value)), 4).as("weighted_median"),
         round(min(col("tot_w")), 4).as("total_weight"))

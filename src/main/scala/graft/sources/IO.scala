@@ -29,15 +29,6 @@ object IO {
         to_timestamp(col("datetime"), tsFormat).as("ts"),
         col(valueCol).cast("double").as("value"))
 
-  /** Parquet long-format time series (driver testdata shape). */
-  def readParquetSeries(
-      spark: SparkSession, path: String,
-      seriesCol: String, tsCol: String, valueCol: String): DataFrame =
-    spark.read.parquet(path).select(
-      col(seriesCol).cast("string").as("series_id"),
-      col(tsCol).as("ts"),
-      col(valueCol).cast("double").as("value"))
-
   /** EventFrame sink: Parquet partitioned by event_type. */
   def writeEvents(events: DataFrame, path: String): Unit =
     events.write.mode("overwrite").partitionBy("event_type").parquet(path)

@@ -1100,13 +1100,13 @@ object ScaleSmoke {
         s"exact-set ${nBenchGrams * 8 / 1024} KiB + join-relation overhead")
     }
     // --- wmedian: wm1's cumulative-weight window at 10M rows --------------
-    // (VERDICT r20 task 4) weightedMedian partitions its running-sum
-    // window by a 3-value group key — at scale that is 3 straggler
-    // tasks. Above the rangerank gate the r21 withGroupedRunningSum
-    // must (a) key the window by (partition, group) — machine-checked
-    // on the plan, so it CANNOT run as 3 tasks — and (b) produce
-    // output EXACTLY equal to the plain 3-partition form (weights are
-    // integer-valued doubles, so offset+local running sums are
+    // (VERDICT r20 task 4) a running-sum window partitioned by the
+    // 3-value group key would run as 3 straggler tasks. weightedMedian
+    // writes it with no PARTITION BY, so above the rangerank gate it
+    // must (a) plan as GlobalRankExec, range-partitioned on (group,
+    // value) — machine-checked on the plan — and (b) produce output
+    // EXACTLY equal to the gate-closed plain window (weights are
+    // integer-valued doubles, so prefix+local running sums are
     // bit-identical to the sequential ones).
     if (want("wmedian")) {
       ensureParquet("wm10m.parquet")(
@@ -1126,21 +1126,21 @@ object ScaleSmoke {
         // 10M-row stats clear the 32MB gate: the distributed path
         val d = graft.queries.Relational.weightedMedian(df, "g", "v", "wt")
         val plan = d.queryExecution.executedPlan.toString
-        require(plan.contains("__rr_pid"),
-          "gate-open weightedMedian must run the range-partitioned " +
-            "prefix-sum form:\n" + plan.take(3000))
+        require(plan.contains("GlobalRank"),
+          "gate-open weightedMedian must run the running sum through " +
+            "GlobalRankExec:\n" + plan.take(3000))
         dist = res(d)
         dist.length.toLong
       }
       assertNoStraggler("wm1_range_10m")
       timed("wm1_plain_10m") {
-        spark.conf.set(graft.operators.RangeRank.MinBytesKey, Long.MaxValue.toString)
+        spark.conf.set(graft.plans.RangeRankRewrite.MinBytesKey, Long.MaxValue.toString)
         try {
           val d = graft.queries.Relational.weightedMedian(df, "g", "v", "wt")
-          require(!d.queryExecution.executedPlan.toString.contains("__rr_pid"),
+          require(!d.queryExecution.executedPlan.toString.contains("GlobalRank"),
             "gate-closed weightedMedian must keep the plain window")
           plain = res(d)
-        } finally spark.conf.unset(graft.operators.RangeRank.MinBytesKey)
+        } finally spark.conf.unset(graft.plans.RangeRankRewrite.MinBytesKey)
         plain.length.toLong
       }
       require(dist.sameElements(plain),
@@ -1205,14 +1205,14 @@ object ScaleSmoke {
       var rkPlain: Array[(Long, Long, Long)] = null
       var sixPlain = BigDecimal(0)
       timed("rankrule_plainwin_10m") {
-        spark.conf.set(graft.operators.RangeRank.MinBytesKey, Long.MaxValue.toString)
+        spark.conf.set(graft.plans.RangeRankRewrite.MinBytesKey, Long.MaxValue.toString)
         try {
           val df = spark.sql(rankSql)
           require(!df.queryExecution.executedPlan.toString.contains("GlobalRank"))
           plainT = tileAgg(rankSql)
           rkPlain = rkAgg(df)
           sixPlain = six(df)
-        } finally spark.conf.unset(graft.operators.RangeRank.MinBytesKey)
+        } finally spark.conf.unset(graft.plans.RangeRankRewrite.MinBytesKey)
         plainT.map(_._2).sum
       }
       println(s"SCALE rankrule: decile agg auto vs plain = " +
@@ -1271,12 +1271,12 @@ object ScaleSmoke {
       }
       var plain: (java.math.BigDecimal, java.math.BigDecimal, Long) = null
       timed("aggrule_plainwin_10m") {
-        spark.conf.set(graft.operators.RangeRank.MinBytesKey, Long.MaxValue.toString)
+        spark.conf.set(graft.plans.RangeRankRewrite.MinBytesKey, Long.MaxValue.toString)
         try {
           val df = spark.sql(aggSql)
           require(!df.queryExecution.executedPlan.toString.contains("GlobalRank"))
           plain = chk(df)
-        } finally spark.conf.unset(graft.operators.RangeRank.MinBytesKey)
+        } finally spark.conf.unset(graft.plans.RangeRankRewrite.MinBytesKey)
         plain._3
       }
       println(s"SCALE aggrule: running sum/count/min/max auto vs plain = " +
@@ -1306,12 +1306,12 @@ object ScaleSmoke {
       }
       var offPlain: (java.math.BigDecimal, java.math.BigDecimal, Long) = null
       timed("offrule_plainwin_10m") {
-        spark.conf.set(graft.operators.RangeRank.MinBytesKey, Long.MaxValue.toString)
+        spark.conf.set(graft.plans.RangeRankRewrite.MinBytesKey, Long.MaxValue.toString)
         try {
           val df = spark.sql(offSql)
           require(!df.queryExecution.executedPlan.toString.contains("GlobalRank"))
           offPlain = offChk(df)
-        } finally spark.conf.unset(graft.operators.RangeRank.MinBytesKey)
+        } finally spark.conf.unset(graft.plans.RangeRankRewrite.MinBytesKey)
         offPlain._3
       }
       println(s"SCALE aggrule: lag/lead auto vs plain = " +
@@ -1425,12 +1425,12 @@ object ScaleSmoke {
           "tie-run buffer did not spill at a 1M-row spill threshold")
         var plain: (java.math.BigDecimal, Long) = null
         timed("hotrun_plainwin_10m") {
-          spark.conf.set(graft.operators.RangeRank.MinBytesKey, Long.MaxValue.toString)
+          spark.conf.set(graft.plans.RangeRankRewrite.MinBytesKey, Long.MaxValue.toString)
           try {
             val df = spark.sql(hotSql)
             require(!df.queryExecution.executedPlan.toString.contains("GlobalRank"))
             plain = hotChk(df)
-          } finally spark.conf.unset(graft.operators.RangeRank.MinBytesKey)
+          } finally spark.conf.unset(graft.plans.RangeRankRewrite.MinBytesKey)
           plain._2
         }
         println(s"SCALE hotrun: 8M-row tie run, spilled run buffer, auto vs plain = " +
@@ -1485,7 +1485,7 @@ object ScaleSmoke {
       }
       spark.sql(famSql).write.mode("overwrite")
         .parquet(s"$outDir/winfams_auto.parquet")
-      spark.conf.set(graft.operators.RangeRank.MinBytesKey, Long.MaxValue.toString)
+      spark.conf.set(graft.plans.RangeRankRewrite.MinBytesKey, Long.MaxValue.toString)
       try {
         timed("winfams_plainwin_10m") {
           val df = spark.sql(famSql)
@@ -1494,7 +1494,7 @@ object ScaleSmoke {
         }
         spark.sql(famSql).write.mode("overwrite")
           .parquet(s"$outDir/winfams_plain.parquet")
-      } finally spark.conf.unset(graft.operators.RangeRank.MinBytesKey)
+      } finally spark.conf.unset(graft.plans.RangeRankRewrite.MinBytesKey)
       // per-column comparison, per family semantics: bounded frames
       // replay oldest-first on BOTH paths (bit-identical doubles
       // required), decimal sums are exact space, nth is value copies —
@@ -1562,7 +1562,7 @@ object ScaleSmoke {
       }
       spark.sql(nnSql).write.mode("overwrite")
         .parquet(s"$outDir/ignorenulls_auto.parquet")
-      spark.conf.set(graft.operators.RangeRank.MinBytesKey, Long.MaxValue.toString)
+      spark.conf.set(graft.plans.RangeRankRewrite.MinBytesKey, Long.MaxValue.toString)
       try {
         timed("ignorenulls_plainwin_10m") {
           val df = spark.sql(nnSql)
@@ -1571,7 +1571,7 @@ object ScaleSmoke {
         }
         spark.sql(nnSql).write.mode("overwrite")
           .parquet(s"$outDir/ignorenulls_plain.parquet")
-      } finally spark.conf.unset(graft.operators.RangeRank.MinBytesKey)
+      } finally spark.conf.unset(graft.plans.RangeRankRewrite.MinBytesKey)
       val a = spark.read.parquet(s"$outDir/ignorenulls_auto.parquet").alias("a")
       val p = spark.read.parquet(s"$outDir/ignorenulls_plain.parquet").alias("p")
       val cmp = a.join(p, "k").agg(
@@ -1621,7 +1621,7 @@ object ScaleSmoke {
       }
       spark.sql(rwSql).write.mode("overwrite")
         .parquet(s"$outDir/rangewin_auto.parquet")
-      spark.conf.set(graft.operators.RangeRank.MinBytesKey, Long.MaxValue.toString)
+      spark.conf.set(graft.plans.RangeRankRewrite.MinBytesKey, Long.MaxValue.toString)
       try {
         timed("rangewin_plainwin_10m") {
           val df = spark.sql(rwSql)
@@ -1630,7 +1630,7 @@ object ScaleSmoke {
         }
         spark.sql(rwSql).write.mode("overwrite")
           .parquet(s"$outDir/rangewin_plain.parquet")
-      } finally spark.conf.unset(graft.operators.RangeRank.MinBytesKey)
+      } finally spark.conf.unset(graft.plans.RangeRankRewrite.MinBytesKey)
       val a = spark.read.parquet(s"$outDir/rangewin_auto.parquet").alias("a")
       val p = spark.read.parquet(s"$outDir/rangewin_plain.parquet").alias("p")
       val cmp = a.join(p, "k").agg(
@@ -1683,7 +1683,7 @@ object ScaleSmoke {
       }
       spark.sql(ymSql).write.mode("overwrite")
         .parquet(s"$outDir/ymrange_auto.parquet")
-      spark.conf.set(graft.operators.RangeRank.MinBytesKey, Long.MaxValue.toString)
+      spark.conf.set(graft.plans.RangeRankRewrite.MinBytesKey, Long.MaxValue.toString)
       try {
         timed("ymrange_plainwin_10m") {
           val df = spark.sql(ymSql)
@@ -1692,7 +1692,7 @@ object ScaleSmoke {
         }
         spark.sql(ymSql).write.mode("overwrite")
           .parquet(s"$outDir/ymrange_plain.parquet")
-      } finally spark.conf.unset(graft.operators.RangeRank.MinBytesKey)
+      } finally spark.conf.unset(graft.plans.RangeRankRewrite.MinBytesKey)
       val a = spark.read.parquet(s"$outDir/ymrange_auto.parquet").alias("a")
       val p = spark.read.parquet(s"$outDir/ymrange_plain.parquet").alias("p")
       val cmp = a.join(p, "k").agg(

@@ -26,10 +26,8 @@ class MaterializeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   /** Scoped checkpoint dir on the SHARED session: set, run, then CLEAR
-    * (setCheckpointDir(null) -> None) and delete the temp tree. Without
-    * the clear, whether later suites' persist-mode pinBarrier calls take
-    * the checkpoint or localCheckpoint branch depends on suite execution
-    * order (ADVICE r14). */
+    * (setCheckpointDir(null) -> None) and delete the temp tree, so no
+    * later suite inherits a checkpoint dir (ADVICE r14). */
   private def withCheckpointDir[A](f: String => A): A = {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
@@ -86,41 +84,6 @@ class MaterializeSpec extends AnyFunSuite with SparkTestBase {
   test("unknown mode fails loudly") {
     withMode("replicate-to-the-moon") {
       assertThrows[IllegalArgumentException](Materialize.barrier(docs))
-      assertThrows[IllegalArgumentException](Materialize.pinBarrier(docs))
-    }
-  }
-
-  test("pinBarrier truncates lineage in EVERY mode (persist included)") {
-    // barrier's persist mode keeps lineage (the recompute guarantee);
-    // pinBarrier must NOT — a recompute would re-sample RangeRank's
-    // boundaries and re-assign its nondeterministic ids (ADVICE r13)
-    def truncated(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.analyzed.isInstanceOf[
-        org.apache.spark.sql.execution.LogicalRDD]
-    for (mode <- Seq("local", "persist")) withMode(mode) {
-      val df = Materialize.pinBarrier(docs.select($"doc_id" * 3 as "x"))
-      assert(truncated(df), s"pinBarrier($mode) kept lineage")
-      assert(df.as[Long].collect().sorted.toSeq == Seq(0L, 3L, 6L, 9L))
-    }
-    withCheckpointDir { dir =>
-      withMode("checkpoint") {
-        val df = Materialize.pinBarrier(docs.select($"doc_id"))
-        assert(truncated(df), "pinBarrier(checkpoint) kept lineage")
-        assert(df.as[Long].collect().length == 4)
-      }
-      // with a dir configured, persist-mode pins take the CHECKPOINT
-      // branch (fault tolerance kept): reliable-store files appear
-      withMode("persist") {
-        val before = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-          .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-        val df = Materialize.pinBarrier(docs.select($"doc_id" + 1 as "y"))
-        assert(truncated(df), "pinBarrier(persist+dir) kept lineage")
-        assert(df.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
-        val after = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-          .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-        assert(after > before,
-          "pinBarrier(persist+dir) wrote nothing to the reliable store")
-      }
     }
   }
 }

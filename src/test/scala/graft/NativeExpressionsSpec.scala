@@ -6,7 +6,7 @@ import graft.dedup.Dedup
 import graft.functions.{GraftFunctions, TextFunctions}
 
 /** The native one-pass kernels (graft_shingle_hashes, graft_minhash,
-  * graft_simhash) must be EXACTLY equal to the composed-Column
+  * graft_simhash64) must be EXACTLY equal to the composed-Column
   * pipelines they replace — those pipelines are the DuckDB oracle
   * twins, so any divergence breaks the correctness gate silently.
   * Adversarial inputs: tabs/newlines (Spark `trim` strips 0x20 only,
@@ -64,16 +64,6 @@ class NativeExpressionsSpec extends AnyFunSuite with SparkTestBase {
       Dedup.minhashSignature(col("digs"), 12).as("composed"))
     cmp.collect().foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1), r.toString)
-    }
-  }
-
-  test("native simhash path == portable simhash32 column") {
-    val cmp = df.select(
-      call_function("graft_simhash",
-        call_function("graft_shingle_hashes", col("text"), lit(1))).as("native"),
-      Dedup.simhash32(col("text")).as("composed"))
-    cmp.collect().foreach { r =>
-      assert(r.getLong(0) == r.getLong(1), r.toString)
     }
   }
 

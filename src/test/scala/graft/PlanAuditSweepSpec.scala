@@ -22,6 +22,10 @@ class PlanAuditSweepSpec extends AnyFunSuite with SparkTestBase {
         s"their audit ran gate-closed): ${s.pass1Errors}")
     assert(s.pass2Errors.isEmpty, s"gate-open construction failures: ${s.pass2Errors}")
     assert(s.gateKeys.nonEmpty, "no size gates registered — sweep saw the wrong surface")
+    // the sweep sets every key to 0: only a size gate opens at 0 (a
+    // cap such as an offset limit would close instead)
+    assert(s.gateKeys.forall(_.endsWith(".minBytes")),
+      s"non-size-gate keys swept: ${s.gateKeys.filterNot(_.endsWith(".minBytes"))}")
     val warns = s.warnFindings
     assert(warns.isEmpty, warns.map { case (k, fs) =>
       s"$k:\n  ${fs.mkString("\n  ")}"

@@ -13,7 +13,7 @@ class RangeRankRuleSpec extends AnyFunSuite with SparkTestBase {
 
   graft.functions.GraftFunctions.register(spark)
 
-  private val GateKey = graft.operators.RangeRank.MinBytesKey
+  private val GateKey = graft.plans.RangeRankRewrite.MinBytesKey
 
   private def withOpenGate[A](f: => A): A = {
     spark.conf.set(GateKey, "0")

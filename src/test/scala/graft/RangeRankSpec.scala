@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.operators.RangeRank
+import graft.plans.RangeRankRewrite
 
 /** Unpartitioned rank windows written as plain `Window.orderBy` — the
   * form w5/rfm1/gn1/qb1 use — must, once the size gate is open, plan
@@ -27,8 +27,8 @@ class RangeRankSpec extends AnyFunSuite with SparkTestBase {
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
 
   private def forced[T](body: => T): T = {
-    spark.conf.set(RangeRank.MinBytesKey, "0")
-    try body finally spark.conf.unset(RangeRank.MinBytesKey)
+    spark.conf.set(RangeRankRewrite.MinBytesKey, "0")
+    try body finally spark.conf.unset(RangeRankRewrite.MinBytesKey)
   }
 
   /** The gate-open rows of `df`, asserting the rule replaced the Window
@@ -81,6 +81,33 @@ class RangeRankSpec extends AnyFunSuite with SparkTestBase {
     assert(forced(rowNumber(frame(0), ord).count()) == 0L)
   }
 
+  test("weightedMedian: gate-open equals gate-closed, null group included") {
+    import spark.implicits._
+    // 240 rows in 4 groups (one null), more than the 4 shuffle partitions;
+    // repeated values exercise the pre-aggregation, weights are
+    // integer-valued doubles (the weightedMedian contract), zeros included
+    val df = (0 until 240).map { i =>
+      (Seq(Some("a"), Some("b"), None, Some("c"))(i % 4),
+        ((i * 37) % 23).toDouble, ((i * 7) % 5).toDouble)
+    }.toDF("g", "v", "wt")
+    def median = graft.queries.Relational.weightedMedian(df, "g", "v", "wt")
+    val closed = median
+    assert(!plan(closed).contains("GlobalRank"), plan(closed).take(2000))
+    val open = forced {
+      val d = median
+      assert(plan(d).contains("GlobalRank"), plan(d).take(2000))
+      val partitioned = d.queryExecution.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window
+          if w.partitionSpec.nonEmpty => w
+      }
+      assert(partitioned.isEmpty, partitioned.mkString("\n"))
+      rows(d)
+    }
+    val plain = rows(closed)
+    assert(plain.length == 4 && plain.exists(_.isNullAt(0)), plain)
+    assert(open == plain)
+  }
+
   private val rankKeys =
     Seq("w5_spend_deciles", "gn1_gini_spend", "rfm1_rfm_segments", "qb1_quantile_bins")
 
@@ -103,7 +130,7 @@ class RangeRankSpec extends AnyFunSuite with SparkTestBase {
       // later key missing its own register call would still plan it
       for (key <- rankKeys) {
         val fresh = spark.newSession()
-        fresh.conf.set(RangeRank.MinBytesKey, "0")
+        fresh.conf.set(RangeRankRewrite.MinBytesKey, "0")
         assert(!fresh.experimental.extraOptimizations.contains(graft.plans.RangeRankRewrite))
         val p = plan(SparkEntry.queries(key)(fresh, dir))
         assert(p.contains("GlobalRank"), s"$key did not register the rule:\n" + p.take(2000))

@@ -45,7 +45,7 @@ class GlobalRankFuzzSpec extends AnyFunSuite with graft.SparkTestBase {
 
   graft.functions.GraftFunctions.register(spark)
 
-  private val GateKey = graft.operators.RangeRank.MinBytesKey
+  private val GateKey = graft.plans.RangeRankRewrite.MinBytesKey
   private val seed: Long =
     sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong).getOrElse(20260816L)
   private val minDraws: Int =
