@@ -81,7 +81,8 @@ object SparkEntry {
   // NaN→null mirrors canonicalEvents' ingest normalization: DuckDB
   // shares Spark's NaN-orders-above-all semantics, so masks must see
   // null (→ COALESCE false), matching pandas' NaN-compare-is-False.
-  private val canonicalCte =
+  // The one canonical-frame CTE of every layer oracle.
+  private[graft] val canonicalCte =
     "SELECT CAST(user_id AS VARCHAR) AS series_id, ts, " +
       "CASE WHEN isnan(value) THEN NULL ELSE value END AS value FROM events"
 

@@ -43,7 +43,7 @@ object Ewma {
         // full-microsecond sort: getTime alone is millis, and rows
         // inside one millisecond would order nondeterministically
         // against the oracle's full-resolution ORDER BY ts
-        val rows = it.toArray.sortBy(r => graft.streaming.EventTime.toUs(r._2))
+        val rows = it.toArray.sortBy(r => TimeMicros.micros(r._2))
         var num = 0.0 // Σ w_i·x_i
         var den = 0.0 // Σ w_i
         rows.iterator.map { case (_, t, v) =>
@@ -85,7 +85,7 @@ object Ewma {
       .groupByKey(_._1)
       .flatMapGroups { (sid, it) =>
         // full-microsecond sort (see ewmaMean)
-        val rows = it.toArray.sortBy(r => graft.streaming.EventTime.toUs(r._2))
+        val rows = it.toArray.sortBy(r => TimeMicros.micros(r._2))
         var seeded = false
         var level = 0.0
         var trend = 0.0

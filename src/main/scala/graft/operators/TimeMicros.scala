@@ -1,15 +1,16 @@
 package graft.operators
 
 /**
- * Full-precision `java.sql.Timestamp` ↔ epoch-micros conversion.
+ * Full-precision `java.sql.Timestamp` ↔ epoch-micros conversion — the
+ * ONE definition every Scala-space event-time sort, duration and
+ * emitted bound goes through ([[graft.streaming.OrderedFold]], the
+ * per-series batch kernels, the station scan's pushed bounds).
  *
  * `Timestamp.getTime` is millisecond-resolution while the canonical
- * frame carries microseconds (after the ns→µs ingest floor), so every
- * typed kernel that buffers or sorts rows by event time must round-trip
- * through micros via THIS pair — a getTime-only conversion silently
- * truncates sub-ms event times (the StreamingReorder precision bug this
- * helper consolidates; previously three hand-rolled copies could drift
- * independently).
+ * frame carries microseconds (after the ns→µs ingest floor), so a
+ * getTime-only conversion silently truncates sub-ms event times: rows
+ * inside one millisecond keep arrival order and durations lose their
+ * sub-ms part.
  */
 private[graft] object TimeMicros {
 

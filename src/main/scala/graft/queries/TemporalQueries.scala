@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.canonicalCte
 import graft.operators.Joins
 import graft.operators.Kernels.nanToNull
 import graft.sources.Tables
@@ -586,10 +587,6 @@ object TemporalQueries {
        |    CASE WHEN isnan(value) THEN NULL ELSE value END AS value
        |  FROM events WHERE event_type = '$typ') GROUP BY series_id, ts""".stripMargin
 
-  private val ptsCte =
-    """SELECT CAST(user_id AS VARCHAR) AS series_id, ts,
-      | CASE WHEN isnan(value) THEN NULL ELSE value END AS value FROM events""".stripMargin
-
   /** The d6 oracle (extreme-value events) inlined as a subquery for
     * the interval join twin. */
   private def d6Sql: String = graft.SparkEntry.detectorOracle("d6_extreme_value")
@@ -630,7 +627,7 @@ object TemporalQueries {
          |FROM j""".stripMargin
     },
     "ij1_interval_stats" ->
-      s"""WITH pts AS ($ptsCte),
+      s"""WITH pts AS ($canonicalCte),
          |ev AS (SELECT * FROM ($d6Sql))
          |SELECT pts.series_id, "start", "stop",
          |  count(*) AS n_points,
@@ -640,7 +637,7 @@ object TemporalQueries {
          |  AND pts.ts BETWEEN "start" AND "stop"
          |GROUP BY 1, 2, 3""".stripMargin,
     "ss1_session_stats" ->
-      s"""WITH t AS ($ptsCte),
+      s"""WITH t AS ($canonicalCte),
          |s AS (SELECT *, CAST(SUM(is_new) OVER (PARTITION BY series_id ORDER BY ts
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
          |  FROM (SELECT *, CASE WHEN prev_us IS NULL

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.canonicalCte
 import graft.operators.Kernels
 
 /**
@@ -863,11 +864,7 @@ object TimeSeriesQueries {
       .withColumn("alarm", col("cusum6") > h)
   }
 
-  private val canonicalCte =
-    "SELECT CAST(user_id AS VARCHAR) AS series_id, ts, " +
-      "CASE WHEN isnan(value) THEN NULL ELSE value END AS value FROM events"
-
-  // twin of canonicalWithId — carries event_id for the tie-break
+  // canonicalCte plus event_id for the tie-break
   private val canonicalIdCte =
     "SELECT CAST(user_id AS VARCHAR) AS series_id, ts, event_id, " +
       "CASE WHEN isnan(value) THEN NULL ELSE value END AS value FROM events"

@@ -26,19 +26,6 @@ trait StationSource extends Serializable {
       spark: SparkSession, stationId: String, start: String, stop: String): DataFrame
 }
 
-/** Recorded-fixture source: a CSV with `datetime` and an accumulation
-  * column — the replacement for the reference's live CDEC/NRCS tests. */
-final class CsvStationSource(path: String, accumCol: String = "PRECIPITATIONACCUM")
-    extends StationSource {
-  def fetchDailyAccum(
-      spark: SparkSession, stationId: String, start: String, stop: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
-      .where(col("datetime") >= start && col("datetime") <= stop)
-      .select(
-        to_timestamp(col("datetime"), "yyyy-MM-dd HH:mm:ssXXX").as("ts"),
-        col(accumCol).cast("double").as("accum"))
-}
-
 /** One fetched observation. `accum` is boxed: station feeds carry
   * missing days (the reference reindexes and diffs across them,
   * events.py:163-165). */
@@ -68,9 +55,11 @@ trait StationDirectory {
   def listStations(): Seq[String]
 }
 
-/** Recorded-fixture row backend: plain-JVM parse of the same CSV shape
-  * [[CsvStationSource]] reads (datetime, site, <accumCol>), filtered to
-  * the requested station and inclusive time range. */
+/** Recorded-fixture row backend — the replacement for the reference's
+  * live CDEC/NRCS tests: plain-JVM parse of a CSV with `datetime`, an
+  * optional `site` and an accumulation column, filtered to the
+  * requested station and inclusive time range. Lifted into the
+  * driver-side [[StationSource]] API by [[RowStationSource]]. */
 final class CsvStationRowSource(path: String, accumCol: String = "PRECIPITATIONACCUM")
     extends StationRowSource with StationDirectory {
 
@@ -156,7 +145,7 @@ final class RowStationSource(rows: StationRowSource) extends StationSource {
       StationTimes.parseMicros(start), StationTimes.parseStopMicros(stop))
     val data = fetched.map { r =>
       org.apache.spark.sql.Row(
-        new java.sql.Timestamp(Math.floorDiv(r.tsMicros, 1000L)),
+        graft.operators.TimeMicros.timestamp(r.tsMicros),
         if (r.accum == null) null else r.accum.doubleValue())
     }
     spark.createDataFrame(

@@ -141,7 +141,7 @@ private[sources] class StationScanBuilder(options: Map[String, String])
 
   private def tsMicros(v: Any): Option[Long] = v match {
     case i: java.time.Instant => Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    case t: java.sql.Timestamp => Some(t.getTime / 1000L * 1000000L + t.getNanos / 1000L)
+    case t: java.sql.Timestamp => Some(graft.operators.TimeMicros.micros(t))
     case s: String => scala.util.Try(StationTimes.parseMicros(s)).toOption
     case _ => None
   }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Streaming last-touch attribution — the continuous twin of
@@ -23,6 +22,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  */
 object StreamingAttribution {
 
+  private type Row = (Long, java.sql.Timestamp, Long, String, Option[Long])
+
   final case class Attributed(user_id: Long, touch_type: Option[String], yu: Option[Long])
 
   /** `events` must carry (user_id, ts, event_id, event_type, yu)
@@ -32,23 +33,16 @@ object StreamingAttribution {
   def lastTouch(events: DataFrame, creditType: String): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select("user_id", "ts", "event_id", "event_type", "yu")
-      .as[(Long, java.sql.Timestamp, Long, String, Option[Long])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String, Option[Long])],
-         state: GroupState[String]) => {
-          val sorted = rows.toArray.sortBy(r => (EventTime.toUs(r._2), r._3))
-          var touch = state.getOption.orNull
-          val out = Array.newBuilder[Attributed]
-          sorted.foreach { case (_, _, _, typ, yu) =>
-            if (typ == creditType) out += Attributed(uid, Option(touch), yu)
-            else touch = typ
-          }
-          if (touch != null) state.update(touch)
-          out.result().iterator
-        })
-      .toDF()
+    OrderedFold(events.select("user_id", "ts", "event_id", "event_type", "yu").as[Row])(
+      _._1, _._2, _._3)(
+      (uid: Long, rows: Array[(Long, Row)], prev: Option[String]) => {
+        var touch = prev
+        val out = Array.newBuilder[Attributed]
+        rows.foreach { case (_, (_, _, _, typ, yu)) =>
+          if (typ == creditType) out += Attributed(uid, touch, yu)
+          else touch = Some(typ)
+        }
+        (touch, out.result().iterator)
+      }).toDF()
   }
 }

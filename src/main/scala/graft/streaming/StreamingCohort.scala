@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.TimeMicros
 
 /**
  * Streaming cohort-activity tracking — the continuous twin of
@@ -20,9 +21,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * lastDay` is a complete dedup test and no day SET is ever retained —
  * state is O(1) regardless of stream lifetime. Day indexing matches
  * the batch
- * operator: floor(epoch_us / 86400e6) — computed here from epoch
- * millis, identical because flooring to day granularity cannot be
- * changed by sub-millisecond truncation.
+ * operator: floor(epoch_us / 86400e6), through [[TimeMicros.micros]].
  */
 object StreamingCohort {
 
@@ -37,7 +36,7 @@ object StreamingCohort {
     val spark = events.sparkSession
     import spark.implicits._
     events.select("user_id", "ts").as[(Long, java.sql.Timestamp)]
-      .map { case (u, ts) => (u, Math.floorDiv(ts.getTime, 86400000L)) }
+      .map { case (u, ts) => (u, Math.floorDiv(TimeMicros.micros(ts), 86400000000L)) }
       .groupByKey(_._1)
       .flatMapGroupsWithState(
         OutputMode.Append(), GroupStateTimeout.NoTimeout())(

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Event
+import graft.operators.TimeMicros
 
 /**
  * Streaming variants of the detectors (SURVEY.md §2.3 — the reference
@@ -18,23 +18,43 @@ import graft.Event
  *    the min_storm_total/max_storm_hours refinements run as a batch
  *    post-pass or in the exact stateful variant below.
  *
- *  - [[runEvents]]: the gaps-and-islands primitive under streaming:
- *    per-series state in flatMapGroupsWithState carries the open run
- *    (start, count, total) across micro-batches; a non-flagged row (or
- *    event-time timeout) closes and emits the run. Used for the
- *    threshold detectors (extreme value: `v > max OR v < min`).
+ *  - [[runEvents]] and the other stateful twins: per-series state in
+ *    an [[OrderedFold]] carries the open run ([[RunState]]) across
+ *    micro-batches; a non-flagged row closes and emits the run. Used
+ *    for the threshold detectors (extreme value: `v > max OR v < min`).
  *
  * Assumptions documented for scale: keys = series_id (state is O(1)
- * per series); within a micro-batch rows are sorted by event time in
- * the handler; batches arrive in event-time order per series (true for
- * station feeds; out-of-order ACROSS batches needs the watermark-based
- * session variant instead).
+ * per series); within a micro-batch [[OrderedFold]] sorts rows by
+ * event time at full microseconds; batches arrive in event-time order
+ * per series (true for station feeds; out-of-order ACROSS batches
+ * needs [[StreamingReorder.reorderByEventTime]] in front).
  */
 object StreamingDetectors {
 
-  /** Open-run state for one series. */
-  final case class RunState(
-      startUs: Long, lastTs: java.sql.Timestamp, n: Long, total: Double, any: Boolean)
+  private type Point = (String, java.sql.Timestamp, Option[Double])
+  private type Flagged = (String, java.sql.Timestamp, Option[Double], Boolean)
+
+  /** Open-run state for one series — the open/extend/close machine the
+    * run detectors share: first and last row in epoch µs, point count
+    * and NaN-skipping total. */
+  final case class RunState(startUs: Long, lastUs: Long, n: Long, total: Double, any: Boolean) {
+    def extend(us: Long, v: Option[Double]): RunState =
+      RunState(startUs, us, n + 1L, total + v.getOrElse(0.0), any || v.isDefined)
+    def durationUs: Long = lastUs - startUs
+    def event(sid: String, eventType: String): Event =
+      Event(sid, eventType, TimeMicros.timestamp(startUs), TimeMicros.timestamp(lastUs),
+        durationUs, n, if (any) Some(total) else None)
+  }
+
+  object RunState {
+    /** One row through the machine: a flagged row opens or extends the
+      * run; an unflagged row closes an open run, handing it to `closed`
+      * (which applies the caller's keep rule). */
+    def step(run: Option[RunState], flagged: Boolean, us: Long, v: Option[Double])(
+        closed: RunState => Unit): Option[RunState] =
+      if (flagged) Some(run.getOrElse(RunState(us, us, 0L, 0.0, any = false)).extend(us, v))
+      else { run.foreach(closed); None }
+  }
 
   /** Streaming gaps-and-islands: emit an Event per closed run of rows
     * satisfying `flag` (a boolean column already computed upstream,
@@ -42,46 +62,16 @@ object StreamingDetectors {
   def runEvents(eventType: String)(flagged: DataFrame): DataFrame = {
     val spark = flagged.sparkSession
     import spark.implicits._
-
-    flagged
-      .select(col("series_id"), col("ts"), col("value"), col("flag"))
-      .as[(String, java.sql.Timestamp, Option[Double], Boolean)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (sid: String,
-         rows: Iterator[(String, java.sql.Timestamp, Option[Double], Boolean)],
-         state: GroupState[RunState]) => {
-          val sorted = rows.toArray.sortBy(_._2.getTime)
-          val out = Array.newBuilder[Event]
-          var cur = state.getOption
-          sorted.foreach { case (_, ts, v, flag) =>
-            if (flag) {
-              cur = cur match {
-                case None =>
-                  Some(RunState(ts.getTime * 1000L, ts, 1L,
-                    v.getOrElse(0.0), v.isDefined))
-                case Some(s) =>
-                  Some(s.copy(lastTs = ts, n = s.n + 1,
-                    total = s.total + v.getOrElse(0.0), any = s.any || v.isDefined))
-              }
-            } else {
-              cur.foreach { s =>
-                out += Event(sid, eventType,
-                  new java.sql.Timestamp(s.startUs / 1000L), s.lastTs,
-                  s.lastTs.getTime * 1000L - s.startUs, s.n,
-                  if (s.any) Some(s.total) else None)
-              }
-              cur = None
-            }
-          }
-          cur match {
-            case Some(s) => state.update(s)
-            case None => if (state.exists) state.remove()
-          }
-          out.result().iterator
-        })
-      .toDF()
+    OrderedFold(flagged.select(col("series_id"), col("ts"), col("value"), col("flag")).as[Flagged])(
+      _._1, _._2)(
+      (sid: String, rows: Array[(Long, Flagged)], prev: Option[RunState]) => {
+        val out = Array.newBuilder[Event]
+        var run = prev
+        rows.foreach { case (us, (_, _, v, flag)) =>
+          run = RunState.step(run, flag, us, v)(r => out += r.event(sid, eventType))
+        }
+        (run, out.result().iterator)
+      }).toDF()
   }
 
   /** Extreme-value detector as a stream: null-safe mask then
@@ -100,10 +90,10 @@ object StreamingDetectors {
   /**
    * Flat-line detector as a stream: the diff-based mask
    * (`abs(v − prev) ≤ slopeThresh`) needs the PREVIOUS value, which a
-   * streaming window can't provide across batches — so the
-   * flatMapGroupsWithState state carries both the last value and the
-   * open run. Matches the batch FlatLineEvents semantics: a missing
-   * previous value (or NaN endpoint) yields flag = false.
+   * streaming window can't provide across batches — so the fold's
+   * state carries both the last value and the open run. Matches the
+   * batch FlatLineEvents semantics: a missing previous value (or NaN
+   * endpoint) yields flag = false.
    */
   def flatLine(minLen: Long, slopeThresh: Double)(ts: DataFrame): DataFrame =
     diffRunEvents("flat_line", minLen,
@@ -132,52 +122,28 @@ object StreamingDetectors {
     val spark = ts.sparkSession
     import spark.implicits._
 
-    ts.select(col("series_id"), col("ts"), col("value"))
-      .as[(String, java.sql.Timestamp, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (sid: String,
-         rows: Iterator[(String, java.sql.Timestamp, Option[Double])],
-         state: GroupState[DiffState]) => {
-          val sorted = rows.toArray.sortBy(_._2.getTime)
-          val out = Array.newBuilder[Event]
-          var st = state.getOption.getOrElse(DiffState(None, None))
-          def close(run: RunState): Unit =
-            if (run.n >= minLen)
-              out += Event(sid, eventType,
-                new java.sql.Timestamp(run.startUs / 1000L), run.lastTs,
-                run.lastTs.getTime * 1000L - run.startUs, run.n,
-                if (run.any) Some(run.total) else None)
-          sorted.foreach { case (_, t, v) =>
-            val flag = (st.lastValue, v) match {
-              case (Some(p), Some(c)) if !p.isNaN && !c.isNaN => mask(p, c)
-              case _ => false
-            }
-            val run = if (flag) {
-              Some(st.run match {
-                case None => RunState(t.getTime * 1000L, t, 1L, v.getOrElse(0.0), v.isDefined)
-                case Some(r) => r.copy(lastTs = t, n = r.n + 1,
-                  total = r.total + v.getOrElse(0.0), any = r.any || v.isDefined)
-              })
-            } else {
-              st.run.foreach(close)
-              None
-            }
-            st = DiffState(v, run)
+    OrderedFold(ts.select(col("series_id"), col("ts"), col("value")).as[Point])(
+      _._1, _._2)(
+      (sid: String, rows: Array[(Long, Point)], prev: Option[DiffState]) => {
+        val out = Array.newBuilder[Event]
+        var st = prev.getOrElse(DiffState(None, None))
+        rows.foreach { case (us, (_, _, v)) =>
+          val flag = (st.lastValue, v) match {
+            case (Some(p), Some(c)) if !p.isNaN && !c.isNaN => mask(p, c)
+            case _ => false
           }
-          state.update(st)
-          out.result().iterator
-        })
-      .toDF()
+          st = DiffState(v, RunState.step(st.run, flag, us, v)(r =>
+            if (r.n >= minLen) out += r.event(sid, eventType)))
+        }
+        (Some(st), out.result().iterator)
+      }).toDF()
   }
 
-  /** Last event time per series, for cross-batch gap detection. */
-  /** Per-series gap state: the previous row's timestamp and
+  /** Per-series gap state: the previous row's event µs and
     * (NaN-canonicalized) value for the ts-gap endpoint total, plus the
     * open missing-value run for the NaN-run half. */
   final case class GapState(
-      lastTsMs: Long, lastVal: Option[Double], nanRun: Option[RunState])
+      lastUs: Long, lastVal: Option[Double], nanRun: Option[RunState])
 
   /**
    * Data-gap detection on a stream — BOTH halves of the batch
@@ -205,56 +171,31 @@ object StreamingDetectors {
     val spark = ts.sparkSession
     import spark.implicits._
 
-    ts.select(col("series_id"), col("ts"), col("value"))
-      .as[(String, java.sql.Timestamp, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (sid: String,
-         rows: Iterator[(String, java.sql.Timestamp, Option[Double])],
-         state: GroupState[GapState]) => {
-          val sorted = rows.toArray.sortBy(_._2.getTime)
-          val out = Array.newBuilder[Event]
-          var st = state.getOption
-          var lastTs = st.map(_.lastTsMs)
-          var lastVal = st.flatMap(_.lastVal)
-          var nanRun = st.flatMap(_.nanRun)
-          sorted.foreach { case (_, t, vRaw) =>
-            val v = vRaw.filterNot(_.isNaN) // NaN canonicalized to missing
-            // (b) ts gap vs the previous row, NaN-skip endpoint total
-            lastTs.foreach { p =>
-              val durUs = (t.getTime - p) * 1000L
-              if (durUs > stepUs && durUs >= minLen * stepUs) {
-                val total = (lastVal, v) match {
-                  case (None, None) => None
-                  case (a, b) => Some(a.getOrElse(0.0) + b.getOrElse(0.0))
-                }
-                out += Event(sid, "data_gap",
-                  new java.sql.Timestamp(p), t, durUs, 2L, total)
+    OrderedFold(ts.select(col("series_id"), col("ts"), col("value")).as[Point])(
+      _._1, _._2)(
+      (sid: String, rows: Array[(Long, Point)], prev: Option[GapState]) => {
+        val out = Array.newBuilder[Event]
+        var st = prev
+        rows.foreach { case (us, (_, t, vRaw)) =>
+          val v = vRaw.filterNot(_.isNaN) // NaN canonicalized to missing
+          // (b) ts gap vs the previous row, NaN-skip endpoint total
+          st.foreach { p =>
+            val durUs = us - p.lastUs
+            if (durUs > stepUs && durUs >= minLen * stepUs) {
+              val total = (p.lastVal, v) match {
+                case (None, None) => None
+                case (a, b) => Some(a.getOrElse(0.0) + b.getOrElse(0.0))
               }
+              out += Event(sid, "data_gap", TimeMicros.timestamp(p.lastUs), t, durUs, 2L, total)
             }
-            // (a) missing-value run
-            if (v.isEmpty) {
-              nanRun = nanRun match {
-                case None => Some(RunState(t.getTime * 1000L, t, 1L, 0.0, any = false))
-                case Some(r) => Some(r.copy(lastTs = t, n = r.n + 1))
-              }
-            } else {
-              nanRun.foreach { r =>
-                val durUs = r.lastTs.getTime * 1000L - r.startUs
-                if (durUs >= minLen * stepUs)
-                  out += Event(sid, "data_gap",
-                    new java.sql.Timestamp(r.startUs / 1000L), r.lastTs, durUs, r.n, None)
-              }
-              nanRun = None
-            }
-            lastTs = Some(t.getTime)
-            lastVal = v
           }
-          lastTs.foreach(l => state.update(GapState(l, lastVal, nanRun)))
-          out.result().iterator
-        })
-      .toDF()
+          // (a) missing-value run
+          val nanRun = RunState.step(st.flatMap(_.nanRun), v.isEmpty, us, None)(r =>
+            if (r.durationUs >= minLen * stepUs) out += r.event(sid, "data_gap"))
+          st = Some(GapState(us, v, nanRun))
+        }
+        (st, out.result().iterator)
+      }).toDF()
   }
 
   /** Exact storm-fold state for one series (metevents/events.py:85-121
@@ -275,7 +216,20 @@ object StreamingDetectors {
       totalAtStop: Double,
       nAtStop: Long,
       anyAtStop: Boolean,
-      inGroup: Boolean)
+      inGroup: Boolean) {
+
+    /** Absorb one (NaN-skipped) point into the candidate's raw slice. */
+    def absorb(v: Option[Double]): StormState = copy(
+      runningTotal = runningTotal + v.getOrElse(0.0),
+      runningN = runningN + 1L,
+      runningAny = runningAny || v.isDefined)
+
+    /** A new candidate whose slice starts with this point. */
+    def startCandidate(us: Long, isSeriesHead: Boolean, v: Option[Double]): StormState =
+      copy(hasCand = true, candStartUs = us, candIsSeriesHead = isSeriesHead,
+        runningTotal = 0.0, runningN = 0L, runningAny = false,
+        hasGroupStop = false).absorb(v)
+  }
 
   object StormState {
     val empty: StormState = StormState(
@@ -286,7 +240,7 @@ object StreamingDetectors {
   }
 
   /**
-   * EXACT streaming storm fold — flatMapGroupsWithState carrying the
+   * EXACT streaming storm fold — an [[OrderedFold]] carrying the
    * reference's candidate semantics: the candidate does NOT advance on
    * a failed close (mass keeps accumulating across quiet spells), the
    * span back-extends one `step` unless the candidate starts at the
@@ -315,85 +269,44 @@ object StreamingDetectors {
     val spark = ts.sparkSession
     import spark.implicits._
 
-    ts.select(col("series_id"), col("ts"), col("value"))
-      .as[(String, java.sql.Timestamp, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (sid: String,
-         rows: Iterator[(String, java.sql.Timestamp, Option[Double])],
-         state: GroupState[StormState]) => {
-          val sorted = rows.toArray.sortBy(_._2.getTime)
-          val out = Array.newBuilder[Event]
-          var st = state.getOption.getOrElse(StormState.empty)
-          sorted.foreach { case (_, t, vOpt) =>
-            val tUs = t.getTime * 1000L
-            val v = vOpt.filterNot(_.isNaN)
-            val flagged = v.exists(_ >= instantMassToStart)
-            if (flagged) {
-              val startsNewGroup = !st.inGroup
-              if (st.hasCand && startsNewGroup && st.hasGroupStop) {
-                // next group begins: evaluate the batch close condition
-                val close = ((tUs - st.groupStopUs > dtUs) ||
-                  (st.groupStopUs - st.candStartUs > maxUs)) &&
-                  st.totalAtStop >= minStormTotal
-                if (close) {
-                  val spanStart =
-                    if (st.candIsSeriesHead) st.candStartUs else st.candStartUs - stepUs
-                  out += Event(sid, "storm",
-                    new java.sql.Timestamp(Math.floorDiv(spanStart, 1000L)),
-                    new java.sql.Timestamp(Math.floorDiv(st.groupStopUs, 1000L)),
-                    st.groupStopUs - spanStart, st.nAtStop,
-                    if (st.anyAtStop) Some(st.totalAtStop) else Some(0.0))
-                  // this point starts the new candidate
-                  st = st.copy(hasCand = true, candStartUs = tUs,
-                    candIsSeriesHead = false,
-                    runningTotal = v.getOrElse(0.0), runningN = 1L,
-                    runningAny = v.isDefined, hasGroupStop = false)
-                } else {
-                  // candidate persists; fold this point in
-                  st = st.copy(
-                    runningTotal = st.runningTotal + v.getOrElse(0.0),
-                    runningN = st.runningN + 1L,
-                    runningAny = st.runningAny || v.isDefined)
-                }
-              } else if (!st.hasCand) {
-                st = st.copy(hasCand = true, candStartUs = tUs,
-                  candIsSeriesHead = !st.seenAnyRow,
-                  runningTotal = v.getOrElse(0.0), runningN = 1L,
-                  runningAny = v.isDefined, hasGroupStop = false)
-              } else {
-                st = st.copy(
-                  runningTotal = st.runningTotal + v.getOrElse(0.0),
-                  runningN = st.runningN + 1L,
-                  runningAny = st.runningAny || v.isDefined)
-              }
-              // every flagged point is a (possibly new) group stop
-              st = st.copy(inGroup = true, hasGroupStop = true, groupStopUs = tUs,
-                totalAtStop = st.runningTotal, nAtStop = st.runningN,
-                anyAtStop = st.runningAny)
-            } else {
-              // unflagged: closes any open group; raw mass still
-              // accrues to the candidate slice
-              if (st.hasCand) {
-                st = st.copy(inGroup = false,
-                  runningTotal = st.runningTotal + v.getOrElse(0.0),
-                  runningN = st.runningN + 1L,
-                  runningAny = st.runningAny || v.isDefined)
-              } else st = st.copy(inGroup = false)
-            }
-            st = st.copy(seenAnyRow = true)
+    OrderedFold(ts.select(col("series_id"), col("ts"), col("value")).as[Point])(
+      _._1, _._2)(
+      (sid: String, rows: Array[(Long, Point)], prev: Option[StormState]) => {
+        val out = Array.newBuilder[Event]
+        var st = prev.getOrElse(StormState.empty)
+        rows.foreach { case (tUs, (_, _, vOpt)) =>
+          val v = vOpt.filterNot(_.isNaN)
+          if (v.exists(_ >= instantMassToStart)) {
+            st =
+              if (!st.hasCand) st.startCandidate(tUs, isSeriesHead = !st.seenAnyRow, v)
+              else if (!st.inGroup && st.hasGroupStop &&
+                  // next group begins: evaluate the batch close condition
+                  ((tUs - st.groupStopUs > dtUs) ||
+                    (st.groupStopUs - st.candStartUs > maxUs)) &&
+                  st.totalAtStop >= minStormTotal) {
+                val spanStart =
+                  if (st.candIsSeriesHead) st.candStartUs else st.candStartUs - stepUs
+                out += Event(sid, "storm",
+                  TimeMicros.timestamp(spanStart), TimeMicros.timestamp(st.groupStopUs),
+                  st.groupStopUs - spanStart, st.nAtStop,
+                  if (st.anyAtStop) Some(st.totalAtStop) else Some(0.0))
+                st.startCandidate(tUs, isSeriesHead = false, v) // this point starts the next
+              } else st.absorb(v) // candidate persists; fold this point in
+            // every flagged point is a (possibly new) group stop
+            st = st.copy(inGroup = true, hasGroupStop = true, groupStopUs = tUs,
+              totalAtStop = st.runningTotal, nAtStop = st.runningN,
+              anyAtStop = st.runningAny)
+          } else {
+            // unflagged: closes any open group; raw mass still
+            // accrues to the candidate slice
+            st = (if (st.hasCand) st.absorb(v) else st).copy(inGroup = false)
           }
-          state.update(st)
-          out.result().iterator
-        })
-      .toDF()
+          st = st.copy(seenAnyRow = true)
+        }
+        (Some(st), out.result().iterator)
+      }).toDF()
   }
 
-  /** Storm sessionization on a stream: mass-threshold filter, then a
-    * session window with `hoursToStop` gap per series — the streaming
-    * twin of the storm group-merge. Emits one row per finalized
-    * session (append mode requires the watermark). */
   /** Per-series buffered state for [[spikeValley]]: the retained
     * window as (micros, value) plus the emission frontier (index of
     * the first not-yet-emitted position, relative to the window —
@@ -405,7 +318,7 @@ object StreamingDetectors {
     * "since one sample before the first occurrence of the running
     * max/min", which a signal that never renews its extremes can
     * still grow — the warning names the shape). */
-  val SvStateWarnRowsKey = "spark.graft.streaming.svStateWarnRows"
+  val SvStateWarnRows: Int = 1 << 17
 
   /** JVM-local spec observability for the state-size warning. */
   val svStateWarnCount = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -432,7 +345,7 @@ object StreamingDetectors {
    *    "since the last record extreme" for series that renew records;
    *    a signal holding an unemitted prefix-maximum candidate retains
    *    back to that candidate's base, and crossing
-   *    `spark.graft.streaming.svStateWarnRows` logs the shape;
+   *    [[SvStateWarnRows]] logs the shape;
    *  - each trigger re-runs the batch mask over the buffer and takes
    *    the STABLE prefix: every position more than ceil(widthMax)+1
    *    samples before the earliest OPEN candidate, where open =
@@ -464,224 +377,212 @@ object StreamingDetectors {
       height, threshold, prominence, widthMin, widthMax)
     val reach = math.ceil(widthMax).toInt + 1
     val spark = ts.sparkSession
-    val stateWarnRows = scala.util.Try(
-      spark.conf.get(SvStateWarnRowsKey).toInt).getOrElse(1 << 17)
     import spark.implicits._
 
-    ts.select(col("series_id"), col("ts"), col("value"))
-      .as[(String, java.sql.Timestamp, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (sid: String,
-         rows: Iterator[(String, java.sql.Timestamp, Option[Double])],
-         state: GroupState[SvState]) => {
-          val incoming = rows.map { case (_, t, v) =>
-            (graft.operators.TimeMicros.micros(t), v)
-          }.toList
-          val prev = state.getOption
-          // nearly-sorted input (retained window is sorted, incoming
-          // appends) — TimSort's run detection keeps this ~O(n)
-          val all = (prev.map(_.rows).getOrElse(Nil) ++ incoming)
-            .sortBy(_._1).toArray
-          val emitted0 = prev.map(_.emittedUpTo).getOrElse(0)
-          val xs = all.map(_._2.getOrElse(Double.NaN))
-          // one negated copy per trigger, shared by the valley-side
-          // open-candidate scan and the drop-bound scan (review r19)
-          val negXs = xs.map(v => -v)
-          val n = xs.length
+    OrderedFold(ts.select(col("series_id"), col("ts"), col("value")).as[Point])(
+      _._1, _._2)(
+      (sid: String, rows: Array[(Long, Point)], prev: Option[SvState]) => {
+        val incoming = rows.map { case (us, (_, _, v)) => (us, v) }
+        // nearly-sorted input (retained window is sorted, incoming
+        // appends) — TimSort's run detection keeps this ~O(n)
+        val all = (prev.map(_.rows).getOrElse(Nil) ++ incoming)
+          .sortBy(_._1).toArray
+        val emitted0 = prev.map(_.emittedUpTo).getOrElse(0)
+        val xs = all.map(_._2.getOrElse(Double.NaN))
+        // one negated copy per trigger, shared by the valley-side
+        // open-candidate scan and the drop-bound scan (review r19)
+        val negXs = xs.map(v => -v)
+        val n = xs.length
 
-          // earliest UNDECIDED local maximum. A maximum is right-open
-          // when no strictly-higher value (a NaN counts as +Inf — it
-          // stops the prominence scan exactly like a higher value)
-          // exists to its right; but a right-open maximum is still
-          // DECIDED when (a) the local height/threshold filters
-          // exclude it (final — they never change), or (b) its width
-          // at the CURRENT bases already exceeds widthMax: prominence
-          // only grows as the right base extends, so the crossing
-          // height only drops and width only grows — once past the
-          // cap it is painted never (this is what retires the
-          // global-minimum valleys a snow series holds open forever).
-          // A prominence-filter failure does NOT decide (prominence
-          // grows, it may pass later); a width below widthMin does
-          // not either (it may grow into range).
-          def earliestOpenPeak(x: Array[Double]): Int = {
-            val sh = new Array[Double](x.length + 1)
-            sh(x.length) = Double.NegativeInfinity
-            var j = x.length - 1
-            while (j >= 0) {
-              val v = if (x(j).isNaN) Double.PositiveInfinity else x(j)
-              sh(j) = math.max(v, sh(j + 1)); j -= 1
-            }
-            var maxima = graft.operators.FindPeaks.localMaxima(x)
-            params.height.foreach { hMin =>
-              maxima = maxima.filter(p => x(p) >= hMin)
-            }
-            params.threshold.foreach { tMin =>
-              maxima = maxima.filter(p =>
-                math.min(x(p) - x(p - 1), x(p) - x(p + 1)) >= tMin)
-            }
-            val rightOpen = maxima.filter(p => sh(p + 1) <= x(p))
-            if (rightOpen.isEmpty) Int.MaxValue
-            else {
-              val proms = graft.operators.FindPeaks.prominences(x, rightOpen)
-              rightOpen.indices.iterator
-                .filter { i =>
-                  graft.operators.FindPeaks.width(
-                    x, rightOpen(i), proms(i), params.relHeight) <= params.widthMax
-                }
-                .map(rightOpen(_))
-                .foldLeft(Int.MaxValue)(math.min)
-            }
+        // earliest UNDECIDED local maximum. A maximum is right-open
+        // when no strictly-higher value (a NaN counts as +Inf — it
+        // stops the prominence scan exactly like a higher value)
+        // exists to its right; but a right-open maximum is still
+        // DECIDED when (a) the local height/threshold filters
+        // exclude it (final — they never change), or (b) its width
+        // at the CURRENT bases already exceeds widthMax: prominence
+        // only grows as the right base extends, so the crossing
+        // height only drops and width only grows — once past the
+        // cap it is painted never (this is what retires the
+        // global-minimum valleys a snow series holds open forever).
+        // A prominence-filter failure does NOT decide (prominence
+        // grows, it may pass later); a width below widthMin does
+        // not either (it may grow into range).
+        def earliestOpenPeak(x: Array[Double]): Int = {
+          val sh = new Array[Double](x.length + 1)
+          sh(x.length) = Double.NegativeInfinity
+          var j = x.length - 1
+          while (j >= 0) {
+            val v = if (x(j).isNaN) Double.PositiveInfinity else x(j)
+            sh(j) = math.max(v, sh(j + 1)); j -= 1
           }
-          val openIdx =
-            if (n == 0) 0
-            else {
-              // trailing equal-value plateau (NaN != NaN breaks it)
-              var t = n - 1
-              while (t > 0 && xs(t - 1) == xs(t)) t -= 1
-              math.min(t, math.min(earliestOpenPeak(xs),
-                earliestOpenPeak(negXs)))
-            }
-          val stableEnd = math.max(0, math.min(openIdx.toLong - reach, n.toLong)).toInt
-
-          val out = Array.newBuilder[Event]
-          var newEmitted = emitted0
-          if (n >= 3 && stableEnd > emitted0) {
-            val mask = graft.operators.FindPeaks.spikeValleyMask(xs, params)
-            var i = emitted0
-            while (i < stableEnd) {
-              if (mask(i)) {
-                var j = i
-                while (j + 1 < n && mask(j + 1)) j += 1
-                if (j + 1 < stableEnd) {
-                  var total = 0.0; var any = false
-                  var k = i
-                  while (k <= j) {
-                    val v = xs(k)
-                    if (!v.isNaN) { total += v; any = true }
-                    k += 1
-                  }
-                  out += Event(sid, "spike_valley",
-                    graft.operators.TimeMicros.timestamp(all(i)._1),
-                    graft.operators.TimeMicros.timestamp(all(j)._1),
-                    all(j)._1 - all(i)._1,
-                    (j - i + 1).toLong, if (any) Some(total) else None)
-                  newEmitted = j + 1
-                  i = j + 1
-                } else i = stableEnd // straddling run: wait for finality
-              } else i += 1
-            }
+          var maxima = graft.operators.FindPeaks.localMaxima(x)
+          params.height.foreach { hMin =>
+            maxima = maxima.filter(p => x(p) >= hMin)
           }
-          // SAFE-PREFIX DROP (review r18; left-scan bound tightened
-          // for ADVICE r18): rows may be dropped only when no
-          // prominence/width computation that can still affect
-          // UNEMITTED output will read them. Three retention bounds:
-          //  - reach margin behind the emission frontier: a candidate
-          //    below newEmitted - reach paints at most widthMax past
-          //    its midpoint, strictly below the frontier;
-          //  - first occurrences of the running max AND min: a FUTURE
-          //    candidate below the running max stops its left scan at
-          //    or after fMax; one at/above it scans to the head,
-          //    where the retained running min (<= every value ever
-          //    dropped, by induction) supplies the exact base;
-          //  - per-candidate left-scan stops for the CURRENT unemitted
-          //    candidates (local maxima of the series and of its sign
-          //    flip at index >= newEmitted - reach): each scan reads
-          //    back to the last strictly-higher-or-NaN position, and a
-          //    candidate that is its own prefix maximum has NO stop —
-          //    its base is the rightmost prefix argmin, which must
-          //    stay. The old first-running-extreme bound alone let a
-          //    LATE new global extreme unpin exactly that prefix
-          //    (ADVICE r18: record high closed by a newer record while
-          //    a new global min lands after it — the truncated head
-          //    then inflated leftMin, diverging prominence/width from
-          //    the batch mask). Exiting the scan at the buffer head is
-          //    equivalent to exiting at the stop position itself, so
-          //    keeping [stop+1, ...] preserves leftMin/leftBase/width
-          //    bit for bit. NaNs never win the extremes (they stop
-          //    scans themselves, like the window edge they may
-          //    become).
-          val dropPoint = {
-            var maxV = Double.NegativeInfinity; var minV = Double.PositiveInfinity
-            var i = 0
-            while (i < n) {
-              val v = xs(i)
-              if (!v.isNaN) {
-                if (v > maxV) maxV = v
-                if (v < minV) minV = v
+          params.threshold.foreach { tMin =>
+            maxima = maxima.filter(p =>
+              math.min(x(p) - x(p - 1), x(p) - x(p + 1)) >= tMin)
+          }
+          val rightOpen = maxima.filter(p => sh(p + 1) <= x(p))
+          if (rightOpen.isEmpty) Int.MaxValue
+          else {
+            val proms = graft.operators.FindPeaks.prominences(x, rightOpen)
+            rightOpen.indices.iterator
+              .filter { i =>
+                graft.operators.FindPeaks.width(
+                  x, rightOpen(i), proms(i), params.relHeight) <= params.widthMax
               }
+              .map(rightOpen(_))
+              .foldLeft(Int.MaxValue)(math.min)
+          }
+        }
+        val openIdx =
+          if (n == 0) 0
+          else {
+            // trailing equal-value plateau (NaN != NaN breaks it)
+            var t = n - 1
+            while (t > 0 && xs(t - 1) == xs(t)) t -= 1
+            math.min(t, math.min(earliestOpenPeak(xs),
+              earliestOpenPeak(negXs)))
+          }
+        val stableEnd = math.max(0, math.min(openIdx.toLong - reach, n.toLong)).toInt
+
+        val out = Array.newBuilder[Event]
+        var newEmitted = emitted0
+        if (n >= 3 && stableEnd > emitted0) {
+          val mask = graft.operators.FindPeaks.spikeValleyMask(xs, params)
+          var i = emitted0
+          while (i < stableEnd) {
+            if (mask(i)) {
+              var j = i
+              while (j + 1 < n && mask(j + 1)) j += 1
+              if (j + 1 < stableEnd) {
+                var total = 0.0; var any = false
+                var k = i
+                while (k <= j) {
+                  val v = xs(k)
+                  if (!v.isNaN) { total += v; any = true }
+                  k += 1
+                }
+                out += Event(sid, "spike_valley",
+                  TimeMicros.timestamp(all(i)._1),
+                  TimeMicros.timestamp(all(j)._1),
+                  all(j)._1 - all(i)._1,
+                  (j - i + 1).toLong, if (any) Some(total) else None)
+                newEmitted = j + 1
+                i = j + 1
+              } else i = stableEnd // straddling run: wait for finality
+            } else i += 1
+          }
+        }
+        // SAFE-PREFIX DROP (review r18; left-scan bound tightened
+        // for ADVICE r18): rows may be dropped only when no
+        // prominence/width computation that can still affect
+        // UNEMITTED output will read them. Three retention bounds:
+        //  - reach margin behind the emission frontier: a candidate
+        //    below newEmitted - reach paints at most widthMax past
+        //    its midpoint, strictly below the frontier;
+        //  - first occurrences of the running max AND min: a FUTURE
+        //    candidate below the running max stops its left scan at
+        //    or after fMax; one at/above it scans to the head,
+        //    where the retained running min (<= every value ever
+        //    dropped, by induction) supplies the exact base;
+        //  - per-candidate left-scan stops for the CURRENT unemitted
+        //    candidates (local maxima of the series and of its sign
+        //    flip at index >= newEmitted - reach): each scan reads
+        //    back to the last strictly-higher-or-NaN position, and a
+        //    candidate that is its own prefix maximum has NO stop —
+        //    its base is the rightmost prefix argmin, which must
+        //    stay. The old first-running-extreme bound alone let a
+        //    LATE new global extreme unpin exactly that prefix
+        //    (ADVICE r18: record high closed by a newer record while
+        //    a new global min lands after it — the truncated head
+        //    then inflated leftMin, diverging prominence/width from
+        //    the batch mask). Exiting the scan at the buffer head is
+        //    equivalent to exiting at the stop position itself, so
+        //    keeping [stop+1, ...] preserves leftMin/leftBase/width
+        //    bit for bit. NaNs never win the extremes (they stop
+        //    scans themselves, like the window edge they may
+        //    become).
+        val dropPoint = {
+          var maxV = Double.NegativeInfinity; var minV = Double.PositiveInfinity
+          var i = 0
+          while (i < n) {
+            val v = xs(i)
+            if (!v.isNaN) {
+              if (v > maxV) maxV = v
+              if (v < minV) minV = v
+            }
+            i += 1
+          }
+          if (maxV.isNegInfinity) 0 // all-NaN window: keep everything
+          else {
+            var fMax = -1; var fMin = -1
+            i = 0
+            while (i < n && (fMax < 0 || fMin < 0)) {
+              if (xs(i) == maxV && fMax < 0) fMax = i
+              if (xs(i) == minV && fMin < 0) fMin = i
               i += 1
             }
-            if (maxV.isNegInfinity) 0 // all-NaN window: keep everything
-            else {
-              var fMax = -1; var fMin = -1
-              i = 0
-              while (i < n && (fMax < 0 || fMin < 0)) {
-                if (xs(i) == maxV && fMax < 0) fMax = i
-                if (xs(i) == minV && fMin < 0) fMin = i
-                i += 1
-              }
-              val lo = math.max(0, newEmitted - reach)
-              // earliest buffer position any unemitted candidate's
-              // left prominence scan can read, over one sign
-              def minKeepFrom(x: Array[Double]): Int = {
-                val cands = graft.operators.FindPeaks.localMaxima(x)
-                  .filter(_ >= lo)
-                if (cands.isEmpty) Int.MaxValue
-                else {
-                  // previous strictly-greater-or-NaN position via a
-                  // monotonic stack (equal values pop: they don't stop
-                  // the scan; a NaN acts as +Inf and never pops)
-                  val prevStop = new Array[Int](n)
-                  val stack = new Array[Int](n); var top = -1
-                  // rightmost argmin of x(0..i) (ties -> right, the
-                  // scan's own tie rule), NaN skipped
-                  val argmin = new Array[Int](n); var bm = -1
-                  var j2 = 0
-                  while (j2 < n) {
-                    val v = x(j2)
-                    if (!v.isNaN) {
-                      while (top >= 0 && {
-                        val tv = x(stack(top)); !tv.isNaN && tv <= v
-                      }) top -= 1
-                      if (bm < 0 || v <= x(bm)) bm = j2
-                    }
-                    prevStop(j2) = if (top >= 0) stack(top) else -1
-                    top += 1; stack(top) = j2
-                    argmin(j2) = bm
-                    j2 += 1
+            val lo = math.max(0, newEmitted - reach)
+            // earliest buffer position any unemitted candidate's
+            // left prominence scan can read, over one sign
+            def minKeepFrom(x: Array[Double]): Int = {
+              val cands = graft.operators.FindPeaks.localMaxima(x)
+                .filter(_ >= lo)
+              if (cands.isEmpty) Int.MaxValue
+              else {
+                // previous strictly-greater-or-NaN position via a
+                // monotonic stack (equal values pop: they don't stop
+                // the scan; a NaN acts as +Inf and never pops)
+                val prevStop = new Array[Int](n)
+                val stack = new Array[Int](n); var top = -1
+                // rightmost argmin of x(0..i) (ties -> right, the
+                // scan's own tie rule), NaN skipped
+                val argmin = new Array[Int](n); var bm = -1
+                var j2 = 0
+                while (j2 < n) {
+                  val v = x(j2)
+                  if (!v.isNaN) {
+                    while (top >= 0 && {
+                      val tv = x(stack(top)); !tv.isNaN && tv <= v
+                    }) top -= 1
+                    if (bm < 0 || v <= x(bm)) bm = j2
                   }
-                  var kf = Int.MaxValue
-                  cands.foreach { p =>
-                    val s0 = prevStop(p)
-                    // unbounded scan: no NaN and no higher value
-                    // before p, so argmin(p-1) >= 0
-                    val k = if (s0 >= 0) s0 + 1 else argmin(p - 1)
-                    if (k < kf) kf = k
-                  }
-                  kf
+                  prevStop(j2) = if (top >= 0) stack(top) else -1
+                  top += 1; stack(top) = j2
+                  argmin(j2) = bm
+                  j2 += 1
                 }
+                var kf = Int.MaxValue
+                cands.foreach { p =>
+                  val s0 = prevStop(p)
+                  // unbounded scan: no NaN and no higher value
+                  // before p, so argmin(p-1) >= 0
+                  val k = if (s0 >= 0) s0 + 1 else argmin(p - 1)
+                  if (k < kf) kf = k
+                }
+                kf
               }
-              val scanBound = math.min(
-                minKeepFrom(xs), minKeepFrom(negXs))
-              math.max(0, math.min(scanBound,
-                math.min(newEmitted - reach, math.min(fMax, fMin) - 1)))
             }
+            val scanBound = math.min(
+              minKeepFrom(xs), minKeepFrom(negXs))
+            math.max(0, math.min(scanBound,
+              math.min(newEmitted - reach, math.min(fMax, fMin) - 1)))
           }
-          val kept = if (dropPoint > 0) all.drop(dropPoint) else all
-          if (prev.forall(_.rows.length < stateWarnRows) && kept.length >= stateWarnRows) {
-            svStateWarnCount.incrementAndGet()
-            org.slf4j.LoggerFactory.getLogger(StreamingDetectors.getClass).warn(
-              s"streaming spike-valley: series '$sid' retains ${kept.length} rows " +
-                "(the window since the first running max/min — a signal that " +
-                "never renews its extremes retains from the last record on). " +
-                s"Warn threshold $SvStateWarnRowsKey=$stateWarnRows.")
-          }
-          state.update(SvState(kept.toList, newEmitted - dropPoint))
-          out.result().iterator
-        })
-      .toDF()
+        }
+        val kept = if (dropPoint > 0) all.drop(dropPoint) else all
+        if (prev.forall(_.rows.length < SvStateWarnRows) && kept.length >= SvStateWarnRows) {
+          svStateWarnCount.incrementAndGet()
+          org.slf4j.LoggerFactory.getLogger(StreamingDetectors.getClass).warn(
+            s"streaming spike-valley: series '$sid' retains ${kept.length} rows " +
+              "(the window since the first running max/min — a signal that " +
+              "never renews its extremes retains from the last record on). " +
+              s"Warn threshold $SvStateWarnRows rows.")
+        }
+        (Some(SvState(kept.toList, newEmitted - dropPoint)), out.result().iterator)
+      }).toDF()
   }
 
   /** Streaming twin of ff1's forward-fill (pandas `ffill`): carry the
@@ -701,28 +602,23 @@ object StreamingDetectors {
   def forwardFill(ts: DataFrame): DataFrame = {
     val spark = ts.sparkSession
     import spark.implicits._
-    ts.select(col("series_id"), col("ts"),
-        graft.operators.Kernels.nanToNull(col("value")).as("value"))
-      .as[(String, java.sql.Timestamp, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (sid: String,
-         rows: Iterator[(String, java.sql.Timestamp, Option[Double])],
-         state: GroupState[Double]) => {
-          var last: Option[Double] = state.getOption
-          val out = rows.toSeq
-            .sortBy(p => graft.operators.TimeMicros.micros(p._2))
-            .map { case (_, t, v) =>
-              if (v.isDefined) last = v
-              (sid, t, v, if (v.isDefined) v else last)
-            }
-          last.foreach(state.update)
-          out.iterator
-        })
-      .toDF("series_id", "ts", "value", "value_filled")
+    OrderedFold(ts.select(col("series_id"), col("ts"),
+        graft.operators.Kernels.nanToNull(col("value")).as("value")).as[Point])(
+      _._1, _._2)(
+      (sid: String, rows: Array[(Long, Point)], prev: Option[Double]) => {
+        var last = prev
+        val out = rows.map { case (_, (_, t, v)) =>
+          if (v.isDefined) last = v
+          (sid, t, v, last)
+        }
+        (last, out.iterator)
+      }).toDF("series_id", "ts", "value", "value_filled")
   }
 
+  /** Storm sessionization on a stream: mass-threshold filter, then a
+    * session window with `hoursToStop` gap per series — the streaming
+    * twin of the storm group-merge. Emits one row per finalized
+    * session (append mode requires the watermark). */
   def stormSessions(
       instantMassToStart: Double,
       hoursToStop: Double,

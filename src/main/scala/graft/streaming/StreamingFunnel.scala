@@ -2,13 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Streaming ordered-funnel tracking — the continuous twin of
  * [[graft.queries.TemporalQueries.funnel]]: as events arrive, each
  * user's progress through the stage sequence advances in
- * `flatMapGroupsWithState` state, and a row is EMITTED the moment a
+ * [[OrderedFold]] state, and a row is EMITTED the moment a
  * stage is first reached (live conversion feed; downstream counts per
  * stage are an ordinary streaming aggregate over this output).
  *
@@ -31,10 +30,7 @@ object StreamingFunnel {
   /** Per-user progress: reached(i) = stage i has been reached. */
   final case class FunnelState(reached: Array[Boolean])
 
-  /** Full event-time microseconds — the shared [[EventTime]] tie
-    * rule (review finding: an inline copy here would silently miss a
-    * future fix to the one definition). */
-  private def tsMicros(ts: java.sql.Timestamp): Long = EventTime.toUs(ts)
+  private type Row = (Long, java.sql.Timestamp, Long, String)
 
   /** `events` must carry (user_id, ts, event_id, event_type); returns
     * the append-mode (user_id, stage, stage_idx, reached_at) feed. */
@@ -44,32 +40,24 @@ object StreamingFunnel {
     val spark = events.sparkSession
     import spark.implicits._
     val stageIdx = stages.zipWithIndex.toMap
-    events
-      .select(col("user_id").cast("long"), col("ts"),
-        col("event_id").cast("long"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (uid: Long,
-         rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-         state: GroupState[FunnelState]) => {
-          val reached = state.getOption.map(_.reached.clone())
-            .getOrElse(Array.fill(stages.length)(false))
-          val out = Array.newBuilder[FunnelReach]
-          rows.toArray.sortBy(r => (tsMicros(r._2), r._3)).foreach {
-            case (_, ts, _, typ) =>
-              stageIdx.get(typ).foreach { k =>
-                if (!reached(k) && (k == 0 || reached(k - 1))) {
-                  reached(k) = true
-                  out += FunnelReach(uid, stages(k), k, ts)
-                }
-              }
+    OrderedFold(events
+        .select(col("user_id").cast("long"), col("ts"),
+          col("event_id").cast("long"), col("event_type"))
+        .as[Row])(_._1, _._2, _._3)(
+      (uid: Long, rows: Array[(Long, Row)], prev: Option[FunnelState]) => {
+        val reached = prev.map(_.reached.clone())
+          .getOrElse(Array.fill(stages.length)(false))
+        val out = Array.newBuilder[FunnelReach]
+        rows.foreach { case (_, (_, ts, _, typ)) =>
+          stageIdx.get(typ).foreach { k =>
+            if (!reached(k) && (k == 0 || reached(k - 1))) {
+              reached(k) = true
+              out += FunnelReach(uid, stages(k), k, ts)
+            }
           }
-          state.update(FunnelState(reached))
-          out.result().iterator
-        })
-      .toDF()
+        }
+        (Some(FunnelState(reached)), out.result().iterator)
+      }).toDF()
   }
 
   final case class SessionReach(
@@ -101,40 +89,29 @@ object StreamingFunnel {
     val spark = events.sparkSession
     import spark.implicits._
     val stageIdx = stages.zipWithIndex.toMap
-    events
-      .select(col("user_id").cast("long"), col("ts"),
-        col("event_id").cast("long"), col("event_type"))
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (uid: Long,
-         rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-         state: GroupState[SessionFunnelState]) => {
-          var st = state.getOption.map(s =>
-              s.copy(reached = s.reached.clone()))
-            .getOrElse(SessionFunnelState(
-              0L, Long.MinValue, Array.fill(stages.length)(false)))
-          val out = Array.newBuilder[SessionReach]
-          rows.toArray.sortBy(r => (tsMicros(r._2), r._3)).foreach {
-            case (_, ts, _, typ) =>
-              // full microseconds (getTime is ms-truncated; the µs
-              // live in nanos) — the batch twin's unix_micros value
-              val us = tsMicros(ts)
-              if (st.lastUs != Long.MinValue && us - st.lastUs > gapUs)
-                st = SessionFunnelState(st.sessionId + 1, us,
-                  Array.fill(stages.length)(false))
-              else st = st.copy(lastUs = us)
-              stageIdx.get(typ).foreach { k =>
-                if (!st.reached(k) && (k == 0 || st.reached(k - 1))) {
-                  st.reached(k) = true
-                  out += SessionReach(uid, st.sessionId, stages(k), k, ts)
-                }
-              }
+    OrderedFold(events
+        .select(col("user_id").cast("long"), col("ts"),
+          col("event_id").cast("long"), col("event_type"))
+        .as[Row])(_._1, _._2, _._3)(
+      (uid: Long, rows: Array[(Long, Row)], prev: Option[SessionFunnelState]) => {
+        var st = prev.map(s => s.copy(reached = s.reached.clone()))
+          .getOrElse(SessionFunnelState(
+            0L, Long.MinValue, Array.fill(stages.length)(false)))
+        val out = Array.newBuilder[SessionReach]
+        // `us` is the full event-time µs — the batch twin's unix_micros
+        rows.foreach { case (us, (_, ts, _, typ)) =>
+          if (st.lastUs != Long.MinValue && us - st.lastUs > gapUs)
+            st = SessionFunnelState(st.sessionId + 1, us,
+              Array.fill(stages.length)(false))
+          else st = st.copy(lastUs = us)
+          stageIdx.get(typ).foreach { k =>
+            if (!st.reached(k) && (k == 0 || st.reached(k - 1))) {
+              st.reached(k) = true
+              out += SessionReach(uid, st.sessionId, stages(k), k, ts)
+            }
           }
-          state.update(st)
-          out.result().iterator
-        })
-      .toDF()
+        }
+        (Some(st), out.result().iterator)
+      }).toDF()
   }
 }

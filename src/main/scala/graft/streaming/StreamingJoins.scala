@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import graft.operators.TimeMicros
 
 /**
  * Streaming temporal joins — the continuous twin of
@@ -37,6 +37,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
  */
 object StreamingJoins {
 
+  private type Row = (String, java.sql.Timestamp, Option[Double], Int)
+
   /** The static right side at or below this many rows may be
     * collected and broadcast as the per-series sorted lookup index
     * (~24 B/row → 5M rows ≈ 120 MB). LOUD BOUND, same shape as
@@ -50,8 +52,6 @@ object StreamingJoins {
     * value at that timestamp. */
   private final case class RightIndex(
       tsUs: Array[Long], ts: Array[java.sql.Timestamp], value: Array[java.lang.Double])
-
-  private def toUs(t: java.sql.Timestamp): Long = EventTime.toUs(t)
 
   /**
    * Stream-vs-static as-of join. `left` is a streaming frame with the
@@ -87,9 +87,9 @@ object StreamingJoins {
         // stable sort: equal-ts right rows keep storage order, and the
         // search below picks the LAST at-or-before match — the batch
         // last(...) carry's tie behavior
-        val sorted = rs.sortBy(r => toUs(r._2))
+        val sorted = rs.sortBy(r => TimeMicros.micros(r._2))
         sid -> RightIndex(
-          sorted.map(r => toUs(r._2)),
+          sorted.map(r => TimeMicros.micros(r._2)),
           sorted.map(_._2),
           sorted.map(r => r._3.map(Double.box).orNull))
     }
@@ -99,7 +99,7 @@ object StreamingJoins {
       .as[(String, java.sql.Timestamp, Option[Double])]
       .map { case (sid, ts, v) =>
         val hit: Option[Int] = bc.value.get(sid).flatMap { idx =>
-          val t = toUs(ts)
+          val t = TimeMicros.micros(ts)
           // last position with tsUs <= t (upper bound - 1)
           var lo = 0
           var hi = idx.tsUs.length // exclusive
@@ -129,6 +129,15 @@ object StreamingJoins {
   final case class AsofJoinState(
       maxLeftUs: Long, rTsUs: List[Long], rVal: List[Option[Double]])
 
+  /** Per-series right-buffer bound for [[streamingAsofJoin]]: the
+    * buffer only grows when the right side runs AHEAD of the left
+    * high-water mark, so this bounds the sides' desync, not the data.
+    * LOUD BOUND (the maxDriverFoldEdges convention): exceeding it
+    * means the left side has stalled or lags structurally — the
+    * error names the remedies rather than letting state grow
+    * unbounded. */
+  val maxRightBufferRows: Int = 1000000
+
   /**
    * Stream-vs-STREAM as-of join: both sides arrive continuously; for
    * each left row, the latest right row with `right.ts <= left.ts` in
@@ -137,9 +146,9 @@ object StreamingJoins {
    * streaming contract.
    *
    * Shape: the two streams are side-tagged and UNIONED — exactly the
-   * batch operator's union trick — then one flatMapGroupsWithState
-   * keyed on series_id walks each micro-batch's rows in (ts, side)
-   * order (right first on ties, the batch inclusive-<= tie rule),
+   * batch operator's union trick — then one [[OrderedFold]] keyed on
+   * series_id walks each micro-batch's rows in (µs, side) order
+   * (right first on ties, the batch inclusive-<= tie rule),
    * matching each left row against the carried right buffer.
    *
    * State bound: per series, the buffer holds ONE right row at or
@@ -166,31 +175,23 @@ object StreamingJoins {
    * retraction), though it still serves future lefts. Out-of-order
    * sources compose [[StreamingReorder.reorderByEventTime]] in front
    * (watermark-buffered); the batch operator owns reprocessing.
+   *
+   * `onOverflow` policies for [[streamingAsofJoin]]'s right buffer:
+   *
+   *  - `"fail"` (default): the loud-bound convention — exceeding
+   *    `maxBufferRows` kills the query with the remedies named. The
+   *    right choice when a lagging left is a pipeline bug.
+   *  - `"evict"`: bounded-state-over-completeness — the OLDEST
+   *    buffered rights drop first (the newest `maxBufferRows` stay),
+   *    the query keeps running, and only lefts lagging behind the
+   *    eviction horizon degrade: their backward match surfaces as
+   *    null, exactly like a tolerance miss. Current lefts are
+   *    unaffected (their matches are the newest rights). The right
+   *    choice for a best-effort live feed where availability beats a
+   *    complete join on stragglers — reprocessing (the batch asofJoin
+   *    over the lake) recovers the dropped matches later, the
+   *    lambda-layout contract every streaming twin here follows.
    */
-  /** Per-series right-buffer bound for [[streamingAsofJoin]]: the
-    * buffer only grows when the right side runs AHEAD of the left
-    * high-water mark, so this bounds the sides' desync, not the data.
-    * LOUD BOUND (the maxDriverFoldEdges convention): exceeding it
-    * means the left side has stalled or lags structurally — the
-    * error names the remedies rather than letting state grow
-    * unbounded. */
-  val maxRightBufferRows: Int = 1000000
-
-  /** `onOverflow` policies for [[streamingAsofJoin]]'s right buffer:
-    *
-    *  - `"fail"` (default): the loud-bound convention — exceeding
-    *    `maxBufferRows` kills the query with the remedies named. The
-    *    right choice when a lagging left is a pipeline bug.
-    *  - `"evict"`: bounded-state-over-completeness — the OLDEST
-    *    buffered rights drop first (the newest `maxBufferRows` stay),
-    *    the query keeps running, and only lefts lagging behind the
-    *    eviction horizon degrade: their backward match surfaces as
-    *    null, exactly like a tolerance miss. Current lefts are
-    *    unaffected (their matches are the newest rights). The right
-    *    choice for a best-effort live feed where availability beats a
-    *    complete join on stragglers — reprocessing (the batch asofJoin
-    *    over the lake) recovers the dropped matches later, the
-    *    lambda-layout contract every streaming twin here follows. */
   def streamingAsofJoin(
       left: DataFrame, right: DataFrame,
       toleranceUs: Option[Long] = None,
@@ -207,73 +208,61 @@ object StreamingJoins {
     val r = right.select(col("series_id").cast("string").as("series_id"),
       col("ts"), col("value"), lit(0).as("side"))
     val tol = toleranceUs
-    l.unionByName(r)
-      .as[(String, java.sql.Timestamp, Option[Double], Int)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (sid: String,
-         rows: Iterator[(String, java.sql.Timestamp, Option[Double], Int)],
-         state: org.apache.spark.sql.streaming.GroupState[AsofJoinState]) => {
-          // (ts, side): right rows (side 0) sort before left rows at
-          // the same timestamp — the batch inclusive-<= tie behavior
-          val sorted = rows.toArray.sortBy(t => (toUs(t._2), t._4))
-          val prev = state.getOption.getOrElse(
-            AsofJoinState(Long.MinValue, Nil, Nil))
-          // merge: carried buffer ∪ this batch's rights, ascending.
-          // Each side is in order per series, so batch rights append
-          // after the carried tail in the common case; a right older
-          // than the buffer head (late vs the OTHER side's progress)
-          // still inserts in place and serves future lefts.
-          val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Double])]
-          prev.rTsUs.lazyZip(prev.rVal).foreach((t, v) => buf += ((t, v)))
-          var maxLeft = prev.maxLeftUs
-          val out = Array.newBuilder[
-            (String, java.sql.Timestamp, Option[Double],
-              Option[java.sql.Timestamp], Option[Double])]
-          sorted.foreach { case (_, ts, v, side) =>
-            val t = toUs(ts)
-            if (side == 0) {
-              // insertion point: after all buffered rights <= t (a
-              // same-ts later arrival wins, the batch last() rule)
-              var i = buf.length
-              while (i > 0 && buf(i - 1)._1 > t) i -= 1
-              buf.insert(i, (t, v))
-            } else {
-              var i = buf.length
-              while (i > 0 && buf(i - 1)._1 > t) i -= 1
-              val m = if (i == 0) None else {
-                val (rt, rv) = buf(i - 1)
-                if (tol.forall(tl => t - rt <= tl)) Some((rt, rv)) else None
-              }
-              out += ((sid, ts, v, m.map(x => fromUs(x._1)), m.flatMap(_._2)))
-              if (t > maxLeft) maxLeft = t
+    // tie = side: right rows (side 0) sort before left rows at the
+    // same µs — the batch inclusive-<= tie behavior
+    OrderedFold(l.unionByName(r).as[Row])(_._1, _._2, _._4.toLong)(
+      (sid: String, rows: Array[(Long, Row)], state: Option[AsofJoinState]) => {
+        val prev = state.getOrElse(AsofJoinState(Long.MinValue, Nil, Nil))
+        // merge: carried buffer ∪ this batch's rights, ascending.
+        // Each side is in order per series, so batch rights append
+        // after the carried tail in the common case; a right older
+        // than the buffer head (late vs the OTHER side's progress)
+        // still inserts in place and serves future lefts.
+        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Double])]
+        prev.rTsUs.lazyZip(prev.rVal).foreach((t, v) => buf += ((t, v)))
+        var maxLeft = prev.maxLeftUs
+        val out = Array.newBuilder[
+          (String, java.sql.Timestamp, Option[Double],
+            Option[java.sql.Timestamp], Option[Double])]
+        rows.foreach { case (t, (_, ts, v, side)) =>
+          if (side == 0) {
+            // insertion point: after all buffered rights <= t (a
+            // same-ts later arrival wins, the batch last() rule)
+            var i = buf.length
+            while (i > 0 && buf(i - 1)._1 > t) i -= 1
+            buf.insert(i, (t, v))
+          } else {
+            var i = buf.length
+            while (i > 0 && buf(i - 1)._1 > t) i -= 1
+            val m = if (i == 0) None else {
+              val (rt, rv) = buf(i - 1)
+              if (tol.forall(tl => t - rt <= tl)) Some((rt, rv)) else None
             }
+            out += ((sid, ts, v, m.map(x => TimeMicros.timestamp(x._1)), m.flatMap(_._2)))
+            if (t > maxLeft) maxLeft = t
           }
-          // prune: keep the latest right <= maxLeft (still the match
-          // for the next left) and everything ahead of maxLeft
-          var keepFrom = 0
-          var i = 0
-          while (i < buf.length && buf(i)._1 <= maxLeft) { keepFrom = i; i += 1 }
-          var kept = if (buf.isEmpty) buf else buf.slice(keepFrom, buf.length)
-          if (kept.length > maxBufferRows) {
-            if (onOverflow == "fail") throw new IllegalArgumentException(
-              s"streamingAsofJoin: series '$sid' buffers ${kept.length} right " +
-                s"rows > maxBufferRows=$maxBufferRows — the left side lags the " +
-                "right by more than the bound. Slow the right feed, raise " +
-                "maxBufferRows explicitly, use onOverflow='evict' for bounded " +
-                "best-effort state, or run the batch asofJoin per micro-batch " +
-                "via foreachBatch (graft.operators.Joins.asofJoin)")
-            // evict: newest maxBufferRows survive; lefts lagging past
-            // the eviction horizon degrade to null matches
-            kept = kept.slice(kept.length - maxBufferRows, kept.length)
-          }
-          state.update(AsofJoinState(
-            maxLeft, kept.map(_._1).toList, kept.map(_._2).toList))
-          out.result().iterator
-        })
-      .toDF("series_id", "ts", "value", "asof_ts", "asof_value")
+        }
+        // prune: keep the latest right <= maxLeft (still the match
+        // for the next left) and everything ahead of maxLeft
+        var keepFrom = 0
+        var i = 0
+        while (i < buf.length && buf(i)._1 <= maxLeft) { keepFrom = i; i += 1 }
+        var kept = if (buf.isEmpty) buf else buf.slice(keepFrom, buf.length)
+        if (kept.length > maxBufferRows) {
+          if (onOverflow == "fail") throw new IllegalArgumentException(
+            s"streamingAsofJoin: series '$sid' buffers ${kept.length} right " +
+              s"rows > maxBufferRows=$maxBufferRows — the left side lags the " +
+              "right by more than the bound. Slow the right feed, raise " +
+              "maxBufferRows explicitly, use onOverflow='evict' for bounded " +
+              "best-effort state, or run the batch asofJoin per micro-batch " +
+              "via foreachBatch (graft.operators.Joins.asofJoin)")
+          // evict: newest maxBufferRows survive; lefts lagging past
+          // the eviction horizon degrade to null matches
+          kept = kept.slice(kept.length - maxBufferRows, kept.length)
+        }
+        (Some(AsofJoinState(maxLeft, kept.map(_._1).toList, kept.map(_._2).toList)),
+          out.result().iterator)
+      })      .toDF("series_id", "ts", "value", "asof_ts", "asof_value")
   }
 
-  private def fromUs(us: Long): java.sql.Timestamp = EventTime.fromUs(us)
 }

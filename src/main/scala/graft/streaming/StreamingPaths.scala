@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Streaming path analysis — the continuous twin of
@@ -25,6 +24,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  */
 object StreamingPaths {
 
+  private type Row = (Long, java.sql.Timestamp, Long, String)
+
   final case class Transition(user_id: Long, from_type: String, to_type: String)
 
   /** `events` must carry (user_id, ts, event_id, event_type); returns
@@ -34,26 +35,16 @@ object StreamingPaths {
   def transitionSteps(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select("user_id", "ts", "event_id", "event_type")
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-         state: GroupState[String]) => {
-          // full-microsecond ordering (getTime alone is millis and
-          // would let event_id tiebreak sub-ms pairs differently from
-          // the batch twin's exact-ts order)
-          val sorted = rows.toArray.sortBy(r => (EventTime.toUs(r._2), r._3))
-          val out = Array.newBuilder[Transition]
-          var last = state.getOption.orNull
-          sorted.foreach { r =>
-            if (last != null) out += Transition(uid, last, r._4)
-            last = r._4
-          }
-          if (last != null) state.update(last)
-          out.result().iterator
-        })
-      .toDF()
+    OrderedFold(events.select("user_id", "ts", "event_id", "event_type").as[Row])(
+      _._1, _._2, _._3)(
+      (uid: Long, rows: Array[(Long, Row)], prev: Option[String]) => {
+        val out = Array.newBuilder[Transition]
+        var last = prev
+        rows.foreach { case (_, (_, _, _, typ)) =>
+          last.foreach(from => out += Transition(uid, from, typ))
+          last = Some(typ)
+        }
+        (last, out.result().iterator)
+      }).toDF()
   }
 }

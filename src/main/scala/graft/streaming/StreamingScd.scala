@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.TimeMicros
 
 /**
  * Streaming SCD2 history — the continuous twin of
@@ -21,6 +21,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  */
 object StreamingScd {
 
+  private type Row = (Long, java.sql.Timestamp, Long, String)
+
   final case class ClosedVersion(
       user_id: Long, version: Long, event_type: String,
       valid_from: java.sql.Timestamp, valid_to: java.sql.Timestamp,
@@ -34,33 +36,24 @@ object StreamingScd {
   def scd2Closed(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select("user_id", "ts", "event_id", "event_type")
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-         state: GroupState[OpenVersion]) => {
-          val sorted = rows.toArray.sortBy(r => (EventTime.toUs(r._2), r._3))
-          val out = Array.newBuilder[ClosedVersion]
-          var open = state.getOption.orNull
-          sorted.foreach { case (_, ts, _, typ) =>
-            val us = EventTime.toUs(ts)
-            if (open == null) {
-              open = OpenVersion(typ, 1L, us, 1L)
-            } else if (open.typ == typ) {
-              open = open.copy(nEvents = open.nEvents + 1L)
-            } else {
+    OrderedFold(events.select("user_id", "ts", "event_id", "event_type").as[Row])(
+      _._1, _._2, _._3)(
+      (uid: Long, rows: Array[(Long, Row)], prev: Option[OpenVersion]) => {
+        val out = Array.newBuilder[ClosedVersion]
+        var open = prev
+        rows.foreach { case (us, (_, _, _, typ)) =>
+          open = Some(open match {
+            case None => OpenVersion(typ, 1L, us, 1L)
+            case Some(o) if o.typ == typ => o.copy(nEvents = o.nEvents + 1L)
+            case Some(o) =>
               // the arriving change closes the open version at ITS
               // timestamp (the batch lead(valid_from) semantics)
-              out += ClosedVersion(uid, open.version, open.typ,
-                EventTime.fromUs(open.fromUs), EventTime.fromUs(us), open.nEvents)
-              open = OpenVersion(typ, open.version + 1L, us, 1L)
-            }
-          }
-          if (open != null) state.update(open)
-          out.result().iterator
-        })
-      .toDF()
+              out += ClosedVersion(uid, o.version, o.typ,
+                TimeMicros.timestamp(o.fromUs), TimeMicros.timestamp(us), o.nEvents)
+              OpenVersion(typ, o.version + 1L, us, 1L)
+          })
+        }
+        (open, out.result().iterator)
+      }).toDF()
   }
 }

@@ -2,26 +2,27 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Station-stream plumbing: the accumulated→increment conversion
  * (`accum.diff()`, metevents/events.py:165) under streaming. The batch
  * path is a per-series `lag` window ([[graft.sources.StationSources
  * .fromStation]]); a stream cannot sort-shuffle per trigger, so the
- * last seen accumulation per series is O(1) state in
- * flatMapGroupsWithState carried across micro-batches.
+ * last seen accumulation per series is O(1) state in an
+ * [[OrderedFold]] carried across micro-batches.
  *
  * Same ordering contract as the stateful detectors
- * ([[StreamingDetectors]]): rows are sorted by event time within each
- * micro-batch, and batches arrive in event-time order per series —
- * true for the station micro-batch source, whose offsets advance a
- * closed event-time window per trigger.
+ * ([[StreamingDetectors]]): rows are sorted by event time (full µs)
+ * within each micro-batch, and batches arrive in event-time order per
+ * series — true for the station micro-batch source, whose offsets
+ * advance a closed event-time window per trigger.
  *
  * Output matches the batch adapter: (series_id, ts, value) with a null
  * value on each series' first observation (pandas `diff()` head NaN).
  */
 object StreamingStations {
+
+  private type Row = (String, java.sql.Timestamp, Option[Double])
 
   /** The previous observation's accumulation for one series (None when
     * that observation was itself missing — pandas diff propagates NaN). */
@@ -32,30 +33,22 @@ object StreamingStations {
     val spark = accum.sparkSession
     import spark.implicits._
 
-    accum
-      .select(col("station_id"), col("ts"), col("accum"))
-      .as[(String, java.sql.Timestamp, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (sid: String,
-         rows: Iterator[(String, java.sql.Timestamp, Option[Double])],
-         state: GroupState[AccumState]) => {
-          val sorted = rows.toArray.sortBy(_._2.getTime)
-          var prev = state.getOption.flatMap(_.lastAccum)
-          var seen = state.exists
-          val out = sorted.map { case (_, ts, a) =>
-            // pandas diff: current − previous ROW's value; a missing
-            // neighbor on either side yields a missing diff
-            val diff: Option[Double] =
-              if (!seen) None else for (c <- a; p <- prev) yield c - p
-            seen = true
-            prev = a
-            (sid, ts, diff)
-          }
-          state.update(AccumState(prev))
-          out.iterator
-        })
+    OrderedFold(accum.select(col("station_id"), col("ts"), col("accum")).as[Row])(
+      _._1, _._2)(
+      (sid: String, rows: Array[(Long, Row)], state: Option[AccumState]) => {
+        var prev = state.flatMap(_.lastAccum)
+        var seen = state.isDefined
+        val out = rows.map { case (_, (_, ts, a)) =>
+          // pandas diff: current − previous ROW's value; a missing
+          // neighbor on either side yields a missing diff
+          val diff: Option[Double] =
+            if (!seen) None else for (c <- a; p <- prev) yield c - p
+          seen = true
+          prev = a
+          (sid, ts, diff)
+        }
+        (Some(AccumState(prev)), out.iterator)
+      })
       .toDF("series_id", "ts", "value")
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Streaming Kaplan–Meier conversion feed — the continuous twin of
@@ -31,6 +30,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  */
 object StreamingSurvival {
 
+  private type Row = (Long, java.sql.Timestamp, Long, String)
+
   final case class Conversion(user_id: Long, day: Long)
 
   /** `pendingUs`: the timestamp of the most recent `eventType` event
@@ -50,42 +51,33 @@ object StreamingSurvival {
       events: DataFrame, originType: String, eventType: String): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select("user_id", "ts", "event_id", "event_type")
-      .as[(Long, java.sql.Timestamp, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (uid: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-         state: GroupState[SurvivalState]) => {
-          val sorted = rows.toArray.sortBy(r => (EventTime.toUs(r._2), r._3))
-          var st = state.getOption
-            .getOrElse(SurvivalState(Long.MinValue, false, Long.MinValue))
-          val out = Array.newBuilder[Conversion]
-          def emit(deltaUs: Long): Unit = {
-            // exact integer days — the batch floor(Δus / 86400e6)
-            out += Conversion(uid,
-              math.floor(deltaUs.toDouble / 86400000000.0).toLong)
-            st = st.copy(converted = true)
-          }
-          sorted.foreach { case (_, ts, _, typ) =>
-            if (!st.converted) {
-              val us = EventTime.toUs(ts)
-              if (st.t0Us == Long.MinValue) {
-                if (typ == originType) {
-                  st = st.copy(t0Us = us)
-                  // a same-instant conversion that SORTED before this
-                  // origin still qualifies (batch: te = min ts >= t0)
-                  if (st.pendingUs == us) emit(0L)
-                } else if (typ == eventType) st = st.copy(pendingUs = us)
-              } else if (typ == eventType && us >= st.t0Us) {
-                emit(us - st.t0Us)
-              }
+    OrderedFold(events.select("user_id", "ts", "event_id", "event_type").as[Row])(
+      _._1, _._2, _._3)(
+      (uid: Long, rows: Array[(Long, Row)], prev: Option[SurvivalState]) => {
+        var st = prev.getOrElse(SurvivalState(Long.MinValue, false, Long.MinValue))
+        val out = Array.newBuilder[Conversion]
+        def emit(deltaUs: Long): Unit = {
+          // exact integer days — the batch floor(Δus / 86400e6)
+          out += Conversion(uid,
+            math.floor(deltaUs.toDouble / 86400000000.0).toLong)
+          st = st.copy(converted = true)
+        }
+        rows.foreach { case (us, (_, _, _, typ)) =>
+          if (!st.converted) {
+            if (st.t0Us == Long.MinValue) {
+              if (typ == originType) {
+                st = st.copy(t0Us = us)
+                // a same-instant conversion that SORTED before this
+                // origin still qualifies (batch: te = min ts >= t0)
+                if (st.pendingUs == us) emit(0L)
+              } else if (typ == eventType) st = st.copy(pendingUs = us)
+            } else if (typ == eventType && us >= st.t0Us) {
+              emit(us - st.t0Us)
             }
           }
-          if (st.t0Us != Long.MinValue || st.pendingUs != Long.MinValue)
-            state.update(st)
-          out.result().iterator
-        })
-      .toDF()
+        }
+        (Option.when(st.t0Us != Long.MinValue || st.pendingUs != Long.MinValue)(st),
+          out.result().iterator)
+      }).toDF()
   }
 }

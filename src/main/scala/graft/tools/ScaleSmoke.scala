@@ -11,8 +11,11 @@ import org.apache.spark.sql.functions._
   * cos≈0.999 near-dups) into `outDir` with the driver testdata
   * schemas, then times the PRODUCTION query functions
   * (SparkEntry.queries) against it unchanged. Usage:
-  *   sbt "runMain graft.tools.ScaleSmoke [outDir] [--skip-gen] [--run=dedup,ivf,hot,wide,vec,retr,retr2,qual,pr,graph,graph12,dc4,bloom,link,linkhot,jw,basket,events,events12,ymrange,ccstars]"
-  * (no --run flag = all sections).
+  *   sbt "runMain graft.tools.ScaleSmoke [outDir] [--run=section,...]"
+  * where each section is a name passed to `want(...)` below (dedup,
+  * ivf, wmedian, ...); no --run flag = all sections. The shared
+  * datasets are generator-stamped (`ensureParquet`): a second run
+  * reuses them.
   */
 object ScaleSmoke {
 
@@ -51,7 +54,6 @@ object ScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.filterNot(_.startsWith("--")).getOrElse("/tmp/graft_scale")
-    val skipGen = args.contains("--skip-gen")
     val sections: Set[String] = args.find(_.startsWith("--run="))
       .map(_.stripPrefix("--run=").split(",").toSet).getOrElse(Set.empty)
     def want(s: String): Boolean = sections.isEmpty || sections(s)
@@ -131,26 +133,24 @@ object ScaleSmoke {
     // previous vector with component 0 shifted by +0.07 (cos ≈ 0.999;
     // random-pair cosines concentrate at 0 ± 0.125, max over 2e10
     // pairs ≈ 0.82 — clean separation around a 0.9 threshold).
-    if (!skipGen) {
+    {
       val base = when(col("id") % 100 === 1, col("id") - 1).otherwise(col("id"))
       val toks = transform(sequence(lit(0), lit(58)),
         i => concat(lit("w"), pmod(xxhash64(base * 59 + i), lit(50000L))))
       val lastTok = concat(lit("w"), pmod(xxhash64(col("id") * 7919 + 13), lit(50000L)))
-      spark.range(nDocs)
+      ensureParquet("documents.parquet")(spark.range(nDocs)
         .select(col("id").as("doc_id"),
           concat_ws(" ", concat(toks, array(lastTok))).as("text"),
           lit("en").as("lang"), lit("synth").as("source"))
-        .withColumn("n_chars", length(col("text")))
-        .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+        .withColumn("n_chars", length(col("text"))))
       val vecBase = when(col("id") % 100 === 1, col("id") - 1).otherwise(col("id"))
-      spark.range(nVecs)
+      ensureParquet("embeddings.parquet")(spark.range(nVecs)
         .select(col("id").as("vec_id"),
           transform(sequence(lit(0), lit(63)),
             i => ((pmod(xxhash64(vecBase * 64 + i), lit(2000L)).cast("double") / 1000.0 - 1.0) +
               when(col("id") % 100 === 1 && i === 0, 0.07).otherwise(0.0))
               .cast("float")).as("embedding"),
-          (col("id") % 10).cast("int").as("label"))
-        .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
+          (col("id") % 10).cast("int").as("label")))
     }
 
     // --- production dedup/corpus paths (min of 2 runs = steady state;

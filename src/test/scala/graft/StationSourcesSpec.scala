@@ -2,12 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.StormEvents
-import graft.sources.{CsvStationSource, StationSources}
+import graft.sources.{CsvStationRowSource, RowStationSource, StationSources}
 
 class StationSourcesSpec extends AnyFunSuite with SparkTestBase {
 
-  private def registry = Map(
-    "NRCS" -> new CsvStationSource(getClass.getResource("/station_tum.csv").getPath))
+  private def registryAt(path: String) =
+    Map("NRCS" -> new RowStationSource(new CsvStationRowSource(path)))
+
+  private def registry = registryAt(getClass.getResource("/station_tum.csv").getPath)
 
   test("unknown source name raises with valid options listed") {
     val e = intercept[IllegalArgumentException] {
@@ -23,6 +25,25 @@ class StationSourcesSpec extends AnyFunSuite with SparkTestBase {
         "1990-01-01", "1990-01-02", source = "NRCS")
     }
     assert(e.getMessage.contains("no data"))
+  }
+
+  test("fromStation: a bare stop date is inclusive and only the requested station is read") {
+    // the fixture's last row (2022-12-20 08:00) is inside the stop day
+    assert(StationSources.fromStation(registry, spark, "TUM",
+      "2022-12-01", "2022-12-20").count() == 20)
+    val tmp = java.nio.file.Files.createTempFile("two_sites", ".csv")
+    try {
+      java.nio.file.Files.write(tmp, Seq(
+        "datetime,site,PRECIPITATIONACCUM",
+        "2022-12-01 08:00:00+00:00,TUM,0.0",
+        "2022-12-01 08:00:00+00:00,FLV,5.0",
+        "2022-12-02 08:00:00+00:00,TUM,0.5",
+        "2022-12-02 08:00:00+00:00,FLV,9.0").mkString("\n").getBytes("UTF-8"))
+      val rows = StationSources.fromStation(registryAt(tmp.toString), spark, "TUM",
+        "2022-12-01", "2022-12-05").orderBy("ts").collect()
+      assert(rows.map(r => Option(r.get(2))).toSeq == Seq(None, Some(0.5)),
+        rows.mkString(", "))
+    } finally java.nio.file.Files.delete(tmp)
   }
 
   test("StormEvents.fromStation: reference-shaped entry point end-to-end") {

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
+import graft.operators.TimeMicros
 import graft.streaming.StreamingDetectors
 import scala.util.Random
 
@@ -19,7 +20,12 @@ import scala.util.Random
   * dropped timestamps) x random micro-batch boundaries (chunk size
   * down to 1 row per trigger) x randomized detector parameters, for
   * all four run detectors plus spikeValley, on multiple interleaved
-  * series.
+  * series. Time runs on one of two grids: daily, or a sub-millisecond
+  * µs step (several rows inside one millisecond, gaps shorter than
+  * one), with the data-gap frequency matching the step; rows are
+  * shuffled within each micro-batch (from their own random stream, so
+  * the series draws stay as they were), so the twins' in-batch
+  * event-time sort is exercised at full microseconds.
   *
   * The closure discipline mirrors the flv replay spec: each series
   * gets a four-row closing suffix — a strictly-higher-than-everything
@@ -51,7 +57,7 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
     sys.env.get("GRAFT_STREAM_FUZZ_ROUNDS").map(_.toInt).getOrElse(4)
 
   private case class Scenario(
-      idx: Int, nSeries: Int, chunkMax: Int,
+      idx: Int, nSeries: Int, chunkMax: Int, stepUs: Long,
       expectedMax: Double, expectedMin: Double,
       flatMinLen: Long, flatThresh: Double,
       chgMinLen: Long, posThresh: Option[Double], negThresh: Option[Double],
@@ -60,10 +66,15 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
 
   private def clamp(v: Double): Double = math.max(-500.0, math.min(700.0, v))
 
+  private def us(t: java.sql.Timestamp): Long = TimeMicros.micros(t)
+
+  /** Data-gap frequency string of a grid step. */
+  private def freq(stepUs: Long): String = if (stepUs == DayUs) "1D" else s"${stepUs}us"
+
   /** One series: quarter-grid values with plateaus, extreme runs,
     * dips, isolated spikes/valleys, NaN injection, and dropped rows
     * (timestamp gaps). Returns (points, next free day index). */
-  private def genSeries(rnd: Random, sid: String, n: Int,
+  private def genSeries(rnd: Random, sid: String, n: Int, at: Int => java.sql.Timestamp,
       expectedMax: Double, expectedMin: Double): (Seq[TsPoint], Int) = {
     val out = scala.collection.mutable.ArrayBuffer[TsPoint]()
     var t = 0
@@ -72,7 +83,7 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
       if (rnd.nextDouble() < 0.07) { t += 1 } // dropped row -> data gap
       else {
         val vv = if (rnd.nextDouble() < 0.05) Double.NaN else value
-        out += TsPoint(sid, day(t), Some(vv))
+        out += TsPoint(sid, at(t), Some(vv))
         t += 1
       }
     }
@@ -125,21 +136,30 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
       case 9 => 45 + rnd.nextInt(30)
       case _ => 60 + rnd.nextInt(70)
     }
+    // the time grid: a rotation like chunkMax — every 4-scenario window
+    // runs the daily grid twice and both sub-ms steps (250 µs: four rows
+    // per millisecond; 700 µs: rows straddle millisecond edges), and
+    // every 8-scenario window pairs each boundary class with both grids
+    val stepUs =
+      if ((idx + idx / 4) % 2 == 0) DayUs else Seq(250L, 700L)((idx / 2) % 2)
+    val t0 = us(day(0))
+    def at(t: Int): java.sql.Timestamp = TimeMicros.timestamp(t0 + t * stepUs)
     val seriesData = (0 until nSeries).map { s =>
-      val (pts, tEnd) = genSeries(rnd, s"s$s", perSeries, expectedMax, expectedMin)
+      val (pts, tEnd) = genSeries(rnd, s"s$s", perSeries, at, expectedMax, expectedMin)
       val vs = pts.flatMap(_.value).filterNot(_.isNaN)
       val hi = (if (vs.nonEmpty) vs.max else 0.0) + 1000.0
       val lo = (if (vs.nonEmpty) vs.min else 0.0) - 1000.0
       val suffix = Seq(
-        TsPoint(s"s$s", day(tEnd), Some(hi)),
-        TsPoint(s"s$s", day(tEnd + 1), Some(lo)),
-        TsPoint(s"s$s", day(tEnd + 2), Some(50.0)),
-        TsPoint(s"s$s", day(tEnd + 3), Some(53.75)))
+        TsPoint(s"s$s", at(tEnd), Some(hi)),
+        TsPoint(s"s$s", at(tEnd + 1), Some(lo)),
+        TsPoint(s"s$s", at(tEnd + 2), Some(50.0)),
+        TsPoint(s"s$s", at(tEnd + 3), Some(53.75)))
       (pts, pts ++ suffix)
     }
-    val raw = seriesData.flatMap(_._1).sortBy(p => (p.ts.getTime, p.series_id))
-    val augmented = seriesData.flatMap(_._2).sortBy(p => (p.ts.getTime, p.series_id))
-    // random micro-batch boundaries over the time-ordered feed
+    val raw = seriesData.flatMap(_._1).sortBy(p => (us(p.ts), p.series_id))
+    val augmented = seriesData.flatMap(_._2).sortBy(p => (us(p.ts), p.series_id))
+    // random micro-batch boundaries over the time-ordered feed; rows
+    // are then shuffled within each micro-batch
     val chunks = {
       val out = scala.collection.mutable.ArrayBuffer[Seq[TsPoint]]()
       var rest = augmented
@@ -148,7 +168,8 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
         out += rest.take(k)
         rest = rest.drop(k)
       }
-      out.toSeq
+      val shuffleRnd = new Random(seed ^ (idx.toLong * 0x165667B19E3779F9L))
+      out.toSeq.map(shuffleRnd.shuffle(_))
     }
     // at least one slope threshold must be present (API contract);
     // draw the shape (pos-only / neg-only / both) explicitly. The
@@ -160,7 +181,7 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
       case 1 => (None, Some(-60.0 - rnd.nextInt(60)))
       case _ => (Some(60.0 + rnd.nextInt(60)), Some(-60.0 - rnd.nextInt(60)))
     }
-    Scenario(idx, nSeries, chunkMax, expectedMax, expectedMin,
+    Scenario(idx, nSeries, chunkMax, stepUs, expectedMax, expectedMin,
       flatMinLen = 2 + rnd.nextInt(3), flatThresh = Seq(0.0, 0.3)(rnd.nextInt(2)),
       chgMinLen = 1 + rnd.nextInt(2),
       posThresh = posT, negThresh = negT,
@@ -180,16 +201,17 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
         q.processAllAvailable()
       }
       spark.sql(s"select * from $name").as[Event].collect()
-        .toSeq.sortBy(e => (e.series_id, e.start.getTime, e.stop.getTime, e.n_points))
+        .toSeq.sortBy(e => (e.series_id, us(e.start), us(e.stop), e.n_points))
     } finally q.stop()
   }
 
   private def batchEvents(df: DataFrame): Seq[Event] =
     collectEvents(df)
-      .sortBy(e => (e.series_id, e.start.getTime, e.stop.getTime, e.n_points))
+      .sortBy(e => (e.series_id, us(e.start), us(e.stop), e.n_points))
 
   private def describe(sc: Scenario): String =
     s"scenario=${sc.idx} seed=$seed nSeries=${sc.nSeries} chunkMax=${sc.chunkMax} " +
+      s"stepUs=${sc.stepUs} " +
       s"max/min=${sc.expectedMax}/${sc.expectedMin} flat=(${sc.flatMinLen},${sc.flatThresh}) " +
       s"chg=(${sc.chgMinLen},${sc.posThresh},${sc.negThresh}) gap=${sc.gapMinLen} " +
       s"rows=${sc.augmented.size}"
@@ -201,10 +223,10 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
       who: String, sc: Scenario): Unit = {
     val missing = batch.toSet -- streamed.toSet
     val lastEmitted = streamed.groupBy(_.series_id)
-      .map { case (s, es) => s -> es.map(_.stop.getTime).max }
+      .map { case (s, es) => s -> es.map(e => us(e.stop)).max }
     missing.foreach { m =>
       lastEmitted.get(m.series_id).foreach { last =>
-        assert(m.stop.getTime >= last,
+        assert(us(m.stop) >= last,
           s"$who withheld a NON-TAIL event (${describe(sc)}): $m emitted-last=$last")
       }
     }
@@ -228,8 +250,8 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
           StreamingDetectors.extremeChange(sc.chgMinLen, sc.posThresh, sc.negThresh)(_),
           graft.operators.ExtremeChangeEvents(sc.chgMinLen, sc.posThresh, sc.negThresh).detect(_)),
         ("gap",
-          StreamingDetectors.dataGaps(sc.gapMinLen, "1D")(_),
-          graft.operators.DataGapEvents(sc.gapMinLen, "1D").detect(_)))
+          StreamingDetectors.dataGaps(sc.gapMinLen, freq(sc.stepUs))(_),
+          graft.operators.DataGapEvents(sc.gapMinLen, freq(sc.stepUs)).detect(_)))
       cases.foreach { case (tag, streamMk, batchMk) =>
         val streamed = runStream(sc, s"fz_${i}_$tag")(streamMk)
         val batch = batchEvents(batchMk(augDf))
@@ -256,12 +278,12 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
       // the flv replay spec's boundary rule (stop index <= n_raw - 7)
       val finalBoundary: Map[String, Long] = sc.raw.groupBy(_.series_id).flatMap {
         case (sid, pts) =>
-          val ts = pts.map(_.ts.getTime).sorted
+          val ts = pts.map(p => us(p.ts)).sorted
           if (ts.size > 7) Some(sid -> ts(ts.size - 7)) else None
       }
       val stable = batchRaw.filter(batchAug.contains)
       val decided = stable.filter(e =>
-        finalBoundary.get(e.series_id).exists(e.stop.getTime <= _))
+        finalBoundary.get(e.series_id).exists(us(e.stop) <= _))
       val missed = decided.filterNot(streamedSv.contains)
       assert(missed.isEmpty,
         s"""spikeValley missed STABLE golden events clear of the reach margin (${describe(sc)})

@@ -371,6 +371,34 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  test("streaming storms: span start/stop are exact in microseconds") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    import graft.operators.TimeMicros
+    // day d carries a d·333 µs offset: the candidate (day 1), its
+    // one-step back-extension and the group stop (day 2) all sit
+    // inside a millisecond of the day boundary
+    def atUs(d: Int): Long = TimeMicros.micros(day(d)) + d * 333L
+    def pt(d: Int, v: Double) = TsPoint("a", TimeMicros.timestamp(atUs(d)), Some(v))
+    val input = MemoryStream[TsPoint]
+    val q = StreamingDetectors.storms(
+        instantMassToStart = 0.1, minStormTotal = 0.5,
+        hoursToStop = 24, maxStormHours = 336, frequency = "1D")(input.toDF())
+      .writeStream.format("memory").queryName("stus").outputMode(OutputMode.Append()).start()
+    try {
+      input.addData(pt(0, 0.0), pt(1, 1.0), pt(2, 1.0), pt(3, 0.0), pt(4, 0.0))
+      q.processAllAvailable()
+      input.addData(pt(5, 1.0))
+      q.processAllAvailable()
+      val ev = spark.sql("select * from stus").as[Event].collect()
+      assert(ev.length == 1, ev.toSeq)
+      val startUs = atUs(1) - DayUs
+      assert(TimeMicros.micros(ev(0).start) == startUs, ev(0))
+      assert(TimeMicros.micros(ev(0).stop) == atUs(2), ev(0))
+      assert(ev(0).duration_us == atUs(2) - startUs, ev(0))
+    } finally q.stop()
+  }
+
   test("streaming storm sessions merge by gap and finalize via watermark") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -1345,6 +1373,28 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  test("streaming increments: rows inside one millisecond diff in microsecond order") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    import graft.operators.TimeMicros
+    val t0 = TimeMicros.micros(day(0))
+    def at(offsetUs: Long) = TimeMicros.timestamp(t0 + offsetUs)
+    val input = MemoryStream[(String, java.sql.Timestamp, Option[Double])]
+    val q = graft.streaming.StreamingStations.increments(
+        input.toDF().toDF("station_id", "ts", "accum"))
+      .writeStream.format("memory").queryName("sius").outputMode(OutputMode.Append()).start()
+    try {
+      // one batch, out of order, all three rows inside one millisecond
+      input.addData(("a", at(200L), Some(6.0)), ("a", at(0L), Some(1.0)),
+        ("a", at(100L), Some(3.0)))
+      q.processAllAvailable()
+      val rows = spark.sql("select * from sius order by ts")
+        .as[(String, java.sql.Timestamp, Option[Double])].collect().toSeq
+      assert(rows.map(r => (TimeMicros.micros(r._2) - t0, r._3)) ==
+        Seq((0L, None), (100L, Some(2.0)), (200L, Some(3.0))), rows)
+    } finally q.stop()
+  }
+
   test("streaming mixture sample: static rates, stateless membership equals batch fate") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -1620,5 +1670,26 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         input.toDF().toDF("doc_id", "text"), expectedGrams = 1L << 40)
     }
     assert(err.getMessage.contains("streamingNgramNovelty"))
+  }
+
+  test("one ordered fold: event time is converted once, stateful folds go through OrderedFold") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala", "graft")
+    assert(Files.isDirectory(root), s"no source tree at $root")
+    def sources(dir: Path): Seq[Path] = Files.walk(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    def count(p: Path, re: scala.util.matching.Regex): Int =
+      re.findAllMatchIn(Files.readString(p)).size
+    val getTime = """\.getTime\b""".r
+    val msUsers = (sources(root.resolve("streaming")) ++ sources(root.resolve("operators")))
+      .filter(count(_, getTime) > 0).map(_.getFileName.toString).toSet
+    assert(msUsers == Set("TimeMicros.scala"), s"millisecond event time in $msUsers")
+    // the six folds that are not event-time-ordered folds keep their own
+    val folds = sources(root).map(p => p.getFileName.toString ->
+      count(p, """flatMapGroupsWithState\(""".r)).filter(_._2 > 0).toMap
+    assert(folds == Map("OrderedFold.scala" -> 1, "StreamingReorder.scala" -> 1,
+      "StreamingSketches.scala" -> 2, "StreamingCorpus.scala" -> 1,
+      "StreamingCohort.scala" -> 1, "StreamingBurst.scala" -> 1), folds)
   }
 }
