@@ -11,7 +11,13 @@ import Kernels._
   * the reference's `find(**kwargs)` defaults. */
 trait Detector extends Serializable {
   def eventType: String
-  def detect(ts: DataFrame): DataFrame
+
+  /** The detector body over a frame already hash-partitioned by
+    * `series_id` ([[Kernels.bySeries]]): its windows, groupings and
+    * folds run on every shuffle partition without another exchange. */
+  protected def detectBySeries(ts: DataFrame): DataFrame
+
+  final def detect(ts: DataFrame): DataFrame = detectBySeries(bySeries(ts))
 
   /** Typed view — the engine's analog of the reference's `.events`
     * list (metevents/events.py:24-26), still lazy/distributed. */
@@ -34,7 +40,7 @@ trait Detector extends Serializable {
 case class ExtremeValueEvents(expectedMax: Double = 600.0, expectedMin: Double = 0.0)
     extends Detector {
   val eventType = "extreme_value"
-  def detect(ts: DataFrame): DataFrame = {
+  protected def detectBySeries(ts: DataFrame): DataFrame = {
     // nanToNull first: pandas NaN-compare is False (events.py:345); a raw
     // Spark NaN orders greater than any numeric and would flag as extreme.
     val v = nanToNull(col("value"))
@@ -54,7 +60,7 @@ case class ExtremeValueEvents(expectedMax: Double = 600.0, expectedMin: Double =
  */
 case class FlatLineEvents(minLen: Long = 5L, slopeThresh: Double = 0.0) extends Detector {
   val eventType = "flat_line"
-  def detect(ts: DataFrame): DataFrame = {
+  protected def detectBySeries(ts: DataFrame): DataFrame = {
     val d = withLagDiff(ts)
     val flagged = withRunId(d, abs(col("diff")) <= slopeThresh)
     assembleEvents(flagged, eventType, minPoints = minLen)
@@ -76,7 +82,7 @@ case class ExtremeChangeEvents(
     positiveSlopeThresh.isDefined || negativeSlopeThresh.isDefined,
     "One slope threshold must be provided")
   val eventType = "extreme_change"
-  def detect(ts: DataFrame): DataFrame = {
+  protected def detectBySeries(ts: DataFrame): DataFrame = {
     val d = withLagDiff(ts)
     val pos = positiveSlopeThresh.map(t => col("diff") >= t).getOrElse(lit(false))
     val neg = negativeSlopeThresh.map(t => col("diff") <= t).getOrElse(lit(false))
@@ -101,7 +107,7 @@ case class ExtremeChangeEvents(
  */
 case class DataGapEvents(minLen: Long = 3L, expectedFrequency: String = "1D") extends Detector {
   val eventType = "data_gap"
-  def detect(ts: DataFrame): DataFrame = {
+  protected def detectBySeries(ts: DataFrame): DataFrame = {
     val stepUs = Steps.parseMicros(expectedFrequency)
 
     val nanRuns = assembleEvents(

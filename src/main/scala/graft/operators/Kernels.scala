@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
  * L1 kernel library (SURVEY.md §2.1, §7.1): small, composable, pure
  * DataFrame transforms over the canonical frame
  * (series_id STRING, ts TIMESTAMP, value DOUBLE). Every kernel is
- * partitioned by series_id so plans shuffle exactly once and then
- * parallelize across series — the scalability story the single-series
- * reference lacks (metevents/events.py:18-22).
+ * partitioned by series_id and every detector runs over [[bySeries]],
+ * so a plan shuffles exactly once and then parallelizes across series —
+ * the scalability story the single-series reference lacks
+ * (metevents/events.py:18-22).
  *
  * Skew note: the per-series window sort pins one pathological
  * multi-billion-row series to one executor. For such inputs use
@@ -19,6 +20,16 @@ import org.apache.spark.sql.functions._
  * (property-tested identical to this path; see SCALE_NOTES.md).
  */
 object Kernels {
+
+  /** The one `series_id` exchange under every detector: hash-partition
+    * into `spark.sql.shuffle.partitions` parts. The explicit count keeps
+    * AQE from coalescing the reduce side (a small detector shuffle falls
+    * under its 1 MiB floor and would run in one task), and
+    * `HashPartitioning(series_id)` satisfies every series window and
+    * every `series_id`-keyed grouping above it, so Spark plans no second
+    * exchange. */
+  def bySeries(ts: DataFrame): DataFrame =
+    ts.repartition(ts.sparkSession.sessionState.conf.numShufflePartitions, col("series_id"))
 
   /** pandas treats NaN as missing everywhere (NaN-skipping sums,
     * periods.py:40-45); Spark distinguishes NaN from null. Normalize at
@@ -105,12 +116,12 @@ object Kernels {
    * the step, else unknown (null).
    *
    * Returns (series_id, step_us nullable long). `step_us` is the raw
-   * unique diff; see [[Steps.resolutionStepCol]] for the `to_offset`
+   * unique diff; see [[Steps.resolutionStep]] for the `to_offset`
    * 1-unit quirk used by storms.
    */
   def inferStep(df: DataFrame): DataFrame = {
     val w = seriesWindow()
-    df.select(col("series_id"), col("ts"))
+    bySeries(df.select(col("series_id"), col("ts")))
       .withColumn("d_us", unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(w)))
       .withColumn("has_next", lead(col("ts"), 1).over(w).isNotNull)
       // keep d_1..d_{n-2}: rows with BOTH a predecessor (d_us non-null)
@@ -161,19 +172,14 @@ object Steps {
   /** pandas `to_timedelta(to_offset(freq))` where freq is a
     * `resolution_string`: one unit of the SMALLEST nonzero component of
     * the diff (so a 2-day spacing still yields a 1-day tstep — quirk
-    * preserved from metevents/events.py:76-77 + utilities.py:14), as a
-    * native when-chain over a Column (null in → null out; the explicit
-    * isNull head matters — a null diff would otherwise fall through
-    * every modulo test to the microsecond fallback). Keeps the
-    * inferred-frequency path inside whole-stage codegen. */
-  def resolutionStepCol(diffUs: Column): Column =
-    when(diffUs.isNull, lit(null).cast("long"))
-      .when(diffUs % Day === 0, Day)
-      .when(diffUs % Hour === 0, Hour)
-      .when(diffUs % Minute === 0, Minute)
-      .when(diffUs % Second === 0, Second)
-      .when(diffUs % Ms === 0, Ms)
-      .otherwise(Us)
+    * preserved from metevents/events.py:76-77 + utilities.py:14). */
+  def resolutionStep(diffUs: Long): Long =
+    if (diffUs % Day == 0) Day
+    else if (diffUs % Hour == 0) Hour
+    else if (diffUs % Minute == 0) Minute
+    else if (diffUs % Second == 0) Second
+    else if (diffUs % Ms == 0) Ms
+    else Us
 
   /** Pandas-style frequency string for a step (`determine_freq`
     * returns 'D'/'H' strings in the reference, utilities.py:10-14). */

@@ -11,13 +11,16 @@ import graft.Event
  * flagged runs become events.
  *
  * Spark shape (SURVEY.md §3.3): the peak kernel is an inherently
- * sequential per-series scan, so it runs inside
- * `groupByKey(series_id).flatMapGroups` — one shuffle on series_id,
- * then embarrassingly parallel across series. The kernel sorts and
- * scans one series in memory; this assumes a single series fits an
- * executor (station data: years × daily ≈ 10³–10⁴ points — SURVEY.md
- * §7.4.7). At 100 TB the frame holds millions of series, so the
- * group-by parallelizes across the cluster; no driver collect anywhere.
+ * sequential per-series scan, so it runs inside a column-keyed
+ * `groupBy(series_id).as[..].flatMapSortedGroups(ts)` over the
+ * detector's one `series_id` exchange ([[Kernels.bySeries]]): Spark
+ * sorts each partition by (series_id, ts), then the groups run in
+ * parallel across series. (A lambda key, `groupByKey(_._1)`, would plan
+ * an `AppendColumns` and its own second exchange.) The kernel buffers
+ * one series in memory; this assumes a single series fits an executor
+ * (station data: years × daily ≈ 10³–10⁴ points — SURVEY.md §7.4.7).
+ * At 100 TB the frame holds millions of series, so the grouping
+ * parallelizes across the cluster; no driver collect anywhere.
  *
  * Events carry n_points (all samples in the span) and the NaN-skipping
  * total as our EventFrame extension (the reference's BaseTimePeriod has
@@ -33,17 +36,17 @@ case class SpikeValleyEvents(
 
   val eventType = "spike_valley"
 
-  def detect(ts: DataFrame): DataFrame = {
+  protected def detectBySeries(ts: DataFrame): DataFrame = {
     val params = FindPeaks.Params(height, threshold, prominence, widthMin, widthMax)
     val spark = ts.sparkSession
     import spark.implicits._
 
     ts.select(col("series_id"), col("ts"), col("value"))
-      .as[(String, java.sql.Timestamp, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (sid, it) =>
-        val rows = it.toArray.sortBy(r => TimeMicros.micros(r._2))
-        val xs = rows.map(_._3.getOrElse(Double.NaN))
+      .groupBy(col("series_id"))
+      .as[String, graft.TsPoint]
+      .flatMapSortedGroups(col("ts")) { (sid, it) =>
+        val rows = it.toArray
+        val xs = rows.map(_.value.getOrElse(Double.NaN))
         val mask = FindPeaks.spikeValleyMask(xs, params)
         // contiguous flagged runs → events (group_condition_by_time,
         // metevents/events.py:189-197)
@@ -61,8 +64,8 @@ case class SpikeValleyEvents(
               if (!v.isNaN) { total += v; any = true }
               k += 1
             }
-            val start = rows(i)._2
-            val stop = rows(j)._2
+            val start = rows(i).ts
+            val stop = rows(j).ts
             out += Event(sid, eventType, start, stop,
               TimeMicros.micros(stop) - TimeMicros.micros(start),
               (j - i + 1).toLong, if (any) Some(total) else None)

@@ -1,55 +1,47 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import java.sql.Timestamp
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import Kernels._
-
-/** Per-(series, run) summary of one contiguous above-threshold "mass
-  * group" — the unit the storm fold iterates over. All timestamps are
-  * epoch micros; `cumExclStart`/`cumInclStop` are prefix sums of the
-  * NaN-as-zero value so any inclusive label-slice total
-  * `data.loc[a:b].sum()` (metevents/events.py:100,118) is O(1):
-  * `cumInclStop(b) - cumExclStart(a)`. */
-private[operators] case class StormGroup(
-    series_id: String,
-    g_start_us: Long,
-    g_stop_us: Long,
-    rn_start: Long,
-    cum_excl_start: Double,
-    cum_incl_stop: Double,
-    step_us: Option[Long])
-
-/** A delineated storm interval, pre stats-pass. `span_start_us` already
-  * carries the one-tstep back-extension (metevents/events.py:116). */
-private[operators] case class StormSpan(
-    series_id: String,
-    span_start_us: Long,
-    span_stop_us: Long)
+import graft.{Event, TsPoint}
 
 /**
  * Storm delineation — StormEvents.find (metevents/events.py:54-121).
  *
- * A storm starts at the first above-threshold group and closes at group
- * i iff ((gap to next group > hours_to_stop) OR (duration since
- * candidate start > max_storm_hours)) AND running total >=
- * min_storm_total; the final group always closes
- * (metevents/events.py:114). The emitted span is back-extended one time
- * step unless the candidate start is the series' first row
- * (metevents/events.py:116). Totals re-sum the RAW data over the
- * inclusive span — sub-threshold rows inside the span count
- * (metevents/events.py:100,118).
+ * A row is flagged when `value >= instantMassToStart` (NaN and null
+ * are unflagged: pandas `NaN >= x` is False, events.py:73); a group is
+ * a maximal run of flagged rows. A storm starts at the first group and
+ * closes at group i iff ((gap to next group > hours_to_stop) OR
+ * (duration since candidate start > max_storm_hours)) AND running
+ * total >= min_storm_total; the test runs when the next group starts,
+ * and the final group always closes (metevents/events.py:114). The
+ * running total is (prefix sum at the group stop) − (prefix sum before
+ * the candidate start), over NaN-as-zero values summed row by row from
+ * the series head — the window prefix of the DuckDB oracle. The emitted
+ * span is back-extended one time step unless the candidate start is
+ * the series' first row (metevents/events.py:116). `start`, `stop`,
+ * `n_points` and `total` re-read the RAW data over the inclusive span
+ * (metevents/events.py:100,118): sub-threshold rows inside the span
+ * count, and so does a back-extension row that already closed the
+ * previous storm. `total` skips NaN and is 0.0 when no value is
+ * present (CumulativePeriod, periods.py:43).
  *
- * Spark shape (SURVEY.md §3.2): a relational prefix (mask → run-id →
- * per-group summaries with prefix sums, one shuffle on series_id), an
- * order-dependent fold over the tiny per-series summaries via
- * `groupByKey.flatMapGroups` — the only step outside Catalyst — and a
- * final interval join of the resulting spans back to the points for
- * exact pandas `.loc[a:b]` stats. The span side is aggregated output
- * (orders of magnitude smaller than the points), so it is broadcast;
- * totals come from the join rather than the prefix sums so that
- * back-extension onto irregular timestamps matches the label-slice
- * semantics exactly.
+ * Spark shape (SURVEY.md §3.2): one sorted-group fold over the
+ * detector's one `series_id` exchange ([[Kernels.bySeries]]):
+ * `groupBy(series_id).as[..].flatMapSortedGroups(ts)` plans a sort and
+ * a `MapGroups` per partition — no window, no join back to the points,
+ * no broadcast. The fold walks each series once, in time order:
+ *  - the back-extension rows are the ones within one step before the
+ *    candidate's first row, kept in a small ring (with data denser than
+ *    the step there can be several);
+ *  - with `frequency = None` the step is pandas' inferred one
+ *    ([[Kernels.inferStep]]: the one distinct diff among d_1..d_{n-2},
+ *    then [[Steps.resolutionStep]]). Inference holds only when every
+ *    diff but the last equals d_1, so d_1 fixes the step from the
+ *    second row on, and the fold drops the series the moment a later
+ *    diff differs.
+ * Rows sharing a timestamp have no defined order, as on the window path.
  *
  * The reference crashes on series with no inferable frequency
  * (`to_offset(None)`, metevents/events.py:77); we instead skip such
@@ -84,115 +76,101 @@ case class StormEvents(
 
   val eventType = "storm"
 
-  def detect(ts: DataFrame): DataFrame = {
+  protected def detectBySeries(ts: DataFrame): DataFrame = {
     val spark = ts.sparkSession
     import spark.implicits._
+    val fixedStepUs = frequency.map(Steps.parseMicros)
+    ts.select(col("series_id"), col("ts"), col("value"))
+      .groupBy(col("series_id"))
+      .as[String, TsPoint]
+      .flatMapSortedGroups(col("ts")) { (sid, rows) => stormsOf(sid, rows, fixedStepUs) }(
+        Encoders.product[Event])
+      .toDF()
+  }
 
-    val w = seriesWindow()
-    val wCum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+  /** One series' storms, from its rows in time order. */
+  private def stormsOf(
+      sid: String, rows: Iterator[TsPoint], fixedStepUs: Option[Long]): Iterator[Event] = {
+    val dtUs = (hoursToStop * Steps.Hour).toLong
+    val maxUs = (maxStormHours * Steps.Hour).toLong
+    val out = Array.newBuilder[Event]
+    // (µs, value) of the rows within one step before the current row
+    val back = mutable.ArrayDeque.empty[(Long, Double)]
+    var n = 0L
+    var prevUs = 0L
+    var firstDiff = 0L
+    var lastDiff = 0L // the latest row's diff; it counts once a row follows
+    var stepUs = fixedStepUs.getOrElse(0L)
+    var cum = 0.0 // prefix sum of NaN-as-zero values from the series head
+    var inGroup = false
+    var haveCand = false
+    var candStartUs = 0L
+    var candCumExcl = 0.0
+    var spanStart: Timestamp = null
+    var spanN = 0L // rows from the span start through the current row
+    var spanTotal = 0.0
+    var stopTs: Timestamp = null // the latest group's stop, and the span up to it
+    var stopUs = 0L
+    var cumAtStop = 0.0
+    var stopN = 0L
+    var stopTotal = 0.0
 
-    // nanToNull first: pandas `NaN >= x` is False (events.py:73); Spark
-    // orders NaN above all numerics, which would start a storm on NaN.
-    val prepped = withRunId(ts, nanToNull(col("value")) >= instantMassToStart)
-      .withColumn("value0", coalesce(nanToNull(col("value")), lit(0.0)))
-      .withColumn("cum_incl", sum(col("value0")).over(wCum))
-      .withColumn("rn", row_number().over(w))
+    def emit(): Unit = out += Event(sid, eventType, spanStart, stopTs,
+      stopUs - TimeMicros.micros(spanStart), stopN, Some(stopTotal))
 
-    val summaries = prepped
-      .where(col("cond"))
-      .groupBy(col("series_id"), col("run_id"))
-      .agg(
-        min(unix_micros(col("ts"))).as("g_start_us"),
-        max(unix_micros(col("ts"))).as("g_stop_us"),
-        min(col("rn")).as("rn_start"),
-        min_by(col("cum_incl") - col("value0"), col("ts")).as("cum_excl_start"),
-        max_by(col("cum_incl"), col("ts")).as("cum_incl_stop"))
-
-    val withStep = frequency match {
-      case Some(f) =>
-        summaries.withColumn("step_us", lit(Steps.parseMicros(f)))
-      case None =>
-        // inferred freq goes through pandas' resolution_string: one unit
-        // of the smallest nonzero component (metevents/utilities.py:14)
-        val steps = Kernels
-          .inferStep(ts)
-          .select(col("series_id"), Steps.resolutionStepCol(col("step_us")).as("step_us"))
-        summaries.join(steps, Seq("series_id"), "left")
-    }
-
-    val spans: Dataset[StormSpan] = withStep
-      .select("series_id", "g_start_us", "g_stop_us", "rn_start", "cum_excl_start",
-        "cum_incl_stop", "step_us")
-      .as[StormGroup]
-      .groupByKey(_.series_id)
-      .flatMapGroups { (sid, it) =>
-        val groups = it.toArray.sortBy(_.g_start_us)
-        groups.headOption.flatMap(_.step_us) match {
-          case None => Iterator.empty // irregular series, no explicit freq
-          case Some(stepUs) =>
-            val dtUs = (hoursToStop * Steps.Hour).toLong
-            val maxUs = (maxStormHours * Steps.Hour).toLong
-            val out = Array.newBuilder[StormSpan]
-            var candStart = 0L
-            var candCumExcl = 0.0
-            var candRnStart = 0L
-            var haveCand = false
-            var i = 0
-            while (i < groups.length) {
-              val g = groups(i)
-              if (!haveCand) {
-                candStart = g.g_start_us
-                candCumExcl = g.cum_excl_start
-                candRnStart = g.rn_start
-                haveCand = true
-              }
-              val last = i == groups.length - 1
-              val nextStart = if (last) g.g_stop_us else groups(i + 1).g_start_us
-              val total = g.cum_incl_stop - candCumExcl
-              val durationUs = g.g_stop_us - candStart
-              val close = ((nextStart - g.g_stop_us > dtUs) || (durationUs > maxUs)) &&
-                total >= minStormTotal
-              if (close || last) {
-                val spanStart =
-                  if (candRnStart > 1L) candStart - stepUs else candStart
-                out += StormSpan(sid, spanStart, g.g_stop_us)
-                haveCand = false // next group becomes the new candidate
-              }
-              i += 1
-            }
-            out.result().iterator
-        }
+    while (rows.hasNext) {
+      val p = rows.next()
+      val us = TimeMicros.micros(p.ts)
+      val v = p.value.getOrElse(Double.NaN)
+      if (n == 1L) {
+        firstDiff = us - prevUs
+        if (fixedStepUs.isEmpty) stepUs = Steps.resolutionStep(firstDiff)
+      } else if (n >= 2L && fixedStepUs.isEmpty && lastDiff != firstDiff) {
+        return Iterator.empty // two distinct diffs: no inferable step
       }
-
-    // Exact pandas label-slice stats: every point with
-    // span_start <= ts <= span_stop belongs to the event
-    // (metevents/events.py:118, periods.py:12-45). Spans are aggregated
-    // output — usually far smaller than the points — but they scale with
-    // series_count × storms_per_series, so no unconditional broadcast
-    // hint: AQE picks broadcast when the span side is actually small and
-    // falls back to a sort-merge equi-join on series_id otherwise.
-    // total coalesces to 0.0 on an all-missing span: CumulativePeriod's
-    // NaN-skipping sum returns 0.0 there (periods.py:43).
-    val pts = ts.select(col("series_id"), col("ts"), col("value"))
-    pts
-      .join(
-        spans.toDF(),
-        pts("series_id") === spans("series_id") &&
-          unix_micros(col("ts")) >= col("span_start_us") &&
-          unix_micros(col("ts")) <= col("span_stop_us"))
-      .groupBy(pts("series_id"), col("span_start_us"), col("span_stop_us"))
-      .agg(
-        min(col("ts")).as("start"),
-        max(col("ts")).as("stop"),
-        count(lit(1)).as("n_points"),
-        coalesce(sum(nanToNull(col("value"))), lit(0.0)).as("total"))
-      .select(
-        pts("series_id"),
-        lit(eventType).as("event_type"),
-        col("start"),
-        col("stop"),
-        (unix_micros(col("stop")) - unix_micros(col("start"))).as("duration_us"),
-        col("n_points"),
-        col("total"))
+      lastDiff = us - prevUs
+      while (back.nonEmpty && back.head._1 < us - stepUs) back.removeHead()
+      val v0 = if (v.isNaN) 0.0 else v
+      cum += v0
+      if (v >= instantMassToStart) {
+        if (!inGroup) {
+          // a group starts here: the previous group's close test
+          if (haveCand && ((us - stopUs > dtUs) || (stopUs - candStartUs > maxUs)) &&
+              cumAtStop - candCumExcl >= minStormTotal) {
+            emit()
+            haveCand = false
+          }
+          if (!haveCand) {
+            haveCand = true
+            candStartUs = us
+            candCumExcl = cum - v0
+            spanStart = if (back.isEmpty) p.ts else TimeMicros.timestamp(back.head._1)
+            spanN = back.size.toLong
+            spanTotal = back.foldLeft(0.0)((s, r) => if (r._2.isNaN) s else s + r._2)
+          }
+          inGroup = true
+        }
+      } else inGroup = false
+      if (haveCand) {
+        spanN += 1L
+        if (!v.isNaN) spanTotal += v
+      }
+      if (inGroup) {
+        stopTs = p.ts
+        stopUs = us
+        cumAtStop = cum
+        stopN = spanN
+        stopTotal = spanTotal
+      }
+      back.append((us, v))
+      prevUs = us
+      n += 1L
+    }
+    // no inferable step: fewer than three rows leave no diff to infer from
+    if (fixedStepUs.isEmpty && n < 3L) Iterator.empty
+    else {
+      if (haveCand) emit() // the final group always closes
+      out.result().iterator
+    }
   }
 }

@@ -87,8 +87,8 @@ object IO {
     df.repartitionByRange(shards, col(keyCol))
       .sortWithinPartitions(col(keyCol))
       .write.mode("overwrite").parquet(path)
-    val spark = df.sparkSession
-    spark.read.parquet(path)
+    // the schema just written: no inference job on the read-back
+    df.sparkSession.read.schema(df.schema).parquet(path)
       .select(input_file_name().as("file"), col(keyCol).as("k"))
       .groupBy(col("file"))
       .agg(min(col("k")).as("min_key"), max(col("k")).as("max_key"),
@@ -114,7 +114,7 @@ object IO {
     val z = call_function("graft_morton", col(xCol), col(yCol))
     df.repartitionByRange(shards, z).sortWithinPartitions(z)
       .write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    spark.read.schema(df.schema).parquet(path)
       .select(input_file_name().as("file"), col(xCol).as("x"), col(yCol).as("y"))
       .groupBy(col("file"))
       .agg(count(lit(1)).as("rows"),

@@ -254,8 +254,8 @@ object StreamingDetectors {
    * closes" needs end-of-data, which a stream never reaches — run a
    * batch tail pass at shutdown if partial-tail storms are needed;
    * (2) the back-extended span's stats cover [cand_start, stop] (the
-   * batch operator re-joins points to pick up a value AT the
-   * back-extended timestamp; a stream cannot reach back).
+   * batch fold also counts the rows within one step before the
+   * candidate; a stream cannot reach back).
    */
   def storms(
       instantMassToStart: Double,

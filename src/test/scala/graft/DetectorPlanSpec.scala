@@ -1,0 +1,62 @@
+package graft
+
+import java.nio.file.Files
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every detector key shuffles once, on every core: after execution its
+  * plan holds exactly one `series_id` hash exchange with the session's
+  * partition count (a reused exchange does not count), no broadcast, one
+  * parquet scan, and AQE leaves the reduce side uncoalesced. */
+class DetectorPlanSpec extends AnyFunSuite with SparkTestBase {
+
+  private val keys = Seq("d1_storm", "d3_spike_valley", "d4_data_gap", "d5_flat_line",
+    "d6_extreme_value", "d7_extreme_change", "u1_infer_step")
+
+  /** 12 hourly series with storms, gaps, flat runs and spikes, as the
+    * `events` parquet table the detector keys read. */
+  private lazy val dir: String = {
+    val d = Files.createTempDirectory("graft_detector_plan").toString
+    spark.range(12 * 96).select(
+        (col("id") / 96).cast("long").as("user_id"),
+        timestamp_micros(lit(1672531200000000L) +
+          (col("id") % 96) * 3600000000L).as("ts"),
+        when(col("id") % 96 === 40, lit(Double.NaN))
+          .when(col("id") % 17 < 4, lit(120.0))
+          .when(col("id") % 23 === 5, lit(900.0))
+          .otherwise((col("id") % 7).cast("double")).as("value"))
+      .where(!(col("id") % 96).between(60, 72)) // a 14 h timestamp gap per series
+      .write.parquet(s"$d/events.parquet")
+    d
+  }
+
+  /** The executed plan's nodes, through AQE query stages; a reused
+    * exchange is a leaf, so its subtree is not counted twice. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  for (key <- keys) test(s"$key: one series_id exchange, uncoalesced on 4 partitions") {
+    val df = SparkEntry.queries(key)(spark, dir)
+    assert(df.collect().nonEmpty, key)
+    val plan = nodes(df.queryExecution.executedPlan)
+    val shuffles = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    val bySeries = shuffles.collect {
+      case HashPartitioning(Seq(a: Attribute), 4) if a.name == "series_id" => a
+    }
+    assert(shuffles.size == 1 && bySeries.size == 1, s"$key shuffles: $shuffles")
+    assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, s"$key broadcasts")
+    assert(plan.count(_.isInstanceOf[FileSourceScanExec]) == 1, s"$key scans")
+    val coalesced = plan.collect {
+      case r: AQEShuffleReadExec if r.isCoalescedRead || r.hasCoalescedPartition => r
+    }
+    assert(coalesced.isEmpty, s"$key coalesced reads: $coalesced")
+  }
+}

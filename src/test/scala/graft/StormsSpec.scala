@@ -82,4 +82,53 @@ class StormsSpec extends AnyFunSuite with SparkTestBase {
     val ev = collectEvents(StormEvents().detect(df))
     assert(ev.count(_.series_id == "a") == 2 && ev.count(_.series_id == "b") == 1)
   }
+
+  // --- fold exactness: back-extension over the raw rows --------------
+  private def at(hours: Double): java.sql.Timestamp =
+    new java.sql.Timestamp(day(0).getTime + (hours * 3600000L).toLong)
+
+  private def spans(ev: Seq[Event]): Seq[(String, String, String, Long, Double)] =
+    ev.map(e => (e.series_id, e.start.toInstant.toString, e.stop.toInstant.toString,
+      e.n_points, e.total.get))
+
+  private def detectAt(points: Seq[(Double, Double)], sid: String, params: StormEvents) =
+    spans(collectEvents(params.detect(seriesAt(points.map { case (h, v) => (at(h), v) }, sid))))
+
+  test("data denser than the step: every row within one step before the start counts") {
+    // 6-hourly rows, 1-day step: four rows (one NaN) precede each start
+    val pts = Seq(0.0 -> 0.5, 6.0 -> 0.25, 12.0 -> Double.NaN, 18.0 -> 0.5, 24.0 -> 0.0,
+      30.0 -> 2.0, 36.0 -> 3.0, 42.0 -> 0.0, 48.0 -> 0.0, 54.0 -> 0.0, 60.0 -> 0.25,
+      66.0 -> 0.0, 72.0 -> 1.5, 78.0 -> 0.0)
+    assert(detectAt(pts, "dense", StormEvents(1.0, 1.0, 12, 336, Some("1D"))) == Seq(
+      ("dense", "2023-01-01T06:00:00Z", "2023-01-02T12:00:00Z", 6L, 5.75),
+      ("dense", "2023-01-03T00:00:00Z", "2023-01-04T00:00:00Z", 5L, 1.75)))
+  }
+  test("a max-hours split whose next group starts one step later re-counts the last row") {
+    // half-hourly rows, 1-hour step: the second span reaches back onto
+    // the first storm's stop
+    val pts = Seq(0.0 -> 0.0, 0.5 -> 2.0, 1.0 -> 2.0, 1.5 -> 2.0, 2.0 -> 0.0,
+      2.5 -> 3.0, 3.0 -> 1.0, 3.5 -> 0.0)
+    assert(detectAt(pts, "split", StormEvents(1.0, 1.0, 24, 0.5, Some("1H"))) == Seq(
+      ("split", "2023-01-01T00:00:00Z", "2023-01-01T01:30:00Z", 4L, 6.0),
+      ("split", "2023-01-01T01:30:00Z", "2023-01-01T03:00:00Z", 4L, 6.0)))
+  }
+  test("inferred step, candidate on the last row, final interval off the step") {
+    val shorter = Seq(0.0 -> 0.0, 24.0 -> 1.0, 48.0 -> 0.0, 72.0 -> 0.25, 78.0 -> 2.0)
+    val longer = Seq(0.0 -> 0.0, 24.0 -> 1.0, 48.0 -> 0.0, 72.0 -> 0.25, 144.0 -> 2.0)
+    // 6 h final interval: the back-extension reaches the row before;
+    // 3 d final interval: it reaches nothing and the storm is one row
+    assert(detectAt(shorter, "c_short", StormEvents(0.5, 0.5, 24, 336, None)) == Seq(
+      ("c_short", "2023-01-01T00:00:00Z", "2023-01-02T00:00:00Z", 2L, 1.0),
+      ("c_short", "2023-01-04T00:00:00Z", "2023-01-04T06:00:00Z", 2L, 2.25)))
+    assert(detectAt(longer, "c_long", StormEvents(0.5, 0.5, 24, 336, None)) == Seq(
+      ("c_long", "2023-01-01T00:00:00Z", "2023-01-02T00:00:00Z", 2L, 1.0),
+      ("c_long", "2023-01-07T00:00:00Z", "2023-01-07T00:00:00Z", 1L, 2.0)))
+  }
+  test("irregular series with an explicit frequency") {
+    val pts = Seq(0.0 -> 0.0, 24.0 -> 2.0, 72.0 -> 2.0, 96.0 -> 0.0, 192.0 -> 0.5,
+      204.0 -> 0.25, 216.0 -> 2.0)
+    assert(detectAt(pts, "irr_f", StormEvents(1.0, 1.0, 24, 336, Some("1D"))) == Seq(
+      ("irr_f", "2023-01-01T00:00:00Z", "2023-01-04T00:00:00Z", 3L, 4.0),
+      ("irr_f", "2023-01-09T00:00:00Z", "2023-01-10T00:00:00Z", 3L, 2.75)))
+  }
 }

@@ -123,7 +123,8 @@ class TablesSpec extends AnyFunSuite with SparkTestBase {
   test("the query layer reads parquet only through Tables") {
     val main = Paths.get(sys.props("user.dir"), "src", "main", "scala", "graft")
     val sources = Files.walk(main.resolve("queries")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq :+ main.resolve("SparkEntry.scala")
+      .filter(_.toString.endsWith(".scala")).toSeq :+ main.resolve("SparkEntry.scala") :+
+      main.resolve("sources").resolve("IO.scala")
     assert(sources.size > 1 && sources.forall(Files.isRegularFile(_)), sources)
     val offenders = sources.filter(p => Files.readString(p).contains(".read.parquet("))
     assert(offenders.isEmpty, s"bare parquet reads in ${offenders.map(_.getFileName)}")
