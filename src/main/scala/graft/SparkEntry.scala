@@ -130,6 +130,9 @@ object SparkEntry {
     "d5_flat_line" ->
       (runIdSql("abs(diff) <= 5.0", withDiff = true) +
         assembleSql("flat_line", havingPoints = 2L)),
+    // an `inf - inf` diff is NaN, which DuckDB, like Spark, orders above
+    // every number, so this mask flags it; the engine's fold does not
+    // (pandas NaN-compare is False). No sf input holds an infinity.
     "d7_extreme_change" ->
       (runIdSql("diff >= 200.0 OR diff <= -200.0", withDiff = true) +
         assembleSql("extreme_change")),

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
+import graft.streaming.OrderedFold
 import Kernels._
+import RunFolds._
 
 /** Common shape: a detector is a lazy DataFrame → DataFrame transform
   * from the canonical TimeSeriesFrame to the EventFrame (SURVEY.md §1.3).
@@ -13,8 +14,8 @@ trait Detector extends Serializable {
   def eventType: String
 
   /** The detector body over a frame already hash-partitioned by
-    * `series_id` ([[Kernels.bySeries]]): its windows, groupings and
-    * folds run on every shuffle partition without another exchange. */
+    * `series_id` ([[Kernels.bySeries]]): its groupings and folds run on
+    * every shuffle partition without another exchange. */
   protected def detectBySeries(ts: DataFrame): DataFrame
 
   final def detect(ts: DataFrame): DataFrame = detectBySeries(bySeries(ts))
@@ -30,23 +31,38 @@ trait Detector extends Serializable {
   /** Event count — the reference's `.N` (metevents/events.py:28-30);
     * an action. */
   def n(ts: DataFrame): Long = detect(ts).count()
+
+  /** Batch-drive a run detector's fold: one sorted walk per series
+    * ([[OrderedFold.batch]]), then the fold's end-of-input close. */
+  protected def foldRuns[R, S](rows: Dataset[R])(ts: R => java.sql.Timestamp)(
+      fold: RunFold[R, S]): DataFrame =
+    OrderedFold.batch(rows, "series_id")(ts)(fold.step, fold.close)(
+      Encoders.STRING, Encoders.product[graft.Event]).toDF()
 }
 
 /**
  * Values outside an expected range — ExtremeValueEvent
  * (metevents/events.py:333-358): mask `(v > max) | (v < min)`, group
- * contiguous runs, emit every group.
+ * contiguous runs, emit every group. Spark shape (all four run
+ * detectors): one sorted walk per series over the detector's
+ * `series_id` exchange ([[OrderedFold.batch]]) running the streaming
+ * twin's own step ([[RunFolds]]), then its end-of-input close, which
+ * also emits a run the series ends inside.
  */
 case class ExtremeValueEvents(expectedMax: Double = 600.0, expectedMin: Double = 0.0)
     extends Detector {
   val eventType = "extreme_value"
-  protected def detectBySeries(ts: DataFrame): DataFrame = {
-    // nanToNull first: pandas NaN-compare is False (events.py:345); a raw
-    // Spark NaN orders greater than any numeric and would flag as extreme.
+
+  /** The null-safe mask. nanToNull first: pandas NaN-compare is False
+    * (events.py:345); a raw Spark NaN orders greater than any numeric
+    * and would flag as extreme. */
+  def flag: Column = {
     val v = nanToNull(col("value"))
-    val flagged = withRunId(ts, v > expectedMax || v < expectedMin)
-    assembleEvents(flagged, eventType)
+    safeMask(v > expectedMax || v < expectedMin)
   }
+
+  protected def detectBySeries(ts: DataFrame): DataFrame =
+    foldRuns(flagged(ts.withColumn("flag", flag)))(_._2)(runs(eventType))
 }
 
 /**
@@ -60,18 +76,19 @@ case class ExtremeValueEvents(expectedMax: Double = 600.0, expectedMin: Double =
  */
 case class FlatLineEvents(minLen: Long = 5L, slopeThresh: Double = 0.0) extends Detector {
   val eventType = "flat_line"
-  protected def detectBySeries(ts: DataFrame): DataFrame = {
-    val d = withLagDiff(ts)
-    val flagged = withRunId(d, abs(col("diff")) <= slopeThresh)
-    assembleEvents(flagged, eventType, minPoints = minLen)
-  }
+
+  def fold: RunFold[Point, DiffState] =
+    diffRuns(eventType, minLen, (prev, cur) => math.abs(cur - prev) <= slopeThresh)
+
+  protected def detectBySeries(ts: DataFrame): DataFrame = foldRuns(points(ts))(_._2)(fold)
 }
 
 /**
  * Excessive rate of change — ExtremeChangeEvent
  * (metevents/events.py:361-411): mask `diff >= pos OR diff <= neg`,
  * either threshold optional (at least one required,
- * events.py:383-385), keep runs of at least `minLen` points.
+ * events.py:383-385), keep runs of at least `minLen` points. A NaN
+ * diff (`inf − inf`) is unflagged, as in pandas.
  */
 case class ExtremeChangeEvents(
     minLen: Long = 1L,
@@ -82,55 +99,29 @@ case class ExtremeChangeEvents(
     positiveSlopeThresh.isDefined || negativeSlopeThresh.isDefined,
     "One slope threshold must be provided")
   val eventType = "extreme_change"
-  protected def detectBySeries(ts: DataFrame): DataFrame = {
-    val d = withLagDiff(ts)
-    val pos = positiveSlopeThresh.map(t => col("diff") >= t).getOrElse(lit(false))
-    val neg = negativeSlopeThresh.map(t => col("diff") <= t).getOrElse(lit(false))
-    val flagged = withRunId(d, safeMask(pos) || safeMask(neg))
-    assembleEvents(flagged, eventType, minPoints = minLen)
-  }
+
+  def fold: RunFold[Point, DiffState] = diffRuns(eventType, minLen, (prev, cur) => {
+    val d = cur - prev
+    positiveSlopeThresh.exists(d >= _) || negativeSlopeThresh.exists(d <= _)
+  })
+
+  protected def detectBySeries(ts: DataFrame): DataFrame = foldRuns(points(ts))(_._2)(fold)
 }
 
 /**
- * Data gaps — DataGapEvent (metevents/events.py:251-298). Two kinds,
- * unioned:
- *  (a) runs of missing VALUES (NaN/null), spanning first..last missing
- *      sample;
- *  (b) missing TIMESTAMPS: where `ts - lag(ts) > step`, a synthetic
- *      two-point event spanning last-present..first-present — by the
- *      reference's own TODO (events.py:281) this inflates a 4-day hole
- *      into a 6-day event; preserved for parity.
- * Keep events with `duration >= min_len * step` (events.py:297).
- * The reference's run-id/position key-collision quirk (events.py:282-286)
- * is NOT reproduced: we union both kinds without overwriting (the
- * goldens never exercise a collision; SURVEY.md §7.4.5).
+ * Data gaps — DataGapEvent (metevents/events.py:251-298): runs of
+ * missing values and missing timestamps, both halves in one fold
+ * ([[RunFolds.dataGaps]]). A timestamp gap is the reference's synthetic
+ * two-point event spanning last-present..first-present — by its own
+ * TODO (events.py:281) this inflates a 4-day hole into a 6-day event;
+ * preserved for parity. The reference's run-id/position key-collision
+ * quirk (events.py:282-286) is NOT reproduced: both kinds are emitted
+ * without overwriting (SURVEY.md §7.4.5).
  */
 case class DataGapEvents(minLen: Long = 3L, expectedFrequency: String = "1D") extends Detector {
   val eventType = "data_gap"
-  protected def detectBySeries(ts: DataFrame): DataFrame = {
-    val stepUs = Steps.parseMicros(expectedFrequency)
 
-    val nanRuns = assembleEvents(
-      withRunId(ts, col("value").isNull || isnan(col("value"))), eventType)
+  def fold: RunFold[Point, GapState] = dataGaps(minLen, Steps.parseMicros(expectedFrequency))
 
-    val v = nanToNull(col("value"))
-    val pv = nanToNull(col("prev_val"))
-    val tsGaps = ts
-      .withColumn("prev_ts", lag(col("ts"), 1).over(seriesWindow()))
-      .withColumn("prev_val", lag(col("value"), 1).over(seriesWindow()))
-      .where(col("prev_ts").isNotNull &&
-        (unix_micros(col("ts")) - unix_micros(col("prev_ts"))) > stepUs)
-      .select(
-        col("series_id"),
-        lit(eventType).as("event_type"),
-        col("prev_ts").as("start"),
-        col("ts").as("stop"),
-        (unix_micros(col("ts")) - unix_micros(col("prev_ts"))).as("duration_us"),
-        lit(2L).as("n_points"),
-        // NaN-skipping sum over the two present endpoint rows
-        when(v.isNull && pv.isNull, lit(null))
-          .otherwise(coalesce(v, lit(0.0)) + coalesce(pv, lit(0.0))).as("total"))
-
-    nanRuns.unionByName(tsGaps).where(col("duration_us") >= minLen * stepUs)
-  }
+  protected def detectBySeries(ts: DataFrame): DataFrame = foldRuns(points(ts))(_._2)(fold)
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.streaming.OrderedFold
 
 /**
  * Exponentially-weighted moving average — pandas
@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
  * frame. The recurrence is inherently sequential per series
  * (y_t depends on y_{t-1}), which no ANSI window expresses, and the
  * adjust=True normalizer (1-α)^i overflows any fixed-point rewrite at
- * realistic series lengths — so this is a per-series kernel in
- * `groupByKey(series_id).flatMapGroups`, the same shape as the
- * find_peaks port: one shuffle on series_id, embarrassingly parallel
- * across series, one in-memory pass per series (station data:
- * 10³–10⁴ points).
+ * realistic series lengths — so this is a per-series walk in the run
+ * detectors' batch fold ([[graft.streaming.OrderedFold.batch]]) over
+ * one `series_id` exchange ([[Kernels.bySeries]]): Spark sorts each
+ * partition by (series_id, ts), the series run in parallel, and each
+ * one streams through the recurrence without being buffered.
  *
  * pandas NaN semantics (verified against pandas 2.x): NaN samples
  * emit the running mean unchanged and do NOT decay the weights
@@ -36,17 +36,12 @@ object Ewma {
     // adjust=True weights new obs at 1; adjust=False at α, with the
     // denominator tracking the same recurrence (pandas' ewm formula)
     val newW = if (adjust) 1.0 else alpha
-    ts.select(col("series_id"), col("ts"), col("value"))
-      .as[(String, java.sql.Timestamp, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (sid, it) =>
-        // full-microsecond sort: getTime alone is millis, and rows
-        // inside one millisecond would order nondeterministically
-        // against the oracle's full-resolution ORDER BY ts
-        val rows = it.toArray.sortBy(r => TimeMicros.micros(r._2))
+    OrderedFold.batch(RunFolds.points(Kernels.bySeries(ts)), "series_id")(_._2)(
+      (sid: String, rows: Iterator[(Long, RunFolds.Point)], _: Option[Unit]) => {
         var num = 0.0 // Σ w_i·x_i
         var den = 0.0 // Σ w_i
-        rows.iterator.map { case (_, t, v) =>
+        // no state to close, so the output streams row by row
+        (None, rows.map { case (_, (_, t, v)) =>
           v match {
             case Some(x) if !x.isNaN =>
               if (adjust) { num = num * decay + newW * x; den = den * decay + newW }
@@ -56,8 +51,8 @@ object Ewma {
               num *= decay; den *= decay // age weights, no observation
           }
           (sid, t, v, if (den > 0.0) Some(num / den) else None)
-        }
-      }
+        })
+      })
       .toDF("series_id", "ts", "value", "ewma")
   }
 
@@ -68,11 +63,10 @@ object Ewma {
     * seeded l_0 = x_0, b_0 = 0 at each series' first non-null sample.
     * Null/NaN samples DO NOT advance the state (they emit the carried
     * level/trend; null before the seed). Sequential per series — the
-    * ewma/d1 per-series-kernel shape: one shuffle on series_id,
-    * embarrassingly parallel across series, one in-memory pass per
-    * series. The op ORDER above is the contract: the DuckDB oracle
-    * runs the identical IEEE sequence (hw1, recursive CTE), so 6dp
-    * outputs hash-match with no per-step rounding needed. */
+    * [[ewmaMean]] shape: one sorted walk per series over one
+    * `series_id` exchange. The op ORDER above is the contract: the
+    * DuckDB oracle runs the identical IEEE sequence (hw1, recursive
+    * CTE), so 6dp outputs hash-match with no per-step rounding needed. */
   def holtLinear(ts: DataFrame, alpha: Double, beta: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1]: $alpha")
     require(beta >= 0.0 && beta <= 1.0, s"beta must be in [0, 1]: $beta")
@@ -80,16 +74,12 @@ object Ewma {
     import spark.implicits._
     val oneMinusAlpha = 1.0 - alpha // Scala-computed (the ew1 DECIMAL trap)
     val oneMinusBeta = 1.0 - beta
-    ts.select(col("series_id"), col("ts"), col("value"))
-      .as[(String, java.sql.Timestamp, Option[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (sid, it) =>
-        // full-microsecond sort (see ewmaMean)
-        val rows = it.toArray.sortBy(r => TimeMicros.micros(r._2))
+    OrderedFold.batch(RunFolds.points(Kernels.bySeries(ts)), "series_id")(_._2)(
+      (sid: String, rows: Iterator[(Long, RunFolds.Point)], _: Option[Unit]) => {
         var seeded = false
         var level = 0.0
         var trend = 0.0
-        rows.iterator.map { case (_, t, v) =>
+        (None, rows.map { case (_, (_, t, v)) =>
           v match {
             case Some(x) if !x.isNaN =>
               if (!seeded) { seeded = true; level = x; trend = 0.0 }
@@ -104,8 +94,8 @@ object Ewma {
                 if (seeded) Some(level) else None,
                 if (seeded) Some(trend) else None)
           }
-        }
-      }
+        })
+      })
       .toDF("series_id", "ts", "value", "level", "trend")
   }
 }

@@ -7,17 +7,18 @@ import org.apache.spark.sql.functions._
 /**
  * L1 kernel library (SURVEY.md §2.1, §7.1): small, composable, pure
  * DataFrame transforms over the canonical frame
- * (series_id STRING, ts TIMESTAMP, value DOUBLE). Every kernel is
- * partitioned by series_id and every detector runs over [[bySeries]],
- * so a plan shuffles exactly once and then parallelizes across series —
- * the scalability story the single-series reference lacks
- * (metevents/events.py:18-22).
+ * (series_id STRING, ts TIMESTAMP, value DOUBLE). Every detector runs
+ * over [[bySeries]], so a plan shuffles exactly once and then
+ * parallelizes across series — the scalability story the single-series
+ * reference lacks (metevents/events.py:18-22). The run detectors walk
+ * each series in one sorted fold ([[RunFolds]]); [[withRunId]] and
+ * [[assembleEvents]] are the window formulation of the same runs, kept
+ * as the fold's test reference and for ad-hoc masks.
  *
- * Skew note: the per-series window sort pins one pathological
- * multi-billion-row series to one executor. For such inputs use
- * [[ChunkedRuns.assembleEventsChunked]] — run ids per time chunk, then
- * an exact boundary merge over the tiny chunk summaries
- * (property-tested identical to this path; see SCALE_NOTES.md).
+ * Skew note: one series is one group, so a pathological
+ * multi-billion-row series runs on one task. The run folds keep O(1)
+ * state per series and Spark's sort spills, so it is slow, not out of
+ * memory (SCALE_NOTES.md).
  */
 object Kernels {
 
@@ -45,16 +46,6 @@ object Kernels {
     * column list for determinism. */
   def seriesWindow(tieBreak: Column*): WindowSpec =
     Window.partitionBy("series_id").orderBy((col("ts") +: tieBreak): _*)
-
-  /** Previous value within the series: pandas `Series.diff()` building
-    * block (metevents/events.py:165,269,314,387). Values are normalized
-    * NaN→null first so a NaN endpoint yields a null diff (pandas: NaN
-    * diff → NaN, and NaN-compare → False downstream), never a NaN that
-    * Spark would order above every numeric threshold. */
-  def withLagDiff(df: DataFrame, diffCol: String = "diff"): DataFrame = {
-    val v = nanToNull(col("value"))
-    df.withColumn(diffCol, v - lag(v, 1).over(seriesWindow()))
-  }
 
   /**
    * Gaps-and-islands run id — the reference's shared grouping primitive

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Event
+import graft.TsPoint
 
 /**
  * Spikes and valleys — SpikeValleyEvent (metevents/events.py:168-248):
@@ -11,16 +11,16 @@ import graft.Event
  * flagged runs become events.
  *
  * Spark shape (SURVEY.md §3.3): the peak kernel is an inherently
- * sequential per-series scan, so it runs inside a column-keyed
- * `groupBy(series_id).as[..].flatMapSortedGroups(ts)` over the
+ * sequential per-series scan, so it runs inside the run detectors'
+ * batch fold ([[graft.streaming.OrderedFold.batch]]) over the
  * detector's one `series_id` exchange ([[Kernels.bySeries]]): Spark
- * sorts each partition by (series_id, ts), then the groups run in
- * parallel across series. (A lambda key, `groupByKey(_._1)`, would plan
- * an `AppendColumns` and its own second exchange.) The kernel buffers
- * one series in memory; this assumes a single series fits an executor
- * (station data: years × daily ≈ 10³–10⁴ points — SURVEY.md §7.4.7).
- * At 100 TB the frame holds millions of series, so the grouping
- * parallelizes across the cluster; no driver collect anywhere.
+ * sorts each partition by (series_id, ts), then the series run in
+ * parallel. The kernel buffers one series in memory; this assumes a
+ * single series fits an executor (station data: years × daily ≈
+ * 10³–10⁴ points — SURVEY.md §7.4.7). At 100 TB the frame holds
+ * millions of series, so the grouping parallelizes across the cluster;
+ * no driver collect anywhere. The mask's flagged runs become events
+ * through d6's step ([[RunFolds.runs]]) and its end-of-input close.
  *
  * Events carry n_points (all samples in the span) and the NaN-skipping
  * total as our EventFrame extension (the reference's BaseTimePeriod has
@@ -40,42 +40,16 @@ case class SpikeValleyEvents(
     val params = FindPeaks.Params(height, threshold, prominence, widthMin, widthMax)
     val spark = ts.sparkSession
     import spark.implicits._
-
-    ts.select(col("series_id"), col("ts"), col("value"))
-      .groupBy(col("series_id"))
-      .as[String, graft.TsPoint]
-      .flatMapSortedGroups(col("ts")) { (sid, it) =>
+    val flaggedRuns = RunFolds.runs(eventType)
+    foldRuns(ts.select(col("series_id"), col("ts"), col("value")).as[TsPoint])(_.ts)(
+      RunFolds.RunFold[TsPoint, RunFolds.RunState]((sid, it, _) => {
         val rows = it.toArray
-        val xs = rows.map(_.value.getOrElse(Double.NaN))
-        val mask = FindPeaks.spikeValleyMask(xs, params)
+        val mask = FindPeaks.spikeValleyMask(rows.map(_._2.value.getOrElse(Double.NaN)), params)
         // contiguous flagged runs → events (group_condition_by_time,
-        // metevents/events.py:189-197)
-        val out = Array.newBuilder[Event]
-        var i = 0
-        while (i < mask.length) {
-          if (mask(i)) {
-            var j = i
-            while (j + 1 < mask.length && mask(j + 1)) j += 1
-            var total = 0.0
-            var any = false
-            var k = i
-            while (k <= j) {
-              val v = xs(k)
-              if (!v.isNaN) { total += v; any = true }
-              k += 1
-            }
-            val start = rows(i).ts
-            val stop = rows(j).ts
-            out += Event(sid, eventType, start, stop,
-              TimeMicros.micros(stop) - TimeMicros.micros(start),
-              (j - i + 1).toLong, if (any) Some(total) else None)
-            i = j + 1
-          } else i += 1
-        }
-        out.result().iterator
-      }(Encoders.product[Event])
-      .toDF()
+        // metevents/events.py:189-197); totals skip NaN
+        flaggedRuns.step(sid, rows.iterator.zip(mask).map { case ((us, p), m) =>
+          (us, (sid, p.ts, p.value.filterNot(_.isNaN), m))
+        }, None)
+      }, flaggedRuns.close))
   }
 }
-
-

@@ -2,9 +2,10 @@ package graft.operators
 
 import java.sql.Timestamp
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{Event, TsPoint}
+import graft.streaming.OrderedFold
 
 /**
  * Storm delineation — StormEvents.find (metevents/events.py:54-121).
@@ -27,11 +28,12 @@ import graft.{Event, TsPoint}
  * previous storm. `total` skips NaN and is 0.0 when no value is
  * present (CumulativePeriod, periods.py:43).
  *
- * Spark shape (SURVEY.md §3.2): one sorted-group fold over the
- * detector's one `series_id` exchange ([[Kernels.bySeries]]):
- * `groupBy(series_id).as[..].flatMapSortedGroups(ts)` plans a sort and
- * a `MapGroups` per partition — no window, no join back to the points,
- * no broadcast. The fold walks each series once, in time order:
+ * Spark shape (SURVEY.md §3.2): one sorted walk per series over the
+ * detector's one `series_id` exchange ([[Kernels.bySeries]]), through
+ * the run detectors' batch fold ([[graft.streaming.OrderedFold.batch]]):
+ * a sort and a `MapGroups` per partition — no window, no join back to
+ * the points, no broadcast. The fold walks each series once, in time
+ * order:
  *  - the back-extension rows are the ones within one step before the
  *    candidate's first row, kept in a small ring (with data denser than
  *    the step there can be several);
@@ -80,17 +82,15 @@ case class StormEvents(
     val spark = ts.sparkSession
     import spark.implicits._
     val fixedStepUs = frequency.map(Steps.parseMicros)
-    ts.select(col("series_id"), col("ts"), col("value"))
-      .groupBy(col("series_id"))
-      .as[String, TsPoint]
-      .flatMapSortedGroups(col("ts")) { (sid, rows) => stormsOf(sid, rows, fixedStepUs) }(
-        Encoders.product[Event])
-      .toDF()
+    OrderedFold.batch(ts.select(col("series_id"), col("ts"), col("value")).as[TsPoint],
+      "series_id")(_.ts)(
+      (sid: String, rows: Iterator[(Long, TsPoint)], _: Option[Unit]) =>
+        (None, stormsOf(sid, rows, fixedStepUs))).toDF()
   }
 
-  /** One series' storms, from its rows in time order. */
+  /** One series' storms, from its rows (with their µs) in time order. */
   private def stormsOf(
-      sid: String, rows: Iterator[TsPoint], fixedStepUs: Option[Long]): Iterator[Event] = {
+      sid: String, rows: Iterator[(Long, TsPoint)], fixedStepUs: Option[Long]): Iterator[Event] = {
     val dtUs = (hoursToStop * Steps.Hour).toLong
     val maxUs = (maxStormHours * Steps.Hour).toLong
     val out = Array.newBuilder[Event]
@@ -119,8 +119,7 @@ case class StormEvents(
       stopUs - TimeMicros.micros(spanStart), stopN, Some(stopTotal))
 
     while (rows.hasNext) {
-      val p = rows.next()
-      val us = TimeMicros.micros(p.ts)
+      val (us, p) = rows.next()
       val v = p.value.getOrElse(Double.NaN)
       if (n == 1L) {
         firstDiff = us - prevUs

@@ -35,7 +35,7 @@ object StreamingAttribution {
     import spark.implicits._
     OrderedFold(events.select("user_id", "ts", "event_id", "event_type", "yu").as[Row])(
       _._1, _._2, _._3)(
-      (uid: Long, rows: Array[(Long, Row)], prev: Option[String]) => {
+      (uid: Long, rows: Iterator[(Long, Row)], prev: Option[String]) => {
         var touch = prev
         val out = Array.newBuilder[Attributed]
         rows.foreach { case (_, (_, _, _, typ, yu)) =>

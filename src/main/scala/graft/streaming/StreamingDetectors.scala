@@ -1,9 +1,11 @@
 package graft.streaming
 
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Event
-import graft.operators.TimeMicros
+import graft.operators.{DataGapEvents, ExtremeChangeEvents, ExtremeValueEvents, FlatLineEvents, TimeMicros}
+import graft.operators.RunFolds._
 
 /**
  * Streaming variants of the detectors (SURVEY.md §2.3 — the reference
@@ -19,9 +21,12 @@ import graft.operators.TimeMicros
  *    post-pass or in the exact stateful variant below.
  *
  *  - [[runEvents]] and the other stateful twins: per-series state in
- *    an [[OrderedFold]] carries the open run ([[RunState]]) across
- *    micro-batches; a non-flagged row closes and emits the run. Used
- *    for the threshold detectors (extreme value: `v > max OR v < min`).
+ *    an [[OrderedFold]] carries the open run across micro-batches; a
+ *    non-flagged row closes and emits the run. The four run twins
+ *    (extreme value, flat line, extreme change, data gap) run their
+ *    batch detector's own step ([[graft.operators.RunFolds]]); only
+ *    the end-of-input close is batch's, so a stream withholds the run
+ *    a series is still inside.
  *
  * Assumptions documented for scale: keys = series_id (state is O(1)
  * per series); within a micro-batch [[OrderedFold]] sorts rows by
@@ -31,171 +36,47 @@ import graft.operators.TimeMicros
  */
 object StreamingDetectors {
 
-  private type Point = (String, java.sql.Timestamp, Option[Double])
-  private type Flagged = (String, java.sql.Timestamp, Option[Double], Boolean)
-
-  /** Open-run state for one series — the open/extend/close machine the
-    * run detectors share: first and last row in epoch µs, point count
-    * and NaN-skipping total. */
-  final case class RunState(startUs: Long, lastUs: Long, n: Long, total: Double, any: Boolean) {
-    def extend(us: Long, v: Option[Double]): RunState =
-      RunState(startUs, us, n + 1L, total + v.getOrElse(0.0), any || v.isDefined)
-    def durationUs: Long = lastUs - startUs
-    def event(sid: String, eventType: String): Event =
-      Event(sid, eventType, TimeMicros.timestamp(startUs), TimeMicros.timestamp(lastUs),
-        durationUs, n, if (any) Some(total) else None)
-  }
-
-  object RunState {
-    /** One row through the machine: a flagged row opens or extends the
-      * run; an unflagged row closes an open run, handing it to `closed`
-      * (which applies the caller's keep rule). */
-    def step(run: Option[RunState], flagged: Boolean, us: Long, v: Option[Double])(
-        closed: RunState => Unit): Option[RunState] =
-      if (flagged) Some(run.getOrElse(RunState(us, us, 0L, 0.0, any = false)).extend(us, v))
-      else { run.foreach(closed); None }
-  }
-
   /** Streaming gaps-and-islands: emit an Event per closed run of rows
     * satisfying `flag` (a boolean column already computed upstream,
     * null-safe). */
-  def runEvents(eventType: String)(flagged: DataFrame): DataFrame = {
-    val spark = flagged.sparkSession
+  def runEvents(eventType: String)(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
     import spark.implicits._
-    OrderedFold(flagged.select(col("series_id"), col("ts"), col("value"), col("flag")).as[Flagged])(
-      _._1, _._2)(
-      (sid: String, rows: Array[(Long, Flagged)], prev: Option[RunState]) => {
-        val out = Array.newBuilder[Event]
-        var run = prev
-        rows.foreach { case (us, (_, _, v, flag)) =>
-          run = RunState.step(run, flag, us, v)(r => out += r.event(sid, eventType))
-        }
-        (run, out.result().iterator)
-      }).toDF()
+    OrderedFold(flagged(df))(_._1, _._2)(runs(eventType).step).toDF()
   }
 
-  /** Extreme-value detector as a stream: null-safe mask then
-    * [[runEvents]]. Works on a streaming or batch canonical frame. */
+  /** Extreme-value detector as a stream: the batch detector's mask,
+    * then [[runEvents]]. Works on a streaming or batch canonical frame. */
   def extremeValue(expectedMax: Double, expectedMin: Double)(ts: DataFrame): DataFrame = {
-    val v = graft.operators.Kernels.nanToNull(col("value"))
-    runEvents("extreme_value")(
-      ts.withColumn("flag",
-        graft.operators.Kernels.safeMask(v > expectedMax || v < expectedMin)))
+    val d = ExtremeValueEvents(expectedMax, expectedMin)
+    runEvents(d.eventType)(ts.withColumn("flag", d.flag))
   }
 
-  /** Diff-state for one series: the last value seen, to compute the
-    * first difference across micro-batch boundaries. */
-  final case class DiffState(lastValue: Option[Double], run: Option[RunState])
-
-  /**
-   * Flat-line detector as a stream: the diff-based mask
-   * (`abs(v − prev) ≤ slopeThresh`) needs the PREVIOUS value, which a
-   * streaming window can't provide across batches — so the fold's
-   * state carries both the last value and the open run. Matches the
-   * batch FlatLineEvents semantics: a missing previous value (or NaN
-   * endpoint) yields flag = false.
-   */
+  /** Flat-line detector as a stream: the fold's state carries the last
+    * value (for the diff) and the open run across micro-batches. */
   def flatLine(minLen: Long, slopeThresh: Double)(ts: DataFrame): DataFrame =
-    diffRunEvents("flat_line", minLen,
-      (prev, cur) => math.abs(cur - prev) <= slopeThresh)(ts)
+    overPoints(FlatLineEvents(minLen, slopeThresh).fold)(ts)
 
   /** Extreme-change detector as a stream — same diff-state machine,
     * the batch ExtremeChangeEvents mask. */
   def extremeChange(
       minLen: Long,
       positiveSlopeThresh: Option[Double],
-      negativeSlopeThresh: Option[Double])(ts: DataFrame): DataFrame = {
-    require(positiveSlopeThresh.isDefined || negativeSlopeThresh.isDefined,
-      "One slope threshold must be provided")
-    diffRunEvents("extreme_change", minLen, (prev, cur) => {
-      val d = cur - prev
-      positiveSlopeThresh.exists(d >= _) || negativeSlopeThresh.exists(d <= _)
-    })(ts)
-  }
+      negativeSlopeThresh: Option[Double])(ts: DataFrame): DataFrame =
+    overPoints(ExtremeChangeEvents(minLen, positiveSlopeThresh, negativeSlopeThresh).fold)(ts)
 
-  /** Shared diff-mask streaming machine: per-series state = (last
-    * value, open run); the mask sees (previous, current) with NaN or
-    * missing endpoints flagged false, like pandas diff-compare. */
-  private def diffRunEvents(
-      eventType: String, minLen: Long,
-      mask: (Double, Double) => Boolean)(ts: DataFrame): DataFrame = {
+  /** Data-gap detection on a stream — both halves of the batch
+    * detector ([[graft.operators.RunFolds.dataGaps]]). */
+  def dataGaps(minLen: Long, expectedFrequency: String)(ts: DataFrame): DataFrame =
+    overPoints(DataGapEvents(minLen, expectedFrequency).fold)(ts)
+
+  /** A diff or gap fold's step over a stream of points, its state
+    * carried per series. */
+  private def overPoints[S <: Product : TypeTag](fold: RunFold[Point, S])(
+      ts: DataFrame): DataFrame = {
     val spark = ts.sparkSession
     import spark.implicits._
-
-    OrderedFold(ts.select(col("series_id"), col("ts"), col("value")).as[Point])(
-      _._1, _._2)(
-      (sid: String, rows: Array[(Long, Point)], prev: Option[DiffState]) => {
-        val out = Array.newBuilder[Event]
-        var st = prev.getOrElse(DiffState(None, None))
-        rows.foreach { case (us, (_, _, v)) =>
-          val flag = (st.lastValue, v) match {
-            case (Some(p), Some(c)) if !p.isNaN && !c.isNaN => mask(p, c)
-            case _ => false
-          }
-          st = DiffState(v, RunState.step(st.run, flag, us, v)(r =>
-            if (r.n >= minLen) out += r.event(sid, eventType)))
-        }
-        (Some(st), out.result().iterator)
-      }).toDF()
-  }
-
-  /** Per-series gap state: the previous row's event µs and
-    * (NaN-canonicalized) value for the ts-gap endpoint total, plus the
-    * open missing-value run for the NaN-run half. */
-  final case class GapState(
-      lastUs: Long, lastVal: Option[Double], nanRun: Option[RunState])
-
-  /**
-   * Data-gap detection on a stream — BOTH halves of the batch
-   * detector (metevents/events.py:269-286):
-   *
-   *  (a) missing-value runs: consecutive rows whose value is null or
-   *      NaN, closed by the next present value, emitted with the run's
-   *      own span/point count and a null total (every member is missing,
-   *      so the NaN-skip sum is empty) — exactly the batch
-   *      `assembleEvents(withRunId(value missing))`;
-   *  (b) timestamp gaps: a point arriving more than
-   *      `expectedFrequency` after its predecessor emits the synthetic
-   *      two-point event spanning last-present → first-present, with
-   *      the NaN-skipping sum of the two endpoint values (null only
-   *      when both endpoints are missing).
-   *
-   * Both halves ride the batch duration filter
-   * (`duration ≥ minLen · step`). The streaming fuzz property
-   * (StreamingParityFuzzSpec) found the r19 twin emitting null totals
-   * and missing half (a) entirely — this version is spec-pinned equal
-   * to the batch detector on randomized series.
-   */
-  def dataGaps(minLen: Long, expectedFrequency: String)(ts: DataFrame): DataFrame = {
-    val stepUs = graft.operators.Steps.parseMicros(expectedFrequency)
-    val spark = ts.sparkSession
-    import spark.implicits._
-
-    OrderedFold(ts.select(col("series_id"), col("ts"), col("value")).as[Point])(
-      _._1, _._2)(
-      (sid: String, rows: Array[(Long, Point)], prev: Option[GapState]) => {
-        val out = Array.newBuilder[Event]
-        var st = prev
-        rows.foreach { case (us, (_, t, vRaw)) =>
-          val v = vRaw.filterNot(_.isNaN) // NaN canonicalized to missing
-          // (b) ts gap vs the previous row, NaN-skip endpoint total
-          st.foreach { p =>
-            val durUs = us - p.lastUs
-            if (durUs > stepUs && durUs >= minLen * stepUs) {
-              val total = (p.lastVal, v) match {
-                case (None, None) => None
-                case (a, b) => Some(a.getOrElse(0.0) + b.getOrElse(0.0))
-              }
-              out += Event(sid, "data_gap", TimeMicros.timestamp(p.lastUs), t, durUs, 2L, total)
-            }
-          }
-          // (a) missing-value run
-          val nanRun = RunState.step(st.flatMap(_.nanRun), v.isEmpty, us, None)(r =>
-            if (r.durationUs >= minLen * stepUs) out += r.event(sid, "data_gap"))
-          st = Some(GapState(us, v, nanRun))
-        }
-        (st, out.result().iterator)
-      }).toDF()
+    OrderedFold(points(ts))(_._1, _._2)(fold.step).toDF()
   }
 
   /** Exact storm-fold state for one series (metevents/events.py:85-121
@@ -271,7 +152,7 @@ object StreamingDetectors {
 
     OrderedFold(ts.select(col("series_id"), col("ts"), col("value")).as[Point])(
       _._1, _._2)(
-      (sid: String, rows: Array[(Long, Point)], prev: Option[StormState]) => {
+      (sid: String, rows: Iterator[(Long, Point)], prev: Option[StormState]) => {
         val out = Array.newBuilder[Event]
         var st = prev.getOrElse(StormState.empty)
         rows.foreach { case (tUs, (_, _, vOpt)) =>
@@ -381,7 +262,7 @@ object StreamingDetectors {
 
     OrderedFold(ts.select(col("series_id"), col("ts"), col("value")).as[Point])(
       _._1, _._2)(
-      (sid: String, rows: Array[(Long, Point)], prev: Option[SvState]) => {
+      (sid: String, rows: Iterator[(Long, Point)], prev: Option[SvState]) => {
         val incoming = rows.map { case (us, (_, _, v)) => (us, v) }
         // nearly-sorted input (retained window is sorted, incoming
         // appends) — TimSort's run detection keeps this ~O(n)
@@ -605,12 +486,12 @@ object StreamingDetectors {
     OrderedFold(ts.select(col("series_id"), col("ts"),
         graft.operators.Kernels.nanToNull(col("value")).as("value")).as[Point])(
       _._1, _._2)(
-      (sid: String, rows: Array[(Long, Point)], prev: Option[Double]) => {
+      (sid: String, rows: Iterator[(Long, Point)], prev: Option[Double]) => {
         var last = prev
         val out = rows.map { case (_, (_, t, v)) =>
           if (v.isDefined) last = v
           (sid, t, v, last)
-        }
+        }.toArray
         (last, out.iterator)
       }).toDF("series_id", "ts", "value", "value_filled")
   }

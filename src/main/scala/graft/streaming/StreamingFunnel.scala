@@ -44,7 +44,7 @@ object StreamingFunnel {
         .select(col("user_id").cast("long"), col("ts"),
           col("event_id").cast("long"), col("event_type"))
         .as[Row])(_._1, _._2, _._3)(
-      (uid: Long, rows: Array[(Long, Row)], prev: Option[FunnelState]) => {
+      (uid: Long, rows: Iterator[(Long, Row)], prev: Option[FunnelState]) => {
         val reached = prev.map(_.reached.clone())
           .getOrElse(Array.fill(stages.length)(false))
         val out = Array.newBuilder[FunnelReach]
@@ -93,7 +93,7 @@ object StreamingFunnel {
         .select(col("user_id").cast("long"), col("ts"),
           col("event_id").cast("long"), col("event_type"))
         .as[Row])(_._1, _._2, _._3)(
-      (uid: Long, rows: Array[(Long, Row)], prev: Option[SessionFunnelState]) => {
+      (uid: Long, rows: Iterator[(Long, Row)], prev: Option[SessionFunnelState]) => {
         var st = prev.map(s => s.copy(reached = s.reached.clone()))
           .getOrElse(SessionFunnelState(
             0L, Long.MinValue, Array.fill(stages.length)(false)))

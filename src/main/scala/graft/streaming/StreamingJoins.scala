@@ -211,7 +211,7 @@ object StreamingJoins {
     // tie = side: right rows (side 0) sort before left rows at the
     // same µs — the batch inclusive-<= tie behavior
     OrderedFold(l.unionByName(r).as[Row])(_._1, _._2, _._4.toLong)(
-      (sid: String, rows: Array[(Long, Row)], state: Option[AsofJoinState]) => {
+      (sid: String, rows: Iterator[(Long, Row)], state: Option[AsofJoinState]) => {
         val prev = state.getOrElse(AsofJoinState(Long.MinValue, Nil, Nil))
         // merge: carried buffer ∪ this batch's rights, ascending.
         // Each side is in order per series, so batch rights append

@@ -37,7 +37,7 @@ object StreamingPaths {
     import spark.implicits._
     OrderedFold(events.select("user_id", "ts", "event_id", "event_type").as[Row])(
       _._1, _._2, _._3)(
-      (uid: Long, rows: Array[(Long, Row)], prev: Option[String]) => {
+      (uid: Long, rows: Iterator[(Long, Row)], prev: Option[String]) => {
         val out = Array.newBuilder[Transition]
         var last = prev
         rows.foreach { case (_, (_, _, _, typ)) =>

@@ -38,7 +38,7 @@ object StreamingScd {
     import spark.implicits._
     OrderedFold(events.select("user_id", "ts", "event_id", "event_type").as[Row])(
       _._1, _._2, _._3)(
-      (uid: Long, rows: Array[(Long, Row)], prev: Option[OpenVersion]) => {
+      (uid: Long, rows: Iterator[(Long, Row)], prev: Option[OpenVersion]) => {
         val out = Array.newBuilder[ClosedVersion]
         var open = prev
         rows.foreach { case (us, (_, _, _, typ)) =>

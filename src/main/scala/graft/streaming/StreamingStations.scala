@@ -35,7 +35,7 @@ object StreamingStations {
 
     OrderedFold(accum.select(col("station_id"), col("ts"), col("accum")).as[Row])(
       _._1, _._2)(
-      (sid: String, rows: Array[(Long, Row)], state: Option[AccumState]) => {
+      (sid: String, rows: Iterator[(Long, Row)], state: Option[AccumState]) => {
         var prev = state.flatMap(_.lastAccum)
         var seen = state.isDefined
         val out = rows.map { case (_, (_, ts, a)) =>
@@ -46,7 +46,7 @@ object StreamingStations {
           seen = true
           prev = a
           (sid, ts, diff)
-        }
+        }.toArray
         (Some(AccumState(prev)), out.iterator)
       })
       .toDF("series_id", "ts", "value")

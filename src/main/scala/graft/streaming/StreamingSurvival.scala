@@ -53,7 +53,7 @@ object StreamingSurvival {
     import spark.implicits._
     OrderedFold(events.select("user_id", "ts", "event_id", "event_type").as[Row])(
       _._1, _._2, _._3)(
-      (uid: Long, rows: Array[(Long, Row)], prev: Option[SurvivalState]) => {
+      (uid: Long, rows: Iterator[(Long, Row)], prev: Option[SurvivalState]) => {
         var st = prev.getOrElse(SurvivalState(Long.MinValue, false, Long.MinValue))
         val out = Array.newBuilder[Conversion]
         def emit(deltaUs: Long): Unit = {

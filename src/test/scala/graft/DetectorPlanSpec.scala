@@ -3,20 +3,24 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every detector key shuffles once, on every core: after execution its
-  * plan holds exactly one `series_id` hash exchange with the session's
-  * partition count (a reused exchange does not count), no broadcast, one
-  * parquet scan, and AQE leaves the reduce side uncoalesced. */
+/** Every detector key, and the per-series recurrences ew1/hw1, shuffles
+  * once, on every core: after execution its plan holds exactly one
+  * `series_id` hash exchange with the session's partition count (a
+  * reused exchange does not count), no broadcast, one parquet scan, and
+  * AQE leaves the reduce side uncoalesced. The run detectors d4–d7 walk
+  * each series in one sorted fold: one sort and no window. */
 class DetectorPlanSpec extends AnyFunSuite with SparkTestBase {
 
   private val keys = Seq("d1_storm", "d3_spike_valley", "d4_data_gap", "d5_flat_line",
-    "d6_extreme_value", "d7_extreme_change", "u1_infer_step")
+    "d6_extreme_value", "d7_extreme_change", "u1_infer_step", "ew1_ewma", "hw1_holt")
+  private val runFolds = Set("d4_data_gap", "d5_flat_line", "d6_extreme_value", "d7_extreme_change")
 
   /** 12 hourly series with storms, gaps, flat runs and spikes, as the
     * `events` parquet table the detector keys read. */
@@ -58,5 +62,9 @@ class DetectorPlanSpec extends AnyFunSuite with SparkTestBase {
       case r: AQEShuffleReadExec if r.isCoalescedRead || r.hasCoalescedPartition => r
     }
     assert(coalesced.isEmpty, s"$key coalesced reads: $coalesced")
+    if (runFolds(key)) {
+      assert(plan.collect { case w: WindowExec => w }.isEmpty, s"$key windows")
+      assert(plan.count(_.isInstanceOf[SortExec]) == 1, s"$key sorts")
+    }
   }
 }

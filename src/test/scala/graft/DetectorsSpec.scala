@@ -114,4 +114,30 @@ class DetectorsSpec extends AnyFunSuite with SparkTestBase {
     assert(events.size == 1 && events.head.total.contains(5.0))
     assert(events.head.n_points == 4L)
   }
+
+  // --- end of input: a series that ends inside a run emits it --------
+  test("trailing run: d4-d7 emit the run a series ends inside") {
+    val d6 = collectEvents(ExtremeValueEvents(expectedMax = 600.0, expectedMin = 0.0)
+      .detect(dailySeries(Seq(1.0, 2.0, 3.0, 700.0, 701.0))))
+    assert(d6 == Seq(Event("s1", "extreme_value", day(3), day(4), DayUs, 2L, Some(1401.0))))
+    val d5 = collectEvents(FlatLineEvents(minLen = 2L, slopeThresh = 0.0)
+      .detect(dailySeries(Seq(1.0, 2.0, 3.0, 5.0, 5.0, 5.0))))
+    assert(d5 == Seq(Event("s1", "flat_line", day(4), day(5), DayUs, 2L, Some(10.0))))
+    val d7 = collectEvents(ExtremeChangeEvents(minLen = 1L, positiveSlopeThresh = Some(100.0),
+      negativeSlopeThresh = None).detect(dailySeries(Seq(0.0, 1.0, 2.0, 500.0))))
+    assert(d7 == Seq(Event("s1", "extreme_change", day(3), day(3), 0L, 1L, Some(500.0))))
+    // d4: the series ends on missing values
+    val d4 = collectEvents(DataGapEvents(minLen = 2L, expectedFrequency = "1D")
+      .detect(dailySeries(Seq(1.0, 2.0, Double.NaN, Double.NaN, Double.NaN))))
+    assert(d4 == Seq(Event("s1", "data_gap", day(2), day(4), 2 * DayUs, 3L, None)))
+  }
+
+  test("extreme change: an inf - inf diff is NaN and unflagged, as in pandas") {
+    // diffs: -, +inf, NaN, -inf. Spark orders NaN above every number, so
+    // a window `diff >= 100` would flag day 2 too; NaN-compare is False.
+    val inf = Double.PositiveInfinity
+    val events = collectEvents(ExtremeChangeEvents(minLen = 1L, positiveSlopeThresh = Some(100.0),
+      negativeSlopeThresh = None).detect(dailySeries(Seq(0.0, inf, inf, 0.0))))
+    assert(events == Seq(Event("s1", "extreme_change", day(1), day(1), 0L, 1L, Some(inf))))
+  }
 }

@@ -42,6 +42,14 @@ import scala.util.Random
   *    and every raw-batch event left unchanged by the augmentation
   *    (the "stable goldens") must have been emitted.
   *
+  * Batch and stream run one shared step, so their equality checks only
+  * how micro-batch boundaries split it. Each scenario therefore also
+  * checks the step itself: the four batch detectors on the RAW series
+  * (which may end inside a run, so the end-of-input close is exercised)
+  * must equal the window formulation of the same runs — `withRunId` +
+  * `assembleEvents` over an inline `lag` diff, and d4's `lag` ts-gap
+  * select — exactly.
+  *
   * Values sit on the quarter grid so double totals are exact under
   * any accumulation order — any mismatch is semantics, never ulps.
   * Seed and round count are env-tunable (GRAFT_STREAM_FUZZ_SEED /
@@ -232,6 +240,35 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** The window formulation of the four run detectors, in the order of
+    * the test's cases: xval, flat, xchg, gap. */
+  private def windowReference(sc: Scenario, df: DataFrame): Seq[DataFrame] = {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Kernels._
+    val w = seriesWindow()
+    val v = nanToNull(col("value"))
+    val d = df.withColumn("diff", v - lag(v, 1).over(w))
+    val pos = sc.posThresh.map(t => col("diff") >= t).getOrElse(lit(false))
+    val neg = sc.negThresh.map(t => col("diff") <= t).getOrElse(lit(false))
+    val pv = nanToNull(col("prev_val"))
+    val gapUs = unix_micros(col("ts")) - unix_micros(col("prev_ts"))
+    val tsGaps = df
+      .withColumn("prev_ts", lag(col("ts"), 1).over(w))
+      .withColumn("prev_val", lag(col("value"), 1).over(w))
+      .where(col("prev_ts").isNotNull && gapUs > sc.stepUs)
+      .select(col("series_id"), lit("data_gap").as("event_type"),
+        col("prev_ts").as("start"), col("ts").as("stop"), gapUs.as("duration_us"),
+        lit(2L).as("n_points"),
+        when(v.isNull && pv.isNull, lit(null))
+          .otherwise(coalesce(v, lit(0.0)) + coalesce(pv, lit(0.0))).as("total"))
+    Seq(
+      assembleEvents(withRunId(df, v > sc.expectedMax || v < sc.expectedMin), "extreme_value"),
+      assembleEvents(withRunId(d, abs(col("diff")) <= sc.flatThresh), "flat_line", sc.flatMinLen),
+      assembleEvents(withRunId(d, safeMask(pos) || safeMask(neg)), "extreme_change", sc.chgMinLen),
+      assembleEvents(withRunId(df, col("value").isNull || isnan(col("value"))), "data_gap")
+        .unionByName(tsGaps).where(col("duration_us") >= sc.gapMinLen * sc.stepUs))
+  }
+
   test(s"randomized batch==stream parity: 4 detectors + spikeValley (seed=$seed)") {
     (0 until rounds).foreach { i =>
       val sc = mkScenario(i)
@@ -260,6 +297,17 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
              |streamed (${streamed.size}): ${streamed.mkString("\n  ", "\n  ", "")}
              |batch (${batch.size}): ${batch.mkString("\n  ", "\n  ", "")}
              |feed: ${sc.augmented.mkString(", ")}""".stripMargin)
+      }
+
+      // -- the shared step against the window formulation -----------
+      cases.zip(windowReference(sc, rawDf)).foreach { case ((tag, _, batchMk), ref) =>
+        val batch = batchEvents(batchMk(rawDf))
+        val window = batchEvents(ref)
+        assert(batch == window,
+          s"""$tag batch != window reference (${describe(sc)})
+             |batch (${batch.size}): ${batch.mkString("\n  ", "\n  ", "")}
+             |window (${window.size}): ${window.mkString("\n  ", "\n  ", "")}
+             |feed: ${sc.raw.mkString(", ")}""".stripMargin)
       }
 
       // -- spike-valley: subset + tail-only + stable goldens ---------

@@ -13,7 +13,9 @@
 # ratio change/base, how many pairs the change won, and whether the
 # claim rule holds (the change better on at least 9 of 10 pairs, and
 # its median better than the base median by more than the base IQR).
-# It also prints each side's failed_ops. Nothing under perfbench/ is
+# It also prints each side's failed_ops, and per key the median call
+# time of each side (successful calls of passes after the first, over
+# every seed) with the ratio change/base. Nothing under perfbench/ is
 # written besides what run.py itself writes under .bench_build/.
 # Set PERF_PAIRS_REPORT_ONLY=1 to skip the runs and only report on the
 # records already there.
@@ -90,4 +92,20 @@ for m in metrics:
 for side, i in (("base", 0), ("change", 1)):
     failed = [recs[s][i].get("failed_ops", 0) for s in seeds]
     print(f"  failed_ops {side}: {failed}")
+
+def call_medians(i):
+    by_key = {}
+    for s in seeds:
+        for c in recs[s][i]["calls"]:
+            if c["pass"] > 0 and c["ok"]:
+                by_key.setdefault(c["key"], []).append(c["s"])
+    return {k: statistics.median(v) for k, v in by_key.items()}
+
+cb, cc = call_medians(0), call_medians(1)
+print("  per-key call median (s): key  base  change  change/base")
+for key in sorted(set(cb) | set(cc)):
+    b, c = cb.get(key), cc.get(key)
+    ratio = f"{c / b:.3f}" if b and c else "-"
+    fmt = lambda x: f"{x:.4f}" if x is not None else "-"
+    print(f"    {key:20s} {fmt(b)}  {fmt(c)}  {ratio}")
 EOF
