@@ -1211,25 +1211,6 @@ object Dedup {
   }
 
   /**
-   * Bounded-round K-CORE membership over an undirected pair graph —
-   * tc1's cohesion triage taken from counting to CLASSIFying: peel
-   * nodes of induced degree < k for `rounds` rounds (each removal
-   * can drop neighbors below k, hence the iteration); survivors of
-   * the final round are the round-bounded k-core. With enough rounds
-   * this is the exact k-core; the ROUND COUNT is part of the
-   * operator's contract (like [[bfsDistance]]'s maxHops) so the job
-   * graph is static and the oracle can unroll the identical rounds.
-   * For near-dup graphs, core members are the dense clique templates
-   * (mass-produced boilerplate families), peripheral nodes the
-   * one-off variants.
-   *
-   * Scale shape: per round two semi joins (restrict edges to
-   * surviving endpoints — keyed on the node id) and one
-   * partial-combined degree count, each behind the [[materialize]]
-   * barrier; statically rounds·3 keyed exchanges, no corpus-wide
-   * single partition, no convergence-test job.
-   */
-  /**
    * LABEL-PROPAGATION COMMUNITIES over the near-dup pair graph
    * (Raghavan et al. 2007, synchronous variant with a deterministic
    * tie rule): every node starts labeled with its own id; each round
@@ -1300,6 +1281,32 @@ object Dedup {
         col("community_size"))
   }
 
+  /**
+   * Bounded-round K-CORE membership over an undirected pair graph —
+   * tc1's cohesion triage taken from counting to CLASSIFying: peel
+   * nodes of induced degree < k for `rounds` rounds (each removal
+   * can drop neighbors below k, hence the iteration); survivors of
+   * the final round are the round-bounded k-core,
+   * core_r = {v ∈ core_{r−1} : |N(v) ∩ core_{r−1}| ≥ k}. With enough
+   * rounds this is the exact k-core; the ROUND COUNT is part of the
+   * operator's contract (like [[bfsDistance]]'s maxHops) so the job
+   * graph is static and the oracle can unroll the identical rounds.
+   * For near-dup graphs, core members are the dense clique templates
+   * (mass-produced boilerplate families), peripheral nodes the
+   * one-off variants.
+   *
+   * Output: (doc_id, deg, in_core) for every node of the graph.
+   *
+   * Scale shape: round 1 counts each node's rows of the
+   * endpoint-exploded edge list, which is its degree. Each later peel
+   * round is ONE vertex-centric message pass: a sort-merge semi join
+   * of the edge list against the previous core (co-partitioned with
+   * the edge list's `id` pin, never a broadcast), then one
+   * partial-combined count keyed on the node id. Above the pin gate
+   * that is statically rounds−1 keyed exchanges chained in one job
+   * graph: no per-round barrier, no corpus-wide single partition, no
+   * convergence-test job.
+   */
   def kCore(pairs: DataFrame, k: Int, rounds: Int,
       sizeHint: Option[DataFrame] = None): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 32,
@@ -1308,41 +1315,44 @@ object Dedup {
         least(col("doc_a"), col("doc_b")).as("a"),
         greatest(col("doc_a"), col("doc_b")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-    // ONE endpoint-exploded membership join per peel round instead of
-    // two semi-joins (guide §2.4): m carries each edge twice — once
-    // per endpoint — so `m ⋉ core on id` marks surviving endpoints
-    // and the (a,b) count==2 keeps exactly the edges with BOTH
-    // endpoints alive (a<b and distinct edges make the count exact).
-    // core then has exactly ONE consumer per round (the next
-    // semi-join), so the per-round materialize barrier is GONE and
-    // all rounds chain into one job of statically rounds·3 keyed
-    // exchanges — the pr1/bfs1 chaining shape (r20). m is
-    // loop-invariant and multi-consumed across rounds, so it is
-    // pinned BY THE JOIN KEY id above the size gate (the kc1 pin
-    // discipline: the big side pays its shuffle+sort once, not per
-    // round). A/B'd r21 vs the old two-semi-join + per-round-barrier
-    // shape: sf0.1 steady state 1.48 s / 14 jobs vs 2.23 s / 47 jobs;
-    // 10M edges 18.3 s vs 18.0 s mean of 2 (a wash inside the smoke's
-    // swing) — the fused form wins on job count and loses nothing at
-    // scale.
+    // m carries each distinct edge a<b twice, once per endpoint `id`.
+    // It is loop-invariant and read once per round, so it is pinned BY
+    // the semi join's key id above the size gate: it pays its
+    // shuffle+sort once, and every round's merge join reads it in
+    // place.
     val m = graft.Materialize.persistPartitionedAbove(
       undRaw.select(col("a"), col("b"),
         explode(array(col("a"), col("b"))).as("id")),
       "id", sizeOf = sizeHint.getOrElse(pairs))
-    val nodes = materialize(
-      m.groupBy(col("id")).agg(count(lit(1)).as("deg")))
-    var core = nodes.select(col("id"))
-    for (_ <- 1 to rounds) {
-      val act = m
-        .join(core, Seq("id"), "left_semi")
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n2"))
-        .where(col("n2") === 2)
-      core = act
-        .select(explode(array(col("a"), col("b"))).as("id"))
-        .groupBy(col("id")).agg(count(lit(1)).as("c"))
-        .where(col("c") >= k).select(col("id"))
+    // Round 1: a node's degree is its row count in m, and core_1 is the
+    // nodes of degree >= k. Counted on m's id pin, this needs no
+    // exchange above the gate. (The same count as a message pass would
+    // need one, and AQE does not reuse an exchange over a cached-table
+    // stage, so the output's second read of it would run it twice.)
+    val degrees = m.groupBy(col("id")).agg(count(lit(1)).as("deg"))
+    var core = degrees.where(col("deg") >= k).select(col("id"))
+    // Every later round is one message pass over the rows of m whose id
+    // survived the last round: each tells its other endpoint "one live
+    // neighbour" and tells `id` "alive". Grouped on the node id, `n` is
+    // |N(v) ∩ core| and `alive` is v ∈ core, so the round keeps the
+    // alive nodes with n >= k. The `merge` hint keeps the semi join a
+    // sort-merge join on m's id pin: AQE would otherwise broadcast the
+    // small core at run time (one more job per round). Each core has
+    // ONE consumer (the next semi join), so the rounds chain with no
+    // barrier and the plan does not grow with `rounds`.
+    for (_ <- 2 to rounds) {
+      core = m.join(core.hint("merge"), Seq("id"), "left_semi")
+        .select(inline(array(
+          struct(when(col("id") === col("a"), col("b")).otherwise(col("a")).as("id"),
+            lit(false).as("self")),
+          struct(col("id"), lit(true).as("self")))))
+        .groupBy(col("id"))
+        .agg(count(when(!col("self"), lit(1))).as("n"), max(col("self")).as("alive"))
+        .where(col("alive") && col("n") >= k).select(col("id"))
     }
-    nodes.join(core.withColumn("inc", lit(true)), Seq("id"), "left")
+    // both sides are already partitioned on id: a merge join needs no
+    // exchange, where a runtime broadcast of the core would add a job
+    degrees.join(core.withColumn("inc", lit(true)).hint("merge"), Seq("id"), "left")
       .select(col("id").as("doc_id"), col("deg"),
         coalesce(col("inc"), lit(false)).as("in_core"))
   }

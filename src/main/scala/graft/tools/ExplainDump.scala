@@ -10,6 +10,16 @@ import org.apache.spark.sql.execution.ExplainMode
   * optimization rounds commit. Usage:
   *   sbt "runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> [key ...]"
   * writes <outDir>/<key>_<suffix>.txt per key.
+  *
+  * The frames are not executed, so each file holds the INITIAL
+  * adaptive plan (`isFinalPlan=false`). What AQE decides at run time
+  * does not show there: a sort-merge join it turns into a broadcast,
+  * an exchange it reuses, a read it coalesces. A dump can therefore
+  * count an exchange that execution reuses, or miss a broadcast that
+  * execution adds. Evidence about executed plans comes from specs that
+  * collect the frame and read its final plan (`DetectorPlanSpec`,
+  * `KCoreSpec`); a masked dump diff is a check that a change left the
+  * other keys' initial plans alone.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {

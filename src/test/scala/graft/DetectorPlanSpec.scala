@@ -3,8 +3,8 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
@@ -39,18 +39,10 @@ class DetectorPlanSpec extends AnyFunSuite with SparkTestBase {
     d
   }
 
-  /** The executed plan's nodes, through AQE query stages; a reused
-    * exchange is a leaf, so its subtree is not counted twice. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case s: QueryStageExec => s +: nodes(s.plan)
-    case other => other +: other.children.flatMap(nodes)
-  }
-
   for (key <- keys) test(s"$key: one series_id exchange, uncoalesced on 4 partitions") {
     val df = SparkEntry.queries(key)(spark, dir)
     assert(df.collect().nonEmpty, key)
-    val plan = nodes(df.queryExecution.executedPlan)
+    val plan = executedNodes(df.queryExecution.executedPlan)
     val shuffles = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
     val bySeries = shuffles.collect {
       case HashPartitioning(Seq(a: Attribute), 4) if a.name == "series_id" => a

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import java.sql.Timestamp
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 
@@ -46,4 +48,12 @@ trait SparkTestBase {
   }
 
   val DayUs: Long = 86400L * 1000000L
+
+  /** An executed plan's nodes, through AQE query stages; a reused
+    * exchange is a leaf, so its subtree is not counted twice. */
+  def executedNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => executedNodes(a.executedPlan)
+    case s: QueryStageExec => s +: executedNodes(s.plan)
+    case other => other +: other.children.flatMap(executedNodes)
+  }
 }

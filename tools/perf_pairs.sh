@@ -13,9 +13,11 @@
 # ratio change/base, how many pairs the change won, and whether the
 # claim rule holds (the change better on at least 9 of 10 pairs, and
 # its median better than the base median by more than the base IQR).
-# It also prints each side's failed_ops, and per key the median call
-# time of each side (successful calls of passes after the first, over
-# every seed) with the ratio change/base. Nothing under perfbench/ is
+# It also prints each side's failed_ops, each side's Spark codegen
+# compilations per measured pass for every seed (the passes'
+# `codegen_compiles`), and per key the median call time of each side
+# (successful calls of passes after the first, over every seed) with
+# the ratio change/base. Nothing under perfbench/ is
 # written besides what run.py itself writes under .bench_build/.
 # Set PERF_PAIRS_REPORT_ONLY=1 to skip the runs and only report on the
 # records already there.
@@ -92,6 +94,12 @@ for m in metrics:
 for side, i in (("base", 0), ("change", 1)):
     failed = [recs[s][i].get("failed_ops", 0) for s in seeds]
     print(f"  failed_ops {side}: {failed}")
+
+print("  codegen compiles per measured pass: seed  base  change")
+for s in seeds:
+    cg = [",".join(str(p["codegen_compiles"]) for p in recs[s][i]["passes"] if not p["traced"])
+          for i in (0, 1)]
+    print(f"    {s}  {cg[0]}  {cg[1]}")
 
 def call_medians(i):
     by_key = {}
