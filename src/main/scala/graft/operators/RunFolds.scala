@@ -1,20 +1,22 @@
 package graft.operators
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
 import graft.Event
 
 /**
- * The run detectors' per-series steps, each written once and driven
- * twice by [[graft.streaming.OrderedFold]]: in batch by the detectors
- * (d4–d7, and d3 over its peak mask), from no state, and by their
- * streaming twins in [[graft.streaming.StreamingDetectors]], from the
- * state carried across micro-batches. Each step walks one series in
- * event-time order — the reference's `group_condition_by_time`
- * (metevents/events.py:39-47) — with every row's epoch µs, and builds
+ * The ordered detectors' per-series steps, each written once and
+ * driven twice by [[graft.streaming.OrderedFold]]: in batch by the
+ * detectors (d1, d4–d7, and d3 over its peak mask), from no state, and
+ * by their streaming twins in [[graft.streaming.StreamingDetectors]],
+ * from the state carried across micro-batches. Each step walks one
+ * series in event-time order — the reference's `group_condition_by_time`
+ * (metevents/events.py:39-47), or the storm walk of `StormEvents.find`
+ * (metevents/events.py:54-121) — with every row's epoch µs, and builds
  * its output eagerly. Its `close` runs at end of input, which only
- * batch reaches: it emits the series' open run under the same keep
- * rule as a run that a row closes. A stream withholds that run.
+ * batch reaches: it emits the series' open run (or final storm) under
+ * the same keep rule as one that a row closes. A stream withholds it.
  */
 object RunFolds {
 
@@ -151,5 +153,133 @@ object RunFolds {
         (st, out.result().iterator)
       },
       (sid, st) => st.nanRun.iterator.flatMap(kept(sid, _)))
+  }
+
+  /** Storm-walk state for one series: the walk's locals between two
+    * calls of its step. `n` rows seen, the previous row's µs and the
+    * first and latest diffs (for step inference), the step, and the
+    * prefix sum `cum` of NaN-as-zero values from the series head; the
+    * open group and candidate (its start, the prefix sum before it, its
+    * span start and the span's rows and NaN-skipping total so far); the
+    * latest group stop with the prefix sum and the span's rows and total
+    * up to it; and `back`, the (µs, value) rows within one step before
+    * the next row. */
+  final case class StormState(
+      n: Long, prevUs: Long, firstDiff: Long, lastDiff: Long, stepUs: Long, cum: Double,
+      inGroup: Boolean, haveCand: Boolean, candStartUs: Long, candCumExcl: Double,
+      spanStartUs: Long, spanN: Long, spanTotal: Double,
+      stopUs: Long, cumAtStop: Double, stopN: Long, stopTotal: Double,
+      back: Seq[(Long, Double)])
+
+  /**
+   * The storm walk (d1, [[StormEvents]]): one pass over a series in
+   * time order, closing a storm when the next group starts and the
+   * close test holds; `close` emits the final candidate (the final
+   * group always closes, metevents/events.py:114).
+   *  - The back-extension rows are the ones within one step before the
+   *    candidate's first row, kept in a small ring (with data denser than
+   *    the step there can be several).
+   *  - With `fixedStepUs = None` the step is pandas' inferred one
+   *    ([[Kernels.inferStep]]: the one distinct diff among d_1..d_{n-2},
+   *    then [[Steps.resolutionStep]]). Inference holds only when every
+   *    diff but the last equals d_1, so d_1 fixes the step from the
+   *    second row on; the step drops the whole series (no state, no
+   *    events) the moment a later diff differs, and `close` emits
+   *    nothing for a series of fewer than three rows. Both are batch
+   *    only: the streaming twin always passes a step.
+   */
+  def storms(
+      instantMassToStart: Double,
+      minStormTotal: Double,
+      hoursToStop: Double,
+      maxStormHours: Double,
+      fixedStepUs: Option[Long]): RunFold[Point, StormState] = {
+    val dtUs = (hoursToStop * Steps.Hour).toLong
+    val maxUs = (maxStormHours * Steps.Hour).toLong
+    val empty = StormState(0L, 0L, 0L, 0L, fixedStepUs.getOrElse(0L), 0.0,
+      inGroup = false, haveCand = false, 0L, 0.0, 0L, 0L, 0.0, 0L, 0.0, 0L, 0.0, Nil)
+    def event(sid: String, startUs: Long, stopUs: Long, n: Long, total: Double): Event =
+      Event(sid, "storm", TimeMicros.timestamp(startUs), TimeMicros.timestamp(stopUs),
+        stopUs - startUs, n, Some(total))
+
+    def step(sid: String, rows: Iterator[(Long, Point)], prev: Option[StormState])
+        : (Option[StormState], Iterator[Event]) = {
+      val s = prev.getOrElse(empty)
+      var n = s.n
+      var prevUs = s.prevUs
+      var firstDiff = s.firstDiff
+      var lastDiff = s.lastDiff // the latest row's diff; it counts once a row follows
+      var stepUs = s.stepUs
+      var cum = s.cum
+      var inGroup = s.inGroup
+      var haveCand = s.haveCand
+      var candStartUs = s.candStartUs
+      var candCumExcl = s.candCumExcl
+      var spanStartUs = s.spanStartUs
+      var spanN = s.spanN // rows from the span start through the current row
+      var spanTotal = s.spanTotal
+      var stopUs = s.stopUs // the latest group's stop, and the span up to it
+      var cumAtStop = s.cumAtStop
+      var stopN = s.stopN
+      var stopTotal = s.stopTotal
+      val back = mutable.ArrayDeque.from(s.back)
+      val out = Array.newBuilder[Event]
+
+      while (rows.hasNext) {
+        val (us, (_, _, value)) = rows.next()
+        val v = value.getOrElse(Double.NaN)
+        if (n == 1L) {
+          firstDiff = us - prevUs
+          if (fixedStepUs.isEmpty) stepUs = Steps.resolutionStep(firstDiff)
+        } else if (n >= 2L && fixedStepUs.isEmpty && lastDiff != firstDiff) {
+          return (None, Iterator.empty) // two distinct diffs: no inferable step
+        }
+        lastDiff = us - prevUs
+        while (back.nonEmpty && back.head._1 < us - stepUs) back.removeHead()
+        val v0 = if (v.isNaN) 0.0 else v
+        cum += v0
+        if (v >= instantMassToStart) {
+          if (!inGroup) {
+            // a group starts here: the previous group's close test
+            if (haveCand && ((us - stopUs > dtUs) || (stopUs - candStartUs > maxUs)) &&
+                cumAtStop - candCumExcl >= minStormTotal) {
+              out += event(sid, spanStartUs, stopUs, stopN, stopTotal)
+              haveCand = false
+            }
+            if (!haveCand) {
+              haveCand = true
+              candStartUs = us
+              candCumExcl = cum - v0
+              spanStartUs = if (back.isEmpty) us else back.head._1
+              spanN = back.size.toLong
+              spanTotal = back.foldLeft(0.0)((t, r) => if (r._2.isNaN) t else t + r._2)
+            }
+            inGroup = true
+          }
+        } else inGroup = false
+        if (haveCand) {
+          spanN += 1L
+          if (!v.isNaN) spanTotal += v
+        }
+        if (inGroup) {
+          stopUs = us
+          cumAtStop = cum
+          stopN = spanN
+          stopTotal = spanTotal
+        }
+        back.append((us, v))
+        prevUs = us
+        n += 1L
+      }
+      (Some(StormState(n, prevUs, firstDiff, lastDiff, stepUs, cum,
+        inGroup, haveCand, candStartUs, candCumExcl, spanStartUs, spanN, spanTotal,
+        stopUs, cumAtStop, stopN, stopTotal, back.toSeq)), out.result().iterator)
+    }
+
+    RunFold[Point, StormState](step,
+      (sid, st) =>
+        // no inferable step: fewer than three rows leave no diff to infer from
+        if (!st.haveCand || (fixedStepUs.isEmpty && st.n < 3L)) Iterator.empty
+        else Iterator(event(sid, st.spanStartUs, st.stopUs, st.stopN, st.stopTotal)))
   }
 }

@@ -4,7 +4,7 @@ import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Event
-import graft.operators.{DataGapEvents, ExtremeChangeEvents, ExtremeValueEvents, FlatLineEvents, TimeMicros}
+import graft.operators.{DataGapEvents, ExtremeChangeEvents, ExtremeValueEvents, FlatLineEvents, StormEvents}
 import graft.operators.RunFolds._
 
 /**
@@ -17,22 +17,24 @@ import graft.operators.RunFolds._
  *    output is append-mode finalized sessions. This is the declarative
  *    path (Catalyst-managed state store, no custom state), covering
  *    the sessionization half of StormEvents (metevents/events.py:105);
- *    the min_storm_total/max_storm_hours refinements run as a batch
- *    post-pass or in the exact stateful variant below.
+ *    the min_storm_total/max_storm_hours refinements run in the
+ *    storm twin below.
  *
  *  - [[runEvents]] and the other stateful twins: per-series state in
  *    an [[OrderedFold]] carries the open run across micro-batches; a
- *    non-flagged row closes and emits the run. The four run twins
- *    (extreme value, flat line, extreme change, data gap) run their
- *    batch detector's own step ([[graft.operators.RunFolds]]); only
- *    the end-of-input close is batch's, so a stream withholds the run
- *    a series is still inside.
+ *    non-flagged row closes and emits the run. The five fold twins
+ *    (storm, extreme value, flat line, extreme change, data gap) run
+ *    their batch detector's own step ([[graft.operators.RunFolds]]);
+ *    only the end-of-input close is batch's, so a stream withholds the
+ *    run, or the final storm, a series is still inside. Spike-valley
+ *    buffers a window and emits on data finality ([[spikeValley]]).
  *
  * Assumptions documented for scale: keys = series_id (state is O(1)
- * per series); within a micro-batch [[OrderedFold]] sorts rows by
- * event time at full microseconds; batches arrive in event-time order
- * per series (true for station feeds; out-of-order ACROSS batches
- * needs [[StreamingReorder.reorderByEventTime]] in front).
+ * per series, the storm ring and the spike-valley window aside);
+ * within a micro-batch [[OrderedFold]] sorts rows by event time at
+ * full microseconds; batches arrive in event-time order per series
+ * (true for station feeds; out-of-order ACROSS batches needs
+ * [[StreamingReorder.reorderByEventTime]] in front).
  */
 object StreamingDetectors {
 
@@ -70,8 +72,8 @@ object StreamingDetectors {
   def dataGaps(minLen: Long, expectedFrequency: String)(ts: DataFrame): DataFrame =
     overPoints(DataGapEvents(minLen, expectedFrequency).fold)(ts)
 
-  /** A diff or gap fold's step over a stream of points, its state
-    * carried per series. */
+  /** A diff, gap or storm fold's step over a stream of points, its
+    * state carried per series. */
   private def overPoints[S <: Product : TypeTag](fold: RunFold[Point, S])(
       ts: DataFrame): DataFrame = {
     val spark = ts.sparkSession
@@ -79,114 +81,25 @@ object StreamingDetectors {
     OrderedFold(points(ts))(_._1, _._2)(fold.step).toDF()
   }
 
-  /** Exact storm-fold state for one series (metevents/events.py:85-121
-    * under streaming). The candidate tracks raw mass/point counts from
-    * its start; group-stop snapshots freeze the values the closure
-    * condition evaluates (sub-threshold mass AFTER a group belongs to
-    * the NEXT evaluation, exactly like the batch label slice). */
-  final case class StormState(
-      seenAnyRow: Boolean,
-      hasCand: Boolean,
-      candStartUs: Long,
-      candIsSeriesHead: Boolean,
-      runningTotal: Double,   // NaN-skipping raw sum since candidate start
-      runningN: Long,         // points since candidate start
-      runningAny: Boolean,
-      hasGroupStop: Boolean,  // a group has ended since candidate start
-      groupStopUs: Long,
-      totalAtStop: Double,
-      nAtStop: Long,
-      anyAtStop: Boolean,
-      inGroup: Boolean) {
-
-    /** Absorb one (NaN-skipped) point into the candidate's raw slice. */
-    def absorb(v: Option[Double]): StormState = copy(
-      runningTotal = runningTotal + v.getOrElse(0.0),
-      runningN = runningN + 1L,
-      runningAny = runningAny || v.isDefined)
-
-    /** A new candidate whose slice starts with this point. */
-    def startCandidate(us: Long, isSeriesHead: Boolean, v: Option[Double]): StormState =
-      copy(hasCand = true, candStartUs = us, candIsSeriesHead = isSeriesHead,
-        runningTotal = 0.0, runningN = 0L, runningAny = false,
-        hasGroupStop = false).absorb(v)
-  }
-
-  object StormState {
-    val empty: StormState = StormState(
-      seenAnyRow = false, hasCand = false, candStartUs = 0L,
-      candIsSeriesHead = false, runningTotal = 0.0, runningN = 0L,
-      runningAny = false, hasGroupStop = false, groupStopUs = 0L,
-      totalAtStop = 0.0, nAtStop = 0L, anyAtStop = false, inGroup = false)
-  }
-
   /**
-   * EXACT streaming storm fold — an [[OrderedFold]] carrying the
-   * reference's candidate semantics: the candidate does NOT advance on
-   * a failed close (mass keeps accumulating across quiet spells), the
-   * span back-extends one `step` unless the candidate starts at the
-   * series head, totals are NaN-skipping raw sums over
-   * [candidate start, group stop] (sub-threshold rows included).
-   * A storm closes when the next group STARTS and the batch condition
-   * `(gap > hoursToStop OR duration > maxStormHours) AND total ≥ min`
-   * holds.
-   *
-   * Documented divergences from batch: (1) "the final group always
-   * closes" needs end-of-data, which a stream never reaches — run a
-   * batch tail pass at shutdown if partial-tail storms are needed;
-   * (2) the back-extended span's stats cover [cand_start, stop] (the
-   * batch fold also counts the rows within one step before the
-   * candidate; a stream cannot reach back).
+   * The storm detector (d1) as a stream: the batch detector's own walk
+   * ([[graft.operators.RunFolds.storms]]) with its state — the
+   * candidate, the latest group stop and the back-extension ring —
+   * carried across micro-batches. Every storm it emits is the batch
+   * detector's storm, bit for bit (span back-extension rows, `n_points`
+   * and `total` included). Only the end-of-input close is batch's: the
+   * final storm closes when its series ends, which a stream never
+   * reaches, so the stream withholds it. The ring holds the rows within
+   * one step of the latest row: two for a feed at its native step.
    */
   def storms(
       instantMassToStart: Double,
       minStormTotal: Double,
       hoursToStop: Double,
       maxStormHours: Double,
-      frequency: String)(ts: DataFrame): DataFrame = {
-    val stepUs = graft.operators.Steps.parseMicros(frequency)
-    val dtUs = (hoursToStop * graft.operators.Steps.Hour).toLong
-    val maxUs = (maxStormHours * graft.operators.Steps.Hour).toLong
-    val spark = ts.sparkSession
-    import spark.implicits._
-
-    OrderedFold(ts.select(col("series_id"), col("ts"), col("value")).as[Point])(
-      _._1, _._2)(
-      (sid: String, rows: Iterator[(Long, Point)], prev: Option[StormState]) => {
-        val out = Array.newBuilder[Event]
-        var st = prev.getOrElse(StormState.empty)
-        rows.foreach { case (tUs, (_, _, vOpt)) =>
-          val v = vOpt.filterNot(_.isNaN)
-          if (v.exists(_ >= instantMassToStart)) {
-            st =
-              if (!st.hasCand) st.startCandidate(tUs, isSeriesHead = !st.seenAnyRow, v)
-              else if (!st.inGroup && st.hasGroupStop &&
-                  // next group begins: evaluate the batch close condition
-                  ((tUs - st.groupStopUs > dtUs) ||
-                    (st.groupStopUs - st.candStartUs > maxUs)) &&
-                  st.totalAtStop >= minStormTotal) {
-                val spanStart =
-                  if (st.candIsSeriesHead) st.candStartUs else st.candStartUs - stepUs
-                out += Event(sid, "storm",
-                  TimeMicros.timestamp(spanStart), TimeMicros.timestamp(st.groupStopUs),
-                  st.groupStopUs - spanStart, st.nAtStop,
-                  if (st.anyAtStop) Some(st.totalAtStop) else Some(0.0))
-                st.startCandidate(tUs, isSeriesHead = false, v) // this point starts the next
-              } else st.absorb(v) // candidate persists; fold this point in
-            // every flagged point is a (possibly new) group stop
-            st = st.copy(inGroup = true, hasGroupStop = true, groupStopUs = tUs,
-              totalAtStop = st.runningTotal, nAtStop = st.runningN,
-              anyAtStop = st.runningAny)
-          } else {
-            // unflagged: closes any open group; raw mass still
-            // accrues to the candidate slice
-            st = (if (st.hasCand) st.absorb(v) else st).copy(inGroup = false)
-          }
-          st = st.copy(seenAnyRow = true)
-        }
-        (Some(st), out.result().iterator)
-      }).toDF()
-  }
+      frequency: String)(ts: DataFrame): DataFrame =
+    overPoints(StormEvents(instantMassToStart, minStormTotal, hoursToStop, maxStormHours,
+      Some(frequency)).fold)(ts)
 
   /** Per-series buffered state for [[spikeValley]]: the retained
     * window as (micros, value) plus the emission frontier (index of
@@ -333,28 +246,14 @@ object StreamingDetectors {
         var newEmitted = emitted0
         if (n >= 3 && stableEnd > emitted0) {
           val mask = graft.operators.FindPeaks.spikeValleyMask(xs, params)
-          var i = emitted0
-          while (i < stableEnd) {
-            if (mask(i)) {
-              var j = i
-              while (j + 1 < n && mask(j + 1)) j += 1
-              if (j + 1 < stableEnd) {
-                var total = 0.0; var any = false
-                var k = i
-                while (k <= j) {
-                  val v = xs(k)
-                  if (!v.isNaN) { total += v; any = true }
-                  k += 1
-                }
-                out += Event(sid, "spike_valley",
-                  TimeMicros.timestamp(all(i)._1),
-                  TimeMicros.timestamp(all(j)._1),
-                  all(j)._1 - all(i)._1,
-                  (j - i + 1).toLong, if (any) Some(total) else None)
-                newEmitted = j + 1
-                i = j + 1
-              } else i = stableEnd // straddling run: wait for finality
-            } else i += 1
+          // runs a row inside the stable prefix closes emit; a run still
+          // open at its end straddles it and waits for finality
+          var run: Option[RunState] = None
+          (emitted0 until stableEnd).foreach { i =>
+            run = RunState.step(run, mask(i), all(i)._1, all(i)._2.filterNot(_.isNaN)) { r =>
+              out += r.event(sid, "spike_valley")
+              newEmitted = i
+            }
           }
         }
         // SAFE-PREFIX DROP (review r18; left-scan bound tightened

@@ -49,6 +49,15 @@ trait SparkTestBase {
 
   val DayUs: Long = 86400L * 1000000L
 
+  /** Storm events in (series, start µs) order, minus each series' final
+    * storm: the one the batch detector's end-of-input close emits and a
+    * stream withholds. */
+  def withoutFinalStorm(events: Seq[Event]): Seq[Event] = {
+    val us = (e: Event) => graft.operators.TimeMicros.micros(e.start)
+    val finalStart = events.groupBy(_.series_id).map { case (s, es) => s -> es.map(us).max }
+    events.filterNot(e => finalStart.get(e.series_id).contains(us(e))).sortBy(e => (e.series_id, us(e)))
+  }
+
   /** An executed plan's nodes, through AQE query stages; a reused
     * exchange is a leaf, so its subtree is not counted twice. */
   def executedNodes(p: SparkPlan): Seq[SparkPlan] = p match {

@@ -40,7 +40,11 @@ import scala.util.Random
   *  - spike-valley must emit a subset of the augmented batch, the
   *    withheld remainder must be strictly the per-series open tail,
   *    and every raw-batch event left unchanged by the augmentation
-  *    (the "stable goldens") must have been emitted.
+  *    (the "stable goldens") must have been emitted;
+  *  - storms (a test of their own, with drawn thresholds and the grid's
+  *    step as frequency) must equal the batch detector on the augmented
+  *    series EXACTLY, minus each series' final storm: the one the
+  *    batch close emits at end of input, which a stream never reaches.
   *
   * Batch and stream run one shared step, so their equality checks only
   * how micro-batch boundaries split it. Each scenario therefore also
@@ -267,6 +271,34 @@ class StreamingParityFuzzSpec extends AnyFunSuite with SparkTestBase {
       assembleEvents(withRunId(d, safeMask(pos) || safeMask(neg)), "extreme_change", sc.chgMinLen),
       assembleEvents(withRunId(df, col("value").isNull || isnan(col("value"))), "data_gap")
         .unionByName(tsGaps).where(col("duration_us") >= sc.gapMinLen * sc.stepUs))
+  }
+
+  test(s"randomized batch==stream parity: storms minus the final storm (seed=$seed)") {
+    (0 until rounds).foreach { i =>
+      val sc = mkScenario(i)
+      // the storm draw has its own random stream, so the scenario's
+      // draws stay as they are. Mass thresholds sit on the quarter
+      // grid; the stop gap and the storm cap sit half a step off the
+      // grid, so no gap equals them
+      val rnd = new Random(seed ^ (i.toLong * 0x27D4EB2F165667C5L))
+      val start = 40.0 + rnd.nextInt(480) / 4.0
+      val minTotal = rnd.nextInt(6000) / 4.0
+      val stopHours = (1 + rnd.nextInt(4) + 0.5) * sc.stepUs / graft.operators.Steps.Hour
+      val maxHours = (2 + rnd.nextInt(30) + 0.5) * sc.stepUs / graft.operators.Steps.Hour
+      val draw = s"start=$start minTotal=$minTotal stopHours=$stopHours maxHours=$maxHours"
+      val streamed = runStream(sc, s"fz_${i}_storm")(StreamingDetectors.storms(
+        start, minTotal, stopHours, maxHours, freq(sc.stepUs))(_))
+      val batch = batchEvents(graft.operators.StormEvents(start, minTotal, stopHours, maxHours,
+        Some(freq(sc.stepUs))).detect(sc.augmented.toDF()))
+      val expected = withoutFinalStorm(batch)
+      assert(streamed == expected,
+        s"""storm parity break (${describe(sc)} $draw)
+           |streamed (${streamed.size}): ${streamed.mkString("\n  ", "\n  ", "")}
+           |batch minus final (${expected.size}): ${expected.mkString("\n  ", "\n  ", "")}
+           |feed: ${sc.augmented.mkString(", ")}""".stripMargin)
+      info(s"scenario $i ok: ${describe(sc)} $draw; ${streamed.size} storms emitted, " +
+        s"${batch.size - expected.size} final withheld")
+    }
   }
 
   test(s"randomized batch==stream parity: 4 detectors + spikeValley (seed=$seed)") {

@@ -9,6 +9,14 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   private def point(sid: String, day: Int, v: Double) = TsPoint(sid, this.day(day), Some(v))
 
+  /** The batch storm detector over a frame, minus each series' final
+    * storm: what the streaming twin must have emitted. */
+  private def batchStorms(ts: org.apache.spark.sql.DataFrame, frequency: String,
+      minStormTotal: Double = 0.5): Seq[Event] =
+    withoutFinalStorm(collectEvents(graft.operators.StormEvents(instantMassToStart = 0.1,
+      minStormTotal = minStormTotal, hoursToStop = 24, maxStormHours = 336,
+      frequency = Some(frequency)).detect(ts)))
+
   test("streaming extreme-value emits runs closed across micro-batches") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -337,6 +345,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       input.addData(point("a", 7, 0.05))
       q.processAllAvailable()
       assert(spark.sql("select * from st").count() == 1)
+      val fed = Seq(0.0, 1.0, 1.0, 0.0, 0.0, 1.0, 1.0, 0.05).zipWithIndex
+        .map { case (v, d) => point("a", d, v) }
+      assert(collectEvents(spark.sql("select * from st")) == batchStorms(fed.toDF(), "1D"))
     } finally q.stop()
   }
 
@@ -368,6 +379,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       assert(ev.length == 1)
       assert(ev(0).start == day(0) && ev(0).stop == day(3)) // series head: no back-extension
       assert(ev(0).total.exists(t => math.abs(t - 0.3) < 1e-9))
+      val fed = Seq(point("a", 0, 0.1), point("a", 1, 0.0), point("a", 2, 0.1),
+        point("a", 3, 0.1), point("a", 4, 0.0), point("a", 30, 1.0))
+      assert(ev.toSeq == batchStorms(fed.toDF(), "1D", minStormTotal = 0.2))
     } finally q.stop()
   }
 
@@ -375,9 +389,12 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     import graft.operators.TimeMicros
-    // day d carries a d·333 µs offset: the candidate (day 1), its
-    // one-step back-extension and the group stop (day 2) all sit
-    // inside a millisecond of the day boundary
+    // day d carries a d·333 µs offset, so the candidate (day 1), one
+    // step before it and the group stop (day 2) all sit inside a
+    // millisecond of the day boundary. Day 0's row is 333 µs before
+    // candidate − step, so it is no back-extension row: the span
+    // starts at the first row at or after candidate − step, the
+    // candidate itself
     def atUs(d: Int): Long = TimeMicros.micros(day(d)) + d * 333L
     def pt(d: Int, v: Double) = TsPoint("a", TimeMicros.timestamp(atUs(d)), Some(v))
     val input = MemoryStream[TsPoint]
@@ -392,10 +409,13 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       q.processAllAvailable()
       val ev = spark.sql("select * from stus").as[Event].collect()
       assert(ev.length == 1, ev.toSeq)
-      val startUs = atUs(1) - DayUs
+      val startUs = atUs(1)
       assert(TimeMicros.micros(ev(0).start) == startUs, ev(0))
       assert(TimeMicros.micros(ev(0).stop) == atUs(2), ev(0))
       assert(ev(0).duration_us == atUs(2) - startUs, ev(0))
+      assert(ev(0).n_points == 2L && ev(0).total.contains(2.0), ev(0))
+      val fed = Seq(pt(0, 0.0), pt(1, 1.0), pt(2, 1.0), pt(3, 0.0), pt(4, 0.0), pt(5, 1.0))
+      assert(ev.toSeq == batchStorms(fed.toDF(), "1D"))
     } finally q.stop()
   }
 
@@ -572,7 +592,11 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       q.processAllAvailable()
       val ev = spark.sql("select * from ros").as[Event].collect().toSeq
       assert(ev.length == 1)
-      assert(math.abs(ev(0).total.get - 1.3) < 1e-9 && ev(0).n_points == 2L)
+      // the span back-extends to day 0, which counts (batch's n_points)
+      assert(math.abs(ev(0).total.get - 1.3) < 1e-9 && ev(0).n_points == 3L)
+      val fed = Seq(0.0, 0.6, 0.7, 0.0, 0.0, 0.0, 0.9, 0.0, 0.0).zipWithIndex
+        .map { case (v, d) => point("a", d, v) }
+      assert(ev == batchStorms(fed.toDF(), "D"))
     } finally {
       q.stop()
       spark.conf.set(
@@ -1526,12 +1550,16 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       val ev = spark.sql("select * from ss2").as[Event].collect().toSeq
       // the fixture's first storm (days 4-6, total 1.3) closes when the
       // second storm's first flagged point arrives; the second stays
-      // open — a stream has no end-of-data. n_points=3 covers
-      // [cand_start, stop]: the back-extended day-3 point is not
-      // re-joined (both divergences documented at
-      // StreamingDetectors.storms)
+      // open — a stream has no end-of-data. n_points=4 covers the
+      // back-extended day-3 point too, as in batch
       assert(ev.length == 1)
-      assert(ev(0).total.contains(1.3) && ev(0).n_points == 3L)
+      assert(ev(0).total.contains(1.3) && ev(0).n_points == 4L)
+      val batchAccum = spark.read.format("graft-station")
+        .option("source", "CSV").option("path", fixturePath)
+        .option("stations", "TUM")
+        .option("start", "2022-12-01").option("stop", "2022-12-20")
+        .load()
+      assert(ev == batchStorms(graft.streaming.StreamingStations.increments(batchAccum), "D"))
     } finally q.stop()
   }
 
