@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{FilterExec, LeafExecNode, ProjectExec, SparkPlan}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -202,13 +203,26 @@ object Dedup {
     * as one split and would serialize the hashing onto one core,
     * while a 100 TB corpus already arrives as tens of thousands of
     * splits — shuffling its full text bodies through an exchange just
-    * to rebalance would dominate the job. The partition probe plans
-    * the scan (file listing) but runs no job. */
+    * to rebalance would dominate the job. The count is read off the
+    * planned leaf scan (no job); any other input (a join, a union, an
+    * aggregate) is left as it is — `Dataset.rdd` would run its
+    * adaptive upstream stages at build time and again at the action. */
   private[graft] def parallelize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val n = scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
-    if (df.rdd.getNumPartitions >= n) df else df.repartition(n)
+    scanPartitions(df.queryExecution.sparkPlan) match {
+      case Some(p) if p < n => df.repartition(n)
+      case _ => df
+    }
+  }
+
+  /** Output partitions of a projection/filter chain over a leaf scan. */
+  private def scanPartitions(plan: SparkPlan): Option[Int] = plan match {
+    case l: LeafExecNode =>
+      Some((if (l.supportsColumnar) l.executeColumnar() else l.execute()).getNumPartitions)
+    case _: ProjectExec | _: FilterExec => scanPartitions(plan.children.head)
+    case _ => None
   }
 
   /** Lineage barrier before a Generate/self-join over an expensive

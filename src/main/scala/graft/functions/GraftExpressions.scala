@@ -4,7 +4,9 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -769,6 +771,92 @@ case class PqAdc(child: Expression, table: Array[Double], k: Int)
 }
 
 /**
+ * `graft_nearest_cid(emb, centsFlat, cids)` → the cid whose centroid
+ * has the greatest dot product with `emb` (the cosine argmax over unit
+ * vectors), ranked by [[CentroidKernel]]. The centroids ride as
+ * reference objects (`centsFlat(c·dim + d)` = component d of
+ * `cids(c)`, the [[PqEncode]] pattern), so top-1 cell assignment is a
+ * per-row projection with no join and no exchange. A NULL `emb`
+ * scores 0 against every centroid, so it lands in the lowest cid (what
+ * the struct max did with its all-NULL cos); the result is NULL only
+ * when there are no centroids. Never NULL otherwise, so a join on the
+ * cid infers no `isnotnull` filter that would run the kernel twice.
+ */
+case class NearestCentroid(child: Expression, centsFlat: Array[Double], cids: Array[Long])
+    extends UnaryExpression {
+  require(cids.isEmpty && centsFlat.isEmpty ||
+      cids.nonEmpty && centsFlat.length % cids.length == 0,
+    s"graft_nearest_cid: ${centsFlat.length} centroid components for ${cids.length} cids")
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = cids.isEmpty
+  override def prettyName: String = "graft_nearest_cid"
+  override protected def stringArgs: Iterator[Any] = Iterator(child, s"k=${cids.length}")
+
+  override def eval(input: InternalRow): Any =
+    if (cids.isEmpty) null
+    else cids(CentroidKernel.nearestIndex(child.eval(input).asInstanceOf[ArrayData], centsFlat, cids))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val emb = child.genCode(ctx)
+    if (cids.isEmpty) return ev.copy(code = code"""
+      |${emb.code}
+      |boolean ${ev.isNull} = true;
+      |long ${ev.value} = -1L;""".stripMargin)
+    val centsRef = ctx.addReferenceObj("centroids", centsFlat, "double[]")
+    val cidsRef = ctx.addReferenceObj("centroidIds", cids, "long[]")
+    ev.copy(code = code"""
+      |${emb.code}
+      |long ${ev.value} = $cidsRef[graft.functions.CentroidKernel.nearestIndex(
+      |  ${emb.isNull} ? null : ${emb.value}, $centsRef, $cidsRef)];""".stripMargin,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
+    copy(child = newChild)
+}
+
+/** The nearest-centroid kernel shared by [[NearestCentroid]] and the
+  * k-means Lloyd round. Each centroid's score is the left-to-right dot
+  * product [[DotProduct]] computes (over the shorter of the two
+  * lengths); the winner is the greatest score in Spark's double order
+  * — NaN above every number, −0.0 equal to 0.0 — with ties to the
+  * lowest cid: exactly the `max(struct(cos, −cid))` rule. */
+object CentroidKernel {
+
+  /** Index into `cids` of the nearest centroid (a NULL `emb` scores 0
+    * everywhere: the lowest cid); -1 when there are none. */
+  def nearestIndex(emb: ArrayData, centsFlat: Array[Double], cids: Array[Long]): Int = {
+    val k = cids.length
+    if (k == 0) return -1
+    val dim = centsFlat.length / k
+    val n = if (emb == null) 0 else math.min(emb.numElements(), dim)
+    var best = -1
+    var bestCos = 0.0
+    var c = 0
+    while (c < k) {
+      val base = c * dim
+      var s = 0.0
+      var i = 0
+      while (i < n) { s += emb.getDouble(i) * centsFlat(base + i); i += 1 }
+      if (best < 0 || greater(s, bestCos) || !greater(bestCos, s) && cids(c) < cids(best)) {
+        best = c
+        bestCos = s
+      }
+      c += 1
+    }
+    best
+  }
+
+  /** The nearest centroid's cid (there must be at least one centroid). */
+  def nearest(emb: ArrayData, centsFlat: Array[Double], cids: Array[Long]): Long =
+    cids(nearestIndex(emb, centsFlat, cids))
+
+  private def greater(a: Double, b: Double): Boolean =
+    if (java.lang.Double.isNaN(a)) !java.lang.Double.isNaN(b) else a > b
+}
+
+/**
  * Element-wise vector difference: `graft_vec_sub(a, b)` →
  * `array<double>` of `a(i) - b(i)` — the residual computation of
  * IVFADC ([[graft.similarity.Similarity.ivfAdcResidualTopK]]) as one
@@ -1285,6 +1373,10 @@ object GraftFunctions {
       new ExpressionInfo(classOf[PqAdc].getName, "graft_pq_adc"),
       (children: Seq[Expression]) => PqAdc(children.head,
         doubleArrayLiteral(children(1)), intLiteral(children(2)))),
+    (FunctionIdentifier("graft_nearest_cid"),
+      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest_cid"),
+      (children: Seq[Expression]) => NearestCentroid(children.head,
+        doubleArrayLiteral(children(1)), longArrayLiteral(children(2)))),
     (FunctionIdentifier("graft_vec_sub"),
       new ExpressionInfo(classOf[VecSub].getName, "graft_vec_sub"),
       (children: Seq[Expression]) => VecSub(children.head, children(1))),
@@ -1339,11 +1431,12 @@ object GraftFunctions {
     * resolution — the [[doubleArrayLiteral]] pattern. */
   private def longArrayLiteral(e: Expression): Array[Long] = {
     require(e.foldable,
-      "graft_bloom_contains: the words argument must be a foldable array<long> literal")
+      "graft_bloom_contains / graft_nearest_cid: the word / cid argument must be a " +
+        "foldable array<long> literal")
     e.eval(null) match {
       case a: ArrayData => a.toLongArray()
       case other => throw new IllegalArgumentException(
-        s"graft_bloom_contains expects an array<long> literal, got $other")
+        s"graft_bloom_contains / graft_nearest_cid expect an array<long> literal, got $other")
     }
   }
 
@@ -1353,11 +1446,12 @@ object GraftFunctions {
     * m·k expression chain. */
   private def doubleArrayLiteral(e: Expression): Array[Double] = {
     require(e.foldable,
-      "graft_pq_*: the codebook/table argument must be a foldable array<double> literal")
+      "graft_pq_* / graft_nearest_cid: the codebook/table/centroid argument must be a " +
+        "foldable array<double> literal")
     e.eval(null) match {
       case a: ArrayData => a.toDoubleArray()
       case other => throw new IllegalArgumentException(
-        s"graft_pq_* expects an array<double> literal, got $other")
+        s"graft_pq_* / graft_nearest_cid expect an array<double> literal, got $other")
     }
   }
 

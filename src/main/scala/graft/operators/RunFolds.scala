@@ -194,8 +194,9 @@ object RunFolds {
       hoursToStop: Double,
       maxStormHours: Double,
       fixedStepUs: Option[Long]): RunFold[Point, StormState] = {
-    val dtUs = (hoursToStop * Steps.Hour).toLong
-    val maxUs = (maxStormHours * Steps.Hour).toLong
+    // rounded, not truncated: 2.3 h is 8,279,999,999.999… µs in doubles
+    val dtUs = Math.round(hoursToStop * Steps.Hour)
+    val maxUs = Math.round(maxStormHours * Steps.Hour)
     val empty = StormState(0L, 0L, 0L, 0L, fixedStepUs.getOrElse(0L), 0.0,
       inGroup = false, haveCand = false, 0L, 0.0, 0L, 0L, 0.0, 0L, 0.0, 0L, 0.0, Nil)
     def event(sid: String, startUs: Long, stopUs: Long, n: Long, total: Double): Event =

@@ -1,8 +1,11 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.CentroidKernel
 
 /**
  * Similarity search over an embedding column (`array<float>`) —
@@ -16,8 +19,9 @@ import org.apache.spark.sql.functions._
  *    the full corpus: broadcast the queries, one scan of the corpus,
  *    per-query ranking window. O(|Q|·N), the corpus side streams;
  *  - [[ivfTopK]]: the scale path. A fixed centroid set partitions the
- *    corpus (assignment = one broadcast join, computed where the data
- *    lives); a query probes only its `nProbe` nearest centroids'
+ *    corpus (assignment = a per-row nearest-centroid projection against
+ *    the driver-held centroids, computed where the data lives); a
+ *    query probes only its `nProbe` nearest centroids'
  *    cells. At 100 TB the cell id doubles as the physical partition
  *    key so a probe touches only matching partitions;
  *  - [[nearDupPairs]]: EXACT cosine ≥ threshold pairs via a blocked
@@ -31,24 +35,15 @@ object Similarity {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Sequential left-to-right dot product of two array<double>
-    * columns (bit-reproducible fold, mirrored in the DuckDB oracle). */
-  def dot(x: Column, y: Column): Column =
-    aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
-
   /** Codegen'd dot product via the native [[graft.functions.DotProduct]]
-    * expression — same value and addition order as [[dot]], ~10× per
+    * expression — a left-to-right fold (bit-reproducible, mirrored in
+    * the DuckDB oracle), ~10× an interpreted `aggregate(zip_with)` per
     * call on the N² pair-scoring paths. Requires [[ensureRegistered]]
     * on the session (operators below do it). */
   def fastDot(x: Column, y: Column): Column = call_function("graft_dot", x, y)
 
   private def ensureRegistered(df: DataFrame): Unit =
     graft.functions.GraftFunctions.register(df.sparkSession)
-
-  /** Cosine similarity of two unnormalized vectors (one-off use; the
-    * operators below pre-normalize instead). */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
   /** (id, emb) with emb cast to double and scaled to unit norm. The
     * norm is the codegen'd [[fastDot]] written INSIDE the divide lambda:
@@ -59,13 +54,14 @@ object Similarity {
     * was 64× an allocation-heavy lambda chain). `spread` repartitions
     * corpus-sized inputs for the CPU-bound scoring that follows; query/
     * centroid frames skip it (they broadcast anyway). */
-  private[graft] def normalized(
-      df: DataFrame, idOut: String, embOut: String, spread: Boolean = true): DataFrame = {
+  private[graft] def normalized(df: DataFrame, idOut: String, embOut: String,
+      spread: Boolean = true, labOut: Option[String] = None): DataFrame = {
     ensureRegistered(df)
     val base = if (spread) graft.dedup.Dedup.parallelize(df) else df
     val emb = col("embedding").cast("array<double>")
-    base.select(col("vec_id").as(idOut),
-      transform(emb, x => x / sqrt(call_function("graft_dot", emb, emb))).as(embOut))
+    base.select(Seq(col("vec_id").as(idOut),
+      transform(emb, x => x / sqrt(call_function("graft_dot", emb, emb))).as(embOut)) ++
+      labOut.map(col("label").as(_)): _*)
   }
 
   /** ONE normalized + barriered corpus frame `(vec_id, emb)` to share
@@ -83,71 +79,54 @@ object Similarity {
 
   /** [[normalizedCorpus]] with the `label` column carried — the
     * shared frame for the hard-negative pair (exact + IVF miners). */
-  def normalizedLabeledCorpus(corpus: DataFrame): DataFrame = {
-    ensureRegistered(corpus)
-    graft.dedup.Dedup.materialize(
-      withLabelCols(corpus, "vec_id", "emb", "label", spread = true))
+  def normalizedLabeledCorpus(corpus: DataFrame): DataFrame =
+    graft.dedup.Dedup.materialize(normalized(corpus, "vec_id", "emb", labOut = Some("label")))
+
+  /** Driver-held centroids in cid order: `rows` = (cid, unit
+    * embedding); `cids`/`flat` are the reference state of
+    * [[graft.functions.NearestCentroid]]. O(k·dim), the bounded state
+    * [[kmeansCentroids]] and the PQ codebooks hold too. */
+  private final class Centroids(val rows: Array[(Long, Array[Double])]) {
+    val cids: Array[Long] = rows.map(_._1)
+    val flat: Array[Double] = rows.flatMap(_._2)
+
+    /** Top-1 cell of a normalized embedding column (NULL: lowest cid). */
+    def nearest(emb: Column): Column =
+      call_function("graft_nearest_cid", emb, typedlit(flat), typedlit(cids))
+
+    /** (cid, cent_emb) as a broadcast local frame, for [[topCells]]. */
+    def frame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      broadcast(rows.toSeq.toDF("cid", "cent_emb"))
+    }
   }
 
-  /** (idOut, embOut, labOut) with the embedding normalized — the
-    * label-carrying [[normalized]], shared by both hard-negative
-    * miners and [[normalizedLabeledCorpus]]. */
-  private def withLabelCols(df: DataFrame, idOut: String, embOut: String,
-      labOut: String, spread: Boolean): DataFrame = {
-    val base = if (spread) graft.dedup.Dedup.parallelize(df) else df
-    val emb = col("embedding").cast("array<double>")
-    base.select(col("vec_id").as(idOut),
-      transform(emb, x => x / sqrt(fastDot(emb, emb))).as(embOut),
-      col("label").as(labOut))
+  /** Normalize a `(vec_id, embedding)` centroid frame exactly as the
+    * corpus is normalized and collect it; a NULL or ragged centroid
+    * fails by name. */
+  private def centroidsOf(centroids: DataFrame, what: String = "centroids"): Centroids = {
+    val spark = centroids.sparkSession
+    import spark.implicits._
+    val rows = normalized(centroids, "cid", "cent_emb", spread = false)
+      .select(col("cid").cast("long"), col("cent_emb"))
+      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val size = (e: Array[Double]) => if (e == null) -1 else e.length // -1 = null
+    val dim = rows.headOption.fold(0)(r => size(r._2))
+    rows.foreach { case (cid, e) => require(e != null && e.length == dim,
+      s"$what: centroid $cid has ${size(e)} dims, expected $dim (-1 = null embedding)") }
+    new Centroids(rows)
   }
 
-  /** Nearest-centroid assignment as a partial-aggregated ARGMAX:
-    * cross the (broadcast) centroid frame, score each (vector,
-    * centroid), then `max(struct(cos, -cid, emb))` per vector — the
-    * struct order reproduces exactly the (cos DESC, cid ASC) ranking a
-    * `row_number() over (partitionBy vec)` window computes (max picks
-    * the highest cos, ties to the highest -cid = lowest cid; NaN sorts
-    * greatest in both the window sort and the aggregate's ordering),
-    * but with map-side partial aggregation: the exchange carries ~N
-    * combined rows instead of the N·k rows a window must shuffle AND
-    * sort. At the SemDeDup regime (k ∝ N) that turns the one
-    * corpus-wide exchange from O(N·k) sorted to O(N) unsorted. The
-    * embedding rides as the struct's LAST field — carried, never
-    * compared, since (cos, -cid) is already unique per group.
-    * Output: (idCol, embCol, cid). */
-  private[graft] def argmaxAssign(
-      v: DataFrame, cent: DataFrame, idCol: String, embCol: String,
-      barrier: Boolean = true): DataFrame =
-    // barrier: the normalize transform (interpreted HOF) upstream of a
-    // crossJoin otherwise collapses into the join's output projection
-    // and re-evaluates once per (vector × centroid) PAIR — measured at
-    // 200k × 200 cells: the assignment pass dropped ~60× once the
-    // normalized frame was checkpointed (the e6 screen finding, same
-    // shape). One pass per vector is what the scaladoc promises.
-    // `barrier = false` for callers whose `v` is ALREADY checkpointed
-    // (kmeansCentroids' per-round reuse) — re-checkpointing a
-    // checkpoint is a wasted write per call.
-    (if (barrier) graft.dedup.Dedup.materialize(v) else v).crossJoin(cent)
-      .withColumn("cos_c", fastDot(col(embCol), col("cent_emb")))
-      .groupBy(col(idCol))
-      .agg(max(struct(col("cos_c").as("cos"), (-col("cid")).as("neg_cid"),
-        col(embCol).as("emb"))).as("best"))
-      .select(col(idCol), col("best.emb").as(embCol), (-col("best.neg_cid")).as("cid"))
-
-  /** [[argmaxAssign]] WITHOUT the embedding riding in the aggregate:
-    * callers that only need (id, cid) — [[ivfCellAssignment]], whose
-    * output persists as the IVF index — would otherwise copy the
-    * 64-double array through every better-candidate update of the
-    * partial aggregate (measured at 200k × 200 cells: the assignment
-    * pass is dominated by exactly those array copies). Ranking
-    * semantics identical. */
-  private[graft] def argmaxAssignId(
-      v: DataFrame, cent: DataFrame, idCol: String, embCol: String): DataFrame =
-    graft.dedup.Dedup.materialize(v).crossJoin(cent)
-      .withColumn("cos_c", fastDot(col(embCol), col("cent_emb")))
-      .groupBy(col(idCol))
-      .agg(max(struct(col("cos_c").as("cos"), (-col("cid")).as("neg_cid"))).as("best"))
-      .select(col(idCol), (-col("best.neg_cid")).as("cid"))
+  /** Each query's `nProbe` nearest cells: (query_id, q_emb, …, cid)
+    * ranked (cos DESC, cid ASC) over the query × centroid cross. The
+    * query side is small, so the rank window runs over |Q|·k rows. */
+  private def topCells(queries: DataFrame, cent: Centroids, nProbe: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_p").desc, col("cid"))
+    queries.crossJoin(cent.frame(queries.sparkSession))
+      .withColumn("cos_p", fastDot(col("q_emb"), col("cent_emb")))
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") <= nProbe)
+  }
 
   /**
    * Exact cosine top-k: for each row of `queries` (vec_id, embedding),
@@ -155,34 +134,20 @@ object Similarity {
    * Returns (query_id, neighbor_id, rank, cos).
    */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int = 5,
-      prenorm: Option[DataFrame] = None): DataFrame = {
-    ensureRegistered(queries)
-    val q = broadcast(normalized(queries, "query_id", "q_emb", spread = false))
-    // barrier: same per-(row × query) re-evaluation trap as the
-    // binary screen / argmaxAssign — checkpointed, the corpus
-    // normalizes once however many queries broadcast against it
-    // (or arrives pre-normalized via [[normalizedCorpus]] — a rename
-    // projection over the shared checkpoint, no recompute)
-    val c = prenorm
-      .map(_.select(col("vec_id").as("neighbor_id"), col("emb").as("c_emb")))
-      .getOrElse(graft.dedup.Dedup.materialize(
-        normalized(corpus, "neighbor_id", "c_emb")))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", fastDot(col("q_emb"), col("c_emb")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 4).as("cos"))
-  }
+      prenorm: Option[DataFrame] = None): DataFrame =
+    exactSearch(queries, corpus, k, prenorm, labeled = false)
 
   /**
    * IVF-style approximate top-k: `centroids` partition the corpus into
    * cells (nearest-centroid assignment); each query searches only the
    * cells of its `nProbe` nearest centroids. Same output shape as
    * [[bruteForceTopK]]; recall < 1 by design.
+   *
+   * The centroids are collected to the driver (O(k)); corpus→cell
+   * assignment is top-1, so it is the `graft_nearest_cid` projection
+   * over the corpus scan — no join, no exchange. The probe stage stays
+   * a window because it needs top-nProbe, and it runs over the small
+   * query side only.
    */
   def ivfTopK(
       queries: DataFrame,
@@ -190,42 +155,8 @@ object Similarity {
       centroids: DataFrame,
       k: Int = 5,
       nProbe: Int = 3,
-      prenorm: Option[DataFrame] = None): DataFrame = {
-    ensureRegistered(queries)
-    val cent = broadcast(normalized(centroids, "cid", "cent_emb", spread = false))
-
-    // corpus→cell assignment is top-1: the aggregate argmax shape
-    // (see [[argmaxAssign]]) — the probe stage below stays a window
-    // because it needs top-nProbe, and it runs over the small query
-    // side only. A shared [[normalizedCorpus]] frame skips both the
-    // normalize pass and argmaxAssign's own barrier (it IS one).
-    val corpusN = prenorm
-      .map(_.select(col("vec_id").as("neighbor_id"), col("emb").as("c_emb")))
-      .getOrElse(normalized(corpus, "neighbor_id", "c_emb"))
-    val assigned = argmaxAssign(
-      corpusN, cent, "neighbor_id", "c_emb", barrier = prenorm.isEmpty)
-      .select(col("neighbor_id"), col("c_emb"), col("cid"))
-
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_p").desc, col("cid"))
-    val probes = normalized(queries, "query_id", "q_emb", spread = false)
-      .crossJoin(cent)
-      .withColumn("cos_p", fastDot(col("q_emb"), col("cent_emb")))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("cid"))
-
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    broadcast(probes)
-      .join(assigned, Seq("cid"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", fastDot(col("q_emb"), col("c_emb")))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        round(col("cos"), 4).as("cos"))
-  }
+      prenorm: Option[DataFrame] = None): DataFrame =
+    ivfSearch(queries, corpus, centroids, k, nProbe, prenorm, labeled = false)
 
   /**
    * Hard-negative mining over the IVF probe chain: for each query, the
@@ -239,10 +170,11 @@ object Similarity {
    * post-filter on [[ivfTopK]]'s output would return fewer than k
    * negatives whenever same-label neighbors crowd the top.
    *
-   * Scale posture = s2's: labels ride the existing exchanges (the
-   * corpus label travels as one extra carried field of the argmax
-   * assignment struct; the query label rides the broadcast probe
-   * frame), so the plan has ZERO joins/exchanges beyond ivfTopK's own.
+   * Scale posture = s2's: labels ride as plain columns (the corpus
+   * label through the assignment projection, the query label through
+   * the broadcast probe frame), so the plan has ZERO joins/exchanges
+   * beyond ivfTopK's own. `prenorm` = a shared
+   * [[normalizedLabeledCorpus]] checkpoint.
    * Output: (query_id, q_label, neighbor_id, n_label, rank, cos).
    */
   def ivfHardNegatives(
@@ -251,51 +183,8 @@ object Similarity {
       centroids: DataFrame,
       k: Int = 5,
       nProbe: Int = 3,
-      prenorm: Option[DataFrame] = None): DataFrame = {
-    ensureRegistered(queries)
-    val cent = broadcast(normalized(centroids, "cid", "cent_emb", spread = false))
-    def withLabel(df: DataFrame, idOut: String, embOut: String,
-        labOut: String, spread: Boolean): DataFrame =
-      withLabelCols(df, idOut, embOut, labOut, spread)
-
-    // argmaxAssign with the label as a second carried (never compared)
-    // struct field — (cos, -cid) is already unique per group, so the
-    // aggregate's ranking semantics are bit-identical to ivfTopK's.
-    // `prenorm` = a shared [[normalizedLabeledCorpus]] checkpoint.
-    val cv = prenorm
-      .map(_.select(col("vec_id").as("neighbor_id"), col("emb").as("c_emb"),
-        col("label").as("n_label")))
-      .getOrElse(graft.dedup.Dedup.materialize(
-        withLabel(corpus, "neighbor_id", "c_emb", "n_label", spread = true)))
-    val assigned = cv.crossJoin(cent)
-      .withColumn("cos_c", fastDot(col("c_emb"), col("cent_emb")))
-      .groupBy(col("neighbor_id"))
-      .agg(max(struct(col("cos_c").as("cos"), (-col("cid")).as("neg_cid"),
-        col("c_emb").as("emb"), col("n_label").as("lab"))).as("best"))
-      .select(col("neighbor_id"), col("best.emb").as("c_emb"),
-        (-col("best.neg_cid")).as("cid"), col("best.lab").as("n_label"))
-
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_p").desc, col("cid"))
-    val probes = withLabel(queries, "query_id", "q_emb", "q_label", spread = false)
-      .crossJoin(cent)
-      .withColumn("cos_p", fastDot(col("q_emb"), col("cent_emb")))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("q_label"), col("cid"))
-
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    broadcast(probes)
-      .join(assigned, Seq("cid"))
-      .where(col("query_id") =!= col("neighbor_id") &&
-        col("q_label") =!= col("n_label"))
-      .withColumn("cos", fastDot(col("q_emb"), col("c_emb")))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("q_label"), col("neighbor_id"),
-        col("n_label"), col("rank"), round(col("cos"), 4).as("cos"))
-  }
+      prenorm: Option[DataFrame] = None): DataFrame =
+    ivfSearch(queries, corpus, centroids, k, nProbe, prenorm, labeled = true)
 
   /**
    * Exact hard negatives — [[ivfHardNegatives]]' ground truth: the k
@@ -308,26 +197,54 @@ object Similarity {
    */
   def bruteForceHardNegatives(
       queries: DataFrame, corpus: DataFrame, k: Int = 5,
-      prenorm: Option[DataFrame] = None): DataFrame = {
-    ensureRegistered(queries)
-    def withLabel(df: DataFrame, idOut: String, embOut: String,
-        labOut: String, spread: Boolean): DataFrame =
-      withLabelCols(df, idOut, embOut, labOut, spread)
-    val q = broadcast(withLabel(queries, "query_id", "q_emb", "q_label", spread = false))
+      prenorm: Option[DataFrame] = None): DataFrame =
+    exactSearch(queries, corpus, k, prenorm, labeled = true)
+
+  /** The two sides every top-k search scores: queries (query_id, q_emb
+    * [, q_label]) and the corpus (neighbor_id, c_emb [, n_label]). The
+    * corpus is barriered — scored against a broadcast side, an
+    * unbarriered normalize re-evaluates per (row × query) pair, the
+    * binary-screen finding — or arrives pre-normalized as a rename over
+    * a shared [[normalizedCorpus]] checkpoint. */
+  private def searchSides(queries: DataFrame, corpus: DataFrame,
+      prenorm: Option[DataFrame], labeled: Boolean): (DataFrame, DataFrame) = {
+    def lab(name: String) = if (labeled) Some(name) else None
+    val q = normalized(queries, "query_id", "q_emb", spread = false, lab("q_label"))
     val c = prenorm
-      .map(_.select(col("vec_id").as("neighbor_id"), col("emb").as("c_emb"),
-        col("label").as("n_label")))
+      .map(_.select(Seq(col("vec_id").as("neighbor_id"), col("emb").as("c_emb")) ++
+        lab("n_label").map(col("label").as(_)): _*))
       .getOrElse(graft.dedup.Dedup.materialize(
-        withLabel(corpus, "neighbor_id", "c_emb", "n_label", spread = true)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    c.join(q, col("query_id") =!= col("neighbor_id") &&
-        col("q_label") =!= col("n_label"))
+        normalized(corpus, "neighbor_id", "c_emb", labOut = lab("n_label"))))
+    (q, c)
+  }
+
+  /** Each query's top k of its candidate pairs by (cos DESC,
+    * neighbor_id), the query itself excluded — and, when `labeled`,
+    * same-label neighbors too, BEFORE the window. */
+  private def rankTopK(pairs: DataFrame, k: Int, labeled: Boolean): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
+    val other = col("query_id") =!= col("neighbor_id")
+    def lab(name: String) = if (labeled) Seq(col(name)) else Nil
+    pairs.where(if (labeled) other && col("q_label") =!= col("n_label") else other)
       .withColumn("cos", fastDot(col("q_emb"), col("c_emb")))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
-      .select(col("query_id"), col("q_label"), col("neighbor_id"),
-        col("n_label"), col("rank"), round(col("cos"), 4).as("cos"))
+      .select(Seq(col("query_id")) ++ lab("q_label") ++ Seq(col("neighbor_id")) ++
+        lab("n_label") ++ Seq(col("rank"), round(col("cos"), 4).as("cos")): _*)
+  }
+
+  private def exactSearch(queries: DataFrame, corpus: DataFrame, k: Int,
+      prenorm: Option[DataFrame], labeled: Boolean): DataFrame = {
+    val (q, c) = searchSides(queries, corpus, prenorm, labeled)
+    rankTopK(c.join(broadcast(q)), k, labeled)
+  }
+
+  private def ivfSearch(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
+      k: Int, nProbe: Int, prenorm: Option[DataFrame], labeled: Boolean): DataFrame = {
+    val cent = centroidsOf(centroids)
+    val (q, c) = searchSides(queries, corpus, prenorm, labeled)
+    val probes = broadcast(topCells(q, cent, nProbe).drop("cent_emb", "cos_p", "rn"))
+    rankTopK(probes.join(c.withColumn("cid", cent.nearest(col("c_emb"))), Seq("cid")), k, labeled)
   }
 
   /**
@@ -337,9 +254,12 @@ object Similarity {
    * lowest centroid id), recompute each centroid as the re-normalized
    * element-wise mean of its members, components rounded to 6 decimals
    * so runs are reproducible across platforms. Returns (cid,
-   * embedding) ready to feed [[ivfTopK]]. Everything is DataFrame ops:
-   * posexplode → per-(cid, pos) mean → re-packed ordered array; each
-   * round is one broadcast join + two aggregations.
+   * embedding) ready to feed [[ivfTopK]]; clusters left empty drop
+   * out. The centroids are O(k) and live on the driver (as in MLlib's
+   * KMeans), so a round is ONE job with no exchange: a `mapPartitions`
+   * over the normalized rows returns each partition's [[LloydStats]],
+   * merged on the driver in partition-index order. With `prenorm` the
+   * call runs 1 + `iters` jobs: the seed collect and one per round.
    */
   def kmeansCentroids(corpus: DataFrame, seeds: DataFrame, iters: Int = 3,
       prenorm: Option[DataFrame] = None): DataFrame = {
@@ -349,56 +269,29 @@ object Similarity {
     // reused every Lloyd round — one eager barrier, read iters times
     // (fault-tolerance knob: graft.Materialize / spark.graft.materialize.mode);
     // a shared [[normalizedCorpus]] checkpoint skips both
-    val vecs = prenorm
-      .map(_.select(col("vec_id").as("vid"), col("emb")))
-      .getOrElse(graft.Materialize.barrier(normalized(corpus, "vid", "emb")))
-    // Centroids are O(k) — genuinely driver-sized state (MLlib's KMeans
-    // holds them on the driver too). Keeping them local turns each
-    // Lloyd round into ONE distributed job (assign + per-dimension
-    // mean, collected), with no per-round checkpoint/coalesce machinery.
-    var cents: Array[(Long, Seq[Double])] = normalized(seeds, "cid", "cent_emb", spread = false)
-      .select(col("cid").cast("long"), col("cent_emb"))
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    // per-dimension SUM columns instead of posexplode + two keyed
-    // aggregations: the old shape expanded every vector 64× through a
-    // Generate and paid two exchanges per round ((cid, pos) means,
-    // then re-packing per cid); dim is known on the driver (the
-    // centroids live there), so one groupBy(cid) with dim sum columns
-    // + a count gets the same means in ONE exchange with full
-    // map-side partial aggregation and no row expansion (guide §2.3:
-    // aggregate before you shuffle; avoid explode). The mean is
-    // sum/count — the identical final division Spark's avg performs,
-    // on partial sums of the same addition-order class.
-    val dim = cents.headOption.map(_._2.length).getOrElse(0)
+    val rows = prenorm.getOrElse(graft.Materialize.barrier(normalized(corpus, "vec_id", "emb")))
+      .select(col("emb")).queryExecution.toRdd
+    var cents = centroidsOf(seeds, "kmeansCentroids seeds").rows
+    val dim = cents.headOption.fold(0)(_._2.length)
     (0 until iters).foreach { _ =>
-      val centDf = broadcast(cents.toSeq.toDF("cid", "cent_emb"))
-      // dmin/dmax guard the fixed-dimension invariant the per-dim sum
-      // rewrite assumes (ADVICE r20): a shorter vector would silently
-      // skew the mean (sum skips its missing dims, the count doesn't)
-      // — fail loudly instead. A null embedding counts as size -1
-      // (size(null) is null under ANSI, which min/max would skip), so it
-      // reaches the same require. Two extra agg columns on a k-row
-      // collect: free.
-      val dimOf = coalesce(size(col("emb")), lit(-1))
-      val sumCols = count(lit(1)).as("cnt") +:
-        min(dimOf).as("dmin") +: max(dimOf).as("dmax") +:
-        (0 until dim).map(p => sum(col("emb").getItem(p)).as(s"s$p"))
-      val meaned = argmaxAssign(vecs, centDf, "vid", "emb", barrier = false)
-        .groupBy(col("cid"))
-        .agg(sumCols.head, sumCols.tail: _*)
-        .collect()
-        .map { row =>
-          val cid = row.getAs[Number]("cid").longValue()
-          val cnt = row.getLong(row.fieldIndex("cnt")).toDouble
-          require(row.getInt(row.fieldIndex("dmin")) == dim &&
-              row.getInt(row.fieldIndex("dmax")) == dim,
-            s"kmeansCentroids: corpus embeddings must all have the seed " +
-              s"dimension $dim (cluster $cid saw sizes " +
-              s"${row.getInt(row.fieldIndex("dmin"))}.." +
-              s"${row.getInt(row.fieldIndex("dmax"))}; -1 = null embedding)")
-          (cid, (0 until dim).map(p =>
-            row.getDouble(row.fieldIndex(s"s$p")) / cnt): Seq[Double])
-        }
+      val k = cents.length
+      val cids = cents.map(_._1)
+      val flat = cents.flatMap(_._2)
+      val stats = rows.mapPartitions { it =>
+        val st = new LloydStats(k, dim)
+        it.foreach(r => st.add(if (r.isNullAt(0)) null else r.getArray(0), flat, cids))
+        Iterator(st)
+      }.collect().foldLeft(new LloydStats(k, dim))(_ merge _)
+      // the fixed-dimension invariant the per-dimension sums assume
+      // (ADVICE r20): a shorter vector would silently skew the mean —
+      // fail loudly instead; a NULL embedding (size -1) too.
+      val meaned = (0 until k).filter(stats.cnt(_) > 0).map { c =>
+        require(stats.dmin(c) == dim && stats.dmax(c) == dim,
+          s"kmeansCentroids: corpus embeddings must all have the seed " +
+            s"dimension $dim (cluster ${cids(c)} saw sizes " +
+            s"${stats.dmin(c)}..${stats.dmax(c)}; -1 = null embedding)")
+        (cids(c), (0 until dim).map(p => stats.sum(c * dim + p) / stats.cnt(c).toDouble))
+      }
       cents = meaned.map { case (cid, mean) =>
         // same arithmetic as the distributed form: left-to-right
         // sum-of-squares, then half-away-from-zero rounding of each
@@ -413,10 +306,38 @@ object Similarity {
           if (u >= 0) math.floor(u * 1e6 + 0.5) / 1e6
           else -(math.floor(-u * 1e6 + 0.5) / 1e6)
         }
-        (cid, unit)
-      }.sortBy(_._1)
+        (cid, unit.toArray)
+      }.toArray.sortBy(_._1)
     }
     cents.toSeq.toDF("vec_id", "embedding")
+  }
+
+  /** One partition's share of a Lloyd round: per-cluster member count,
+    * embedding-size range (a NULL embedding counts as -1) and
+    * per-dimension sums (`sum(c·dim + p)`, in row order). */
+  private final class LloydStats(k: Int, dim: Int) extends Serializable {
+    val cnt = new Array[Long](k)
+    val dmin: Array[Int] = Array.fill(k)(Int.MaxValue)
+    val dmax: Array[Int] = Array.fill(k)(Int.MinValue)
+    val sum = new Array[Double](k * dim)
+
+    def add(emb: ArrayData, flat: Array[Double], cids: Array[Long]): Unit = {
+      val c = CentroidKernel.nearestIndex(emb, flat, cids)
+      if (c < 0) return // no centroids at all
+      val size = if (emb == null) -1 else emb.numElements()
+      cnt(c) += 1
+      dmin(c) = math.min(dmin(c), size)
+      dmax(c) = math.max(dmax(c), size)
+      (0 until math.min(size, dim)).foreach(p => sum(c * dim + p) += emb.getDouble(p))
+    }
+
+    def merge(o: LloydStats): LloydStats = {
+      for (c <- 0 until k) {
+        cnt(c) += o.cnt(c); dmin(c) = math.min(dmin(c), o.dmin(c)); dmax(c) = math.max(dmax(c), o.dmax(c))
+      }
+      for (i <- sum.indices) sum(i) += o.sum(i)
+      this
+    }
   }
 
   /**
@@ -431,12 +352,12 @@ object Similarity {
    * (vec_id, cluster_id, n_prior_dups, is_dup); the kept set is
    * `!is_dup`.
    *
-   * Scale shape: centroids are O(k) and broadcast; assignment is one
-   * corpus scan folded by [[argmaxAssign]] — a partial-aggregated
-   * per-vector argmax whose exchange carries ~N aggregated rows, not
-   * the N·k sorted rows a `row_number` window would shuffle (the same
-   * (cos DESC, cid) selection, proven stable cross-engine by the s3
-   * gate); the within-cluster pair scan shuffles once on cluster_id
+   * Scale shape: centroids are O(k) and collected to the driver;
+   * assignment is the `graft_nearest_cid` projection over the corpus
+   * scan — no join, no exchange, the same (cos DESC, cid) selection
+   * the s3 gate proves stable cross-engine (a vector with a NULL
+   * embedding lands in the lowest cid, with no pairs); the within-cluster
+   * pair scan shuffles once on cluster_id
    * and does Σ|c|² work instead of N² — the SemDeDup control knob is
    * k ∝ N so the expected cluster size stays constant and total work
    * stays ~N·E|c|. The self-join renames columns per side (a plan
@@ -450,14 +371,12 @@ object Similarity {
       threshold: Double,
       prenorm: Option[DataFrame] = None): DataFrame = {
     ensureRegistered(corpus)
-    val cent = broadcast(normalized(centroids, "cid", "cent_emb", spread = false))
-    // a shared [[normalizedCorpus]] frame is already a checkpoint, so
-    // argmaxAssign's own barrier is skipped; the OUTER barrier stays —
-    // the assignment has three consumers (both self-join sides + the
-    // join-back)
+    val cent = centroidsOf(centroids)
+    // barrier: the assignment has three consumers (both self-join
+    // sides + the join-back)
     val assigned = graft.dedup.Dedup.materialize(
-      argmaxAssign(prenorm.getOrElse(normalized(corpus, "vec_id", "emb")),
-        cent, "vec_id", "emb", barrier = prenorm.isEmpty))
+      prenorm.getOrElse(normalized(corpus, "vec_id", "emb"))
+        .select(col("vec_id"), col("emb"), cent.nearest(col("emb")).as("cid")))
     val lhs = assigned.select(col("cid"), col("vec_id").as("id_a"), col("emb").as("emb_a"))
     val rhs = assigned.select(col("cid"), col("vec_id").as("id_b"), col("emb").as("emb_b"))
     val priorDups = lhs.join(rhs, Seq("cid"))
@@ -1190,11 +1109,9 @@ object Similarity {
       corpus: DataFrame, seeds: DataFrame, query: DataFrame,
       m: Int = 4, dsub: Int = 16): DataFrame = {
     val dim = m * dsub
-    def collectVecs(df: DataFrame, what: String): Array[(Long, Array[Double])] =
-      collectVecsOf(df, dim, what)
-    val cb = collectVecs(seeds, "codebook")     // code order = vec_id order
+    val cb = collectVecsOf(seeds, dim, "codebook")     // code order = vec_id order
     require(cb.nonEmpty, "pq: empty codebook")
-    val q = collectVecs(query, "query")
+    val q = collectVecsOf(query, dim, "query")
     require(q.length == 1, s"pq: query must be exactly one vector, got ${q.length}")
     ensureRegistered(corpus)
     val k = cb.length
@@ -1252,7 +1169,7 @@ object Similarity {
    * shape): [[ivfTopK]]'s coarse cell routing composed with
    * [[pqTopK]]'s asymmetric-distance scoring. The corpus is assigned
    * to cells by nearest `centroids` (cosine argmax over normalized
-   * vectors — the same aggregate-shaped assignment as s2/sd1); the
+   * vectors — the same `graft_nearest_cid` projection as s2/sd1); the
    * query probes its `nProbe` nearest cells; ONLY vectors in probed
    * cells are ADC-scored — the whole-corpus scan s4 performs becomes a
    * cell-pruned scan of ~nProbe/k of the corpus. Same output shape as
@@ -1260,8 +1177,8 @@ object Similarity {
    * (a true neighbor in an unprobed cell is never scored).
    *
    * Scale posture: centroids and the single-query probe set are O(k)
-   * broadcasts; assignment is one corpus scan folded by
-   * [[argmaxAssign]] (~N aggregated rows through the exchange); the
+   * driver state; assignment is a per-row projection over one corpus
+   * scan ([[ivfCellAssignment]], no exchange); the
    * prune is a broadcast semi join on vec_id (no corpus shuffle); the
    * surviving fraction flows through [[pqEncodeAdc]]'s zero-exchange
    * projection and a TakeOrderedAndProject top-k. At 100 TB the
@@ -1280,9 +1197,9 @@ object Similarity {
 
   /** The query-INDEPENDENT corpus→cell assignment both IVFADC forms
     * route through: (vec_id, cid) where cid is the vector's nearest
-    * coarse centroid by normalized cosine ([[argmaxAssign]] — one
-    * partial-aggregated corpus pass, ~N combined rows through the
-    * exchange). Production PERSISTS this frame (and partitions the
+    * coarse centroid by normalized cosine — the `graft_nearest_cid`
+    * projection over one corpus scan, no exchange; a NULL embedding
+    * lands in the lowest cid. Production PERSISTS this frame (and partitions the
     * corpus by it) — it changes only when the corpus or the centroids
     * do — and passes it back via the `assignment` parameter of
     * [[ivfAdcTopK]] / [[ivfAdcResidualTopK]], making the per-query
@@ -1292,15 +1209,15 @@ object Similarity {
     * assignment from scratch, so its VALUES stay fully checked). */
   def ivfCellAssignment(corpus: DataFrame, centroids: DataFrame): DataFrame = {
     ensureRegistered(corpus)
-    val cent = broadcast(normalized(centroids, "cid", "cent_emb", spread = false))
-    argmaxAssignId(normalized(corpus, "nid", "n_emb"), cent, "nid", "n_emb")
-      .select(col("nid").as("vec_id"), col("cid"))
+    val cent = centroidsOf(centroids)
+    normalized(corpus, "vec_id", "n_emb")
+      .select(col("vec_id"), cent.nearest(col("n_emb")).as("cid"))
   }
 
   /** The query's `nProbe` nearest coarse cells as driver values —
     * the O(nProbe) probe list every IVF form routes through (FAISS's
     * probe-list shape). One crossJoin of the query row(s) against the
-    * O(k) broadcast centroid frame + a per-query rank window; for a
+    * O(k) driver-held centroids + a per-query rank window; for a
     * multi-row query the UNION of all queries' probe cells is
     * returned (each query still ranks its own candidates downstream).
     * Driver state is ≤ nProbe·Q longs — bounded like the kmeans
@@ -1309,15 +1226,9 @@ object Similarity {
     ensureRegistered(query)
     val spark = query.sparkSession
     import spark.implicits._
-    val centN = broadcast(normalized(centroids, "cid", "cent_emb", spread = false))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_p").desc, col("cid"))
-    normalized(query, "query_id", "q_emb", spread = false)
-      .crossJoin(centN)
-      .withColumn("cos_p", fastDot(col("q_emb"), col("cent_emb")))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nProbe)
-      .select(col("cid").cast("long")).distinct()
+    topCells(normalized(query, "query_id", "q_emb", spread = false),
+        centroidsOf(centroids), nProbe)
+      .select(col("cid")).distinct()
       .as[Long].collect().toSeq.sorted
   }
 
@@ -1366,8 +1277,6 @@ object Similarity {
       corpus: DataFrame, query: DataFrame, centroids: DataFrame,
       nProbe: Int, assignment: Option[DataFrame] = None): DataFrame = {
     ensureRegistered(corpus)
-    val cent = broadcast(normalized(centroids, "cid", "cent_emb", spread = false))
-
     // query-independent corpus→cell assignment — persisted in
     // production and passed in ([[ivfCellAssignment]]); recomputed
     // only when the caller has no stored copy
@@ -1376,14 +1285,9 @@ object Similarity {
       .select(col("vec_id").as("nid"), col("cid"))
 
     // the query's nProbe nearest cells — one row in the gate key, so
-    // the rank window is over ≤ k broadcast-joined rows
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_p").desc, col("cid"))
-    val probes = normalized(query, "query_id", "q_emb", spread = false)
-      .crossJoin(cent)
-      .withColumn("cos_p", fastDot(col("q_emb"), col("cent_emb")))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nProbe)
+    // the rank window is over ≤ k rows
+    val probes = topCells(normalized(query, "query_id", "q_emb", spread = false),
+        centroidsOf(centroids), nProbe)
       .select(col("cid"))
 
     val prunedIds = assigned.join(broadcast(probes), Seq("cid"))
@@ -1581,7 +1485,7 @@ object Similarity {
    * vec_id-sorted seed list, as everywhere in the PQ family).
    *
    * Scale posture: cell assignment is the one corpus-wide pass
-   * ([[argmaxAssign]], ~N combined rows through its exchange) and is
+   * ([[ivfCellAssignment]], a per-row projection) and is
    * query-independent — production persists it (and the residuals,
    * which are also query-independent) bucketed by cid. Driver state
    * is O(k·dim) raw centroids + O(nProbe) probed cells + one query
@@ -1596,14 +1500,13 @@ object Similarity {
    * identical op on both engines — and everything downstream is the
    * [[pqEncodeAdc]] rounded-fold contract, so the DuckDB twin is
    * exact. The probe/assignment ranking runs on normalized vectors
-   * (the s2/s5 proven-portable cosine argmax).
+   * (the s2/s5 proven-portable cosine argmax, `graft_nearest_cid` for
+   * the assignment).
    */
   def ivfAdcResidualTopK(
       corpus: DataFrame, seeds: DataFrame, query: DataFrame,
       centroids: DataFrame, topK: Int = 20, m: Int = 4, dsub: Int = 16,
       nProbe: Int = 3, assignment: Option[DataFrame] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     ensureRegistered(corpus)
     val dim = m * dsub
 
@@ -1618,19 +1521,11 @@ object Similarity {
     // bounded driver state: raw centroids (O(k·dim)), the query row,
     // and the nProbe probed cells — collected because the per-cell
     // ADC tables are driver-built (exactly FAISS's probe-list shape)
-    val centRaw: Map[Long, Array[Double]] = centroids
-      .select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])].collect().toMap
-    centRaw.foreach { case (id, e) => require(e.length == dim,
-      s"residual pq: centroid $id has ${e.length} dims, expected $dim") }
-    val qRows = query
-      .select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])].collect()
+    val centRaw = collectVecsOf(centroids, dim, "residual centroid").toMap
+    val qRows = collectVecsOf(query, dim, "residual query")
     require(qRows.length == 1,
       s"residual pq: query must be exactly one vector, got ${qRows.length}")
-    val (qid, qRaw) = qRows(0)
-    require(qRaw.length == dim,
-      s"residual pq: query has ${qRaw.length} dims, expected $dim")
+    val qRaw = qRows(0)._2
     val probeCids: Seq[Long] = probeCells(query, centroids, nProbe)
 
     // residuals — only for probed cells and the codebook seeds; each

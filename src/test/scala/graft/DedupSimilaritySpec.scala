@@ -320,10 +320,11 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
       (99L, Seq.fill(8)(Double.NaN))).toDF("vec_id", "emb")
     // cids 3 and 7 share one embedding: an EXACT cosine tie — the
     // (cos DESC, cid ASC) rule must pick cid 3 in both formulations
-    val cent = Seq((3L, vec(1003)), (7L, vec(1003)), (5L, vec(1005)), (9L, vec(1009)))
-      .toDF("cid", "cent_emb")
-    val viaAgg = Similarity.argmaxAssign(corpus, cent, "vec_id", "emb")
-      .select("vec_id", "cid").as[(Long, Long)].collect().toMap
+    val cents = Seq((3L, vec(1003)), (7L, vec(1003)), (5L, vec(1005)), (9L, vec(1009)))
+    val cent = cents.toDF("cid", "cent_emb")
+    val viaAgg = corpus.select(col("vec_id"), call_function("graft_nearest_cid", col("emb"),
+        typedlit(cents.flatMap(_._2).toArray), typedlit(cents.map(_._1).toArray)).as("cid"))
+      .as[(Long, Long)].collect().toMap
     val w = Window.partitionBy(col("vec_id")).orderBy(col("cos_c").desc, col("cid"))
     val viaWindow = corpus.crossJoin(cent)
       .withColumn("cos_c", Similarity.fastDot(col("emb"), col("cent_emb")))
@@ -435,6 +436,19 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
       1.0, -1.0, 1.0, -1.0, -1.0, 1.0, -1.0, -1.0,
       1.0, -1.0, 1.0, -1.0, 1.0, 1.0, 1.0, -1.0))
     assert(Similarity.lshPlane(95, 8) == Seq(1.0, 1.0, -1.0, 1.0, 1.0, -1.0, -1.0, -1.0))
+  }
+
+  test("parallelize: building a frame over a joined input runs no job") {
+    val a = spark.range(0, 1000).toDF("id").withColumn("x", col("id") * 2)
+    val b = spark.range(0, 1000).toDF("id").withColumn("y", col("id") + 1)
+    val (joined, jobs) = jobsOf("parallelize-join")(Dedup.parallelize(a.join(b, "id")))
+    assert(jobs.isEmpty, s"parallelize ran ${jobs.size} jobs while building the frame")
+    assert(joined.count() == 1000L)
+    // an under-partitioned scan still spreads over the shuffle partitions
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val (spread, scanJobs) = jobsOf("parallelize-scan")(
+      Dedup.parallelize(spark.range(0, 100, 1, 1).toDF("id")))
+    assert(scanJobs.isEmpty && spread.rdd.getNumPartitions == n)
   }
 
   test("kmeans centroids: deterministic, unit-norm, improve IVF recall") {

@@ -24,6 +24,27 @@ object SharedSpark {
 trait SparkTestBase {
   lazy val spark: SparkSession = SharedSpark.spark
 
+  /** The jobs `body` runs, as each job's stage count in job order. A
+    * sentinel job after the body, once the status tracker has seen it,
+    * proves every job before it was seen too (the listener bus delivers
+    * in order). */
+  def jobsOf[T](group: String)(body: => T): (T, Seq[Int]) = {
+    import scala.concurrent.duration._
+    import org.scalatest.concurrent.Eventually._
+    val sc = spark.sparkContext
+    def inGroup[R](g: String)(f: => R): R = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    val out = inGroup(group)(body)
+    inGroup(s"$group-end")(sc.parallelize(Seq(1), 1).count())
+    eventually(timeout(30.seconds), interval(50.millis)) {
+      assert(sc.statusTracker.getJobIdsForGroup(s"$group-end").nonEmpty)
+    }
+    (out, sc.statusTracker.getJobIdsForGroup(group).toSeq.sorted
+      .map(id => sc.statusTracker.getJobInfo(id).get.stageIds().length))
+  }
+
   /** Daily series starting 2023-01-01, mirroring the reference test
     * fixture (tests/test_events.py:15-18). NaN encodes missing. */
   def dailySeries(values: Seq[Double], seriesId: String = "s1"): DataFrame =

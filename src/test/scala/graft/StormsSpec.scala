@@ -124,6 +124,14 @@ class StormsSpec extends AnyFunSuite with SparkTestBase {
       ("c_long", "2023-01-01T00:00:00Z", "2023-01-02T00:00:00Z", 2L, 1.0),
       ("c_long", "2023-01-07T00:00:00Z", "2023-01-07T00:00:00Z", 1L, 2.0)))
   }
+  test("a gap exactly equal to a non-integral hours_to_stop keeps the storm open") {
+    // 2.3 h = 8,280,000,000 µs; the gap from the 0 h stop to the 2.3 h
+    // start is exactly that, so it does not exceed hours_to_stop
+    val ms = (h: Long) => new java.sql.Timestamp(day(0).getTime + h)
+    val s = seriesAt(Seq(ms(0L) -> 1.0, ms(1800000L) -> 0.0, ms(8280000L) -> 1.0), "gap")
+    val ev = spans(collectEvents(StormEvents(0.5, 0.5, 2.3, 336, Some("1H")).detect(s)))
+    assert(ev == Seq(("gap", "2023-01-01T00:00:00Z", "2023-01-01T02:18:00Z", 3L, 2.0)))
+  }
   test("irregular series with an explicit frequency") {
     val pts = Seq(0.0 -> 0.0, 24.0 -> 2.0, 72.0 -> 2.0, 96.0 -> 0.0, 192.0 -> 0.5,
       204.0 -> 0.25, 216.0 -> 2.0)

@@ -16,8 +16,9 @@
 # It also prints each side's failed_ops, each side's Spark codegen
 # compilations per measured pass for every seed (the passes'
 # `codegen_compiles`), and per key the median call time of each side
-# (successful calls of passes after the first, over every seed) with
-# the ratio change/base. Nothing under perfbench/ is
+# with its q1 and q3 (successful calls of passes after the first, over
+# every seed) and the ratio of the medians change/base, so a key the
+# change did not touch can be read against its spread. Nothing under perfbench/ is
 # written besides what run.py itself writes under .bench_build/.
 # Set PERF_PAIRS_REPORT_ONLY=1 to skip the runs and only report on the
 # records already there.
@@ -101,19 +102,19 @@ for s in seeds:
           for i in (0, 1)]
     print(f"    {s}  {cg[0]}  {cg[1]}")
 
-def call_medians(i):
+def call_quartiles(i):
     by_key = {}
     for s in seeds:
         for c in recs[s][i]["calls"]:
             if c["pass"] > 0 and c["ok"]:
                 by_key.setdefault(c["key"], []).append(c["s"])
-    return {k: statistics.median(v) for k, v in by_key.items()}
+    return {k: quartiles(v) for k, v in by_key.items()}
 
-cb, cc = call_medians(0), call_medians(1)
-print("  per-key call median (s): key  base  change  change/base")
+cb, cc = call_quartiles(0), call_quartiles(1)
+print("  per-key call median [q1, q3] (s): key  base  change  change/base")
 for key in sorted(set(cb) | set(cc)):
     b, c = cb.get(key), cc.get(key)
-    ratio = f"{c / b:.3f}" if b and c else "-"
-    fmt = lambda x: f"{x:.4f}" if x is not None else "-"
+    ratio = f"{c[1] / b[1]:.3f}" if b and c else "-"
+    fmt = lambda q: f"{q[1]:.4f} [{q[0]:.4f}, {q[2]:.4f}]" if q is not None else "-"
     print(f"    {key:20s} {fmt(b)}  {fmt(c)}  {ratio}")
 EOF
