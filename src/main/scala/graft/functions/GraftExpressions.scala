@@ -848,10 +848,6 @@ object CentroidKernel {
     best
   }
 
-  /** The nearest centroid's cid (there must be at least one centroid). */
-  def nearest(emb: ArrayData, centsFlat: Array[Double], cids: Array[Long]): Long =
-    cids(nearestIndex(emb, centsFlat, cids))
-
   private def greater(a: Double, b: Double): Boolean =
     if (java.lang.Double.isNaN(a)) !java.lang.Double.isNaN(b) else a > b
 }
@@ -1431,12 +1427,11 @@ object GraftFunctions {
     * resolution — the [[doubleArrayLiteral]] pattern. */
   private def longArrayLiteral(e: Expression): Array[Long] = {
     require(e.foldable,
-      "graft_bloom_contains / graft_nearest_cid: the word / cid argument must be a " +
-        "foldable array<long> literal")
+      "graft_bloom_contains / graft_nearest_cid: argument must be a foldable array<long> literal")
     e.eval(null) match {
       case a: ArrayData => a.toLongArray()
       case other => throw new IllegalArgumentException(
-        s"graft_bloom_contains / graft_nearest_cid expect an array<long> literal, got $other")
+        s"graft_bloom_contains / graft_nearest_cid: expected an array<long> literal, got $other")
     }
   }
 
@@ -1446,12 +1441,11 @@ object GraftFunctions {
     * m·k expression chain. */
   private def doubleArrayLiteral(e: Expression): Array[Double] = {
     require(e.foldable,
-      "graft_pq_* / graft_nearest_cid: the codebook/table/centroid argument must be a " +
-        "foldable array<double> literal")
+      "graft_pq_* / graft_nearest_cid: argument must be a foldable array<double> literal")
     e.eval(null) match {
       case a: ArrayData => a.toDoubleArray()
       case other => throw new IllegalArgumentException(
-        s"graft_pq_* / graft_nearest_cid expect an array<double> literal, got $other")
+        s"graft_pq_* / graft_nearest_cid: expected an array<double> literal, got $other")
     }
   }
 

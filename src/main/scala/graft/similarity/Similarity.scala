@@ -82,47 +82,38 @@ object Similarity {
   def normalizedLabeledCorpus(corpus: DataFrame): DataFrame =
     graft.dedup.Dedup.materialize(normalized(corpus, "vec_id", "emb", labOut = Some("label")))
 
-  /** Driver-held centroids in cid order: `rows` = (cid, unit
-    * embedding); `cids`/`flat` are the reference state of
-    * [[graft.functions.NearestCentroid]]. O(k·dim), the bounded state
-    * [[kmeansCentroids]] and the PQ codebooks hold too. */
-  private final class Centroids(val rows: Array[(Long, Array[Double])]) {
+  /** Driver-held centroids in cid order, from [[collectVecsOf]]'s raw
+    * rows: `rows` = (cid, unit embedding), normalized here with
+    * [[normalized]]'s op sequence (left-to-right dot, sqrt, divide), so
+    * the bits equal the column form's; `cids`/`flat` are the reference
+    * state of [[graft.functions.NearestCentroid]]. O(k·dim), the bounded
+    * state [[kmeansCentroids]] and the PQ codebooks hold too. */
+  private[graft] final class Centroids(raw: Array[(Long, Array[Double])], what: String) {
+    val rows: Array[(Long, Array[Double])] = raw.map { case (cid, e) =>
+      val nrm = math.sqrt(e.foldLeft(0.0)((s, x) => s + x * x))
+      require(nrm != 0.0, s"$what: centroid $cid has zero norm")
+      (cid, e.map(_ / nrm))
+    }
     val cids: Array[Long] = rows.map(_._1)
     val flat: Array[Double] = rows.flatMap(_._2)
 
     /** Top-1 cell of a normalized embedding column (NULL: lowest cid). */
     def nearest(emb: Column): Column =
       call_function("graft_nearest_cid", emb, typedlit(flat), typedlit(cids))
-
-    /** (cid, cent_emb) as a broadcast local frame, for [[topCells]]. */
-    def frame(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      broadcast(rows.toSeq.toDF("cid", "cent_emb"))
-    }
   }
 
-  /** Normalize a `(vec_id, embedding)` centroid frame exactly as the
-    * corpus is normalized and collect it; a NULL or ragged centroid
-    * fails by name. */
-  private def centroidsOf(centroids: DataFrame, what: String = "centroids"): Centroids = {
-    val spark = centroids.sparkSession
-    import spark.implicits._
-    val rows = normalized(centroids, "cid", "cent_emb", spread = false)
-      .select(col("cid").cast("long"), col("cent_emb"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val size = (e: Array[Double]) => if (e == null) -1 else e.length // -1 = null
-    val dim = rows.headOption.fold(0)(r => size(r._2))
-    rows.foreach { case (cid, e) => require(e != null && e.length == dim,
-      s"$what: centroid $cid has ${size(e)} dims, expected $dim (-1 = null embedding)") }
-    new Centroids(rows)
-  }
+  /** Collect a `(vec_id, embedding)` centroid frame (one collect); a
+    * NULL, ragged or zero-norm centroid fails by name. */
+  private[graft] def centroidsOf(centroids: DataFrame, what: String = "centroids"): Centroids =
+    new Centroids(collectVecsOf(centroids, -1, what), what)
 
   /** Each query's `nProbe` nearest cells: (query_id, q_emb, …, cid)
     * ranked (cos DESC, cid ASC) over the query × centroid cross. The
     * query side is small, so the rank window runs over |Q|·k rows. */
   private def topCells(queries: DataFrame, cent: Centroids, nProbe: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos_p").desc, col("cid"))
-    queries.crossJoin(cent.frame(queries.sparkSession))
+    queries.crossJoin(broadcast(queries.sparkSession.createDataFrame(cent.rows.toSeq)
+        .toDF("cid", "cent_emb")))
       .withColumn("cos_p", fastDot(col("q_emb"), col("cent_emb")))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= nProbe)
@@ -1066,9 +1057,10 @@ object Similarity {
    * calls), so corpus-side and query-side distances share one
    * convention; argmin and ADC read only ROUNDED values.
    */
-  /** Driver-collect of a `(vec_id, embedding)` frame in vec_id order
-    * with a dimension check — the PQ family's bounded codebook/query
-    * state. */
+  /** Driver-collect of a `(vec_id, embedding)` frame in vec_id order;
+    * every vector must have `dim` components (-1: as many as the
+    * first), so a NULL or ragged one fails by name — the bounded
+    * codebook/query state of the PQ family and the IVF centroids. */
   private def collectVecsOf(
       df: DataFrame, dim: Int, what: String): Array[(Long, Array[Double])] = {
     val spark = df.sparkSession
@@ -1076,9 +1068,10 @@ object Similarity {
     val rows = df.select(col("vec_id").cast("long"),
       col("embedding").cast("array<double>"))
       .as[(Long, Array[Double])].collect().sortBy(_._1)
-    rows.foreach { case (id, e) =>
-      require(e.length == dim,
-        s"pq $what: vec $id has ${e.length} dims, expected $dim") }
+    val size = (e: Array[Double]) => if (e == null) -1 else e.length // -1 = null
+    val d = if (dim >= 0) dim else rows.headOption.fold(0)(r => size(r._2))
+    rows.foreach { case (id, e) => require(e != null && e.length == d,
+      s"$what: vec $id has ${size(e)} dims, expected $d (-1 = null embedding)") }
     rows
   }
 
@@ -1109,9 +1102,9 @@ object Similarity {
       corpus: DataFrame, seeds: DataFrame, query: DataFrame,
       m: Int = 4, dsub: Int = 16): DataFrame = {
     val dim = m * dsub
-    val cb = collectVecsOf(seeds, dim, "codebook")     // code order = vec_id order
+    val cb = collectVecsOf(seeds, dim, "pq codebook")     // code order = vec_id order
     require(cb.nonEmpty, "pq: empty codebook")
-    val q = collectVecsOf(query, dim, "query")
+    val q = collectVecsOf(query, dim, "pq query")
     require(q.length == 1, s"pq: query must be exactly one vector, got ${q.length}")
     ensureRegistered(corpus)
     val k = cb.length
@@ -1207,12 +1200,12 @@ object Similarity {
     * that through a parquet-materialized fixture (the production
     * shape, not a shortcut: the DuckDB oracles still recompute the
     * assignment from scratch, so its VALUES stay fully checked). */
-  def ivfCellAssignment(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    ensureRegistered(corpus)
-    val cent = centroidsOf(centroids)
+  def ivfCellAssignment(corpus: DataFrame, centroids: DataFrame): DataFrame =
+    ivfCellAssignment(corpus, centroidsOf(centroids))
+
+  private def ivfCellAssignment(corpus: DataFrame, cent: Centroids): DataFrame =
     normalized(corpus, "vec_id", "n_emb")
       .select(col("vec_id"), cent.nearest(col("n_emb")).as("cid"))
-  }
 
   /** The query's `nProbe` nearest coarse cells as driver values —
     * the O(nProbe) probe list every IVF form routes through (FAISS's
@@ -1222,12 +1215,13 @@ object Similarity {
     * returned (each query still ranks its own candidates downstream).
     * Driver state is ≤ nProbe·Q longs — bounded like the kmeans
     * centroids. */
-  def probeCells(query: DataFrame, centroids: DataFrame, nProbe: Int): Seq[Long] = {
-    ensureRegistered(query)
+  def probeCells(query: DataFrame, centroids: DataFrame, nProbe: Int): Seq[Long] =
+    probeCells(query, centroidsOf(centroids), nProbe)
+
+  private def probeCells(query: DataFrame, cent: Centroids, nProbe: Int): Seq[Long] = {
     val spark = query.sparkSession
     import spark.implicits._
-    topCells(normalized(query, "query_id", "q_emb", spread = false),
-        centroidsOf(centroids), nProbe)
+    topCells(normalized(query, "query_id", "q_emb", spread = false), cent, nProbe)
       .select(col("cid")).distinct()
       .as[Long].collect().toSeq.sorted
   }
@@ -1277,17 +1271,17 @@ object Similarity {
       corpus: DataFrame, query: DataFrame, centroids: DataFrame,
       nProbe: Int, assignment: Option[DataFrame] = None): DataFrame = {
     ensureRegistered(corpus)
+    val cent = centroidsOf(centroids)
     // query-independent corpus→cell assignment — persisted in
     // production and passed in ([[ivfCellAssignment]]); recomputed
     // only when the caller has no stored copy
     val assigned = assignment
-      .getOrElse(ivfCellAssignment(corpus, centroids))
+      .getOrElse(ivfCellAssignment(corpus, cent))
       .select(col("vec_id").as("nid"), col("cid"))
 
     // the query's nProbe nearest cells — one row in the gate key, so
     // the rank window is over ≤ k rows
-    val probes = topCells(normalized(query, "query_id", "q_emb", spread = false),
-        centroidsOf(centroids), nProbe)
+    val probes = topCells(normalized(query, "query_id", "q_emb", spread = false), cent, nProbe)
       .select(col("cid"))
 
     val prunedIds = assigned.join(broadcast(probes), Seq("cid"))
@@ -1509,30 +1503,32 @@ object Similarity {
       nProbe: Int = 3, assignment: Option[DataFrame] = None): DataFrame = {
     ensureRegistered(corpus)
     val dim = m * dsub
+    // bounded driver state: raw centroids (O(k·dim), collected once —
+    // the assignment and the probe use their normalized form), the
+    // query row, and the nProbe probed cells — collected because the
+    // per-cell ADC tables are driver-built (FAISS's probe-list shape)
+    val centRows = collectVecsOf(centroids, dim, "residual pq centroid")
+    val cent = new Centroids(centRows, "residual pq centroid")
 
     // corpus→cell assignment (query-independent — persisted in
     // production, see [[ivfCellAssignment]]; barrier because the
     // residual frame below is read once per probed cell + once for
     // the codebook)
     val assigned = graft.Materialize.barrier(
-      assignment.getOrElse(ivfCellAssignment(corpus, centroids))
+      assignment.getOrElse(ivfCellAssignment(corpus, cent))
         .select(col("vec_id"), col("cid")))
 
-    // bounded driver state: raw centroids (O(k·dim)), the query row,
-    // and the nProbe probed cells — collected because the per-cell
-    // ADC tables are driver-built (exactly FAISS's probe-list shape)
-    val centRaw = collectVecsOf(centroids, dim, "residual centroid").toMap
-    val qRows = collectVecsOf(query, dim, "residual query")
+    val centRaw = centRows.toMap
+    val qRows = collectVecsOf(query, dim, "residual pq query")
     require(qRows.length == 1,
       s"residual pq: query must be exactly one vector, got ${qRows.length}")
     val qRaw = qRows(0)._2
-    val probeCids: Seq[Long] = probeCells(query, centroids, nProbe)
+    val probeCids: Seq[Long] = probeCells(query, cent, nProbe)
 
     // residuals — only for probed cells and the codebook seeds; each
     // side is one corpus join against the barriered assignment
-    val centRawDf = broadcast(centroids.select(
-      col("vec_id").cast("long").as("cid"),
-      col("embedding").cast("array<double>").as("craw")))
+    val centRawDf = broadcast(corpus.sparkSession.createDataFrame(centRows.toSeq)
+      .toDF("cid", "craw"))
     def residuals(slice: DataFrame): DataFrame = slice
       .join(centRawDf, Seq("cid"))
       .select(col("vec_id"), col("cid"),
@@ -1556,7 +1552,7 @@ object Similarity {
     // gone too (r20 discipline: a barrier is only worth its write
     // when the frame is reused). Values are bit-identical: same
     // codebook bits, same per-cell table bits, same fold.
-    val cb = collectVecsOf(seedsR, dim, "codebook")
+    val cb = collectVecsOf(seedsR, dim, "residual pq codebook")
     require(cb.nonEmpty, "residual pq: empty codebook")
     val kCb = cb.length
     val cbFlat: Array[Double] = cb.flatMap(_._2)

@@ -18,8 +18,8 @@ class CentroidKernelSpec extends AnyFunSuite with SparkTestBase with AdaptiveSpa
   import spark.implicits._
 
   private def nearest(emb: Seq[Double], cents: Seq[(Long, Seq[Double])]): Long =
-    CentroidKernel.nearest(Option(emb).map(e => new GenericArrayData(e.toArray)).orNull,
-      cents.flatMap(_._2).toArray, cents.map(_._1).toArray)
+    cents(CentroidKernel.nearestIndex(Option(emb).map(e => new GenericArrayData(e.toArray)).orNull,
+      cents.flatMap(_._2).toArray, cents.map(_._1).toArray))._1
 
   private def nearestCid(emb: String, cents: Seq[(Long, Seq[Double])]) =
     call_function("graft_nearest_cid", col(emb),
@@ -85,6 +85,28 @@ class CentroidKernelSpec extends AnyFunSuite with SparkTestBase with AdaptiveSpa
         .as[(Long, Long)].collect().toMap
       assert(viaKernel == reference, s"seed $seed trial $trial: cents $cents")
     }
+  }
+
+  test("centroids: normalized on the driver to the column normalize's bits") {
+    val rnd = new scala.util.Random(15002)
+    val cents = (0 until 200).map(i => (i.toLong, Array.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val viaColumn = Similarity.normalized(cents, "cid", "e", spread = false)
+      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val bits = (rows: Seq[(Long, Array[Double])]) =>
+      rows.map { case (c, e) => (c, e.map(java.lang.Double.doubleToRawLongBits).toSeq) }
+    assert(bits(Similarity.centroidsOf(cents).rows.toSeq) == bits(viaColumn.toSeq))
+  }
+
+  test("centroids: a NULL, ragged or zero-norm centroid fails by name") {
+    val q = Seq((0L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
+    def failure(cents: Seq[(Long, Option[Array[Float]])]): String =
+      intercept[IllegalArgumentException](Similarity.ivfTopK(q, q,
+        cents.toDF("vec_id", "embedding"))).getMessage
+    val ok = Some(Array(1.0f, 0.0f))
+    assert(failure(Seq(1L -> ok, 2L -> None)).contains("vec 2 has -1 dims, expected 2"))
+    assert(failure(Seq(1L -> ok, 2L -> Some(Array(1.0f)))).contains("vec 2 has 1 dims, expected 2"))
+    assert(failure(Seq(1L -> ok, 3L -> Some(Array(0.0f, -0.0f)))).contains("centroid 3 has zero norm"))
   }
 
   private val vecs = Seq(
